@@ -5,12 +5,23 @@ entry points (initial §3.2, reprocessing §3.3, consolidation §3.4 of
 SURVEY.md).  Here each lifecycle step is a handful of DataFrame plans and
 one MERGE per table per MICROBATCH — not per job: all jobs drained by one
 streaming trigger go through ONE annotate plan, ONE staging MERGE, ONE
-issues MERGE, ONE links MERGE and ONE routing write (r7 verdict ask #1;
-the per-job form paid ~8 versioned-table writes per job, each a
-fixed-latency Spark job, which is what capped the streaming lifecycle at
-~12 jobs/min on local[32]).  The single-job entry points (``initial``,
-``reprocess``, ``process_job``) are one-element batches of the same code
-path, so there is exactly one codification of each flow.
+issues MERGE, ONE links MERGE and ONE routing write (the per-job form
+paid ~8 versioned-table writes per job, each a fixed-latency Spark job,
+which is what capped the streaming lifecycle at ~12 jobs/min on
+local[32]).  The single-job entry points (``initial``, ``reprocess``,
+``process_job``) are one-element batches of the same code path, so there
+is exactly one codification of each flow.
+
+Per-microbatch fixed costs are kept in the JVM and paid once:
+
+- the annotated batch is computed ONCE per batch — persisted, then read
+  by the row-count collect and the staging / issues / links MERGEs, and
+  unpersisted when the batch's writes are done — so the CSV scans, the
+  ``row_number`` sort, the J2 join and the row hash run once, not once
+  per consumer;
+- every driver-side row set (job inserts and point updates) is a
+  :func:`~.store.literal_frame` relation, never ``createDataFrame``,
+  so no plan the worker writes starts a Python worker.
 
 Semantics preserved (and pinned by tests/test_flow.py +
 tests/test_batch_processing.py):
@@ -64,7 +75,7 @@ from ..functions.hashing import hash64
 from ..functions.validation import normalize_email
 from ..ingest.csv_reader import read_contacts_csv
 from ..plans.validation_pipeline import annotate_contacts
-from .store import ControlStore
+from .store import SCHEMAS, ControlStore, literal_frame
 
 REQUIRED = ["email", "first_name", "last_name", "company"]
 
@@ -75,7 +86,7 @@ JOB_COL = "batch_job_id"
 #: Sentinel value for :meth:`JobProcessor._set_jobs`: "set this column
 #: to the batch's shared ``current_timestamp()``" (literal rows can't
 #: carry an unevaluated SQL expression; the sentinel keeps the update
-#: relation a plain createDataFrame while preserving the reference's
+#: relation a plain literal frame while preserving the reference's
 #: server-side timestamp semantics).
 NOW = object()
 
@@ -187,10 +198,11 @@ class JobProcessor:
         self._ensure_jobs([(job_id, csv_path)])
 
     def _ensure_jobs(self, jobs: list[tuple[int, str]]) -> None:
-        new = self.spark.createDataFrame(
+        new = literal_frame(
+            self.spark,
             [(j, self.user_id, k, "PENDING") for j, k in jobs],
-            "job_id long, job_user_id string, job_s3_object_key string, "
-            "job_status string",
+            T.StructType([SCHEMAS["jobs"][c] for c in (
+                "job_id", "job_user_id", "job_s3_object_key", "job_status")]),
         ).withColumn("job_created_at", F.current_timestamp())
         self.store.upsert("jobs", _pad(new, self.store, "jobs"),
                           insert_only=True)
@@ -205,18 +217,15 @@ class JobProcessor:
         type) or the module sentinel :data:`NOW`, which resolves to ONE
         shared ``current_timestamp()`` for the whole batch.
 
-        Join-against-updates shape (r8 verdict note: a chained CASE
-        would stack an O(jobs-in-batch)-deep ``when`` tree per column):
-        the updates become a tiny literal relation built as a SINGLE
-        ``createDataFrame`` — one analyzer relation regardless of batch
-        size (r9 ADVICE: the previous shape reduce-unioned one one-row
-        projection per job, so a pathological availableNow drain of
-        thousands of messages would have paid thousands of union legs
-        in driver-side analysis even though expression depth was 1) —
-        broadcast-joined to the jobs table once.  Per-column ``_has``
-        flags distinguish "set to NULL" from "not updated", ``_now``
-        flags mark the shared-timestamp sentinel, and every output
-        expression is depth-1 regardless of batch size.
+        Join-against-updates shape (a chained CASE would stack an
+        O(jobs-in-batch)-deep ``when`` tree per column): the updates
+        become ONE :func:`~.store.literal_frame` relation regardless of
+        batch size (a union of one-row projections per job would make a
+        drain of thousands of messages pay thousands of union legs in
+        driver-side analysis), broadcast-joined to the jobs table once.
+        Per-column ``_has`` flags distinguish "set to NULL" from "not
+        updated", ``_now`` flags mark the shared-timestamp sentinel, and
+        every output expression is depth-1 regardless of batch size.
         """
         if not updates:
             return
@@ -242,7 +251,7 @@ class JobProcessor:
                 else:
                     row += [None, False, False]
             rows.append(tuple(row))
-        upd = self.spark.createDataFrame(rows, T.StructType(fields))
+        upd = literal_frame(self.spark, rows, T.StructType(fields))
         joined = jobs.join(F.broadcast(upd),
                            jobs["job_id"] == upd["_upd_job_id"], "left")
         new_cols = {
@@ -299,14 +308,6 @@ class JobProcessor:
             if not parts:
                 return errors
             batch = reduce(DataFrame.unionByName, parts)
-            totals = {
-                int(r[JOB_COL]): int(r["cnt"])
-                for r in batch.groupBy(JOB_COL)
-                .agg(F.count(F.lit(1)).alias("cnt")).collect()
-            }
-            for job_id, _ in jobs:
-                if job_id not in errors:
-                    totals.setdefault(job_id, 0)
 
         with self._stage("validate"):
             # Annotate the FULL batch every run (crash-resume safety):
@@ -316,39 +317,54 @@ class JobProcessor:
             # slip through.  Idempotency comes from the insert-only MERGEs
             # below (the J5 anti-join on (job_id, row_hash) lives inside
             # store.upsert), not from pre-shrinking the batch.
-            annot = self._annotate(batch, job_col=JOB_COL)
+            annot = self._annotate(batch, job_col=JOB_COL).persist()
+            try:
+                # The J2 left join is against DISTINCT existing emails, so
+                # the annotated batch keeps every CSV row exactly once.
+                totals = {
+                    int(r[JOB_COL]): int(r["cnt"])
+                    for r in annot.groupBy(JOB_COL)
+                    .agg(F.count(F.lit(1)).alias("cnt")).collect()
+                }
+                for job_id, _ in jobs:
+                    if job_id not in errors:
+                        totals.setdefault(job_id, 0)
 
-            # Staging MERGE (insert-only on (job_id, row_hash) — ADR-001).
-            staging_new = annot.select(
-                (F.col(JOB_COL) * F.lit(1_000_000_000).cast("long")
-                 + F.col("row_number")).alias("staging_id"),
-                F.col(JOB_COL).alias("staging_job_id"),
-                F.col("email").alias("staging_email"),
-                F.col("first_name").alias("staging_first_name"),
-                F.col("last_name").alias("staging_last_name"),
-                F.col("company").alias("staging_company"),
-                F.current_timestamp().alias("staging_created_at"),
-                F.when(F.col("issue_type").isNull(), "READY")
-                 .otherwise("ISSUE").alias("staging_status"),
-                F.col("row_hash").alias("staging_row_hash"),
-                F.col("row_number").alias("staging_row_number"),
-            )
-            self.store.upsert(
-                "staging", _pad(staging_new, self.store, "staging"),
-                insert_only=True)
+                # Staging MERGE (insert-only on (job_id, row_hash) —
+                # ADR-001).
+                staging_new = annot.select(
+                    (F.col(JOB_COL) * F.lit(1_000_000_000).cast("long")
+                     + F.col("row_number")).alias("staging_id"),
+                    F.col(JOB_COL).alias("staging_job_id"),
+                    F.col("email").alias("staging_email"),
+                    F.col("first_name").alias("staging_first_name"),
+                    F.col("last_name").alias("staging_last_name"),
+                    F.col("company").alias("staging_company"),
+                    F.current_timestamp().alias("staging_created_at"),
+                    F.when(F.col("issue_type").isNull(), "READY")
+                     .otherwise("ISSUE").alias("staging_status"),
+                    F.col("row_hash").alias("staging_row_hash"),
+                    F.col("row_number").alias("staging_row_number"),
+                )
+                self.store.upsert(
+                    "staging", _pad(staging_new, self.store, "staging"),
+                    insert_only=True)
 
-            # Mid-job heartbeat (reference T4: src/processor.py:179,216-233
-            # bumps job_processed_rows every 10 rows; the set-based
-            # analogue is a stage boundary): staging is merged, issues not
-            # yet derived — publish the counts now so a status poll during
-            # a long batch sees movement before the terminal route lands.
-            self._set_jobs({
-                j: dict(job_total_rows=int(n), job_processed_rows=int(n))
-                for j, n in totals.items()
-            })
+                # Mid-job heartbeat (reference T4:
+                # src/processor.py:179,216-233 bumps job_processed_rows
+                # every 10 rows; the set-based analogue is a stage
+                # boundary): staging is merged, issues not yet derived —
+                # publish the counts now so a status poll during a long
+                # batch sees movement before the terminal route lands.
+                self._set_jobs({
+                    j: dict(job_total_rows=int(n), job_processed_rows=int(n))
+                    for j, n in totals.items()
+                })
 
-            self._merge_issues_and_links(
-                annot.filter(F.col("issue_type").isNotNull()))
+                self._merge_issues_and_links(
+                    annot.filter(F.col("issue_type").isNotNull()))
+            finally:
+                annot.unpersist()
 
         self._route_batch(list(totals), totals=totals)
         return errors
@@ -378,33 +394,35 @@ class JobProcessor:
                 F.col("staging_status"),
             )
             live = batch.filter(F.col("staging_status") != "DISCARD")  # P4
-            annot = self._annotate(live, job_col=JOB_COL)
-
-            # Flip staging statuses set-wise (READY vs ISSUE; DISCARD
-            # kept) — staging_id is globally unique, so one join covers
-            # every job in the batch.
-            status_updates = annot.select(
-                "staging_id",
-                F.when(F.col("issue_type").isNull(), "READY")
-                 .otherwise("ISSUE").alias("new_status"),
-            )
-            updated = (
-                staging.join(status_updates, "staging_id", "left")
-                .withColumn(
-                    "staging_status",
-                    F.coalesce("new_status", "staging_status"),
+            annot = self._annotate(live, job_col=JOB_COL).persist()
+            try:
+                # Flip staging statuses set-wise (READY vs ISSUE; DISCARD
+                # kept) — staging_id is globally unique, so one join
+                # covers every job in the batch.
+                status_updates = annot.select(
+                    "staging_id",
+                    F.when(F.col("issue_type").isNull(), "READY")
+                     .otherwise("ISSUE").alias("new_status"),
                 )
-                .drop("new_status")
-            )
-            others = self.store.read("staging").filter(
-                ~F.col("staging_job_id").isin(ids)
-            )
-            self.store.overwrite("staging", others.unionByName(
-                _pad(updated, self.store, "staging")
-            ))
+                updated = (
+                    staging.join(status_updates, "staging_id", "left")
+                    .withColumn(
+                        "staging_status",
+                        F.coalesce("new_status", "staging_status"),
+                    )
+                    .drop("new_status")
+                )
+                others = self.store.read("staging").filter(
+                    ~F.col("staging_job_id").isin(ids)
+                )
+                self.store.overwrite("staging", others.unionByName(
+                    _pad(updated, self.store, "staging")
+                ))
 
-            failing = annot.filter(F.col("issue_type").isNotNull())
-            self._merge_issues_and_links(failing, reprocess=True)
+                failing = annot.filter(F.col("issue_type").isNotNull())
+                self._merge_issues_and_links(failing, reprocess=True)
+            finally:
+                annot.unpersist()
             self._auto_resolve(ids)
         self._route_batch(ids)
 
@@ -689,8 +707,6 @@ def _project_contacts(df: DataFrame) -> DataFrame:
 
 def _pad(df: DataFrame, store: ControlStore, table: str) -> DataFrame:
     """Add any missing schema columns as typed NULLs."""
-    from .store import SCHEMAS
-
     have = set(df.columns)
     for field in SCHEMAS[table].fields:
         if field.name not in have:

@@ -129,6 +129,52 @@ PARTITIONING: dict[str, list[str]] = {
 }
 
 
+def _sql_literal(value: object, dtype: T.DataType) -> str:
+    """One Python value as Spark SQL literal text, via the same
+    ``toInternal`` conversion ``createDataFrame`` applies (tz-aware
+    timestamps go through UTC, naive ones through local time).  Strings
+    travel as UTF-8 hex so no quoting or escape setting can alter them."""
+    if value is None:
+        return "NULL"
+    v = dtype.toInternal(value)
+    if isinstance(dtype, T.StringType):
+        return f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
+    if isinstance(dtype, T.BooleanType):
+        return "true" if v else "false"
+    if isinstance(dtype, T.LongType):
+        return f"{int(v)}L"
+    if isinstance(dtype, T.TimestampType):
+        return f"timestamp_micros({int(v)})"
+    raise TypeError(f"literal_frame: unsupported column type {dtype}")
+
+
+def literal_frame(spark: SparkSession, rows: list[tuple],
+                  schema: T.StructType) -> DataFrame:
+    """Driver-side ``rows`` as a JVM-only relation of type ``schema``.
+
+    ``inline`` over ONE array-of-struct literal, cast to
+    ``array<schema>``: one relation at any row count, no Python worker
+    and no ``Scan ExistingRDD`` — ``createDataFrame(list)`` plans as a
+    ``parallelize`` + Python ``map`` stage that re-runs every time a
+    plan built on it executes.  The array is passed as SQL text, so
+    building it costs one py4j call however many values it holds (a
+    ``lit`` Column per value costs several).  Zero rows plan as an
+    empty ``LocalRelation`` (``limit(0)``), so reading it runs no job.
+    """
+    width = len(schema.fields)
+    structs = []
+    for row in rows:
+        if len(row) != width:
+            raise ValueError(f"literal_frame: row {row!r} does not have "
+                             f"{width} fields")
+        structs.append("struct(" + ", ".join(
+            _sql_literal(v, f.dataType) for v, f in zip(row, schema.fields)
+        ) + ")")
+    df = spark.range(0, 1, 1, 1).select(F.inline(
+        F.expr(f"array({', '.join(structs)})").cast(T.ArrayType(schema))))
+    return df if rows else df.limit(0)
+
+
 #: Bound on merge re-derivations under writer contention.  Control-plane
 #: writers are per-job microbatches (a handful at a time), so a conflict
 #: chain this long means something is structurally wrong — fail loudly.
@@ -259,7 +305,7 @@ class ControlStore:
         if version is None:
             version = self._current_version(table)
             if version is None:
-                return self.spark.createDataFrame([], SCHEMAS[table])
+                return literal_frame(self.spark, [], SCHEMAS[table])
         path = os.path.join(self.root, table, version)
         if not os.path.isdir(path):
             raise FileNotFoundError(
@@ -379,7 +425,7 @@ class ControlStore:
         if version is None:
             version = self._current_version(table)
         if version is None:
-            return self.spark.createDataFrame([], SCHEMAS[table])
+            return literal_frame(self.spark, [], SCHEMAS[table])
         path = os.path.join(self.root, table, version)
         mpath = os.path.join(path, "_manifest.json")
         if not os.path.isfile(mpath):

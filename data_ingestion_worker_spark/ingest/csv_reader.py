@@ -16,9 +16,12 @@ Reference behavior being re-specified (SURVEY.md §2.1 S5-S8):
   drop empty-name columns (trailing ``;;``), trim all values, drop rows
   with no non-empty value.
 
-The sniff is a driver-side peek at one file prefix (KBs); the actual data
-scan is a single distributed ``spark.read.csv`` with the chosen options —
-at 100 TB the sniff cost stays O(1) while the scan parallelizes.
+The sniff is a driver-side peek at one file prefix (at most
+``SNIFF_BYTES``), read through the path's Hadoop ``FileSystem`` — the
+same client the scan uses, so ``s3a://`` and local paths behave alike —
+and it starts no Spark job.  The actual data scan is a single
+distributed ``spark.read.csv`` with the chosen options — at 100 TB the
+sniff cost stays O(1) while the scan parallelizes.
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -103,17 +107,31 @@ def _delimiter_ok(header: str, first_data: str | None, delim: str) -> bool:
     return True
 
 
+def _read_prefix(spark: SparkSession, path: str) -> bytes:
+    """The first ``SNIFF_BYTES`` of ``path`` via its Hadoop FileSystem,
+    on the driver: no Spark job, never more than the prefix read.  A
+    missing or unreadable file raises ``OSError`` carrying the Java
+    exception's one-line message."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    try:
+        fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+        stream = fs.open(hpath)
+        try:
+            return bytes(stream.readNBytes(SNIFF_BYTES))
+        finally:
+            stream.close()
+    except Py4JJavaError as e:
+        raise OSError(e.java_exception.toString()) from None
+
+
 def sniff_csv_dialect(spark: SparkSession, path: str) -> CsvDialect:
     """Detect (encoding, delimiter) from a bounded file prefix.
 
-    One tiny driver-side read via the binaryFile source — never a full
-    parse of the data file.
+    One driver-side read of at most ``SNIFF_BYTES`` through the path's
+    Hadoop FileSystem — no Spark job, never a full parse of the data file.
     """
-    row = (
-        spark.read.format("binaryFile").load(path)
-        .select("content").first()
-    )
-    prefix = bytes(row["content"])[:SNIFF_BYTES]
+    prefix = _read_prefix(spark, path)
     encoding, text = _decode_prefix(prefix)
     lines = [ln for ln in text.splitlines() if ln.strip()]
     header = lines[0] if lines else ""

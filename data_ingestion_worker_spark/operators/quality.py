@@ -468,14 +468,14 @@ def pipeline_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Concurrency (guide §2.6 "overlap independent jobs"): the CC label
     loop is a chain of small sequential supersteps that leaves most of
-    the cluster idle, and the scoring legs — the near-dup jaccard
-    verification, the xent p90 cut, the decontamination semi-join — do
-    not depend on it.  Those legs materialize from a 2-worker thread
-    pool while the loop runs on the calling thread, so their tasks
-    back-fill the executors the loop cannot fill; the final plan then
-    joins already-materialized frames.  Values are unaffected (each leg
-    is the same deterministic frame, just computed concurrently); a leg
-    failure propagates through ``Future.result``.
+    the cluster idle, and the xent p90 cut — the other eager chain —
+    does not depend on it.  The cut runs on ONE background thread (a
+    ``max_workers=1`` pool) beside the CC loop on the calling thread, so
+    its tasks back-fill the executors the loop cannot fill; the lazy
+    scoring legs (near-dup jaccard, decontamination, policy) stay inside
+    the final plan.  Values are unaffected (the cut is the same
+    deterministic frame, just computed concurrently); a failure on the
+    background thread propagates through ``Future.result``.
 
     Scale caveat (r7 verdict #4): the fixture's eval slice is a ~1%
     MODULUS of the corpus, so the decontamination broadcast grows

@@ -41,11 +41,12 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..control.processor import NOW as PROC_NOW
 from ..control.processor import JobProcessor
-from ..control.store import SCHEMAS, ControlStore
+from ..control.store import SCHEMAS, ControlStore, literal_frame
 
 JOB_MESSAGE_SCHEMA = "job_id bigint, s3_key string"
 
@@ -118,7 +119,8 @@ class JobStreamConsumer:
         attempts = (int(prev[0]["dlq_attempts"]) if prev else 0) + 1
         first_seen = prev[0]["dlq_first_seen_at"] if prev else now
         status = "DEAD" if attempts >= self.max_receive_count else "RETRYING"
-        entry = self.spark.createDataFrame(
+        entry = literal_frame(
+            self.spark,
             [(job_id, s3_key, error, attempts, status, first_seen, now)],
             SCHEMAS["dead_letters"],
         )
@@ -138,7 +140,8 @@ class JobStreamConsumer:
         """A retried job succeeded: drop its dead-letter entry."""
         self.store.delete(
             "dead_letters",
-            self.spark.createDataFrame([(job_id,)], "dlq_job_id bigint"),
+            literal_frame(self.spark, [(job_id,)], T.StructType(
+                [SCHEMAS["dead_letters"]["dlq_job_id"]])),
         )
 
     def _process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:

@@ -21,7 +21,7 @@ from datetime import datetime, timezone
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming.listener import StreamingQueryListener
 
-from ..control.store import SCHEMAS
+from ..control.store import SCHEMAS, literal_frame
 
 
 class StreamProgressListener(StreamingQueryListener):
@@ -57,7 +57,7 @@ class StreamProgressListener(StreamingQueryListener):
         )
         self.store.upsert(
             "stream_progress",
-            self.spark.createDataFrame([row], SCHEMAS["stream_progress"]),
+            literal_frame(self.spark, [row], SCHEMAS["stream_progress"]),
         )
 
     def onQueryIdle(self, event) -> None:  # noqa: N802

@@ -36,15 +36,17 @@ TABLE_NAMES = [
 ]
 
 
-def _layout_key(path: str) -> tuple:
+def _layout_key(path: str) -> tuple | None:
     """Cheap layout fingerprint for per-path memos: a rewritten file
     (different row-group layout, regenerated fixture) changes mtime/size
-    and invalidates the entry, so the memos never serve stale stats."""
+    and invalidates the entry, so the memos never serve stale stats.
+    ``None`` when ``os.stat`` cannot see the path (e.g. an object-store
+    URI): no fingerprint, so callers must not memoize."""
     try:
         st = os.stat(path)
-        return (path, st.st_mtime_ns, st.st_size)
-    except OSError:  # non-local path (e.g. object store): no memo
-        return (path, None, None)
+    except OSError:
+        return None
+    return (path, st.st_mtime_ns, st.st_size)
 
 
 #: (layout fingerprint, defaultParallelism) -> scan partition count,
@@ -75,7 +77,8 @@ def spread_scan(df: DataFrame, *keys: str, memo: str | None = None) -> DataFrame
     """
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    cache_key = (_layout_key(memo), target) if memo is not None else None
+    layout = _layout_key(memo) if memo is not None else None
+    cache_key = (layout, target) if layout is not None else None
     n = _SCAN_PARTS.get(cache_key) if cache_key else None
     if n is None:
         n = df.rdd.getNumPartitions()

@@ -5,6 +5,7 @@ oracle sweep (tools/check_oracle.py) and the pytest suite — become one
 command whose verdict is a committed artifact (r6 verdict ask #6):
 
     python tools/gate.py [sf_dir]          # default /root/testdata/sf0.01
+    python tools/gate.py --check           # is GATE.json valid for HEAD?
 
 Writes GATE.json at the repo root:
 
@@ -13,9 +14,14 @@ Writes GATE.json at the repo root:
      "failed": N, "skipped": N}, "green": bool, ...}
 
 Exit code 0 iff green (sweep failures == 0 AND pytest failures == 0),
-so CI — or the next round's driver — can gate on it directly.  The
-sweep runs in-process (same comparator as check_oracle.py); pytest runs
-as a subprocess so a crashing test cannot take the gate down with it.
+so CI can gate on it directly.  The sweep runs in-process (same
+comparator as check_oracle.py); pytest runs as a subprocess so a
+crashing test cannot take the gate down with it.
+
+``--check`` re-runs nothing: it reads the committed GATE.json and exits
+non-zero unless it is green, its ``source_head`` is the last commit that
+touched a source path, and its ``dirty_source`` is empty — so a source
+edit that lands after the gate ran cannot ride on a stale green.
 """
 
 from __future__ import annotations
@@ -30,16 +36,16 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-from tools.check_oracle import canon, duck_connection  # noqa: E402
-
-from data_ingestion_worker_spark.registry import all_specs  # noqa: E402
-from data_ingestion_worker_spark.session import get_spark  # noqa: E402
-
 
 def run_sweep(sf_dir: str) -> dict:
     """Full-registry Spark-vs-DuckDB sweep; same comparison contract as
     the driver's correctness gate (rows, sorted columns, sorted value
     tuples)."""
+    from tools.check_oracle import canon, duck_connection
+
+    from data_ingestion_worker_spark.registry import all_specs
+    from data_ingestion_worker_spark.session import get_spark
+
     specs = all_specs()
     spark = get_spark("gate")
     con = duck_connection(sf_dir)
@@ -104,11 +110,45 @@ SOURCE_PATHS = ["data_ingestion_worker_spark", "tests", "tools",
                 "bench.py", "__spark_entry__.py"]
 
 
+def _git(repo: Path, *args: str) -> str:
+    # rstrip only: porcelain lines start with a status column that may
+    # be a space.
+    return subprocess.run(["git", *args], cwd=repo, capture_output=True,
+                          text=True, check=True).stdout.rstrip()
+
+
+def check(repo: Path = REPO) -> list[str]:
+    """Reasons the committed ``repo/GATE.json`` does not attest the
+    repository's current source; empty when it does."""
+    try:
+        gate = json.loads((repo / "GATE.json").read_text())
+    except (OSError, ValueError) as e:
+        return [f"GATE.json unreadable: {e}"]
+    problems = []
+    if not gate.get("green"):
+        problems.append("GATE.json is not green")
+    # Compare on the full hash: git may lengthen abbreviations as the
+    # repository grows.
+    head = _git(repo, "log", "-1", "--format=%H", "--", *SOURCE_PATHS)
+    recorded = gate.get("source_head") or ""
+    if not (recorded and head.startswith(recorded)):
+        problems.append(f"source_head {recorded or None} != "
+                        f"last source commit {head[:12]}")
+    if gate.get("dirty_source"):
+        problems.append(f"dirty_source at gate time: {gate['dirty_source']}")
+    return problems
+
+
 def main() -> int:
+    if sys.argv[1:] == ["--check"]:
+        problems = check(REPO)
+        for p in problems:
+            print(f"GATE STALE: {p}")
+        if not problems:
+            print("GATE OK: GATE.json attests the current source")
+        return 1 if problems else 0
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    head = subprocess.run(["git", "rev-parse", "--short", "HEAD"],
-                          cwd=REPO, capture_output=True,
-                          text=True).stdout.strip()
+    head = _git(REPO, "rev-parse", "--short", "HEAD")
     # r7 verdict "What's wrong #3": GATE.json inevitably lands in a
     # LATER (docs-only) commit than the head it ran at, so the head
     # alone is ambiguous.  source_head pins the last commit that touched
@@ -117,12 +157,9 @@ def main() -> int:
     # for any commit whose own source_head matches.  dirty_source lists
     # uncommitted source changes at gate time (must be empty for a
     # clean attestation).
-    source_head = subprocess.run(
-        ["git", "log", "-1", "--format=%h", "--", *SOURCE_PATHS],
-        cwd=REPO, capture_output=True, text=True).stdout.strip()
-    dirty = subprocess.run(
-        ["git", "status", "--porcelain", "--", *SOURCE_PATHS],
-        cwd=REPO, capture_output=True, text=True).stdout.strip()
+    source_head = _git(REPO, "log", "-1", "--format=%h", "--",
+                       *SOURCE_PATHS)
+    dirty = _git(REPO, "status", "--porcelain", "--", *SOURCE_PATHS)
     dirty_source = [line[3:] for line in dirty.splitlines() if line]
     t0 = time.time()
     sweep = run_sweep(sf_dir)
