@@ -8,9 +8,10 @@ streaming trigger go through ONE annotate plan, ONE staging MERGE, ONE
 issues MERGE, ONE links MERGE and ONE routing write (the per-job form
 paid ~8 versioned-table writes per job, each a fixed-latency Spark job,
 which is what capped the streaming lifecycle at ~12 jobs/min on
-local[32]).  The single-job entry points (``initial``, ``reprocess``,
-``process_job``) are one-element batches of the same code path, so there
-is exactly one codification of each flow.
+local[32]).  The entry points are the batch forms (``process_jobs``,
+``initial_batch``, ``reprocess_batch``); ``process_job`` is a one-element
+batch of the same code path, so there is exactly one codification of
+each flow.
 
 Per-microbatch fixed costs are kept in the JVM and paid once:
 
@@ -53,7 +54,7 @@ that job A (same batch) consolidates.  The reference has the same
 non-determinism whenever two workers poll SQS concurrently (its
 transaction only guards one job); strictly sequential semantics are
 recoverable by processing jobs one per batch (consumer
-``maxFilesPerTrigger`` / the single-job entry points).  A1 duplicate
+``maxFilesPerTrigger`` / one-element batches).  A1 duplicate
 detection is per-job either way — the (job, email) window.
 
 Deterministic ids replace DB sequences (replay-safe by construction):
@@ -194,9 +195,6 @@ class JobProcessor:
                 actions.pop(job_id, None)
         return actions, errors
 
-    def _ensure_job(self, job_id: int, csv_path: str) -> None:
-        self._ensure_jobs([(job_id, csv_path)])
-
     def _ensure_jobs(self, jobs: list[tuple[int, str]]) -> None:
         new = literal_frame(
             self.spark,
@@ -204,11 +202,8 @@ class JobProcessor:
             T.StructType([SCHEMAS["jobs"][c] for c in (
                 "job_id", "job_user_id", "job_s3_object_key", "job_status")]),
         ).withColumn("job_created_at", F.current_timestamp())
-        self.store.upsert("jobs", _pad(new, self.store, "jobs"),
+        self.store.upsert("jobs", _pad(new, "jobs"),
                           insert_only=True)
-
-    def _set_job(self, job_id: int, **cols: object) -> None:
-        self._set_jobs({job_id: cols})
 
     def _set_jobs(self, updates: dict[int, dict[str, object]]) -> None:
         """Point-update several job rows in ONE published table version.
@@ -268,14 +263,6 @@ class JobProcessor:
 
     # --------------------------------------------------------------- §3.2
 
-    def initial(self, job_id: int, csv_path: str) -> None:
-        """Initial processing: CSV -> validated staging -> issues -> route.
-        One-element batch; an ingest failure re-raises (per-job contract).
-        """
-        errors = self.initial_batch([(job_id, csv_path)])
-        if job_id in errors:
-            raise errors[job_id]
-
     def initial_batch(
         self, jobs: list[tuple[int, str]],
     ) -> dict[int, Exception]:
@@ -307,7 +294,12 @@ class JobProcessor:
                     errors[job_id] = e
             if not parts:
                 return errors
-            batch = reduce(DataFrame.unionByName, parts)
+            # Deterministic staging id (module docstring), computed once:
+            # the staging MERGE and the issue links both carry it.
+            batch = reduce(DataFrame.unionByName, parts).withColumn(
+                "staging_id",
+                F.col(JOB_COL) * F.lit(1_000_000_000).cast("long")
+                + F.col("row_number"))
 
         with self._stage("validate"):
             # Annotate the FULL batch every run (crash-resume safety):
@@ -333,8 +325,7 @@ class JobProcessor:
                 # Staging MERGE (insert-only on (job_id, row_hash) —
                 # ADR-001).
                 staging_new = annot.select(
-                    (F.col(JOB_COL) * F.lit(1_000_000_000).cast("long")
-                     + F.col("row_number")).alias("staging_id"),
+                    F.col("staging_id"),
                     F.col(JOB_COL).alias("staging_job_id"),
                     F.col("email").alias("staging_email"),
                     F.col("first_name").alias("staging_first_name"),
@@ -347,7 +338,7 @@ class JobProcessor:
                     F.col("row_number").alias("staging_row_number"),
                 )
                 self.store.upsert(
-                    "staging", _pad(staging_new, self.store, "staging"),
+                    "staging", _pad(staging_new, "staging"),
                     insert_only=True)
 
                 # Mid-job heartbeat (reference T4:
@@ -371,18 +362,13 @@ class JobProcessor:
 
     # --------------------------------------------------------------- §3.3
 
-    def reprocess(self, job_id: int) -> None:
-        """Re-validate the (user-edited) staging rows — never the CSV."""
-        self.reprocess_batch([job_id])
-
     def reprocess_batch(self, ids: list[int]) -> None:
         """§3.3 for a whole microbatch: one annotate plan over every
         job's live staging rows, one write per table."""
         self._set_jobs({j: dict(job_status="PROCESSING") for j in ids})
         with self._stage("validate"):
-            staging = self.store.read("staging").filter(
-                F.col("staging_job_id").isin(ids)
-            )
+            all_staging = self.store.read("staging")
+            staging = all_staging.filter(F.col("staging_job_id").isin(ids))
             batch = staging.select(
                 F.col("staging_id"),
                 F.col("staging_job_id").alias(JOB_COL),
@@ -397,44 +383,53 @@ class JobProcessor:
             annot = self._annotate(live, job_col=JOB_COL).persist()
             try:
                 # Flip staging statuses set-wise (READY vs ISSUE; DISCARD
-                # kept) — staging_id is globally unique, so one join
-                # covers every job in the batch.
+                # kept) — staging_id is globally unique, so one left join
+                # of the one staging read covers every job in the batch
+                # and leaves other jobs' rows untouched.
                 status_updates = annot.select(
                     "staging_id",
                     F.when(F.col("issue_type").isNull(), "READY")
                      .otherwise("ISSUE").alias("new_status"),
                 )
-                updated = (
-                    staging.join(status_updates, "staging_id", "left")
+                self.store.overwrite("staging", (
+                    all_staging.join(status_updates, "staging_id", "left")
                     .withColumn(
                         "staging_status",
                         F.coalesce("new_status", "staging_status"),
                     )
                     .drop("new_status")
-                )
-                others = self.store.read("staging").filter(
-                    ~F.col("staging_job_id").isin(ids)
-                )
-                self.store.overwrite("staging", others.unionByName(
-                    _pad(updated, self.store, "staging")
                 ))
 
                 failing = annot.filter(F.col("issue_type").isNotNull())
-                self._merge_issues_and_links(failing, reprocess=True)
+                self._merge_issues_and_links(failing)
+
+                # T8 un-resolve: resolved issues that regained a failing
+                # row.
+                regained = failing.select(
+                    F.col(JOB_COL).alias("issues_job_id"),
+                    "issue_type", "issue_key")
+                cleared = (
+                    self.store.read("issues").join(
+                        regained,
+                        ["issues_job_id", "issue_type", "issue_key"],
+                        "left_semi",
+                    )
+                    .filter(F.col("issue_resolved"))
+                    .withColumn("issue_resolved", F.lit(False))
+                    .withColumn("issue_resolved_at",
+                                F.lit(None).cast("timestamp"))
+                    .withColumn("issue_resolved_by",
+                                F.lit(None).cast("string"))
+                    .withColumn("issue_resolution_comment",
+                                F.lit(None).cast("string"))
+                )
+                self.store.upsert("issues", cleared)
             finally:
                 annot.unpersist()
             self._auto_resolve(ids)
         self._route_batch(ids)
 
     # --------------------------------------------------------------- §3.4
-
-    def consolidate(self, job_id: int) -> None:
-        """READY staging -> contacts; staging -> SUCCESS; job -> COMPLETED."""
-        with self._stage("consolidate"):
-            self._consolidate_batch([job_id])
-            self._set_jobs({job_id: dict(
-                job_status="COMPLETED", job_process_end=NOW,
-            )})
 
     def _consolidate_batch(self, ids: list[int]) -> None:
         """Contacts insert + staging SUCCESS flip for every listed job —
@@ -501,11 +496,12 @@ class JobProcessor:
         return annotate_contacts(rows, existing, job_id=job_id,
                                  row_col="row_number", job_col=job_col)
 
-    def _merge_issues_and_links(self, failing: DataFrame,
-                                reprocess: bool = False) -> None:
-        """T6 get_or_create + T7 link dedup + T8 un-resolve, for every
-        job in the batch at once.  ``failing`` must carry ``JOB_COL``
-        (long), issue_type/key/msg, and row_number or staging_id."""
+    def _merge_issues_and_links(self, failing: DataFrame) -> None:
+        """T6 get_or_create + T7 link dedup, for every job in the batch at
+        once.  ``failing`` must carry ``JOB_COL`` (long), issue_type/key/
+        msg and ``staging_id`` — both lifecycle flows carry the
+        deterministic id on every row, so issues and links are built from
+        ``failing`` alone and no table is read here."""
         issues_new = (
             failing.groupBy(JOB_COL, "issue_type", "issue_key")
             .agg(F.first("issue_msg").alias("issue_description"))
@@ -519,44 +515,11 @@ class JobProcessor:
                 F.current_timestamp().alias("issue_created_at"),
             )
         )
-        self.store.upsert("issues", _pad(issues_new, self.store, "issues"),
+        self.store.upsert("issues", _pad(issues_new, "issues"),
                           insert_only=True)
 
-        if reprocess:
-            # T8 un-resolve: resolved issues that regained a failing row.
-            regained = issues_new.select("issues_job_id", "issue_type",
-                                         "issue_key")
-            issues = self.store.read("issues")
-            cleared = (
-                issues.join(
-                    regained,
-                    ["issues_job_id", "issue_type", "issue_key"],
-                    "left_semi",
-                )
-                .filter(F.col("issue_resolved"))
-                .withColumn("issue_resolved", F.lit(False))
-                .withColumn("issue_resolved_at", F.lit(None).cast("timestamp"))
-                .withColumn("issue_resolved_by", F.lit(None).cast("string"))
-                .withColumn("issue_resolution_comment",
-                            F.lit(None).cast("string"))
-            )
-            self.store.upsert("issues", cleared)
-
         # Links: failing staging row <-> its issue (pair-unique, T7).
-        if "staging_id" in failing.columns:
-            with_sid = failing.select(JOB_COL, "issue_type", "issue_key",
-                                      "staging_id")
-        else:
-            staging = self.store.read("staging").select(
-                "staging_job_id", "staging_row_number", "staging_id")
-            with_sid = failing.select(
-                JOB_COL, "issue_type", "issue_key", "row_number"
-            ).join(
-                staging,
-                (F.col(JOB_COL) == F.col("staging_job_id"))
-                & (F.col("row_number") == F.col("staging_row_number")),
-            )
-        links = with_sid.select(
+        links = failing.select(
             hash64(F.concat_ws(":", JOB_COL, "issue_type",
                                "issue_key")).alias("item_issue_id"),
             F.col("staging_id").alias("item_staging_id"),
@@ -594,12 +557,6 @@ class JobProcessor:
                         F.lit("All related staging records were resolved"))
         )
         self.store.upsert("issues", resolvable)
-
-    def _recount_and_route(self, job_id: int,
-                           total_rows: int | None = None) -> None:
-        """A5 recount + T3 tail for one job (kept for callers/tests)."""
-        totals = {job_id: total_rows} if total_rows is not None else None
-        self._route_batch([job_id], totals=totals)
 
     def _route_batch(self, ids: list[int],
                      totals: dict[int, int] | None = None) -> None:
@@ -705,7 +662,7 @@ def _project_contacts(df: DataFrame) -> DataFrame:
     return df.select(*out, "row_number")
 
 
-def _pad(df: DataFrame, store: ControlStore, table: str) -> DataFrame:
+def _pad(df: DataFrame, table: str) -> DataFrame:
     """Add any missing schema columns as typed NULLs."""
     have = set(df.columns)
     for field in SCHEMAS[table].fields:

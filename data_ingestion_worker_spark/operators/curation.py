@@ -52,19 +52,17 @@ from ..functions.text import (
 )
 from ..spec import QuerySpec
 from ..tables import load_table
-
-# DuckDB mirrors shared with operators/text.py (same semantics, kept in
-# sync by the oracle sweep).
-_TOKENS_SQL = ("CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[] "
-               "ELSE string_split_regex(trim(lower(text)), '\\s+') END")
-_WS_COUNT_SQL = f"CAST(len({_TOKENS_SQL}) AS INT)"
-_NORM_SQL = ("trim(regexp_replace(regexp_replace(lower(text), "
-             "'[^a-z0-9 ]', '', 'g'), '\\s+', ' ', 'g'))")
-
-
-def _floor4(c: F.Column) -> F.Column:
-    """Engine-stable 4-decimal truncation (see operators/text.py:_floor4)."""
-    return F.floor(c * 10000.0) / 10000.0
+from .text import (
+    _BUCKET_SQL,
+    _NORM_SQL,
+    _TOKENS_SQL,
+    _TRAIN_CUT,
+    _VAL_CUT,
+    _WS_COUNT_SQL,
+    _floor4,
+    _marker_sql,
+    _split_bucket,
+)
 
 
 def _floor6(c: F.Column) -> F.Column:
@@ -75,19 +73,9 @@ def _floor6(c: F.Column) -> F.Column:
 # Deterministic train/holdout split
 # ---------------------------------------------------------------------------
 
-#: Salt namespaces the split hash away from every other hash64 use, so
-#: changing an unrelated operator's hashing can never silently re-split
-#: the corpus.
-_SPLIT_SALT = "split:v1:"
-_TRAIN_CUT, _VAL_CUT = 96, 98  # train <96, val <98, test <100
-
-
-def _split_bucket(doc_id: F.Column) -> F.Column:
-    """bucket = hash64(salt || doc_id) mod 100 — the single split rule."""
-    return F.pmod(
-        hash64(F.concat(F.lit(_SPLIT_SALT), doc_id.cast("string"))),
-        F.lit(100),
-    )
+# The split rule itself (salt, cuts, bucket expression and its DuckDB
+# mirror) lives in operators/text.py, whose held-out LM oracles need it
+# at import time.
 
 
 def _split_of(doc_id: F.Column) -> F.Column:
@@ -114,9 +102,6 @@ def split_train_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
         _split_of(F.col("doc_id")).alias("split"),
     )
 
-
-_SPLIT_EXPR = f"'{_SPLIT_SALT}' || CAST(doc_id AS VARCHAR)"
-_BUCKET_SQL = f"CAST({hash64_sql(_SPLIT_EXPR)} % 100 AS INT)"
 
 SPLIT_ORACLE = f"""
 SELECT doc_id, source,
@@ -292,11 +277,6 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).over(w).alias("group_size"),
         (rank == 1).alias("kept"),
     )
-
-
-def _marker_sql(markers: list[str]) -> str:
-    lst = ", ".join(f"'{m}'" for m in markers)
-    return (f"CAST(len(list_filter({_TOKENS_SQL}, t -> t IN ({lst}))) AS INT)")
 
 
 KEEP_BEST_ORACLE = f"""

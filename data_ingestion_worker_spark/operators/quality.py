@@ -256,7 +256,7 @@ def pipeline_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..functions.hashing import hash64
     from ..functions.text import fingerprint
-    from .curation import _SPLIT_SALT, _TRAIN_CUT, _VAL_CUT
+    from .text import _SPLIT_SALT, _TRAIN_CUT, _VAL_CUT
 
     d = load_table(spark, sf_dir, "documents")
     decided = pipeline_pretrain_filter(spark, sf_dir) \
@@ -285,8 +285,8 @@ def pipeline_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _curation_e2e_oracle() -> str:
-    from .curation import _BUCKET_SQL as bucket
-    from .curation import _TRAIN_CUT, _VAL_CUT
+    from .text import _BUCKET_SQL as bucket
+    from .text import _TRAIN_CUT, _VAL_CUT
     from .dedup import _NORM_SQL
 
     return f"""
@@ -333,7 +333,7 @@ def pipeline_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..functions.hashing import hash64
     from ..functions.text import fingerprint
-    from .curation import _SPLIT_SALT, _TRAIN_CUT, _VAL_CUT
+    from .text import _SPLIT_SALT, _TRAIN_CUT, _VAL_CUT
     from .text import doc_lm_xent_proxy, doc_policy_flags
 
     d = load_table(spark, sf_dir, "documents")
@@ -394,8 +394,8 @@ def pipeline_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _curation_v2_oracle() -> str:
-    from .curation import _BUCKET_SQL as bucket
-    from .curation import _TRAIN_CUT, _VAL_CUT
+    from .text import _BUCKET_SQL as bucket
+    from .text import _TRAIN_CUT, _VAL_CUT
     from .dedup import _NORM_SQL
     from .text import LM_XENT_ORACLE, POLICY_FLAGS_ORACLE
 

@@ -15,7 +15,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import hash64_sql
+from ..functions.hashing import hash64, hash64_sql
 from ..functions.text import (
     BPE_REGEX,
     LANG_MARKERS,
@@ -42,6 +42,27 @@ _NORM_SQL = ("trim(regexp_replace(regexp_replace(lower(text), "
 def _marker_sql(markers: list[str]) -> str:
     lst = ", ".join(f"'{m}'" for m in markers)
     return (f"CAST(len(list_filter({_TOKENS_SQL}, t -> t IN ({lst}))) AS INT)")
+
+
+# Deterministic train/val/test split (curation.split_train_holdout and
+# the held-out LM queries here).
+#: Salt namespaces the split hash away from every other hash64 use, so
+#: changing an unrelated operator's hashing can never silently re-split
+#: the corpus.
+_SPLIT_SALT = "split:v1:"
+_TRAIN_CUT, _VAL_CUT = 96, 98  # train <96, val <98, test <100
+
+
+def _split_bucket(doc_id: F.Column) -> F.Column:
+    """bucket = hash64(salt || doc_id) mod 100 — the single split rule."""
+    return F.pmod(
+        hash64(F.concat(F.lit(_SPLIT_SALT), doc_id.cast("string"))),
+        F.lit(100),
+    )
+
+
+_SPLIT_EXPR = f"'{_SPLIT_SALT}' || CAST(doc_id AS VARCHAR)"
+_BUCKET_SQL = f"CAST({hash64_sql(_SPLIT_EXPR)} % 100 AS INT)"
 
 
 def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -676,8 +697,6 @@ def corpus_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is map-side partial over the scan; at 100 TB the counts
     would typically come from table metadata instead.)
     """
-    from ..functions.hashing import hash64
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     per = d.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
     m = per.agg(F.min("n_docs").alias("min_docs"))
@@ -790,8 +809,6 @@ def sample_weighted_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps its local top-k, the driver merges k·P rows — no global sort
     at any scale.
     """
-    from ..functions.hashing import hash64
-
     d = load_table(spark, sf_dir, "documents")
     pri = F.expr("hashv div greatest(n_chars, 1)")
     return (
@@ -2741,8 +2758,6 @@ def corpus_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a bounded global sort (the BM25 top-k shape); the holdout scan
     joins a broadcast N-row vocabulary — no corpus-sized state.
     """
-    from .curation import _TRAIN_CUT, _split_bucket
-
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "source",
@@ -2798,8 +2813,6 @@ def corpus_heldout_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
     division.  Scale: two train-side hash aggregates joined back by
     key, the vocabulary scalar broadcast, one holdout scan.
     """
-    from .curation import _TRAIN_CUT, _split_bucket
-
     d = load_table(spark, sf_dir, "documents")
     base = d.select(
         "source", _split_bucket(F.col("doc_id")).alias("bucket"),
@@ -2839,8 +2852,6 @@ def corpus_heldout_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _heldout_xent_oracle() -> str:
-    from .curation import _BUCKET_SQL, _TRAIN_CUT
-
     return f"""
 WITH base AS (
   SELECT source, {_BUCKET_SQL} AS bucket, {_TOKENS_SQL} AS t
@@ -2879,8 +2890,6 @@ FROM scored GROUP BY 1
 
 
 def _oov_oracle() -> str:
-    from .curation import _BUCKET_SQL, _TRAIN_CUT
-
     return f"""
 WITH toks AS (
   SELECT source, {_BUCKET_SQL} AS bucket, unnest({_TOKENS_SQL}) AS w

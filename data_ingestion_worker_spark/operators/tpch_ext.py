@@ -28,10 +28,7 @@ from pyspark.sql import functions as F
 from ..spec import QuerySpec
 from ..tables import load_table
 from ..functions.checkpoint import cut_lineage
-
-
-def _dec(col: str, scale: str = "12,2") -> F.Column:
-    return F.col(col).cast(f"decimal({scale})")
+from .tpch import _dec
 
 
 def _rev() -> F.Column:

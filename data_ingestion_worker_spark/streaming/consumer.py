@@ -22,9 +22,10 @@ Spark mapping:
 - poison msg   -> ``from_json`` null-out + filter (bad records never
                   reach the processor and never block the stream).
 - redrive/DLQ  -> the ``dead_letters`` control table: a job that raises
-                  is retried on subsequent batches until
-                  ``max_receive_count`` attempts, then parked with
-                  status=DEAD (SQS redrive policy; the reference instead
+                  is retried on subsequent batches, inside each batch's
+                  one job list, until ``max_receive_count`` attempts,
+                  then parked with status=DEAD (SQS redrive policy; the
+                  reference instead
                   redelivers failing messages forever after the
                   visibility timeout, README.md:196-203).  A successful
                   retry clears the entry.
@@ -64,14 +65,15 @@ def parse_job_messages(raw: DataFrame, value_col: str = "value") -> DataFrame:
 class JobStreamConsumer:
     """readStream(inbox) -> foreachBatch(route + process) with checkpoint.
 
-    Batch-snapshot asymmetry (documented, test-pinned): fresh jobs in a
-    microbatch share ONE set of plans, so the J2 existing-email check
-    reads contacts as of batch START — job B does not see contacts job A
-    consolidates in the same trigger (the same race the reference has
-    whenever two workers poll SQS concurrently).  The per-job FALLBACK
-    below (taken only when the shared batch plan itself dies) processes
-    jobs sequentially and therefore DOES see same-trigger contacts — the
-    two paths can legitimately annotate the same inbox differently.
+    Batch-snapshot asymmetry (documented, test-pinned): every job of a
+    microbatch — fresh messages and dead-letter retries alike — shares
+    ONE set of plans, so the J2 existing-email check reads contacts as
+    of batch START — job B does not see contacts job A consolidates in
+    the same trigger (the same race the reference has whenever two
+    workers poll SQS concurrently).  The per-job FALLBACK below (taken
+    only when the shared batch plan itself dies) processes jobs
+    sequentially and therefore DOES see same-trigger contacts — the two
+    paths can legitimately annotate the same inbox differently.
     Strictly sequential semantics are available by construction via
     ``max_files_per_trigger=1`` (one job per microbatch)."""
 
@@ -103,76 +105,66 @@ class JobStreamConsumer:
         )
         return [(int(r["dlq_job_id"]), r["dlq_s3_key"]) for r in rows]
 
-    def _record_failure(self, job_id: int, s3_key: str, error: str) -> None:
-        """Bump the receive count; at max_receive_count the message is
+    def _record_failures(self, failed: dict[int, tuple[str, str]]) -> None:
+        """Bump each failing job's receive count — ``failed`` maps job id
+        to ``(s3_key, error)``.  At max_receive_count the message is
         dead-lettered (status=DEAD), never retried again, and the job row
         itself goes FAILED with the error text — the reference's
         JobStatus.FAILED-on-exception (src/processor.py:387,671,787), so
         a user polling job status sees the terminal state, not an
-        eternal PROCESSING."""
+        eternal PROCESSING.  One ledger read and one ledger MERGE for the
+        whole micro-batch; one jobs write for every job that went DEAD."""
+        if not failed:
+            return
         now = datetime.now(timezone.utc)
-        prev = (
-            self.store.read("dead_letters")
-            .filter(F.col("dlq_job_id") == job_id)
-            .collect()
-        )
-        attempts = (int(prev[0]["dlq_attempts"]) if prev else 0) + 1
-        first_seen = prev[0]["dlq_first_seen_at"] if prev else now
-        status = "DEAD" if attempts >= self.max_receive_count else "RETRYING"
-        entry = literal_frame(
-            self.spark,
-            [(job_id, s3_key, error, attempts, status, first_seen, now)],
-            SCHEMAS["dead_letters"],
-        )
-        self.store.upsert("dead_letters", entry)
-        if status == "DEAD":
-            # The job may have died before its row was ever created
-            # (e.g. poison path upstream of _ensure_job on a replay).
-            self.processor._ensure_job(job_id, s3_key)
-            self.processor._set_job(
-                job_id,
-                job_status="FAILED",
-                job_error=error,
-                job_process_end=PROC_NOW,
-            )
-
-    def _clear_failure(self, job_id: int) -> None:
-        """A retried job succeeded: drop its dead-letter entry."""
-        self.store.delete(
-            "dead_letters",
-            literal_frame(self.spark, [(job_id,)], T.StructType(
-                [SCHEMAS["dead_letters"]["dlq_job_id"]])),
-        )
+        prev = {
+            int(r["dlq_job_id"]): r
+            for r in self.store.read("dead_letters")
+            .filter(F.col("dlq_job_id").isin(list(failed))).collect()
+        }
+        entries = []
+        dead: list[tuple[int, str]] = []
+        for job_id, (s3_key, error) in failed.items():
+            p = prev.get(job_id)
+            attempts = (int(p["dlq_attempts"]) if p else 0) + 1
+            status = ("DEAD" if attempts >= self.max_receive_count
+                      else "RETRYING")
+            entries.append((job_id, s3_key, error, attempts, status,
+                            p["dlq_first_seen_at"] if p else now, now))
+            if status == "DEAD":
+                dead.append((job_id, s3_key))
+        self.store.upsert("dead_letters", literal_frame(
+            self.spark, entries, SCHEMAS["dead_letters"]))
+        if dead:
+            # A job may have died before its row was ever created
+            # (e.g. poison path upstream of _ensure_jobs on a replay).
+            self.processor._ensure_jobs(dead)
+            self.processor._set_jobs({
+                j: dict(job_status="FAILED", job_error=failed[j][1],
+                        job_process_end=PROC_NOW)
+                for j, _ in dead
+            })
 
     def _process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         msgs = parse_job_messages(batch_df)
         # Control stream: one tiny row per job — the collect is bounded by
         # message count, never by data size (the CSVs are processed as
-        # distributed scans inside process_job).
+        # distributed scans inside process_jobs).
         retries = self._pending_retries()
         fresh = [(int(r["job_id"]), r["s3_key"]) for r in msgs.collect()]
         retry_ids = {j for j, _ in retries}
         fresh_keys = dict(fresh)
-        # Retries run first; a fresh message for a retrying job supplies
-        # the (possibly corrected) s3_key but is not processed twice.
-        # Retries go one-at-a-time (rare; isolates a repeat offender);
-        # fresh jobs go through ONE shared batch of plans — one annotate
-        # + one MERGE per table per microbatch (processor.process_jobs),
-        # which is what keeps jobs/min flat as message volume grows.
-        for job_id, s3_key in [(j, fresh_keys.get(j, k))
-                               for j, k in retries]:
-            try:
-                action = self.processor.process_job(job_id, s3_key)
-                self._clear_failure(job_id)
-            except Exception as e:  # noqa: BLE001
-                self._record_failure(job_id, s3_key,
-                                     f"{type(e).__name__}: {e}")
-                action = f"error:{type(e).__name__}"
-            self.results.append((job_id, action))
-
-        fresh_todo = [(j, k) for j, k in fresh if j not in retry_ids]
+        # ONE job list per micro-batch: retries first, then fresh
+        # messages; a fresh message for a retrying job supplies the
+        # (possibly corrected) s3_key but is not processed twice.  Every
+        # job shares one batch of plans — one annotate + one MERGE per
+        # table per microbatch (processor.process_jobs), which is what
+        # keeps jobs/min flat as message volume grows — and so shares
+        # the batch snapshot (class docstring).
+        todo = ([(j, fresh_keys.get(j, k)) for j, k in retries]
+                + [(j, k) for j, k in fresh if j not in retry_ids])
         try:
-            actions, errors = self.processor.process_jobs(fresh_todo)
+            actions, errors = self.processor.process_jobs(todo)
         except Exception:  # noqa: BLE001
             # The shared batch plan itself failed (not a per-job ingest
             # error — those are isolated inside process_jobs).  Fall back
@@ -180,26 +172,32 @@ class JobStreamConsumer:
             # whole microbatch; every table write is idempotent
             # (ADR-001), so the partial batch replays convergently.
             actions, errors = {}, {}
-            for job_id, s3_key in fresh_todo:
+            for job_id, s3_key in todo:
                 try:
                     actions[job_id] = self.processor.process_job(
                         job_id, s3_key)
                 except Exception as e:  # noqa: BLE001
                     errors[job_id] = e
-        for job_id, s3_key in fresh_todo:
+        # Per-message error isolation (reference S3/T10): a job whose CSV
+        # is missing/unreadable must not wedge the stream — raising here
+        # would fail the microbatch and the checkpoint would replay it
+        # forever (head-of-line blocking for every later job).  Failures
+        # land in the dead_letters ledger with a bounded retry budget;
+        # retries that succeeded leave it.
+        failed: dict[int, tuple[str, str]] = {}
+        for job_id, s3_key in todo:
             if job_id in errors:
-                # Per-message error isolation (reference S3/T10): a job
-                # whose CSV is missing/unreadable must not wedge the
-                # stream — raising here would fail the microbatch and the
-                # checkpoint would replay it forever (head-of-line
-                # blocking for every later job).  The failure lands in
-                # the dead_letters ledger with a bounded retry budget.
                 e = errors[job_id]
-                self._record_failure(job_id, s3_key,
-                                     f"{type(e).__name__}: {e}")
+                failed[job_id] = (s3_key, f"{type(e).__name__}: {e}")
                 self.results.append((job_id, f"error:{type(e).__name__}"))
             else:
                 self.results.append((job_id, actions[job_id]))
+        self._record_failures(failed)
+        cleared = [(j,) for j in retry_ids if j not in errors]
+        if cleared:
+            self.store.delete("dead_letters", literal_frame(
+                self.spark, cleared, T.StructType(
+                    [SCHEMAS["dead_letters"]["dlq_job_id"]])))
 
     def start(self, available_now: bool = True,
               processing_interval: str = "20 seconds") -> StreamingQuery:

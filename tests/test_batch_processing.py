@@ -17,7 +17,10 @@ pin the contract that makes that safe:
 - replaying a whole batch is a no-op (ADR-001);
 - mixed batches route per job (skip / reprocess / initial);
 - the consumer falls back to per-job processing if the shared batch
-  plan itself dies.
+  plan itself dies;
+- dead-letter retries ride the same micro-batch (one ``process_jobs``
+  call) and a batch's failures publish one ledger version;
+- issue links carry each row's deterministic ``staging_id``.
 """
 
 from __future__ import annotations
@@ -301,3 +304,127 @@ def test_batch_duplicate_message_last_key_wins(spark, tmp_path):
     assert actions == {1: "initial"}
     staged = store.read("staging").count()
     assert staged == 2  # the corrected CSV's two rows, not an ingest error
+
+
+def _process_messages(consumer, spark, msgs):
+    """Feed one micro-batch of job messages to the consumer's
+    ``foreachBatch`` body directly."""
+    batch = spark.createDataFrame(
+        [(json.dumps({"job_id": j, "s3_key": k}),) for j, k in msgs],
+        "value string")
+    consumer._process_batch(batch, 0)
+
+
+def test_retry_rides_the_micro_batch(spark, tmp_path, monkeypatch):
+    """A RETRYING dead letter and a fresh message share ONE
+    ``process_jobs`` call: the retry (whose CSV has since appeared)
+    succeeds and leaves the ledger, the fresh job's failure is its
+    first attempt."""
+    from data_ingestion_worker_spark.streaming import JobStreamConsumer
+
+    store = ControlStore(spark, str(tmp_path / "ctl"))
+    consumer = JobStreamConsumer(spark, store, str(tmp_path / "inbox"),
+                                 str(tmp_path / "ckpt"))
+    late = str(tmp_path / "late.csv")
+    _process_messages(consumer, spark, [(1, late)])
+    dl = store.read("dead_letters").collect()
+    assert [(r["dlq_job_id"], r["dlq_status"]) for r in dl] == [
+        (1, "RETRYING")]
+
+    _csv(tmp_path, "late.csv", VALID.format(p="a"))
+    missing = str(tmp_path / "missing.csv")
+    calls = []
+    real = consumer.processor.process_jobs
+
+    def spy(jobs):
+        calls.append(list(jobs))
+        return real(jobs)
+
+    monkeypatch.setattr(consumer.processor, "process_jobs", spy)
+    _process_messages(consumer, spark, [(2, missing)])
+    assert calls == [[(1, late), (2, missing)]]
+    assert consumer.results[1] == (1, "initial")
+    assert consumer.results[2][0] == 2
+    assert consumer.results[2][1].startswith("error:")
+    dl = store.read("dead_letters").collect()
+    assert [(r["dlq_job_id"], r["dlq_attempts"], r["dlq_status"])
+            for r in dl] == [(2, 1, "RETRYING")]
+    jrows = {r["job_id"]: r["job_status"]
+             for r in store.read("jobs").collect()}
+    assert jrows[1] == "COMPLETED"
+
+
+def test_batch_failures_publish_one_ledger_version(spark, tmp_path):
+    """Two failures in one micro-batch are recorded by ONE dead_letters
+    MERGE; both budgets exhausted at once fail both jobs."""
+    from data_ingestion_worker_spark.streaming import JobStreamConsumer
+
+    store = ControlStore(spark, str(tmp_path / "ctl"))
+    consumer = JobStreamConsumer(spark, store, str(tmp_path / "inbox"),
+                                 str(tmp_path / "ckpt"),
+                                 max_receive_count=1)
+    before = len(store.history("dead_letters"))
+    _process_messages(consumer, spark, [(1, str(tmp_path / "m1.csv")),
+                                        (2, str(tmp_path / "m2.csv"))])
+    assert len(store.history("dead_letters")) == before + 1
+    dl = sorted((r["dlq_job_id"], r["dlq_attempts"], r["dlq_status"])
+                for r in store.read("dead_letters").collect())
+    assert dl == [(1, 1, "DEAD"), (2, 1, "DEAD")]
+    jrows = {r["job_id"]: r for r in store.read("jobs").collect()}
+    assert {j: r["job_status"] for j, r in jrows.items()} == {
+        1: "FAILED", 2: "FAILED"}
+    assert all("m%d.csv" % j in r["job_error"] for j, r in jrows.items())
+
+
+def test_issue_links_equal_staging_join_reference(spark, tmp_path):
+    """The links built from the batch's own ``staging_id`` are exactly
+    the pairs a join of the failing rows to staging on
+    (job, row_number) gives."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    from data_ingestion_worker_spark.control.processor import (
+        JOB_COL,
+        _project_contacts,
+    )
+    from data_ingestion_worker_spark.functions.hashing import hash64
+    from data_ingestion_worker_spark.ingest.csv_reader import (
+        read_contacts_csv,
+    )
+
+    store = ControlStore(spark, str(tmp_path / "ctl"))
+    proc = JobProcessor(spark, store)
+    jobs = [(1, _csv(tmp_path, "j1.csv", DIRTY.format(p="a"))),
+            (2, _csv(tmp_path, "j2.csv", DIRTY.format(p="b")))]
+    batch = reduce(DataFrame.unionByName, [
+        _project_contacts(read_contacts_csv(spark, path))
+        .withColumn(JOB_COL, F.lit(j).cast("long")) for j, path in jobs])
+    failing = [
+        tuple(r) for r in proc._annotate(batch, job_col=JOB_COL)
+        .filter(F.col("issue_type").isNotNull())
+        .select(JOB_COL, "issue_type", "issue_key", "row_number").collect()
+    ]
+    assert proc.initial_batch(jobs) == {}
+
+    staging = store.read("staging").select(
+        "staging_job_id", "staging_row_number", "staging_id")
+    ref = {
+        (r[0], r[1]) for r in spark.createDataFrame(
+            failing,
+            f"{JOB_COL} long, issue_type string, issue_key string, "
+            "row_number long",
+        ).join(
+            staging,
+            (F.col(JOB_COL) == F.col("staging_job_id"))
+            & (F.col("row_number") == F.col("staging_row_number")),
+        ).select(
+            hash64(F.concat_ws(":", JOB_COL, "issue_type", "issue_key")),
+            "staging_id",
+        ).collect()
+    }
+    links = {(r["item_issue_id"], r["item_staging_id"])
+             for r in store.read("issue_items").collect()}
+    assert len(ref) == 6   # per job: two duplicate rows + one bad email
+    assert links == ref

@@ -86,7 +86,7 @@ def test_replay_is_idempotent(env):
     # Crash-redelivery: same message again (status now NEEDS_REVIEW, so
     # this routes to reprocess; force the initial path too via a new
     # processor to simulate resume-from-PROCESSING).
-    proc.initial(1, csv_path)
+    assert proc.initial_batch([(1, csv_path)]) == {}
     assert store.read("staging").count() == staging_1
     assert store.read("issues").count() == issues_1
     assert store.read("issue_items").count() == links_1
@@ -211,8 +211,8 @@ def test_resume_after_partial_crash_recreates_issues(env, spark):
     # job never reached a terminal status.
     store.overwrite("issues", store.read("issues").limit(0))
     store.overwrite("issue_items", store.read("issue_items").limit(0))
-    proc._set_job(1, job_status="PROCESSING")
-    proc.initial(1, csv_path)                    # SQS redelivery resume
+    proc._set_jobs({1: dict(job_status="PROCESSING")})
+    assert proc.initial_batch([(1, csv_path)]) == {}  # SQS redelivery resume
     job = _job(store, 1)
     assert job["job_status"] == "NEEDS_REVIEW"   # NOT silently COMPLETED
     assert job["job_issue_count"] == 3

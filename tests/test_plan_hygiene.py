@@ -8,9 +8,18 @@ jobs at scale:
   remain allowed for the multimodal stubs).
 - ``CartesianProduct`` — an unbroadcast cross join; at any real scale
   this is a non-terminating job.
-- ``BroadcastNestedLoopJoin`` — allowed only where a broadcast cross
-  join *is* the algorithm (query-vector × corpus scans, scalar-subquery
-  attachment), listed explicitly so a new accidental one fails loudly.
+- ``BroadcastNestedLoopJoin`` — allowed by plan structure when its
+  broadcast side is a ``BroadcastExchange`` over a one-row global
+  aggregate (``HashAggregate(keys=[]…)``, reached only through
+  Project/Filter): attaching a scalar to every row is linear.  Any
+  other BNLJ — where a broadcast cross join *is* the algorithm
+  (query-vector × corpus scans, pair enumeration over a bounded
+  domain) — must be listed in ``BNLJ_ALLOWED`` with a reason, so a new
+  accidental one fails loudly.
+- ``Exchange SinglePartition`` — allowed by plan structure when its
+  consumer is the final ``HashAggregate(keys=[]…)`` of a global
+  aggregate (partial buffers of fixed width, one row out); every other
+  single-partition funnel must be listed in ``SP_ALLOWED``.
 """
 
 from __future__ import annotations
@@ -19,7 +28,11 @@ import pytest
 
 from data_ingestion_worker_spark.registry import all_specs
 
-#: Queries whose algorithm is a deliberate broadcast cross join.
+#: Queries whose plan has a BNLJ that is not a scalar attachment
+#: (:func:`_bnlj_is_scalar_attach`): a deliberate broadcast cross join
+#: over a bounded side — query vectors, a keyed aggregate over a fixed
+#: domain, a literal ladder — or a one-row scalar that a lineage cut
+#: hides from the plan (its broadcast side is a checkpoint scan).
 BNLJ_ALLOWED = {
     "ann_cosine_topk",     # K query vectors broadcast against the corpus
     "emb_hamming_topk",    # N_QUERIES binary codes broadcast × corpus
@@ -28,96 +41,32 @@ BNLJ_ALLOWED = {
     "emb_outlier_knn",     # OUT_SAMPLE query rows broadcast × corpus
                            # + one-row p95 scalar cross
     "ann_ivf_recall",      # IVF results × brute-force results comparison
-    "q22_idle_rich_customers",  # scalar subquery attached to every row
-    "q15_top_supplier",    # one-row max-revenue broadcast cross join
-    "doc_salient_terms",   # one-row N aggregate broadcast cross join
-    "doc_unigram_logprob",  # one-row corpus-total broadcast cross join
     "stats_chi2_independence",  # tiny-margin cross to generate the domain
-    "stats_g_test",        # one-row grand-total scalar cross (chi2's
-                           # scaffold; margins join back BY KEY — the
-                           # G-test needs no domain fan-out at all)
-    "ev_poisson_dispersion",  # one-row global day-count scalar cross
-                              # (zero days add 0 to Σx/Σx², so only n
-                              # needs the broadcast)
-    "token_bigram_pmi",    # one-row corpus-total broadcast cross joins
-    "token_window_pmi",    # same one-row totals (windowed twin)
-    "doc_bm25_rank",       # one-row (N, Σdl) corpus-stats broadcast cross
-    "doc_lm_xent_kn",      # one-row bigram-type-count scalar cross
-    "stats_kruskal_wallis",  # one-row (n, tcorr) tie-scalar cross
-    "stats_cohens_kappa",  # one-row Σrᵢcᵢ marginal-product scalar cross
-    "corpus_js_divergence",  # one-row corpus-token-total scalar cross
-    "stats_mutual_information",  # one-row N / H(x) / H(y) scalar crosses
-    "doc_quality_classifier",  # one-row (Npos, Nneg, V) model scalar
     "stats_welch_ttest",   # |types|-row stats table × itself (pair enum)
     "stats_tost_equivalence",  # same |types|-row pair enumeration
     "stats_two_proportion_z",  # same |types|-row pair enumeration
     "stats_bh_fdr",        # inherits the pair enumeration cross
     "stats_holm_bonferroni",  # same pair enumeration + one-row scalars
-    "stats_wilson_ci",     # one-row traffic-total scalar cross
-    "stats_ks_test",       # one-row per-sample-N broadcast cross join
-    "stats_mannwhitney_u",  # one-row per-sample-N broadcast cross join
-    "stats_wilcoxon_signed_rank",  # one-row pre/post split-bound scalar
-    "corpus_dsir_resample",  # one-row (Nt, Nr) model-total scalar cross
     "corpus_quality_calibration",  # decile-cut row scalar cross
-    "ev_winsorized_mean",  # |types|-row clamp-cut broadcast cross
-    "sample_priority_ppswor",  # one-row tau threshold scalar cross
-    "ev_rfm_segmentation",  # one-row ref-ts + quintile-cutoff scalars
-    "ev_conversion_time",  # one-row quantile row × one-row count row
-    "ev_growth_accounting",  # one-row observation-window-end scalar
-    "corpus_token_budget_plan",  # one-row integer-total broadcast cross
-    "stats_auc_quality_lang",  # one-row per-class-N broadcast cross join
-    "profile_join_key_skew",   # one-row fact-count broadcast cross join
-    "graph_pagerank",      # one-row |V| aggregate broadcast cross join
-    "graph_hits",          # one-row L1-total scalars per half-step
-    "graph_pagerank_weighted",  # same |V| scalar, weighted contributions
-    "graph_pagerank_adaptive",  # same |V| scalar, convergence-capped loop
     "hybrid_search_rerank",  # one-row query-vector broadcast cross join
     "hybrid_search_rrf",   # inherits the rerank stage's query-vector cross
     "emb_matryoshka_recall",  # K query vectors broadcast (twice per dim)
-    "corpus_mix_sample",   # one-row min-lang-count broadcast cross join
-    "sketch_hll_union",    # one-row merged-registers x one-row exact count
-    "ev_markov_stationary",  # one-row state-count broadcast cross join
-    "ev_markov_entropy_rate",  # one-row rate scalar broadcast cross
     "sketch_kmv_jaccard",  # |sources|-row sketch table × itself (pair enum)
     "profile_column_kmv_overlap",  # |candidate-columns|-row sketch
                                    # table × itself (pair enum)
     "ev_hurst_exponent",   # calendar-spine crosses of _dense_daily (the
                            # one-row span scalar + bounded type list)
-    "corpus_growth_curve",  # one-row max-doc-id broadcast cross join (x2)
     "ann_pq_recall",       # K query vectors broadcast (exact L2 truth side)
-    "emb_coreset_maxmin",  # one-row new-center broadcast per maxmin round
-    "emb_mmr_rerank",      # query vector + <=24-row pool broadcast per round
-    "mba_part_lift",       # one-row order-count broadcast cross join
-    "graph_k_core",        # one-row k-threshold broadcast cross join
-    "graph_community_conductance",  # one-row 2m scalar cross
-    "graph_triangle_doulion",  # one-row totals x one-row sampled-count
-    "dedup_rate_estimate",  # one-row sampled-pairs x one-row doc total
     "ev_sliding_uniques_hll",  # 3-row window-offset broadcast fan-out
     "ev_fft_periodogram",  # 9-row candidate-period broadcast fan-out
-    "dq_validate_orders",  # one-row stats x one-row orphan-count cross
-    "feat_target_encode_oof",  # one-row global-prior scalar cross
-    "dq_freshness_events",  # one-row global-watermark broadcast cross
-    "ev_survival_curve",   # one-row horizon-date broadcast cross join
-    "abc_revenue_classes",  # one-row revenue-total broadcast cross join
-    "graph_modularity",    # one-row total-degree (2m) broadcast cross
-    "emb_cluster_ari",     # four one-row contingency-sum scalars crossed
     "ev_ewma_daily",       # |days|-row spine × |types|-row domain cross
     "stats_psi_drift",     # one-row span + decile-cut scalars crossed
-    "ev_churn_features",   # one-row reference-timestamp broadcast cross
-    "profile_partition_balance",  # one-row total broadcast cross
-    "ev_rolling_median_7d",  # |days|-row spine × |types|-row domain
     "ev_forecast_backtest",  # same dense-spine |days| × |types| cross
     "ev_lead_lag_corr",    # bounded spine × 7-row lag-domain cross
-    "doc_lm_xent_proxy",   # one-row vocabulary-size broadcast cross
-    "corpus_heldout_xent",  # same one-row vocab scalar (train-split
-                            # model, held-out scoring)
-    "corpus_quality_xent_corr",  # inherits the LM vocab scalar cross
     "pipeline_curation_v2",  # LM vocab scalar + one-row p90-cut cross
     "pipeline_curation_v3",  # inherits v2's scalar crosses (LM vocab,
                              # p90 cut) + the CC chain's checkpoints
     "stats_cramers_v",     # inherits chi2's margins + one 2-scalar cross
-    "stats_theil_inequality",  # one-row corpus-totals broadcast cross
-    "feat_woe_iv",         # one-row (G, B) + one-row IV-total scalars
     "rank_ndcg_eval",      # inherits rrf's query-vector/scalar crosses
     "rank_mrr_eval",       # same rrf scaffold (query-vector/scalar crosses)
     "rank_map_eval",       # same rrf scaffold
@@ -130,15 +79,10 @@ BNLJ_ALLOWED = {
     "ev_friedman_test",    # |types|-row table × one-row (n,k,ΣS²) scalar
     "graph_rich_club",     # 8-literal threshold ladder × deg/edge tables
                            # (range predicate deg>k — bounded fan-out 8)
-    "stats_permutation_test",  # one-row threshold scalar × fact fan-out
-                               # + B-row × one-row observed cross
     "ev_interrupted_ts",   # _dense_daily's spine scalars + the one-row
                            # (d0, d1) day-span cross
-    "ev_logrank_test",     # one-row O/E/V reduction × one-row user totals
-                           # + the survival horizon scalar
     "ev_dickey_fuller",    # _dense_daily's span-scalar + type-domain cross
     "stats_cohens_d",      # |types|-row stats table × itself (pair enum)
-    "ev_decomposition_strength",  # inherits decompose's spine crosses
 }
 
 
@@ -188,155 +132,50 @@ def test_kmv_plan_has_no_rank_window(spark, sf_dir):
     assert "Window" not in plan, "per-source rank window reintroduced"
 
 
-#: Queries whose plan may contain ``Exchange SinglePartition``.  Every
-#: entry must be a one-row scalar aggregate (partial agg per partition,
-#: one-row final — constant data volume) or a window over an already
-#: *bounded* group-aggregate (see WINDOW_OVER_SP_ALLOWED).  A corpus-wide
+#: Queries whose plan may contain an ``Exchange SinglePartition`` that
+#: does not feed a global aggregate's final step (those pass by
+#: structure, :func:`_sp_feeds_global_agg`).  Every entry must still be
+#: constant data volume — e.g. a window over an already *bounded*
+#: group-aggregate (see WINDOW_OVER_SP_ALLOWED).  A corpus-wide
 #: funnel — e.g. ``Window.partitionBy()`` over a table that grows with SF
 #: — must NOT be added here; fix the plan instead (the q15 history).
 SP_ALLOWED = {
-    "q6_forecast_revenue",      # one-row revenue scalar
-    "q14_promo_revenue",        # one-row promo-share scalar
-    "q15_top_supplier",         # one-row max-revenue scalar
-    "q17_small_quantity",       # one-row yearly-revenue scalar
-    "q19_disjunctive_revenue",  # one-row revenue scalar
-    "q22_idle_rich_customers",  # one-row avg-balance scalar
-    "dedup_lsh_recall",         # one-row recall/precision scalar
-    "ev_growth_accounting",     # one-row observation-window-end scalar
-    "doc_salient_terms",        # one-row corpus-N scalar
-    "doc_unigram_logprob",      # one-row corpus-total scalar
-    "doc_bm25_rank",            # one-row (N, Σdl) scalar
-    "doc_quality_classifier",   # one-row (Npos, Nneg, V) scalar
-    "corpus_dsir_resample",     # one-row (Nt, Nr) model-total scalar
-    "corpus_quality_calibration",  # decile-cut scalars (quantile helper)
-    "ev_winsorized_mean",       # clamp-cut scalars (quantile helper)
-    "graph_pagerank",           # one-row |V| + per-iteration mass scalars
-    "graph_hits",               # one-row L1-normalization totals
-    "graph_pagerank_weighted",  # same scalars, weighted degree
-    "graph_pagerank_adaptive",  # same scalars, convergence-capped loop
-    "hybrid_search_rerank",     # BM25 stage's (N, Σdl) scalar + qvec row
-    "hybrid_search_rrf",        # same, + rank windows over <=k candidates
-    "stats_chi2_independence",  # one-row grand-total scalar
-    "stats_g_test",             # one-row grand-total scalar (chi2 twin)
-    "stats_ks_test",            # one-row per-sample-N scalars + CDF window
-    "stats_mannwhitney_u",      # same distributed-ECDF bucket offsets
-    "stats_wilcoxon_signed_rank",  # same ECDF offsets + split scalar
-    "stats_kruskal_wallis",     # same ECDF offsets + one-row (n, tcorr)
-                                # tie scalar + k-row final reduction
-    "stats_levene_bf",          # median-cut scalars (quantile helper)
-                                # + one-row power-sum reduction
-    "stats_cronbach_alpha",     # one-row power-sum reduction
-    "stats_jarque_bera",        # one-row power-sum reduction
-    "stats_mutual_information",  # one-row MI/entropy reductions over
-                                 # the bounded (lang x source) cells
-    "profile_unique_keys",       # one-row per-candidate distinct-count
-                                 # scalars in a constant-size UNION
-    "stats_wilson_ci",           # one-row traffic-total scalar
-    "stats_holm_bonferroni",     # pair-family windows (bounded domain)
-    "ev_hurst_exponent",        # one-row (min,max)-day span scalar of
-                                # the calendar spine
-    "stats_mcnemar",            # one-row discordant-count scalar
-    "stats_cohens_kappa",       # one-row confusion-total scalars over
-                                # the bounded language-domain cell table
-    "corpus_js_divergence",     # one-row corpus-token-total scalar
-    "profile_inclusion_deps",   # one-row per-candidate (nd, missing)
-                                # scalars in a constant-size UNION
-    "ev_rfm_segmentation",      # one-row ref-ts + quintile-cutoff scalars
-    "corpus_token_budget_plan",  # one-row integer-total scalar
-    "stats_auc_quality_lang",   # same distributed-ECDF bucket offsets
-    "profile_join_key_skew",    # one-row fact-count scalar
+    "hybrid_search_rrf",        # rank windows over <= BM25_TOPK candidates
+    "stats_ks_test",            # CDF window over the fixed bucket count
     "stats_spearman_corr",      # bucket-offset windows (rank tables)
-    "ev_conversion_time",       # one-row delay-quantile scalar
     "corpus_dedup_threshold_curve",  # cum window over <=9 bucket rows
     "stats_sprt_sequential",    # cum window over <=|window| daily rows
     "stats_bh_fdr",             # rank/step-up windows over the
                                 # C(|types|,2)-row pair family
-    "token_bigram_pmi",         # one-row corpus-total scalars
-    "token_window_pmi",         # same scalars (windowed twin)
     "skyline_pareto",           # running-max window over the bucket agg
     "corpus_mix_weights",       # mix-weight window over the k-source agg
-    "corpus_mix_sample",        # one-row min over the k-language agg
-    "sketch_hll_union",         # two one-row scalars (registers, exact)
     "pipeline_filter_stats",    # survival window over the per-reason agg
-    "ann_pq_adc_topk",          # Spark-injected runtime bloom-filter
-                                # subquery: partial sketch buffers merged
-                                # at one row (constant size, not data)
-    "corpus_dup_quality_profile",  # same injected bloom-filter subquery
-    "ev_markov_stationary",     # one-row state-count scalar
-    "ev_markov_entropy_rate",   # one-row occupancy-rate scalar
     "stats_holm_bonferroni",  # same C(|types|,2)-row pair-family windows
     "stats_benford",            # total window over the <=9-digit agg
-    "corpus_growth_curve",      # one-row max-id scalar + cum window over
-                                # the <=10 decile rows
-    "ann_pq_recall",            # inherits the ADC bloom-filter subquery
-    "emb_coreset_maxmin",       # per-round one-row argmax scalar
-    "emb_mmr_rerank",           # per-round one-row argmax scalar +
-                                # constant-size (<=24-row) pool TakeOrdered
-    "mba_part_lift",            # one-row order-count scalar
-    "graph_degree_assortativity",  # one-row five-moment scalar
-    "graph_k_core",             # one-row k-threshold scalar
-    "graph_triangle_doulion",   # three one-row count scalars crossed
-    "dedup_rate_estimate",      # two one-row count scalars crossed
-    "graph_bfs_distance",       # one-row seed-node scalar
-    "dq_validate_orders",       # one-row rule-metric scalars
-    "dq_validate_documents",    # one-row rule-metric scalars
-    "profile_functional_deps",  # one-row ndv scalars per candidate pair
-                                # (constant-size union of 12 legs)
-    "ev_survival_curve",        # one-row horizon scalar + cum windows
-                                # over the <=31-day lifetime agg
-    "stats_cuped_uplift",       # one-row pooled power-sum scalar
-    "stats_anova_f",            # one-row k-group power-sum reduction
-    "stats_corr_matrix",        # one-row all-pairs power-sum scalar
-    "feat_target_encode_oof",   # one-row global-prior scalar
-    "stats_diff_in_diff",       # one-row 4-cell power-sum scalar
-    "dq_freshness_events",      # one-row global-watermark scalar
-    "abc_revenue_classes",      # one-row total + offset windows over the
+    "corpus_growth_curve",      # cum window over the <=10 decile rows
+    "emb_coreset_maxmin",       # per-round one-row argmax scalar (a
+                                # SortAggregate, not a HashAggregate)
+    "emb_mmr_rerank",           # per-round one-row argmax SortAggregate
+                                # + constant-size (<=24-row) pool
+    "ev_survival_curve",        # cum windows over the <=31-day
+                                # lifetime agg
+    "abc_revenue_classes",      # offset windows over the
                                 # ABC_PARTITIONS-row (constant) pid agg
-    "emb_cluster_ari",          # one-row contingency-sum scalars
     "ev_peak_concurrency",      # offset window over the CONC_PARTITIONS-
                                 # row (constant) pid agg
-    "graph_modularity",         # one-row total-degree (2m) scalar
-    "graph_community_conductance",  # same one-row 2m scalar
-    "ev_ewma_daily",            # one-row (min,max)-day span scalar; lag
-                                # windows partition by the type domain
-    "stats_psi_drift",          # one-row span/decile/total scalars
-    "ev_churn_features",        # one-row reference-timestamp scalar
-    "doc_lm_xent_proxy",        # one-row vocabulary-size scalar
-    "doc_lm_xent_kn",           # one-row bigram-type-count scalar
-    "ev_funnel_strict_window",  # one-row funnel-count scalar
-    "emb_outlier_knn",          # one-row p95 scalar over the sample
-    "profile_partition_balance",  # one-row total scalar
-    "layout_partition_advisor",   # one-row per-candidate summary
-    "corpus_quality_xent_corr",  # LM vocab scalar + one-row power sums
-    "pipeline_curation_v2",     # LM vocab + p90-cut one-row scalars
-    "pipeline_curation_v3",     # same scalars through the v2 stages
+    "stats_psi_drift",          # window over the bounded decile agg
+    "emb_outlier_knn",          # one-row p95 ObjectHashAggregate over
+                                # the fixed OUT_SAMPLE-row probe
     "profile_drift_daily",      # day-over-day lag over the calendar-
                                 # bounded daily aggregate
-    "ev_rolling_median_7d",     # one-row (min,max)-day span scalar
-    "ev_forecast_backtest",     # same one-row span scalar via the spine
-    "ev_lead_lag_corr",         # same span scalar via the shared spine
-    "ev_dickey_fuller",         # same one-row day-span scalar (spine)
-    "stats_cochran_armitage",   # one-row 5-bin power-sum reduction
-    "stats_cramers_v",          # chi2's grand-total + margin scalars
-    "stats_theil_inequality",   # one-row corpus-totals reduction
-    "feat_woe_iv",              # one-row totals + IV-sum reductions
-    "rank_ndcg_eval",           # rrf's scalars + one-row DCG reduction
-    "rank_mrr_eval",            # rrf's scalars + one-row first-hit MIN
-    "rank_map_eval",            # rrf's scalars + one-row AP reduction
-    "rank_rbo_eval",            # rrf's scalars + one-row overlap SUM
-    "rank_kendall_tau",         # rrf's scalars + one-row C/D reduction
-    "rank_pr_at_k",             # rrf's scalars + one-row hits reduction
-    "ev_cmh_test",              # one-row stratified-sums reduction
-    "ev_odds_ratio_mh",         # one-row stratified-sums reduction
-    "ev_poisson_dispersion",    # one-row global day-count scalar
-    "corpus_heldout_xent",      # one-row train-vocab scalar
-    "graph_reciprocity",        # one-row matrix-total reduction
-    "stats_mcc_langid",         # one-row 4-count confusion reduction
-    "stats_permutation_test",   # one-row observed sums + B-row replicate
-                                # table + one-row extreme-count reductions
-    "ev_friedman_test",         # one-row (n, k, ΣS²) scalar reduction
-    "ev_interrupted_ts",        # one-row (d0, d1) day-span reduction
-    "ev_logrank_test",          # one-row O/E/V + user-totals reductions
+    "rank_ndcg_eval",           # rrf's rank windows (<= BM25_TOPK pool)
+    "rank_mrr_eval",            # same rrf rank windows
+    "rank_map_eval",            # same rrf rank windows
+    "rank_rbo_eval",            # same rrf rank windows
+    "rank_kendall_tau",         # same rrf rank windows
+    "rank_pr_at_k",             # same rrf rank windows
+    "ev_logrank_test",          # at-risk cumulative windows over the
+                                # <=31-day lifetime table
 }
 
 #: Subset whose SinglePartition exchange feeds a *Window* operator.  Only
@@ -417,6 +256,69 @@ def _tree_indent(line: str) -> int:
     return i
 
 
+def _plan_tree(plan: str) -> tuple[list[str], list[list[int]]]:
+    """Operator lines of a physical-plan tree string and, per line, the
+    indices of its children (subquery inner children dropped, so a
+    join's children stay ``[left, right]``)."""
+    nodes: list[str] = []
+    kids: list[list[int]] = []
+    stack: list[tuple[int, int]] = []  # (indent, node index)
+    for ln in plan.splitlines():
+        if not ln.strip():
+            continue
+        ind = _tree_indent(ln)
+        while stack and stack[-1][0] >= ind:
+            stack.pop()
+        node = ln[ind:]
+        nodes.append(node)
+        kids.append([])
+        if stack and not node.startswith(("Subquery", "ReusedSubquery")):
+            kids[stack[-1][1]].append(len(nodes) - 1)
+        stack.append((ind, len(nodes) - 1))
+    return nodes, kids
+
+
+def _is_global_agg_final(node: str) -> bool:
+    """The final step of an ungrouped ``HashAggregate``: one row out."""
+    return (node.startswith("HashAggregate(keys=[],")
+            and "partial_" not in node)
+
+
+def _bnlj_is_scalar_attach(plan: str) -> bool:
+    """True iff every BroadcastNestedLoopJoin broadcasts a one-row global
+    aggregate: its build side is a ``BroadcastExchange`` whose subtree,
+    through Project/Filter only, is a final ``HashAggregate(keys=[]…)``."""
+    nodes, kids = _plan_tree(plan)
+    for i, node in enumerate(nodes):
+        if not node.startswith("BroadcastNestedLoopJoin"):
+            continue
+        side = 0 if "BuildLeft" in node else 1
+        if len(kids[i]) != 2 or not nodes[kids[i][side]].startswith(
+                "BroadcastExchange"):
+            return False
+        cur = kids[i][side]
+        while True:
+            if len(kids[cur]) != 1:
+                return False
+            cur = kids[cur][0]
+            if not nodes[cur].startswith(("Project", "Filter")):
+                break
+        if not _is_global_agg_final(nodes[cur]):
+            return False
+    return True
+
+
+def _sp_feeds_global_agg(plan: str) -> bool:
+    """True iff every ``Exchange SinglePartition`` is consumed by the
+    final step of an ungrouped ``HashAggregate`` — the fixed-width
+    partial buffers of a one-row scalar, constant data volume."""
+    nodes, kids = _plan_tree(plan)
+    under_agg = {k for i, node in enumerate(nodes)
+                 if _is_global_agg_final(node) for k in kids[i]}
+    return all(i in under_agg for i, node in enumerate(nodes)
+               if "Exchange SinglePartition" in node)
+
+
 def _sp_feeds_window(plan: str) -> bool:
     """True iff some ``Exchange SinglePartition`` has a Window ancestor
     before any aggregate/join boundary — the shape of an empty-frame
@@ -449,14 +351,14 @@ def test_plan_has_no_scale_killers(spark, sf_dir, name):
     assert "BatchEvalPython" not in plan, f"{name}: row-wise Python UDF"
     assert "CartesianProduct" not in plan, f"{name}: unbroadcast cross join"
     if name not in BNLJ_ALLOWED:
-        assert "BroadcastNestedLoopJoin" not in plan, (
-            f"{name}: unexpected broadcast nested-loop join"
+        assert _bnlj_is_scalar_attach(plan), (
+            f"{name}: broadcast nested-loop join whose broadcast side is "
+            "not a one-row global aggregate"
         )
     if name not in SP_ALLOWED:
-        assert "Exchange SinglePartition" not in plan, (
-            f"{name}: plan funnels data through a single partition; if "
-            "this is a one-row scalar aggregate, add it to SP_ALLOWED "
-            "with a justification"
+        assert _sp_feeds_global_agg(plan), (
+            f"{name}: plan funnels data through a single partition "
+            "outside a global aggregate's final step"
         )
     if name not in WINDOW_OVER_SP_ALLOWED:
         assert not _sp_feeds_window(plan), (
@@ -472,3 +374,38 @@ def test_plan_has_no_scale_killers(spark, sf_dir, name):
             "add the op to EXACT_PERCENTILE_ALLOWED with a bounded-"
             "domain justification"
         )
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_structural_rules_reject_unbounded_shapes(spark):
+    """Neither structural rule may pass a data-sized broadcast cross
+    join or an empty-frame window funnel."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    big = spark.range(0, 1000, 1, 4).withColumnRenamed("id", "a")
+    cross = _executed(big.crossJoin(F.broadcast(spark.range(10))))
+    assert "BroadcastNestedLoopJoin" in cross
+    assert not _bnlj_is_scalar_attach(cross)
+    funnel = _executed(big.withColumn(
+        "r", F.row_number().over(Window.partitionBy().orderBy("a"))))
+    assert "Exchange SinglePartition" in funnel
+    assert not _sp_feeds_global_agg(funnel)
+
+
+def test_structural_rules_accept_scalar_attachment(spark):
+    """A broadcast global aggregate crossed onto every row passes both
+    rules: the BNLJ broadcasts one row, the single-partition exchange
+    carries fixed-width partial buffers into the final aggregate."""
+    from pyspark.sql import functions as F
+
+    big = spark.range(0, 1000, 1, 4).withColumnRenamed("id", "a")
+    total = big.agg(F.count(F.lit(1)).alias("n"), F.sum("a").alias("s"))
+    plan = _executed(big.crossJoin(F.broadcast(total)))
+    assert "BroadcastNestedLoopJoin" in plan
+    assert "Exchange SinglePartition" in plan
+    assert _bnlj_is_scalar_attach(plan)
+    assert _sp_feeds_global_agg(plan)
