@@ -5,30 +5,23 @@ Runs the engine's headline queries at $SPARK_GRAFT_SF_DIR (default
 ``{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
 "sf": ...}`` line as the LAST stdout line.
 
-Emission contract (round-6 fix): the driver captures only the last
-~2,000 bytes of output, so the stdout line is kept under 1,500 bytes
-(asserted) — it carries the full-suite total, the legacy-19 subtotal
-(the r1 baseline-of-record subset, per-query), and the top-5 heaviest
+Emission contract: the driver captures only the last ~2,000 bytes of
+output, so the stdout line is kept under 1,500 bytes (asserted) — it
+carries the full-suite total, the legacy-19 subtotal (the
+baseline-of-record subset, per-query), and the top-5 heaviest
 queries.  The FULL per-query timings + [min,max] spreads for all
 headline queries are written to ``BENCH_DETAIL.json`` (committed).
 
-Contention awareness (round-9, after r8's committed number landed at
-the 2x contract line from a disclosed host-noise window while the same
-HEAD measured 1.18x quiet): a fixed single-core calibration probe runs
+Contention awareness: a fixed single-core calibration probe runs
 before and after the suite and ``host_noise_index`` =
 max(probe)/PROBE_REF_SEC is emitted into BOTH the compact line and
-BENCH_DETAIL (~1.0 quiet, >1.3 contended), alongside os.getloadavg();
-and if the marker query ``q1_pricing_summary`` (logic-unchanged since
-r1; its SCAN path gained the r10 spread exchange, which is why the
-band was recalibrated at the r10 close rather than carried from r1)
-lands above its recorded historical band OR the legacy-19 total
-itself exceeds ``LEGACY19_TRIGGER_SEC`` (round-10: the r9 driver
-window read q1 = 1.482 s — 0.018 s under the marker trigger — while
-publishing 1.55×, so the total is its own second witness) the
-legacy-19 subset is re-measured once and the better pass kept, with
-both totals, the trigger reason, and a mixed-window flag recorded
-(``legacy19_first`` / ``legacy19_rerun`` / ``rerun_reason`` /
-``mixed_window``).
+BENCH_DETAIL (~1.0 quiet, >1.3 contended), alongside os.getloadavg().
+If the marker query ``q1_pricing_summary`` lands above
+``Q1_BAND_MAX_SEC`` OR the legacy-19 total exceeds
+``LEGACY19_TRIGGER_SEC``, the legacy-19 subset is re-measured once and
+the better pass kept, with both totals, the trigger reason, and a
+mixed-window flag recorded (``legacy19_first`` / ``legacy19_rerun`` /
+``rerun_reason`` / ``mixed_window``).
 
 Each query is forced through the noop sink (full execution, no
 driver-side collect overhead).  The mix covers every engine subsystem:
@@ -37,9 +30,9 @@ pipeline, window/sessionization, dedup (minhash/incremental/ssjoin),
 similarity (cosine/PQ-ADC), text scoring, sketches, graph, multimodal
 codecs, and the composed curation funnels.  A streaming end-to-end
 lifecycle bench runs after the batch suite and lands in
-BENCH_DETAIL.json: phase 1 drains N job messages (fixed N/rows/trigger
-across rounds, so jobs/min stays comparable) into NEEDS_REVIEW; phase 2
-(r7) discards the failing rows and drains fresh messages through
+BENCH_DETAIL.json: phase 1 drains N job messages (fixed N/rows/trigger,
+so jobs/min stays comparable between runs) into NEEDS_REVIEW; phase 2
+discards the failing rows and drains fresh messages through
 reprocess -> auto-resolve -> consolidate.  Both phases report EXCLUSIVE
 per-stage seconds (ingest/validate/route/consolidate, from
 JobProcessor.stage_seconds) so a jobs/min move is attributable.
@@ -61,46 +54,28 @@ from data_ingestion_worker_spark.registry import all_specs  # noqa: E402
 from data_ingestion_worker_spark.session import get_spark  # noqa: E402
 from data_ingestion_worker_spark.tables import TABLE_NAMES, load_table  # noqa: E402
 
-#: The first 19 entries are the r1 baseline-of-record subset
-#: (BASELINE.md: 14.053 s at sf0.1); keep them first and per-query in
-#: the compact stdout line so the driver's record stays comparable
-#: across rounds.
+#: The first 19 entries are the baseline-of-record subset (BASELINE.md:
+#: 14.053 s at sf0.1); keep them first and per-query in the compact
+#: stdout line so the driver's record stays comparable.
 LEGACY_19 = 19
 
-#: Quiet-host seconds for :func:`_calibration_probe` on THIS container
-#: (re-measured at round-10 close: quiet runs read 0.606-0.632 s with
-#: the r9 reference 0.78 — the stale value reported noise_index ~0.8
-#: on a quiet host, a mis-calibrated weather report; CPython 3.x,
-#: pinned 20M-iter integer loop).  ``host_noise_index`` = measured/reference — ~1.0 on
-#: a quiet host, >1.3 flags external contention (the r8 close window
-#: published legacy-19 at the 2x contract line while the same HEAD
-#: measured 1.18x quiet; the committed artifact must carry its own
-#: weather report).
+#: Quiet-host seconds for :func:`_calibration_probe` on the bench host
+#: (CPython 3.x, pinned 20M-iteration integer loop; quiet runs read
+#: 0.606-0.632 s).  ``host_noise_index`` = measured/reference: ~1.0 on
+#: a quiet host, >1.3 flags external contention, so the committed
+#: artifact carries its own weather report.
 PROBE_REF_SEC = 0.61
 
-#: Historical band for the marker query ``q1_pricing_summary``
-#: (logic-unchanged since r1; r10 added the scan-spread exchange to its
-#: read path, so the band below comes from the r10-close recalibration,
-#: not the r1-r7 history): committed min-of-3 across rounds 1-7 was
-#: 0.899-1.345 s; the r8 contention window pushed it to 2.266 s.  A
-#: marker above the band triggers ONE legacy-19 re-measure pass and the
-#: better pass is kept (both totals recorded) — the rerun-on-outlier
-#: policy from the r8 verdict.  1.5 = band max + ~12% headroom (the
-#: first round-9 close run measured q1 = 1.527 in a warm post-gate
-#: window and slipped under the initial 1.6 — tightened so a
-#: band-breaching marker always triggers the re-measure).
+#: Upper edge of the quiet band of the marker query
+#: ``q1_pricing_summary``.  A marker above it triggers ONE legacy-19
+#: re-measure pass and the better pass is kept (both totals recorded).
 Q1_BAND_MAX_SEC = 1.1
 
-#: Backstop trigger on the legacy-19 TOTAL itself (round-10, r9 verdict
-#: ask #1): the driver's BENCH_r09 ran in a window where the q1 marker
-#: read 1.482 s — 0.018 s UNDER the 1.5 s trigger — and published
-#: legacy-19 = 21.77 s = 1.55x while the same code measures 15.11 s =
-#: 1.08x quiet.  One 3-run-min marker is a single noisy witness for a
-#: 19-query total, so the total is now its own second witness:
-#: Round-10: 15.14 s = 1.25 x the best committed quiet legacy-19 on
-#: record (12.111 s, BENCH_DETAIL at round-10 close).  The marker
-#: stays primary; either breach re-measures the legacy-19 once and
-#: keeps the better pass.
+#: Backstop trigger on the legacy-19 TOTAL itself: one 3-run-min marker
+#: is a single noisy witness for a 19-query total, so the total is its
+#: own second witness, set at 1.25 x the best committed quiet legacy-19
+#: (12.111 s).  Either breach re-measures the legacy-19 once and keeps
+#: the better pass.
 LEGACY19_TRIGGER_SEC = 15.14
 
 
@@ -109,9 +84,9 @@ def _rerun_reason(q1_sec: float, legacy19_first_sec: float) -> str | None:
 
     Pure decision function (forced-branch smoke-testable without a
     SparkSession — tests/test_bench_policy.py): returns ``None`` when
-    both witnesses are in band, else a ``+``-joined reason string.  The
-    sub-threshold-q1 / high-total window that evaded the r9 policy
-    (q1 1.482 < 1.5, total 21.77 > 18.9) returns ``"legacy19_total"``.
+    both witnesses are in band, else a ``+``-joined reason string; a
+    marker inside its band with a total above the backstop returns
+    ``"legacy19_total"``.
     """
     reasons = []
     if q1_sec > Q1_BAND_MAX_SEC:

@@ -39,15 +39,11 @@ from ..functions.text import fingerprint
 from ..spec import QuerySpec
 from ..tables import load_table
 from ..functions.checkpoint import cut_lineage
+from .text import _NORM_SQL, _TOKENS_SQL
 
 N_PERM = 8          # minhash permutations
 BAND_ROWS = 2       # rows per LSH band -> 4 bands
 SIMHASH_BITS = 16
-
-_TOKENS_SQL = ("CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[] "
-               "ELSE string_split_regex(trim(lower(text)), '\\s+') END")
-_NORM_SQL = ("trim(regexp_replace(regexp_replace(lower(text), "
-             "'[^a-z0-9 ]', '', 'g'), '\\s+', ' ', 'g'))")
 
 # (doc_id, shingle) pairs, distinct — DuckDB side (1-based list indexing).
 _SHINGLES_SQL = f"""

@@ -30,11 +30,25 @@ Every lineage cut below goes through ``functions.checkpoint.
 cut_lineage``: localCheckpoint by default, reliable ``checkpoint()``
 as soon as the deployment sets a checkpoint directory — the
 fault-tolerance swap is one session setting, not a code change.
+
+Each repeated piece has one definition, on both engines:
+
+- the PageRank superstep — :func:`_pr_start` (degree, ``V``, initial
+  ranks) and :func:`_pr_step` (message + damped update), with the
+  contribution expression as a value — serves the fixed, adaptive and
+  weighted variants; :func:`_pr_oracle` unrolls it for all three;
+- the BFS frontier expansion :func:`_expand_frontier`, keyed by
+  ``node`` (single-source BFS) or ``(node, lm)`` (landmark closeness),
+  unrolled by :func:`_frontier_oracle`;
+- the customer–supplier edge list :func:`_edges` / :data:`_EDGES_CTE`
+  and its weighted form :func:`_weighted_edges` /
+  :func:`_weighted_edges_cte`;
+- the node-axis decode :func:`_node_kind` / :data:`_KIND_SQL`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash64, hash64_sql
@@ -70,6 +84,125 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: DuckDB twin of :func:`_edges`, materialized once per oracle.
+_EDGES_CTE = """pairs AS (
+  SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
+  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+),
+edges AS MATERIALIZED (
+  SELECT c AS src, s AS dst FROM pairs
+  UNION ALL
+  SELECT s AS src, c AS dst FROM pairs
+)"""
+
+
+def _weighted_edges(spark: SparkSession, sf_dir: str,
+                    weight: str = "1 + 1000 div cnt") -> DataFrame:
+    """Undirected weighted edges on the customer–supplier graph, ``w`` =
+    ``weight`` (an SQL expression over ``cnt``, the pair's distinct
+    co-orders).  The default is the SSSP edge cost ``1 + 1000 div cnt``
+    — frequently-trading pairs are cheap to traverse (an integer proxy
+    for ``-log strength``), so shortest paths prefer strong commercial
+    links; weighted PageRank passes ``cnt`` itself.  Integer weights
+    keep the algebra exact in both engines."""
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_suppkey")
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey")
+    pairs = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .groupBy(
+            (F.col("o_custkey") * 2).alias("c"),
+            (F.col("l_suppkey") * 2 + 1).alias("s"),
+        )
+        .agg(F.countDistinct("l_orderkey").alias("cnt"))
+        .select("c", "s", F.expr(weight).alias("w"))
+    )
+    return pairs.select(
+        F.col("c").alias("src"), F.col("s").alias("dst"), "w"
+    ).unionAll(
+        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w")
+    )
+
+
+def _weighted_edges_cte(weight: str) -> str:
+    """DuckDB twin of :func:`_weighted_edges` (``weight`` over ``cnt``)."""
+    return f"""pairs AS (
+  SELECT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s,
+         count(DISTINCT l_orderkey) AS cnt
+  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+  GROUP BY 1, 2
+),
+edges AS MATERIALIZED (
+  SELECT c AS src, s AS dst, {weight} AS w FROM pairs
+  UNION ALL
+  SELECT s AS src, c AS dst, {weight} AS w FROM pairs
+)"""
+
+
+def _node_kind() -> list[Column]:
+    """Decode the shared node axis: ``kind`` (even → customer, odd →
+    supplier) and ``key`` (``node div 2``)."""
+    return [
+        F.when(F.col("node") % 2 == 0, F.lit("customer"))
+        .otherwise(F.lit("supplier")).alias("kind"),
+        F.expr("node div 2").alias("key"),
+    ]
+
+
+#: DuckDB twin of :func:`_node_kind`'s ``kind`` column.
+_KIND_SQL = ("CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END"
+             " AS kind")
+
+#: The damped rank update ``(1−d)/V + d·Σ`` with d = 17/20, in integers.
+_PR_UPDATE = f"(3 * {PR_SCALE}) div (20 * v) + (17 * s) div 20"
+
+
+def _pr_start(edges: DataFrame, deg_agg: Column
+              ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """PageRank set-up over a checkpointed edge list: the per-node
+    ``deg`` table (``deg_agg`` over each node's out-edges), the one-row
+    node count ``v`` and the initial ranks ``r₀ = SCALE div V``."""
+    # deg is referenced by V and by every superstep's rank update; a
+    # lazy local checkpoint materializes its shuffle once — without it
+    # the plan re-executes the groupBy subtree per reference (no
+    # ReusedExchange across the iteration joins, verified empirically).
+    deg = edges.groupBy(F.col("src").alias("node")).agg(
+        deg_agg.alias("deg")
+    ).transform(cut_lineage)
+    v = deg.agg(F.count(F.lit(1)).alias("v"))
+    ranks = deg.crossJoin(F.broadcast(v)).select(
+        "node", "deg", F.expr(f"{PR_SCALE} div v").alias("r")
+    )
+    return deg, v, ranks
+
+
+def _pr_step(ranks: DataFrame, edges: DataFrame, v: DataFrame,
+             base: DataFrame, contrib: str, *keep: str) -> DataFrame:
+    """One PageRank superstep: each node sends ``contrib`` (an SQL
+    expression over the rank row and its edge) along every out-edge;
+    the sum arriving at a node, joined onto ``base`` (``node``, ``deg``
+    and the ``keep`` columns), becomes its damped new rank ``r``."""
+    incoming = (
+        ranks.join(edges, ranks.node == edges.src)
+        .select("dst", F.expr(contrib).alias("c"))
+        .groupBy(F.col("dst").alias("node")).agg(F.sum("c").alias("s"))
+    )
+    return (
+        base.join(incoming, "node")
+        .crossJoin(F.broadcast(v))
+        .select("node", "deg", F.expr(_PR_UPDATE).alias("r"), *keep)
+    )
+
+
+def _pagerank(edges: DataFrame, deg_agg: Column, contrib: str) -> DataFrame:
+    """``PR_ITERATIONS`` fixed supersteps, no cut between them."""
+    deg, v, ranks = _pr_start(edges, deg_agg)
+    for _ in range(PR_ITERATIONS):
+        ranks = _pr_step(ranks, edges, v, deg, contrib)
+    return ranks.select(*_node_kind(), F.col("r").alias("rank_scaled"))
+
+
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer-scaled PageRank (damping 0.85, 3 fixed iterations).
 
@@ -79,42 +212,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph is undirected, every node has deg ≥ 1 and receives at least
     one contribution, so no dangling-mass term is needed.
     """
-    edges = _edges(spark, sf_dir).transform(cut_lineage)
-    # deg is referenced 4x (V count + every iteration's rank update); a
-    # lazy local checkpoint materializes its shuffle once — without it the
-    # plan re-executes the groupBy subtree per reference (no
-    # ReusedExchange across the iteration joins, verified empirically).
-    deg = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    ).transform(cut_lineage)
-    v = deg.agg(F.count(F.lit(1)).alias("v"))
-    ranks = deg.crossJoin(F.broadcast(v)).select(
-        "node", "deg", F.expr(f"{PR_SCALE} div v").alias("r")
-    )
-    for _ in range(PR_ITERATIONS):
-        contrib = (
-            ranks.join(edges, ranks.node == edges.src)
-            .select("dst", F.expr("r div deg").alias("c"))
-        )
-        incoming = contrib.groupBy(F.col("dst").alias("node")).agg(
-            F.sum("c").alias("s")
-        )
-        ranks = (
-            deg.join(incoming, "node")
-            .crossJoin(F.broadcast(v))
-            .select(
-                "node", "deg",
-                F.expr(
-                    f"(3 * {PR_SCALE}) div (20 * v) + (17 * s) div 20"
-                ).alias("r"),
-            )
-        )
-    return ranks.select(
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-        .otherwise(F.lit("supplier")).alias("kind"),
-        F.expr("node div 2").alias("key"),
-        F.col("r").alias("rank_scaled"),
-    )
+    return _pagerank(_edges(spark, sf_dir).transform(cut_lineage),
+                     F.count(F.lit(1)), "r div deg")
 
 
 #: Iteration cap for the adaptive variant (and its unrolled oracle).
@@ -130,10 +229,9 @@ def graph_pagerank_adaptive(spark: SparkSession, sf_dir: str,
     driver loop stops as soon as ``max |Δr| <= epsilon_scaled`` — at
     100× scale the iteration budget becomes adaptive instead of a fixed
     unroll.  The convergence flag rides the rank frame (|Δr| computed in
-    the same pass, materialized by the eager checkpoint), so the check
-    is a ``filter().count()`` whose single job also materializes the
-    lazy checkpoint — no extra shuffle, the same pattern as
-    ``dedup_connected_components``.
+    the same pass and marked for a lazy cut), so the check is one full
+    ``filter().count()`` whose job also materializes that cut — no extra
+    shuffle, the same pattern as ``dedup_connected_components``.
 
     The registry entry uses ``epsilon_scaled=0``: with pure-integer
     arithmetic, Δ=0 means an exact fixpoint, so early exit is
@@ -148,32 +246,11 @@ def graph_pagerank_adaptive(spark: SparkSession, sf_dir: str,
     convergence action would re-execute the whole prefix.
     """
     edges = _edges(spark, sf_dir).transform(cut_lineage)
-    deg = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    ).transform(cut_lineage)
-    v = deg.agg(F.count(F.lit(1)).alias("v"))
-    ranks = deg.crossJoin(F.broadcast(v)).select(
-        "node", "deg", F.expr(f"{PR_SCALE} div v").alias("r")
-    )
+    _, v, ranks = _pr_start(edges, F.count(F.lit(1)))
     for _ in range(max_iterations):
-        contrib = (
-            ranks.join(edges, ranks.node == edges.src)
-            .select("dst", F.expr("r div deg").alias("c"))
-        )
-        incoming = contrib.groupBy(F.col("dst").alias("node")).agg(
-            F.sum("c").alias("s")
-        )
         new_ranks = (
-            ranks.withColumnRenamed("r", "r_prev")
-            .join(incoming, "node")
-            .crossJoin(F.broadcast(v))
-            .select(
-                "node", "deg",
-                F.expr(
-                    f"(3 * {PR_SCALE}) div (20 * v) + (17 * s) div 20"
-                ).alias("r"),
-                "r_prev",
-            )
+            _pr_step(ranks, edges, v, ranks.withColumnRenamed("r", "r_prev"),
+                     "r div deg", "r_prev")
             .withColumn("delta", F.abs(F.col("r") - F.col("r_prev")))
             .transform(cut_lineage)
         )
@@ -185,22 +262,22 @@ def graph_pagerank_adaptive(spark: SparkSession, sf_dir: str,
         ranks = new_ranks.drop("r_prev", "delta")
         if moving == 0:
             break  # fixpoint (within epsilon): further supersteps no-op
-    return ranks.select(
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-        .otherwise(F.lit("supplier")).alias("kind"),
-        F.expr("node div 2").alias("key"),
-        F.col("r").alias("rank_scaled"),
-    )
+    return ranks.select(*_node_kind(), F.col("r").alias("rank_scaled"))
 
 
-def _pr_oracle(n_iterations: int = PR_ITERATIONS) -> str:
+def _pr_oracle(n_iterations: int = PR_ITERATIONS, edges_cte: str = _EDGES_CTE,
+               deg_agg: str = "count(*)",
+               contrib: str = "r.r // r.deg") -> str:
+    """DuckDB unroll of ``n_iterations`` :func:`_pr_step` supersteps;
+    ``deg_agg`` and ``contrib`` mirror the Spark degree aggregate and
+    contribution expression."""
     base = f"(3 * {PR_SCALE}) // (20 * v)"
     iters = []
     prev = "r0"
     for i in range(1, n_iterations + 1):
         iters.append(f"""
 c{i} AS (
-  SELECT e.dst AS node, sum(r.r // r.deg) AS s
+  SELECT e.dst AS node, sum({contrib}) AS s
   FROM edges e JOIN {prev} r ON e.src = r.node GROUP BY 1
 ),
 r{i} AS (
@@ -210,17 +287,9 @@ r{i} AS (
 )""")
         prev = f"r{i}"
     return f"""
-WITH pairs AS (
-  SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-),
-edges AS (
-  SELECT c AS src, s AS dst FROM pairs
-  UNION ALL
-  SELECT s AS src, c AS dst FROM pairs
-),
+WITH {edges_cte},
 deg AS (
-  SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
+  SELECT src AS node, CAST({deg_agg} AS BIGINT) AS deg
   FROM edges GROUP BY 1
 ),
 v AS (SELECT CAST(count(*) AS BIGINT) AS v FROM deg),
@@ -228,7 +297,7 @@ r0 AS (
   SELECT node, deg, CAST({PR_SCALE} // v AS BIGINT) AS r
   FROM deg CROSS JOIN v
 ),{",".join(iters)}
-SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS kind,
+SELECT {_KIND_SQL},
        node // 2 AS key, r AS rank_scaled
 FROM {prev}
 """
@@ -247,30 +316,18 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("deg")
     )
     return (
-        deg.groupBy(
-            F.when(F.col("node") % 2 == 0, F.lit("customer"))
-            .otherwise(F.lit("supplier")).alias("kind"),
-            "deg",
-        )
+        deg.groupBy(_node_kind()[0], "deg")
         .agg(F.count(F.lit(1)).alias("n_nodes"))
     )
 
 
-DEGREE_ORACLE = """
-WITH pairs AS (
-  SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-),
-edges AS (
-  SELECT c AS src, s AS dst FROM pairs
-  UNION ALL
-  SELECT s AS src, c AS dst FROM pairs
-),
+DEGREE_ORACLE = f"""
+WITH {_EDGES_CTE},
 deg AS (
   SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
   FROM edges GROUP BY 1
 )
-SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS kind,
+SELECT {_KIND_SQL},
        deg, CAST(count(*) AS BIGINT) AS n_nodes
 FROM deg GROUP BY 1, 2
 """
@@ -599,21 +656,14 @@ def graph_label_propagation(spark: SparkSession,
     (iterative-lineage rule).
     """
     edges = _edges(spark, sf_dir).transform(cut_lineage)
-    labels = _lpa_labels(edges)
-    return labels.select(
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-        .otherwise(F.lit("supplier")).alias("kind"),
-        F.expr("node div 2").alias("key"),
-        F.col("label").alias("community"),
-    )
+    return _lpa_labels(edges).select(
+        *_node_kind(), F.col("label").alias("community"))
 
 
 def _lpa_labels(edges: DataFrame) -> DataFrame:
     """Deterministic synchronous label propagation over a checkpointed
     edge list; returns the (node, label) table after the fixed rounds
     (shared by the community listing and the modularity score)."""
-    from pyspark.sql import Window
-
     labels = (
         edges.select("src").distinct()
         .select(F.col("src").alias("node"), F.col("src").alias("label"))
@@ -658,14 +708,7 @@ l{i} AS (
 )""")
         prev = f"l{i}"
     return f"""
-WITH pairs AS (
-  SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-),
-edges AS (
-  SELECT c AS src, s AS dst FROM pairs
-  UNION ALL SELECT s, c FROM pairs
-),
+WITH {_EDGES_CTE},
 l0 AS (
   SELECT DISTINCT src AS node, src AS label FROM edges
 ),
@@ -674,10 +717,10 @@ l0 AS (
 """
 
 
-DEFAULT_LPA_TAIL = """
-SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS kind,
+DEFAULT_LPA_TAIL = f"""
+SELECT {_KIND_SQL},
        node // 2 AS key, label AS community
-FROM {prev}
+FROM {{prev}}
 """
 
 
@@ -1152,15 +1195,7 @@ def graph_degree_assortativity(spark: SparkSession,
 
 
 ASSORTATIVITY_ORACLE = f"""
-WITH pairs AS (
-  SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-),
-edges AS (
-  SELECT c AS src, s AS dst FROM pairs
-  UNION ALL
-  SELECT s AS src, c AS dst FROM pairs
-),
+WITH {_EDGES_CTE},
 deg AS (
   SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
   FROM edges GROUP BY 1
@@ -1188,106 +1223,18 @@ def graph_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     The unweighted walk treats a one-order supplier relationship the
     same as a hundred-order one; here each node splits its rank over
     incident edges proportionally to weight — contribution along an
-    edge is ``r * w div wdeg(src)`` (integer, so shuffle-order-exact
-    like the unweighted operator).  Same damping, same fixed-iteration
-    unrolled oracle; weighted degree replaces degree everywhere.
+    edge is ``(r * w) div deg(src)`` with ``deg`` the weighted degree
+    Σw (integer, so shuffle-order-exact like the unweighted operator).
+    Same damping, same :func:`_pr_step` superstep and the same
+    fixed-iteration oracle unroll as :func:`graph_pagerank`.
     """
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    pairs = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .agg(F.count_distinct("l_orderkey").alias("w"))
-    )
-    edges = pairs.select(
-        F.col("c").alias("src"), F.col("s").alias("dst"), "w"
-    ).unionAll(
-        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w")
-    ).transform(cut_lineage)
-    wdeg = edges.groupBy(F.col("src").alias("node")).agg(
-        F.sum("w").alias("wdeg")
-    ).transform(cut_lineage)
-    v = wdeg.agg(F.count(F.lit(1)).alias("v"))
-    ranks = wdeg.crossJoin(F.broadcast(v)).select(
-        "node", "wdeg", F.expr(f"{PR_SCALE} div v").alias("r")
-    )
-    for _ in range(PR_ITERATIONS):
-        contrib = (
-            ranks.join(edges, ranks.node == edges.src)
-            .select("dst", F.expr("(r * w) div wdeg").alias("c"))
-        )
-        incoming = contrib.groupBy(F.col("dst").alias("node")).agg(
-            F.sum("c").alias("s")
-        )
-        ranks = (
-            wdeg.join(incoming, "node")
-            .crossJoin(F.broadcast(v))
-            .select(
-                "node", "wdeg",
-                F.expr(
-                    f"(3 * {PR_SCALE}) div (20 * v) + (17 * s) div 20"
-                ).alias("r"),
-            )
-        )
-    return ranks.select(
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-        .otherwise(F.lit("supplier")).alias("kind"),
-        F.expr("node div 2").alias("key"),
-        F.col("r").alias("rank_scaled"),
-    )
+    return _pagerank(_weighted_edges(spark, sf_dir, "cnt")
+                     .transform(cut_lineage), F.sum("w"), "(r * w) div deg")
 
 
-def _wpr_oracle(n_iterations: int = PR_ITERATIONS) -> str:
-    base = f"(3 * {PR_SCALE}) // (20 * v)"
-    iters = []
-    prev = "r0"
-    for i in range(1, n_iterations + 1):
-        iters.append(f"""
-c{i} AS (
-  SELECT e.dst AS node, sum((r.r * e.w) // r.wdeg) AS s
-  FROM edges e JOIN {prev} r ON e.src = r.node GROUP BY 1
-),
-r{i} AS (
-  SELECT d.node, d.wdeg,
-         CAST({base} + (17 * c{i}.s) // 20 AS BIGINT) AS r
-  FROM wdeg d JOIN c{i} ON d.node = c{i}.node CROSS JOIN v
-)""")
-        prev = f"r{i}"
-    return f"""
-WITH pairs AS (
-  SELECT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s,
-         CAST(count(DISTINCT l_orderkey) AS BIGINT) AS w
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  GROUP BY 1, 2
-),
-edges AS MATERIALIZED (
-  SELECT c AS src, s AS dst, w FROM pairs
-  UNION ALL
-  SELECT s AS src, c AS dst, w FROM pairs
-),
-wdeg AS (
-  SELECT src AS node, CAST(sum(w) AS BIGINT) AS wdeg
-  FROM edges GROUP BY 1
-),
-v AS (SELECT CAST(count(*) AS BIGINT) AS v FROM wdeg),
-r0 AS (
-  SELECT node, wdeg, CAST({PR_SCALE} // v AS BIGINT) AS r
-  FROM wdeg CROSS JOIN v
-),{",".join(iters)}
-SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS kind,
-       node // 2 AS key, r AS rank_scaled
-FROM {prev}
-"""
-
-
-PAGERANK_WEIGHTED_ORACLE = _wpr_oracle()
+PAGERANK_WEIGHTED_ORACLE = _pr_oracle(
+    PR_ITERATIONS, _weighted_edges_cte("cnt"), "sum(w)",
+    "(r.r * e.w) // r.deg")
 
 
 #: Fixed peeling rounds for the k-core operator (and unrolled oracle).
@@ -1338,12 +1285,7 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         deg = e.groupBy(F.col("src").alias("node")).agg(
             F.count(F.lit(1)).alias("deg")
         )
-    return deg.select(
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-        .otherwise(F.lit("supplier")).alias("kind"),
-        F.expr("node div 2").alias("key"),
-        F.col("deg").alias("core_deg"),
-    )
+    return deg.select(*_node_kind(), F.col("deg").alias("core_deg"))
 
 
 def _kcore_oracle(rounds: int = KCORE_ROUNDS) -> str:
@@ -1365,21 +1307,13 @@ deg{i} AS (
 )""")
         prev_e, prev_d = f"e{i}", f"deg{i}"
     return f"""
-WITH pairs AS (
-  SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-),
-edges AS MATERIALIZED (
-  SELECT c AS src, s AS dst FROM pairs
-  UNION ALL
-  SELECT s AS src, c AS dst FROM pairs
-),
+WITH {_EDGES_CTE},
 deg0 AS (
   SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
   FROM edges GROUP BY 1
 ),
 kv AS (SELECT CAST(sum(deg) // (count(*) * 2) AS BIGINT) AS k FROM deg0),{",".join(parts)}
-SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS kind,
+SELECT {_KIND_SQL},
        node // 2 AS key, deg AS core_deg
 FROM {prev_d}
 """
@@ -1636,10 +1570,11 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The seed is the supplier with the smallest key (a deterministic
     one-row scalar), encoded onto the shared node axis.  Frontier
-    expansion is the relational Pregel step: join the frontier to the
-    edge list, dedup, anti-join out already-visited nodes, stamp the hop
-    number.  ``BFS_MAX_HOPS`` bounds the unrolled oracle; nodes farther
-    than the bound (or disconnected) are absent from the result.
+    expansion is the relational Pregel step (:func:`_expand_frontier`
+    keyed by ``node``): join the frontier to the edge list, dedup,
+    anti-join out already-visited nodes, stamp the hop number.
+    ``BFS_MAX_HOPS`` bounds the unrolled oracle; nodes farther than the
+    bound (or disconnected) are absent from the result.
 
     Scale: per hop one shuffle join (frontier ⋈ edges) + one distinct +
     one anti-join against visited — frontier and visited are node-id
@@ -1652,61 +1587,68 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("k") * 2 + 1).cast("long").alias("node"),
         F.lit(0).cast("long").alias("dist"),
     )
-    visited = seeds.transform(cut_lineage)
-    frontier = visited
-    for d in range(1, BFS_MAX_HOPS + 1):
+    visited = _expand_frontier(edges, seeds, ["node"], BFS_MAX_HOPS)
+    return visited.select(*_node_kind(), "dist")
+
+
+def _expand_frontier(edges: DataFrame, seeds: DataFrame, keys: list[str],
+                     hops: int) -> DataFrame:
+    """``hops`` BFS supersteps from ``seeds`` (the ``keys`` columns plus
+    ``dist`` 0): join the frontier to the edge list, dedup, anti-join
+    out the visited ``keys``, stamp the hop number.  ``keys`` starts
+    with ``node``; any further key (a landmark id) rides along, so one
+    expansion runs one BFS per key value.  Returns every visited row
+    with its hop distance."""
+    visited = frontier = seeds.transform(cut_lineage)
+    for d in range(1, hops + 1):
         reached = (
             frontier.join(edges, frontier.node == edges.src)
-            .select(F.col("dst").alias("node"))
+            .select(F.col("dst").alias("node"), *keys[1:])
             .distinct()
-            .join(visited.select("node"), "node", "left_anti")
+            .join(visited.select(*keys), keys, "left_anti")
             .withColumn("dist", F.lit(d).cast("long"))
             .transform(cut_lineage)
         )
         visited = visited.unionByName(reached).transform(cut_lineage)
         frontier = reached
-    return visited.select(
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-        .otherwise(F.lit("supplier")).alias("kind"),
-        F.expr("node div 2").alias("key"),
-        "dist",
-    )
+    return visited
+
+
+def _frontier_oracle(hops: int, keys: list[str]) -> str:
+    """DuckDB unroll of :func:`_expand_frontier` from a ``v0`` seed CTE:
+    the ``f1, v1, …`` CTE chain, ending at ``v{hops}``."""
+    also = "".join(f", f.{k}" for k in keys[1:])
+    match = "".join(f" AND x.{k} = f.{k}" for k in keys[1:])
+    cols = ", ".join(keys)
+    parts = []
+    for d in range(1, hops + 1):
+        prev_v = f"v{d - 1}"
+        prev_f = f"f{d - 1}" if d > 1 else "v0"
+        parts.append(f"""
+f{d} AS (
+  SELECT DISTINCT e.dst AS node{also} FROM edges e
+  JOIN {prev_f} f ON e.src = f.node
+  WHERE NOT EXISTS (SELECT 1 FROM {prev_v} x WHERE x.node = e.dst{match})
+),
+v{d} AS MATERIALIZED (
+  SELECT {cols}, dist FROM {prev_v}
+  UNION ALL
+  SELECT {cols}, CAST({d} AS BIGINT) AS dist FROM f{d}
+)""")
+    return ",".join(parts)
 
 
 def _bfs_oracle(hops: int = BFS_MAX_HOPS) -> str:
-    parts = []
-    prev_v, prev_f = "v0", "v0"
-    for d in range(1, hops + 1):
-        parts.append(f"""
-f{d} AS (
-  SELECT DISTINCT e.dst AS node FROM edges e
-  JOIN {prev_f} f ON e.src = f.node
-  WHERE NOT EXISTS (SELECT 1 FROM {prev_v} x WHERE x.node = e.dst)
-),
-v{d} AS MATERIALIZED (
-  SELECT node, dist FROM {prev_v}
-  UNION ALL
-  SELECT node, CAST({d} AS BIGINT) AS dist FROM f{d}
-)""")
-        prev_v, prev_f = f"v{d}", f"f{d}"
     return f"""
-WITH pairs AS (
-  SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-),
-edges AS MATERIALIZED (
-  SELECT c AS src, s AS dst FROM pairs
-  UNION ALL
-  SELECT s AS src, c AS dst FROM pairs
-),
+WITH {_EDGES_CTE},
 v0 AS (
   SELECT CAST(min(s_suppkey) * 2 + 1 AS BIGINT) AS node,
          CAST(0 AS BIGINT) AS dist
   FROM supplier
-),{",".join(parts)}
-SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS kind,
+),{_frontier_oracle(hops, ["node"])}
+SELECT {_KIND_SQL},
        node // 2 AS key, dist
-FROM {prev_v}
+FROM v{hops}
 """
 
 
@@ -1860,23 +1802,12 @@ def graph_closeness_landmarks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     landmarks = deg.orderBy(F.col("deg").desc(), F.col("node")) \
         .limit(CLOSENESS_LANDMARKS)
-    visited = landmarks.select(
+    seeds = landmarks.select(
         "node", F.col("node").alias("lm"),
         F.lit(0).cast("long").alias("dist"),
-    ).transform(cut_lineage)
-    frontier = visited
-    for d in range(1, CLOSENESS_MAX_HOPS + 1):
-        reached = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select(F.col("dst").alias("node"), "lm")
-            .distinct()
-            .join(visited.select("node", "lm"), ["node", "lm"],
-                  "left_anti")
-            .withColumn("dist", F.lit(d).cast("long"))
-            .transform(cut_lineage)
-        )
-        visited = visited.unionByName(reached).transform(cut_lineage)
-        frontier = reached
+    )
+    visited = _expand_frontier(edges, seeds, ["node", "lm"],
+                               CLOSENESS_MAX_HOPS)
     per_node = visited.groupBy("node").agg(
         F.count(F.lit(1)).alias("n_reached"),
         F.sum("dist").alias("sum_dist"),
@@ -1885,9 +1816,7 @@ def graph_closeness_landmarks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("harmonic_micro"),
     )
     return per_node.select(
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-        .otherwise(F.lit("supplier")).alias("kind"),
-        F.expr("node div 2").alias("key"),
+        *_node_kind(),
         "n_reached", "sum_dist", "harmonic_micro",
         F.when(F.col("sum_dist") > 0,
                F.expr("(n_reached * 1000000) div sum_dist"))
@@ -1896,32 +1825,8 @@ def graph_closeness_landmarks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _closeness_oracle(hops: int = CLOSENESS_MAX_HOPS) -> str:
-    parts = []
-    prev_v, prev_f = "v0", "v0"
-    for d in range(1, hops + 1):
-        parts.append(f"""
-f{d} AS (
-  SELECT DISTINCT e.dst AS node, f.lm FROM edges e
-  JOIN {prev_f} f ON e.src = f.node
-  WHERE NOT EXISTS (SELECT 1 FROM {prev_v} x
-                    WHERE x.node = e.dst AND x.lm = f.lm)
-),
-v{d} AS MATERIALIZED (
-  SELECT node, lm, dist FROM {prev_v}
-  UNION ALL
-  SELECT node, lm, CAST({d} AS BIGINT) AS dist FROM f{d}
-)""")
-        prev_v, prev_f = f"v{d}", f"f{d}"
     return f"""
-WITH pairs AS (
-  SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-),
-edges AS MATERIALIZED (
-  SELECT c AS src, s AS dst FROM pairs
-  UNION ALL
-  SELECT s AS src, c AS dst FROM pairs
-),
+WITH {_EDGES_CTE},
 deg AS (
   SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
   FROM edges GROUP BY 1
@@ -1930,8 +1835,8 @@ v0 AS (
   SELECT node, node AS lm, CAST(0 AS BIGINT) AS dist
   FROM (SELECT node FROM deg ORDER BY deg DESC, node
         LIMIT {CLOSENESS_LANDMARKS})
-),{",".join(parts)}
-SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS kind,
+),{_frontier_oracle(hops, ["node", "lm"])}
+SELECT {_KIND_SQL},
        node // 2 AS key,
        CAST(count(*) AS BIGINT) AS n_reached,
        CAST(sum(dist) AS BIGINT) AS sum_dist,
@@ -1940,7 +1845,7 @@ SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS kind,
        CASE WHEN sum(dist) > 0
             THEN (count(*) * 1000000) // sum(dist)
        END AS closeness_micro
-FROM {prev_v}
+FROM v{hops}
 GROUP BY 1, 2
 """
 
@@ -1988,32 +1893,6 @@ FROM tri_base WHERE degree >= 2
 SSSP_ROUNDS = 4
 
 
-def _weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Undirected weighted edges on the customer–supplier graph: edge
-    cost ``1 + 1000 div n_orders`` — frequently-trading pairs are cheap
-    to traverse (an integer proxy for ``-log strength``), so shortest
-    paths prefer strong commercial links.  Integer weights keep the
-    min-plus algebra exact in both engines."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey")
-    pairs = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .agg(F.countDistinct("l_orderkey").alias("cnt"))
-        .select("c", "s", F.expr("1 + 1000 div cnt").alias("w"))
-    )
-    return pairs.select(
-        F.col("c").alias("src"), F.col("s").alias("dst"), "w"
-    ).unionAll(
-        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w")
-    )
-
-
 def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted single-source shortest paths: ``SSSP_ROUNDS`` rounds of
     relational Bellman-Ford from the min-key supplier.
@@ -2045,12 +1924,7 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.min("dist").alias("dist"))
             .transform(cut_lineage)
         )
-    return dist.select(
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-        .otherwise(F.lit("supplier")).alias("kind"),
-        F.expr("node div 2").alias("key"),
-        "dist",
-    )
+    return dist.select(*_node_kind(), "dist")
 
 
 def _sssp_oracle(rounds: int = SSSP_ROUNDS) -> str:
@@ -2070,23 +1944,13 @@ d{i} AS MATERIALIZED (
 )""")
         prev = f"d{i}"
     return f"""
-WITH pairs AS (
-  SELECT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s,
-         count(DISTINCT l_orderkey) AS cnt
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  GROUP BY 1, 2
-),
-edges AS MATERIALIZED (
-  SELECT c AS src, s AS dst, 1 + 1000 // cnt AS w FROM pairs
-  UNION ALL
-  SELECT s AS src, c AS dst, 1 + 1000 // cnt AS w FROM pairs
-),
+WITH {_weighted_edges_cte("1 + 1000 // cnt")},
 d0 AS (
   SELECT CAST(min(s_suppkey) * 2 + 1 AS BIGINT) AS node,
          CAST(0 AS BIGINT) AS dist
   FROM supplier
 ),{",".join(parts)}
-SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS kind,
+SELECT {_KIND_SQL},
        node // 2 AS key, CAST(dist AS BIGINT) AS dist
 FROM {prev}
 """
@@ -2158,12 +2022,7 @@ def graph_random_walk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = out.unionByName(hop)
         walk = hop
-    return out.select(
-        "seed", "step",
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-        .otherwise(F.lit("supplier")).alias("kind"),
-        F.expr("node div 2").alias("key"),
-    )
+    return out.select("seed", "step", *_node_kind())
 
 
 def _walk_oracle(steps: int = WALK_STEPS) -> str:
@@ -2186,22 +2045,14 @@ w{s} AS MATERIALIZED (
     sel = "\nUNION ALL\n".join(
         f"SELECT seed, step, node FROM w{s}" for s in range(steps + 1))
     return f"""
-WITH pairs AS (
-  SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-),
-edges AS MATERIALIZED (
-  SELECT c AS src, s AS dst FROM pairs
-  UNION ALL
-  SELECT s AS src, c AS dst FROM pairs
-),
+WITH {_EDGES_CTE},
 w0 AS (
   SELECT CAST(s_suppkey * 2 + 1 AS BIGINT) AS seed,
          CAST(s_suppkey * 2 + 1 AS BIGINT) AS node, 0 AS step
   FROM supplier WHERE s_suppkey % {WALK_SEED_MOD} = 0
 ),{",".join(parts)}
 SELECT seed, CAST(step AS INT) AS step,
-       CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS kind,
+       {_KIND_SQL},
        node // 2 AS key
 FROM ({sel})
 """

@@ -31,7 +31,7 @@ from ..functions.text import LANG_MARKERS, STOPWORDS, marker_count, tokens, \
 from ..spec import QuerySpec
 from ..tables import load_table
 from .dedup import _SHINGLES_SQL, _jaccard_pairs, _shingles
-from .text import _TOKENS_SQL, _WS_COUNT_SQL, _floor4, _marker_sql
+from .text import _NORM_SQL, _TOKENS_SQL, _WS_COUNT_SQL, _floor4, _marker_sql
 from ..functions.checkpoint import cut_lineage
 
 MIN_TOKENS = 20         # too_short cutoff
@@ -287,7 +287,6 @@ def pipeline_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _curation_e2e_oracle() -> str:
     from .text import _BUCKET_SQL as bucket
     from .text import _TRAIN_CUT, _VAL_CUT
-    from .dedup import _NORM_SQL
 
     return f"""
 WITH {_PIPELINE_CORE_SQL.strip()},
@@ -396,7 +395,6 @@ def pipeline_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _curation_v2_oracle() -> str:
     from .text import _BUCKET_SQL as bucket
     from .text import _TRAIN_CUT, _VAL_CUT
-    from .dedup import _NORM_SQL
     from .text import LM_XENT_ORACLE, POLICY_FLAGS_ORACLE
 
     return f"""
@@ -594,7 +592,7 @@ def pipeline_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _curation_v3_oracle() -> str:
     from ..functions.hashing import hash64_sql
     from .curation import _SPLIT_SALT_CLUSTER, _TRAIN_CUT, _VAL_CUT
-    from .dedup import _CC_ORACLE_WITH, _NORM_SQL, _SHINGLES_SQL, EVAL_MOD
+    from .dedup import _CC_ORACLE_WITH, _SHINGLES_SQL, EVAL_MOD
     from .text import LM_XENT_ORACLE, POLICY_FLAGS_ORACLE
 
     # The CC chain and the pipeline core both embed the shingles CTE;

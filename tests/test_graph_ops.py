@@ -628,3 +628,59 @@ def test_edge_support_and_ktruss_peel_match_python(spark):
     assert sorted((r["u"], r["v"]) for r in sdf.collect()) == cur
     # The K4 core survives; the side triangle and pendant must be gone.
     assert cur == sorted(combinations([1, 2, 3, 4], 2))
+
+
+def test_weighted_pagerank_equals_unweighted_at_unit_weights(spark,
+                                                            tmp_path):
+    """Both PageRank variants run the same superstep; only the
+    contribution and degree expressions differ.  On a graph where every
+    (customer, supplier) pair shares exactly one order, every weight is
+    1, so the weighted degree equals the degree and the two rank maps
+    must agree key for key."""
+    from data_ingestion_worker_spark.operators.graph import (
+        graph_pagerank_weighted,
+    )
+
+    # (order, customer, [suppliers]): no (customer, supplier) pair
+    # appears in two orders.
+    orders = [(1, 1, [1, 2]), (2, 2, [1]), (3, 3, [2, 3]), (4, 1, [3]),
+              (5, 4, [1, 3]), (6, 2, [4])]
+    spark.createDataFrame(
+        [(o, c) for o, c, _ in orders], "o_orderkey long, o_custkey long"
+    ).write.parquet(str(tmp_path / "orders.parquet"))
+    spark.createDataFrame(
+        [(o, s) for o, _, ss in orders for s in ss],
+        "l_orderkey long, l_suppkey long",
+    ).write.parquet(str(tmp_path / "lineitem.parquet"))
+
+    sf = str(tmp_path)
+    weighted = {(r.kind, r.key): r.rank_scaled
+                for r in graph_pagerank_weighted(spark, sf).collect()}
+    plain = {(r.kind, r.key): r.rank_scaled
+             for r in graph_pagerank(spark, sf).collect()}
+    assert len(plain) == 8
+    assert weighted == plain
+
+
+def test_frontier_keyed_by_landmark_matches_single_source(spark):
+    """The shared frontier expansion keyed by ``node`` (BFS) and by
+    ``(node, lm)`` with one landmark equal to the BFS seed reaches the
+    same nodes at the same hop counts — on a path graph, exactly the
+    first ``hops`` nodes past the seed."""
+    from data_ingestion_worker_spark.operators.graph import _expand_frontier
+
+    path = [(i, i + 1) for i in range(5)]
+    edges = spark.createDataFrame(
+        path + [(b, a) for a, b in path], "src long, dst long")
+    hops = 3
+    bfs = _expand_frontier(
+        edges, spark.createDataFrame([(0, 0)], "node long, dist long"),
+        ["node"], hops)
+    multi = _expand_frontier(
+        edges,
+        spark.createDataFrame([(0, 0, 0)], "node long, lm long, dist long"),
+        ["node", "lm"], hops)
+    by_node = {r.node: r.dist for r in bfs.collect()}
+    by_pair = {(r.node, r.lm): r.dist for r in multi.collect()}
+    assert by_node == {n: n for n in range(hops + 1)}
+    assert by_pair == {(n, 0): d for n, d in by_node.items()}
