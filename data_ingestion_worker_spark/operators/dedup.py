@@ -2018,8 +2018,8 @@ def _dup_rate_estimate(d: DataFrame) -> DataFrame:
 DEDUP_RATE_EST_ORACLE = f"""
 WITH sample AS (
   SELECT doc_id, md5({_NORM_SQL}) AS fp FROM documents
-  WHERE (('0x' || substr(md5('dr:' || CAST(doc_id AS VARCHAR)), 1, 15))
-         ::BIGINT) % 1000 < {DUPRATE_P_MILLI}
+  WHERE {hash64_sql("'dr:' || CAST(doc_id AS VARCHAR)")} % 1000
+        < {DUPRATE_P_MILLI}
 ),
 grp AS (
   SELECT fp, count(*) AS k FROM sample GROUP BY 1

@@ -43,18 +43,27 @@ Each repeated piece has one definition, on both engines:
 - the customer–supplier edge list :func:`_edges` / :data:`_EDGES_CTE`
   and its weighted form :func:`_weighted_edges` /
   :func:`_weighted_edges_cte`;
-- the node-axis decode :func:`_node_kind` / :data:`_KIND_SQL`.
+- the node-axis decode :func:`_node_kind` / :data:`_KIND_SQL`;
+- the part co-order edge list :func:`_co_order_edges` /
+  :data:`_CO_ORDER_CTE` and its degree-ordered orientation
+  :func:`_orient` (triangle count, DOULION, k-truss support), unrolled
+  with the triangle close by :func:`_oriented_ctes`;
+- the raw (customer, supplier) pairs :func:`_cust_supp` /
+  :data:`_CS_CTE` (HITS and the link-prediction indices), and the
+  hub-cut posting lists :func:`_hub_cut` + :func:`_supplier_pairs` /
+  :data:`_KEPT_CTE` of the four link-prediction indices.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, GroupedData, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash64, hash64_sql
 from ..spec import QuerySpec
 from ..tables import load_table
 from ..functions.checkpoint import cut_lineage
+from .dedup import _TRIANGLE
 
 #: Rank mass scale: 1.0 of probability mass == 10¹² scaled units.
 PR_SCALE = 1_000_000_000_000
@@ -93,6 +102,30 @@ edges AS MATERIALIZED (
   SELECT c AS src, s AS dst FROM pairs
   UNION ALL
   SELECT s AS src, c AS dst FROM pairs
+)"""
+
+
+def _cust_supp(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (customer ``c``, supplier ``s``) purchase pairs in raw
+    keys — the directed graph of :func:`graph_hits` and the posting
+    lists of the link-prediction indices.  Uncut: each caller cuts it
+    where its own reads need."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey",
+                                                      "l_suppkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey",
+                                                   "o_custkey")
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .select(F.col("o_custkey").alias("c"),
+                F.col("l_suppkey").alias("s"))
+        .distinct()
+    )
+
+
+#: DuckDB twin of :func:`_cust_supp`.
+_CS_CTE = """cs AS (
+  SELECT DISTINCT o_custkey AS c, l_suppkey AS s
+  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 )"""
 
 
@@ -345,8 +378,6 @@ def _co_order_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     same pairs through a join.  Per-bucket fan-out is bounded by order
     width (≤ 7 lines ⇒ ≤ 21 pairs), so the expansion can never skew.
     """
-    from .dedup import _TRIANGLE
-
     lo = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("s")
     )
@@ -358,6 +389,44 @@ def _co_order_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("p.d1").alias("u"), F.col("p.d2").alias("v"))
         .distinct()
     )
+
+
+#: DuckDB twin of :func:`_co_order_edges`: distinct (order, part) lines
+#: ``lo`` and the canonical (u < v) edge list ``und``.
+_CO_ORDER_CTE = """lo AS (
+  SELECT DISTINCT l_orderkey AS ok, l_partkey AS s FROM lineitem
+),
+und AS MATERIALIZED (
+  SELECT DISTINCT a.s AS u, b.s AS v
+  FROM lo a JOIN lo b ON a.ok = b.ok AND a.s < b.s
+)"""
+
+
+def _oriented_ctes(und: str, i: int | str = "") -> str:
+    """DuckDB twin of :func:`_orient` + :func:`_closed_triangles` over
+    the canonical edge CTE ``und``: the degree table ``deg{i}``, the
+    arcs ``o{i}`` and one (a, b, c) row per triangle in ``tri{i}``."""
+    return f"""deg{i} AS (
+  SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
+    SELECT u AS node FROM {und} UNION ALL SELECT v AS node FROM {und}
+  ) GROUP BY 1
+),
+o{i} AS (
+  SELECT CASE WHEN (du.deg, u) < (dv.deg, v) THEN u ELSE v END AS src,
+         CASE WHEN (du.deg, u) < (dv.deg, v) THEN v ELSE u END AS dst,
+         CASE WHEN (du.deg, u) < (dv.deg, v) THEN dv.deg ELSE du.deg END
+           AS ddeg
+  FROM {und}
+  JOIN deg{i} du ON du.node = {und}.u
+  JOIN deg{i} dv ON dv.node = {und}.v
+),
+tri{i} AS (
+  SELECT o1.src AS a, o1.dst AS b, o2.dst AS c
+  FROM o{i} o1
+  JOIN o{i} o2 ON o1.src = o2.src
+              AND (o1.ddeg, o1.dst) < (o2.ddeg, o2.dst)
+  JOIN o{i} cl ON cl.src = o1.dst AND cl.dst = o2.dst
+)"""
 
 
 #: Arc-count ceiling for broadcasting the per-tail neighbor-array table
@@ -405,6 +474,44 @@ def _closed_triangles(oriented: DataFrame) -> DataFrame:
     )
 
 
+def _orient(und: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Degree table ``deg`` (node, deg) and degree-ordered orientation
+    ``oriented`` (src, dst, ddeg) of a canonical (u < v) edge list: one
+    arc per undirected edge, from the endpoint smaller by (deg, id),
+    carrying the head's degree ``ddeg``.
+
+    Both are cut: ``deg`` is read by both orientation joins,
+    ``oriented`` three times by :func:`_closed_triangles`.  Without the
+    lazy checkpoints Catalyst re-executes the edge-building subtree per
+    reference (no ReusedExchange across differently-aliased joins — same
+    finding as the pagerank degree table) — measured 20.4 s → each tier
+    materialized once and the wedge join dominates as it should.
+    """
+    deg = (
+        und.select(F.col("u").alias("node"))
+        .unionAll(und.select(F.col("v").alias("node")))
+        .groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
+        .transform(cut_lineage)
+    )
+    du, dv = deg.alias("du"), deg.alias("dv")
+    u_first = (
+        F.struct(F.col("du.deg"), F.col("u"))
+        < F.struct(F.col("dv.deg"), F.col("v"))
+    )
+    oriented = (
+        und.join(du, F.col("u") == F.col("du.node"))
+        .join(dv, F.col("v") == F.col("dv.node"))
+        .select(
+            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
+            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
+            F.when(u_first, F.col("dv.deg")).otherwise(F.col("du.deg"))
+            .alias("ddeg"),
+        )
+        .transform(cut_lineage)
+    )
+    return deg, oriented
+
+
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle counts on the part co-order graph, via
     degree-ordered edge orientation.
@@ -429,35 +536,10 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     arc direction is forced by the same (deg, id) order.  Everything is
     joins + integer counts — deterministic under any shuffle schedule.
     """
-    # und is referenced by both deg and the orientation join; deg by
-    # the orientation join and the final left join; oriented three
-    # times (o1/o2/cl).  Without the lazy checkpoints Catalyst
-    # re-executes the edge-building subtree per reference (no
-    # ReusedExchange across differently-aliased joins — same finding
-    # as the pagerank degree table) — measured 20.4 s -> materialize
-    # each tier once and the wedge join dominates as it should.
+    # und feeds both deg and the orientation join; deg (cut in _orient)
+    # also feeds the final left join.
     und = _co_order_edges(spark, sf_dir).transform(cut_lineage)
-    deg = (
-        und.select(F.col("u").alias("node"))
-        .unionAll(und.select(F.col("v").alias("node")))
-        .groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
-        .transform(cut_lineage)
-    )
-    du, dv = deg.alias("du"), deg.alias("dv")
-    e = (
-        und.join(du, F.col("u") == F.col("du.node"))
-        .join(dv, F.col("v") == F.col("dv.node"))
-    )
-    u_first = (
-        F.struct(F.col("du.deg"), F.col("u"))
-        < F.struct(F.col("dv.deg"), F.col("v"))
-    )
-    oriented = e.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-        F.when(u_first, F.col("dv.deg")).otherwise(F.col("du.deg"))
-        .alias("ddeg"),
-    ).transform(cut_lineage)
+    deg, oriented = _orient(und)
     tri = _closed_triangles(oriented)
     per_node = (
         tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
@@ -474,35 +556,9 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TRIANGLE_ORACLE = """
-WITH lo AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS s FROM lineitem
-),
-und AS (
-  SELECT DISTINCT a.s AS u, b.s AS v
-  FROM lo a JOIN lo b ON a.ok = b.ok AND a.s < b.s
-),
-deg AS (
-  SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
-    SELECT u AS node FROM und UNION ALL SELECT v AS node FROM und
-  ) GROUP BY 1
-),
-o AS (
-  SELECT CASE WHEN (du.deg, u) < (dv.deg, v) THEN u ELSE v END AS src,
-         CASE WHEN (du.deg, u) < (dv.deg, v) THEN v ELSE u END AS dst,
-         CASE WHEN (du.deg, u) < (dv.deg, v) THEN dv.deg ELSE du.deg END
-           AS ddeg
-  FROM und
-  JOIN deg du ON du.node = und.u
-  JOIN deg dv ON dv.node = und.v
-),
-tri AS (
-  SELECT o1.src AS a, o1.dst AS b, o2.dst AS c
-  FROM o o1
-  JOIN o o2 ON o1.src = o2.src
-           AND (o1.ddeg, o1.dst) < (o2.ddeg, o2.dst)
-  JOIN o cl ON cl.src = o1.dst AND cl.dst = o2.dst
-),
+TRIANGLE_ORACLE = f"""
+WITH {_CO_ORDER_CTE},
+{_oriented_ctes("und")},
 per_node AS (
   SELECT node, CAST(count(*) AS BIGINT) AS n_triangles FROM (
     SELECT a AS node FROM tri
@@ -541,42 +597,20 @@ def graph_triangle_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
     The scale-up factor is the exact integer 64, so the estimate is
     BIGINT end-to-end — no float summation anywhere.
     """
-    from ..functions.hashing import hash64
-
-    und_all = _co_order_edges(spark, sf_dir) \
+    und = _co_order_edges(spark, sf_dir) \
         .transform(cut_lineage)   # feeds total count + the gate
     coin = F.pmod(
         hash64(F.concat(F.lit("tri:"), F.col("u").cast("string"),
                         F.lit(":"), F.col("v").cast("string"))),
         F.lit(1000),
     )
-    und = und_all.filter(coin < DOULION_P_MILLI) \
+    sampled = und.filter(coin < DOULION_P_MILLI) \
         .transform(cut_lineage)   # degrees + orientation join
-    deg = (
-        und.select(F.col("u").alias("node"))
-        .unionAll(und.select(F.col("v").alias("node")))
-        .groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
-        .transform(cut_lineage)
-    )
-    du, dv = deg.alias("du"), deg.alias("dv")
-    e = (
-        und.join(du, F.col("u") == F.col("du.node"))
-        .join(dv, F.col("v") == F.col("dv.node"))
-    )
-    u_first = (
-        F.struct(F.col("du.deg"), F.col("u"))
-        < F.struct(F.col("dv.deg"), F.col("v"))
-    )
-    oriented = e.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-        F.when(u_first, F.col("dv.deg")).otherwise(F.col("du.deg"))
-        .alias("ddeg"),
-    ).transform(cut_lineage)
+    _, oriented = _orient(sampled)
     tri_s = _closed_triangles(oriented) \
         .agg(F.count(F.lit(1)).alias("tri_sampled"))
-    totals = und_all.agg(F.count(F.lit(1)).alias("n_edges"))
-    kept = und.agg(F.count(F.lit(1)).alias("n_edges_kept"))
+    totals = und.agg(F.count(F.lit(1)).alias("n_edges"))
+    kept = sampled.agg(F.count(F.lit(1)).alias("n_edges_kept"))
     return (
         tri_s.crossJoin(F.broadcast(totals)).crossJoin(F.broadcast(kept))
         .select(
@@ -587,45 +621,18 @@ def graph_triangle_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_DOULION_HASH = hash64_sql(
+    "'tri:' || CAST(u AS VARCHAR) || ':' || CAST(v AS VARCHAR)")
 DOULION_ORACLE = f"""
-WITH lo AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS s FROM lineitem
+WITH {_CO_ORDER_CTE},
+sampled AS (
+  SELECT u, v FROM und WHERE {_DOULION_HASH} % 1000 < {DOULION_P_MILLI}
 ),
-und_all AS (
-  SELECT DISTINCT a.s AS u, b.s AS v
-  FROM lo a JOIN lo b ON a.ok = b.ok AND a.s < b.s
-),
-und AS (
-  SELECT u, v FROM und_all
-  WHERE (('0x' || substr(md5('tri:' || CAST(u AS VARCHAR) || ':'
-                             || CAST(v AS VARCHAR)), 1, 15))::BIGINT)
-        % 1000 < {DOULION_P_MILLI}
-),
-deg AS (
-  SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
-    SELECT u AS node FROM und UNION ALL SELECT v AS node FROM und
-  ) GROUP BY 1
-),
-o AS (
-  SELECT CASE WHEN (du.deg, u) < (dv.deg, v) THEN u ELSE v END AS src,
-         CASE WHEN (du.deg, u) < (dv.deg, v) THEN v ELSE u END AS dst,
-         CASE WHEN (du.deg, u) < (dv.deg, v) THEN dv.deg ELSE du.deg END
-           AS ddeg
-  FROM und
-  JOIN deg du ON du.node = und.u
-  JOIN deg dv ON dv.node = und.v
-),
-tri AS (
-  SELECT count(*) AS tri_sampled
-  FROM o o1
-  JOIN o o2 ON o1.src = o2.src
-           AND (o1.ddeg, o1.dst) < (o2.ddeg, o2.dst)
-  JOIN o cl ON cl.src = o1.dst AND cl.dst = o2.dst
-)
-SELECT (SELECT CAST(count(*) AS BIGINT) FROM und_all) AS n_edges,
-       (SELECT CAST(count(*) AS BIGINT) FROM und) AS n_edges_kept,
-       CAST(tri_sampled AS BIGINT) AS tri_sampled,
-       CAST(tri_sampled * {_DOULION_SCALE} AS BIGINT) AS tri_est
+{_oriented_ctes("sampled")}
+SELECT (SELECT CAST(count(*) AS BIGINT) FROM und) AS n_edges,
+       (SELECT CAST(count(*) AS BIGINT) FROM sampled) AS n_edges_kept,
+       CAST(count(*) AS BIGINT) AS tri_sampled,
+       CAST(count(*) * {_DOULION_SCALE} AS BIGINT) AS tri_est
 FROM tri
 """
 
@@ -887,6 +894,43 @@ CN_HUB_CUTOFF = 64
 CN_TOP_K = 50
 
 
+def _hub_cut(cs: DataFrame) -> DataFrame:
+    """The (c, s) pairs of customers with at most ``CN_HUB_CUTOFF``
+    suppliers."""
+    return (
+        cs.withColumn(
+            "cdeg", F.count(F.lit(1)).over(Window.partitionBy("c"))
+        )
+        .filter(F.col("cdeg") <= CN_HUB_CUTOFF)
+        .select("c", "s")
+    )
+
+
+def _supplier_pairs(kept: DataFrame, *weights: Column) -> GroupedData:
+    """Supplier pairs (s1 < s2) grouped for aggregation, one input row
+    per shared customer: each customer's sorted posting list of ≥ 2
+    suppliers expands locally inside its bucket, next to the per-bucket
+    ``weights`` (expressions over the bucket array ``ids``)."""
+    buckets = (
+        kept.groupBy("c")
+        .agg(F.sort_array(F.collect_list("s")).alias("ids"))
+        .filter(F.size("ids") >= 2)
+    )
+    return buckets.select(
+        F.explode(F.expr(_TRIANGLE.format(ids="ids"))).alias("p"), *weights
+    ).groupBy(F.col("p.d1").alias("s1"), F.col("p.d2").alias("s2"))
+
+
+#: DuckDB twin of :func:`_hub_cut` over :data:`_CS_CTE`; ``kept`` also
+#: carries the customer degree ``cdeg`` that RA and AA weigh by.
+_KEPT_CTE = f"""{_CS_CTE},
+kept AS (
+  SELECT c, s, cdeg FROM (
+    SELECT c, s, count(*) OVER (PARTITION BY c) AS cdeg FROM cs
+  ) WHERE cdeg <= {CN_HUB_CUTOFF}
+)"""
+
+
 def graph_common_neighbors_topk(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     """Top-50 supplier pairs by shared-customer Jaccard — neighborhood
@@ -901,40 +945,12 @@ def graph_common_neighbors_topk(spark: SparkSession,
     break on (supplier, supplier), and the ranking compiles to
     TakeOrderedAndProject.
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey",
-                                                      "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey",
-                                                   "o_custkey")
-    cs = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("c"),
-                F.col("l_suppkey").alias("s"))
-        .distinct()
-        .transform(cut_lineage)   # feeds buckets + degrees
-    )
-    kept = (
-        cs.withColumn(
-            "cdeg", F.count(F.lit(1)).over(Window.partitionBy("c"))
-        )
-        .filter(F.col("cdeg") <= CN_HUB_CUTOFF)
-        .select("c", "s")
-        .transform(cut_lineage)
-    )
+    # cs has one reader, the hub-cut window, so its cut saves no
+    # recompute; kept feeds buckets + degrees.
+    cs = _cust_supp(spark, sf_dir).transform(cut_lineage)
+    kept = _hub_cut(cs).transform(cut_lineage)
     deg = kept.groupBy("s").agg(F.count(F.lit(1)).alias("n"))
-    buckets = (
-        kept.groupBy("c")
-        .agg(F.sort_array(F.collect_list("s")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    from .dedup import _TRIANGLE
-
-    pairs = (
-        buckets.select(F.explode(
-            F.expr(_TRIANGLE.format(ids="ids"))
-        ).alias("p"))
-        .groupBy(F.col("p.d1").alias("s1"), F.col("p.d2").alias("s2"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
+    pairs = _supplier_pairs(kept).agg(F.count(F.lit(1)).alias("inter"))
     da, db = deg.alias("da"), deg.alias("db")
     jac = F.col("inter").cast("double") / (
         F.col("da.n") + F.col("db.n") - F.col("inter")
@@ -950,15 +966,7 @@ def graph_common_neighbors_topk(spark: SparkSession,
 
 
 COMMON_NEIGHBORS_ORACLE = f"""
-WITH cs AS (
-  SELECT DISTINCT o_custkey AS c, l_suppkey AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-),
-kept AS (
-  SELECT c, s FROM (
-    SELECT c, s, count(*) OVER (PARTITION BY c) AS cdeg FROM cs
-  ) WHERE cdeg <= {CN_HUB_CUTOFF}
-),
+WITH {_KEPT_CTE},
 deg AS (SELECT s, count(*) AS n FROM kept GROUP BY 1),
 pairs AS (
   SELECT a.s AS s1, b.s AS s2, CAST(count(*) AS BIGINT) AS inter
@@ -999,37 +1007,10 @@ def graph_link_prediction_ra(spark: SparkSession,
     top-k compiles to TakeOrderedAndProject with (score, s1, s2)
     tie-breaks.
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey",
-                                                      "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey",
-                                                   "o_custkey")
-    cs = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("c"),
-                F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    kept = (
-        cs.withColumn(
-            "cdeg", F.count(F.lit(1)).over(Window.partitionBy("c"))
-        )
-        .filter(F.col("cdeg") <= CN_HUB_CUTOFF)
-        .select("c", "s")
-    )
-    buckets = (
-        kept.groupBy("c")
-        .agg(F.sort_array(F.collect_list("s")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    from .dedup import _TRIANGLE
-
-    weighted = buckets.select(
-        F.explode(F.expr(_TRIANGLE.format(ids="ids"))).alias("p"),
-        F.expr(f"{RA_SCALE} div size(ids)").alias("w"),
-    )
+    kept = _hub_cut(_cust_supp(spark, sf_dir))
+    w = F.expr(f"{RA_SCALE} div size(ids)").alias("w")
     return (
-        weighted.groupBy(F.col("p.d1").alias("s1"),
-                         F.col("p.d2").alias("s2"))
+        _supplier_pairs(kept, w)
         .agg(F.count(F.lit(1)).alias("n_common"),
              F.sum("w").alias("ra_scaled"))
         .orderBy(F.desc("ra_scaled"), "s1", "s2")
@@ -1038,15 +1019,7 @@ def graph_link_prediction_ra(spark: SparkSession,
 
 
 LINK_PREDICTION_RA_ORACLE = f"""
-WITH cs AS (
-  SELECT DISTINCT o_custkey AS c, l_suppkey AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-),
-kept AS (
-  SELECT c, s, cdeg FROM (
-    SELECT c, s, count(*) OVER (PARTITION BY c) AS cdeg FROM cs
-  ) WHERE cdeg <= {CN_HUB_CUTOFF}
-)
+WITH {_KEPT_CTE}
 SELECT a.s AS s1, b.s AS s2,
        CAST(count(*) AS BIGINT) AS n_common,
        CAST(sum({RA_SCALE} // a.cdeg) AS BIGINT) AS ra_scaled
@@ -1084,38 +1057,11 @@ def graph_link_prediction_aa(spark: SparkSession,
     weight, read from the precomputed :data:`_AA_WEIGHTS` literal table
     by ``size(ids)`` so the pair score stays an exact BIGINT sum.
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey",
-                                                      "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey",
-                                                   "o_custkey")
-    cs = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("c"),
-                F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    kept = (
-        cs.withColumn(
-            "cdeg", F.count(F.lit(1)).over(Window.partitionBy("c"))
-        )
-        .filter(F.col("cdeg") <= CN_HUB_CUTOFF)
-        .select("c", "s")
-    )
-    buckets = (
-        kept.groupBy("c")
-        .agg(F.sort_array(F.collect_list("s")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    from .dedup import _TRIANGLE
-
-    weighted = buckets.select(
-        F.explode(F.expr(_TRIANGLE.format(ids="ids"))).alias("p"),
-        F.expr(f"element_at(array({_AA_WEIGHTS_CSV}), size(ids) - 1)")
-        .cast("bigint").alias("w"),
-    )
+    kept = _hub_cut(_cust_supp(spark, sf_dir))
+    w = F.expr(f"element_at(array({_AA_WEIGHTS_CSV}), size(ids) - 1)") \
+        .cast("bigint").alias("w")
     return (
-        weighted.groupBy(F.col("p.d1").alias("s1"),
-                         F.col("p.d2").alias("s2"))
+        _supplier_pairs(kept, w)
         .agg(F.count(F.lit(1)).alias("n_common"),
              F.sum("w").alias("aa_scaled"))
         .orderBy(F.desc("aa_scaled"), "s1", "s2")
@@ -1124,15 +1070,7 @@ def graph_link_prediction_aa(spark: SparkSession,
 
 
 LINK_PREDICTION_AA_ORACLE = f"""
-WITH cs AS (
-  SELECT DISTINCT o_custkey AS c, l_suppkey AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-),
-kept AS (
-  SELECT c, s, cdeg FROM (
-    SELECT c, s, count(*) OVER (PARTITION BY c) AS cdeg FROM cs
-  ) WHERE cdeg <= {CN_HUB_CUTOFF}
-)
+WITH {_KEPT_CTE}
 SELECT a.s AS s1, b.s AS s2,
        CAST(count(*) AS BIGINT) AS n_common,
        CAST(sum(list_extract([{_AA_WEIGHTS_CSV}], a.cdeg - 1))
@@ -1335,27 +1273,7 @@ def _edge_support(und: DataFrame) -> DataFrame:
     the degree-ordered oriented-wedge enumeration of
     :func:`graph_triangle_count` (same O(m^1.5) bound, cited there),
     with each triangle exploded back to its three canonical edges."""
-    deg = (
-        und.select(F.col("u").alias("node"))
-        .unionAll(und.select(F.col("v").alias("node")))
-        .groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
-        .transform(cut_lineage)
-    )
-    du, dv = deg.alias("du"), deg.alias("dv")
-    e = (
-        und.join(du, F.col("u") == F.col("du.node"))
-        .join(dv, F.col("v") == F.col("dv.node"))
-    )
-    u_first = (
-        F.struct(F.col("du.deg"), F.col("u"))
-        < F.struct(F.col("dv.deg"), F.col("v"))
-    )
-    oriented = e.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-        F.when(u_first, F.col("dv.deg")).otherwise(F.col("du.deg"))
-        .alias("ddeg"),
-    ).transform(cut_lineage)
+    _, oriented = _orient(und)
     tri = _closed_triangles(oriented)
     edges3 = tri.select(F.explode(F.array(
         F.struct(F.least("a", "b").alias("u"),
@@ -1410,30 +1328,10 @@ def graph_k_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ktruss_oracle(rounds: int = KTRUSS_ROUNDS) -> str:
     parts = []
-    prev = "und0"
+    prev = "und"
     for i in range(1, rounds + 1):
         parts.append(f"""
-deg{i} AS (
-  SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
-    SELECT u AS node FROM {prev} UNION ALL SELECT v AS node FROM {prev}
-  ) GROUP BY 1
-),
-o{i} AS (
-  SELECT CASE WHEN (du.deg, u) < (dv.deg, v) THEN u ELSE v END AS src,
-         CASE WHEN (du.deg, u) < (dv.deg, v) THEN v ELSE u END AS dst,
-         CASE WHEN (du.deg, u) < (dv.deg, v) THEN dv.deg ELSE du.deg END
-           AS ddeg
-  FROM {prev}
-  JOIN deg{i} du ON du.node = {prev}.u
-  JOIN deg{i} dv ON dv.node = {prev}.v
-),
-tri{i} AS (
-  SELECT o1.src AS a, o1.dst AS b, o2.dst AS c
-  FROM o{i} o1
-  JOIN o{i} o2 ON o1.src = o2.src
-              AND (o1.ddeg, o1.dst) < (o2.ddeg, o2.dst)
-  JOIN o{i} cl ON cl.src = o1.dst AND cl.dst = o2.dst
-),
+{_oriented_ctes(prev, i)},
 sup{i} AS (
   SELECT u, v, CAST(count(*) AS BIGINT) AS sup FROM (
     SELECT least(a, b) AS u, greatest(a, b) AS v FROM tri{i}
@@ -1448,13 +1346,7 @@ und{i} AS MATERIALIZED (
 )""")
         prev = f"und{i}"
     return f"""
-WITH lo AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS s FROM lineitem
-),
-und0 AS MATERIALIZED (
-  SELECT DISTINCT a.s AS u, b.s AS v
-  FROM lo a JOIN lo b ON a.ok = b.ok AND a.s < b.s
-),{",".join(parts)}
+WITH {_CO_ORDER_CTE},{",".join(parts)}
 SELECT u AS part_u, v AS part_v, sup AS support FROM {prev}
 """
 
@@ -1525,13 +1417,7 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _rich_club_oracle() -> str:
     ks_csv = ", ".join(str(k) for k in RICH_CLUB_KS)
     return f"""
-WITH lo AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS s FROM lineitem
-),
-und AS MATERIALIZED (
-  SELECT DISTINCT a.s AS u, b.s AS v
-  FROM lo a JOIN lo b ON a.ok = b.ok AND a.s < b.s
-),
+WITH {_CO_ORDER_CTE},
 deg AS MATERIALIZED (
   SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
     SELECT u AS node FROM und UNION ALL SELECT v AS node FROM und
@@ -1681,17 +1567,8 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     one partial-agg shuffle + a one-row total — 4 shuffles per round,
     the same Pregel-superstep budget as PageRank.
     """
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-        .transform(cut_lineage)
-    )
-    hubs = pairs.select("c").distinct().select(
+    cs = _cust_supp(spark, sf_dir).transform(cut_lineage)
+    hubs = cs.select("c").distinct().select(
         F.col("c").alias("node"), F.lit(HITS_SCALE).alias("h")
     )
 
@@ -1711,13 +1588,13 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     auths = None
     for _ in range(HITS_ITERATIONS):
         a_raw = (
-            pairs.join(hubs, pairs.c == hubs.node)
+            cs.join(hubs, cs.c == hubs.node)
             .groupBy(F.col("s").alias("node"))
             .agg(F.sum(F.col("h").cast("decimal(38,0)")).alias("raw"))
         )
         auths = _normalize(a_raw, "a")
         h_raw = (
-            pairs.join(auths, pairs.s == auths.node)
+            cs.join(auths, cs.s == auths.node)
             .groupBy(F.col("c").alias("node"))
             .agg(F.sum(F.col("a").cast("decimal(38,0)")).alias("raw"))
         )
@@ -1739,7 +1616,7 @@ def _hits_oracle(n_iterations: int = HITS_ITERATIONS) -> str:
         iters.append(f"""
 ar{i} AS (
   SELECT p.s AS node, sum(CAST(h.h AS HUGEINT)) AS raw
-  FROM pairs p JOIN {prev_h} h ON p.c = h.node GROUP BY 1
+  FROM cs p JOIN {prev_h} h ON p.c = h.node GROUP BY 1
 ),
 at{i} AS (SELECT sum(raw) AS tot FROM ar{i}),
 a{i} AS (
@@ -1748,7 +1625,7 @@ a{i} AS (
 ),
 hr{i} AS (
   SELECT p.c AS node, sum(CAST(a.a AS HUGEINT)) AS raw
-  FROM pairs p JOIN a{i} a ON p.s = a.node GROUP BY 1
+  FROM cs p JOIN a{i} a ON p.s = a.node GROUP BY 1
 ),
 ht{i} AS (SELECT sum(raw) AS tot FROM hr{i}),
 h{i} AS (
@@ -1757,12 +1634,9 @@ h{i} AS (
 )""")
         prev_h = f"h{i}"
     return f"""
-WITH pairs AS (
-  SELECT DISTINCT o_custkey AS c, l_suppkey AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-),
+WITH {_CS_CTE},
 h0 AS (
-  SELECT DISTINCT c AS node, CAST({s} AS HUGEINT) AS h FROM pairs
+  SELECT DISTINCT c AS node, CAST({s} AS HUGEINT) AS h FROM cs
 ),{",".join(iters)}
 SELECT 'hub' AS kind, node AS key, h AS score_scaled FROM h{n_iterations}
 UNION ALL
@@ -2078,38 +1952,10 @@ def graph_link_prediction_jaccard(spark: SparkSession,
     pair generation) attach via two tiny joins to the |suppliers|-row
     degree table.  Top-k is TakeOrderedAndProject with full tie-breaks.
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey",
-                                                      "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey",
-                                                   "o_custkey")
-    cs = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("c"),
-                F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    kept = (
-        cs.withColumn(
-            "cdeg", F.count(F.lit(1)).over(Window.partitionBy("c"))
-        )
-        .filter(F.col("cdeg") <= CN_HUB_CUTOFF)
-        .select("c", "s")
+    kept = _hub_cut(_cust_supp(spark, sf_dir)) \
         .transform(cut_lineage)   # buckets AND the degree table
-    )
     deg = kept.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-    buckets = (
-        kept.groupBy("c")
-        .agg(F.sort_array(F.collect_list("s")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    from .dedup import _TRIANGLE
-
-    pairs = buckets.select(
-        F.explode(F.expr(_TRIANGLE.format(ids="ids"))).alias("p"),
-    )
-    common = pairs.groupBy(
-        F.col("p.d1").alias("s1"), F.col("p.d2").alias("s2")
-    ).agg(F.count(F.lit(1)).alias("n_common"))
+    common = _supplier_pairs(kept).agg(F.count(F.lit(1)).alias("n_common"))
     d1 = deg.select(F.col("s").alias("s1"), F.col("deg").alias("deg1"))
     d2 = deg.select(F.col("s").alias("s2"), F.col("deg").alias("deg2"))
     return (
@@ -2125,15 +1971,7 @@ def graph_link_prediction_jaccard(spark: SparkSession,
 
 
 LINK_PREDICTION_JACCARD_ORACLE = f"""
-WITH cs AS (
-  SELECT DISTINCT o_custkey AS c, l_suppkey AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-),
-kept AS (
-  SELECT c, s FROM (
-    SELECT c, s, count(*) OVER (PARTITION BY c) AS cdeg FROM cs
-  ) WHERE cdeg <= {CN_HUB_CUTOFF}
-),
+WITH {_KEPT_CTE},
 deg AS (SELECT s, CAST(count(*) AS BIGINT) AS deg FROM kept GROUP BY 1),
 common AS (
   SELECT a.s AS s1, b.s AS s2, CAST(count(*) AS BIGINT) AS n_common

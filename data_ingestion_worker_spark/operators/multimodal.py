@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import hash64_sql
 from ..spec import QuerySpec
 from ..tables import load_table
 from ..functions.checkpoint import cut_lineage
@@ -178,11 +179,12 @@ def mm_decode_real(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df.mapInPandas(decode_image_real, REAL_DECODE_SCHEMA)
 
 
-MM_DECODE_ORACLE = """
+_H64 = hash64_sql("text")
+MM_DECODE_ORACLE = f"""
 SELECT doc_id,
        CAST(octet_length(encode(text)) AS INT) AS byte_len,
-       CAST(('0x' || substr(md5(text), 1, 15))::BIGINT % 640 AS INT) AS fake_width,
-       CAST(('0x' || substr(md5(text), 1, 15))::BIGINT % 480 AS INT) AS fake_height,
+       CAST({_H64} % 640 AS INT) AS fake_width,
+       CAST({_H64} % 480 AS INT) AS fake_height,
        sha256(text) AS payload_sha
 FROM documents
 """
@@ -251,7 +253,6 @@ def mm_resize_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_payload(docs).mapInPandas(fake_resize, RESIZE_SCHEMA)
 
 
-_H64 = "(('0x' || substr(md5(text), 1, 15))::BIGINT)"
 MM_RESIZE_ORACLE = f"""
 WITH dims AS (
   SELECT doc_id, {_H64} % 640 + 1 AS w, {_H64} % 480 + 1 AS h
@@ -1276,7 +1277,7 @@ def mm_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 MM_FEATURE_ORACLE = f"""
 SELECT doc_id, [
-  {', '.join(f"(('0x' || substr(md5(sha256(text) || ':{d}'), 1, 15))::BIGINT) % 1000"
+  {', '.join(hash64_sql(f"sha256(text) || ':{d}'") + " % 1000"
              for d in range(N_FEATURES))}
 ] AS feature
 FROM documents

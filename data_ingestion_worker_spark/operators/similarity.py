@@ -23,7 +23,7 @@ import math as _math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import hash64_sql
+from ..functions.hashing import hash64, hash64_sql
 from ..spec import QuerySpec
 from ..tables import load_table
 from .text import doc_bm25_rank
@@ -753,12 +753,7 @@ def _kmeans_pipeline(spark: SparkSession, sf_dir: str):
     vnorm = dims.groupBy("vec_id").agg(
         F.sum(F.col("v") * F.col("v")).alias("nv")
     )
-    seed_h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("kmeans:"), F.col("vec_id").cast("string"))),
-            1, 15),
-        16, 10,
-    ).cast("bigint")
+    seed_h = hash64(F.concat(F.lit("kmeans:"), F.col("vec_id").cast("string")))
     # Bottom-k seed pick compiles to TakeOrderedAndProject (per-partition
     # top-k + tiny driver merge) — no global sort; the rank window that
     # numbers the clusters then runs over only KM_K rows.
@@ -1202,12 +1197,7 @@ def _pq_state(spark: SparkSession, sf_dir: str):
     vnorm = dims.groupBy("vec_id", "m").agg(
         F.sum(F.col("v") * F.col("v")).alias("nv")
     )
-    seed_h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("pq:"), F.col("vec_id").cast("string"))),
-            1, 15),
-        16, 10,
-    ).cast("bigint")
+    seed_h = hash64(F.concat(F.lit("pq:"), F.col("vec_id").cast("string")))
     ws = Window.orderBy(F.col("sh").asc(), F.col("vec_id"))
     seeds = (
         e.select("vec_id", seed_h.alias("sh"))
@@ -1482,13 +1472,8 @@ def emb_coreset_maxmin(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cast(0 as bigint), (acc, v) -> acc + v)")
     base = e.select("vec_id", "qv", nv.alias("nv")) \
         .transform(cut_lineage, eager=True)
-    seed_h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("coreset:"),
-                           F.col("vec_id").cast("string"))),
-            1, 15),
-        16, 10,
-    ).cast("bigint")
+    seed_h = hash64(F.concat(F.lit("coreset:"),
+                             F.col("vec_id").cast("string")))
     seed = base.select("vec_id", "qv", "nv", seed_h.alias("sh")) \
         .orderBy("sh", "vec_id").limit(1) \
         .select("vec_id", "qv", "nv")

@@ -5,6 +5,8 @@ already enforces."""
 
 from __future__ import annotations
 
+import pytest
+
 from data_ingestion_worker_spark.operators.graph import (
     PR_SCALE,
     graph_degree_stats,
@@ -298,79 +300,127 @@ def test_weighted_pagerank_conserves_mass_and_differs_from_unweighted(
         "weights changed nothing — contribution split is ignoring them"
 
 
-def test_link_prediction_ra_matches_python_recompute(spark, sf_dir):
+@pytest.fixture(scope="module")
+def posting_lists(spark, sf_dir):
+    """The hub-cut posting lists of the link-prediction indices, in
+    plain Python: each customer's sorted supplier list, for customers
+    with at most ``CN_HUB_CUTOFF`` suppliers."""
+    from collections import defaultdict
+
+    from data_ingestion_worker_spark.operators.graph import CN_HUB_CUTOFF
+    from data_ingestion_worker_spark.tables import load_table
+
+    li = load_table(spark, sf_dir, "lineitem") \
+        .select("l_orderkey", "l_suppkey").collect()
+    od = load_table(spark, sf_dir, "orders") \
+        .select("o_orderkey", "o_custkey").collect()
+    cust_of = {r.o_orderkey: r.o_custkey for r in od}
+    by_cust: dict[int, set] = defaultdict(set)
+    for r in li:
+        by_cust[cust_of[r.l_orderkey]].add(r.l_suppkey)
+    return [sorted(s) for s in by_cust.values() if len(s) <= CN_HUB_CUTOFF]
+
+
+def _pair_scores(posting_lists, weight=lambda d: 0):
+    """(s1, s2) -> [shared customers, Σ weight(bucket size)] over every
+    supplier pair inside one posting list."""
+    from collections import defaultdict
+
+    scores: dict = defaultdict(lambda: [0, 0])
+    for ss in posting_lists:
+        for i, a in enumerate(ss):
+            for b in ss[i + 1:]:
+                scores[(a, b)][0] += 1
+                scores[(a, b)][1] += weight(len(ss))
+    return scores
+
+
+def _supplier_degrees(posting_lists):
+    from collections import Counter
+
+    return Counter(s for ss in posting_lists for s in ss)
+
+
+def _top_k(rows, score):
+    """The first CN_TOP_K rows under (score desc, s1, s2)."""
+    from data_ingestion_worker_spark.operators.graph import CN_TOP_K
+
+    return sorted(rows, key=lambda t: (-score(t), t[0], t[1]))[:CN_TOP_K]
+
+
+def test_link_prediction_ra_matches_python_recompute(spark, sf_dir,
+                                                     posting_lists):
     """RA scores recomputed with plain-Python dicts over the same
     hub-cut bipartite projection; the returned top-k must equal the
     python top-k under the same (score desc, s1, s2) order."""
-    from collections import defaultdict
-
     from data_ingestion_worker_spark.operators.graph import (
-        CN_HUB_CUTOFF, CN_TOP_K, RA_SCALE, graph_link_prediction_ra,
+        RA_SCALE, graph_link_prediction_ra,
     )
-    from data_ingestion_worker_spark.tables import load_table
 
     got = [(r.s1, r.s2, r.n_common, r.ra_scaled)
            for r in graph_link_prediction_ra(spark, sf_dir).collect()]
-    li = load_table(spark, sf_dir, "lineitem") \
-        .select("l_orderkey", "l_suppkey").collect()
-    od = load_table(spark, sf_dir, "orders") \
-        .select("o_orderkey", "o_custkey").collect()
-    cust_of = {r.o_orderkey: r.o_custkey for r in od}
-    by_cust: dict[int, set] = defaultdict(set)
-    for r in li:
-        by_cust[cust_of[r.l_orderkey]].add(r.l_suppkey)
-    scores: dict = defaultdict(lambda: [0, 0])
-    for sups in by_cust.values():
-        deg = len(sups)
-        if deg < 2 or deg > CN_HUB_CUTOFF:
-            continue
-        ss = sorted(sups)
-        for i, a in enumerate(ss):
-            for b in ss[i + 1:]:
-                scores[(a, b)][0] += 1
-                scores[(a, b)][1] += RA_SCALE // deg
-    expect = sorted(
-        ((a, b, n, ra) for (a, b), (n, ra) in scores.items()),
-        key=lambda t: (-t[3], t[0], t[1]),
-    )[:CN_TOP_K]
-    assert got == expect
+    scores = _pair_scores(posting_lists, lambda d: RA_SCALE // d)
+    assert got == _top_k(
+        [(a, b, n, ra) for (a, b), (n, ra) in scores.items()],
+        lambda t: t[3])
 
-def test_link_prediction_aa_matches_python_recompute(spark, sf_dir):
+
+def test_link_prediction_aa_matches_python_recompute(spark, sf_dir,
+                                                     posting_lists):
     """Adamic–Adar recomputed with plain-Python dicts: same hub-cut
     projection, same precomputed integer weight table — the returned
     top-k must equal the python top-k under (score desc, s1, s2)."""
-    from collections import defaultdict
-
     from data_ingestion_worker_spark.operators.graph import (
-        _AA_WEIGHTS, CN_HUB_CUTOFF, CN_TOP_K, graph_link_prediction_aa,
+        _AA_WEIGHTS, graph_link_prediction_aa,
     )
-    from data_ingestion_worker_spark.tables import load_table
 
     got = [(r.s1, r.s2, r.n_common, r.aa_scaled)
            for r in graph_link_prediction_aa(spark, sf_dir).collect()]
-    li = load_table(spark, sf_dir, "lineitem") \
-        .select("l_orderkey", "l_suppkey").collect()
-    od = load_table(spark, sf_dir, "orders") \
-        .select("o_orderkey", "o_custkey").collect()
-    cust_of = {r.o_orderkey: r.o_custkey for r in od}
-    by_cust: dict[int, set] = defaultdict(set)
-    for r in li:
-        by_cust[cust_of[r.l_orderkey]].add(r.l_suppkey)
-    scores: dict = defaultdict(lambda: [0, 0])
-    for sups in by_cust.values():
-        deg = len(sups)
-        if deg < 2 or deg > CN_HUB_CUTOFF:
-            continue
-        ss = sorted(sups)
-        for i, a in enumerate(ss):
-            for b in ss[i + 1:]:
-                scores[(a, b)][0] += 1
-                scores[(a, b)][1] += _AA_WEIGHTS[deg - 2]
-    expect = sorted(
-        ((a, b, n, aa) for (a, b), (n, aa) in scores.items()),
-        key=lambda t: (-t[3], t[0], t[1]),
-    )[:CN_TOP_K]
-    assert got == expect
+    scores = _pair_scores(posting_lists, lambda d: _AA_WEIGHTS[d - 2])
+    assert got == _top_k(
+        [(a, b, n, aa) for (a, b), (n, aa) in scores.items()],
+        lambda t: t[3])
+
+
+def test_common_neighbors_matches_python_recompute(spark, sf_dir,
+                                                   posting_lists):
+    """Common-neighbor Jaccard over the same hub-cut posting lists, with
+    supplier degrees counted on the kept graph; the score is the
+    double-precision ratio floored to 4 decimals, as in the query."""
+    import math
+
+    from data_ingestion_worker_spark.operators.graph import (
+        graph_common_neighbors_topk,
+    )
+
+    got = [(r.s1, r.s2, r.inter, r.jaccard)
+           for r in graph_common_neighbors_topk(spark, sf_dir).collect()]
+    deg = _supplier_degrees(posting_lists)
+    rows = [
+        (a, b, n,
+         math.floor(n / (deg[a] + deg[b] - n) * 10000.0) / 10000.0)
+        for (a, b), (n, _) in _pair_scores(posting_lists).items()
+    ]
+    assert got == _top_k(rows, lambda t: t[3])
+
+
+def test_link_prediction_jaccard_matches_python_recompute(spark, sf_dir,
+                                                          posting_lists):
+    """Integer ppm Jaccard over the same hub-cut posting lists:
+    ``(10^6 * common) // (d1 + d2 - common)`` with kept-graph degrees."""
+    from data_ingestion_worker_spark.operators.graph import (
+        graph_link_prediction_jaccard,
+    )
+
+    got = [tuple(r) for r in
+           graph_link_prediction_jaccard(spark, sf_dir).collect()]
+    deg = _supplier_degrees(posting_lists)
+    rows = [
+        (a, b, n, deg[a], deg[b],
+         (10**6 * n) // (deg[a] + deg[b] - n))
+        for (a, b), (n, _) in _pair_scores(posting_lists).items()
+    ]
+    assert got == _top_k(rows, lambda t: t[5])
 
 
 def test_hits_matches_python_recompute(spark):
@@ -628,6 +678,28 @@ def test_edge_support_and_ktruss_peel_match_python(spark):
     assert sorted((r["u"], r["v"]) for r in sdf.collect()) == cur
     # The K4 core survives; the side triangle and pendant must be gone.
     assert cur == sorted(combinations([1, 2, 3, 4], 2))
+
+
+def test_orient_gives_one_arc_per_edge_from_the_smaller_endpoint(spark):
+    """_orient turns each undirected edge into exactly one arc whose
+    tail is the endpoint smaller by (deg, id), carrying the head's
+    degree.  Hub 1 of the star has the smallest id but the largest
+    degree, so degree must decide before id; the triangle edge 2—3
+    ties on degree and falls back to id."""
+    from collections import Counter
+
+    from data_ingestion_worker_spark.operators.graph import _orient
+
+    edges = [(1, 5), (1, 6), (1, 7), (1, 8), (1, 2), (1, 3), (2, 3)]
+    deg_py = Counter(n for e in edges for n in e)
+    deg, oriented = _orient(spark.createDataFrame(edges, "u long, v long"))
+    assert {r.node: r.deg for r in deg.collect()} == deg_py
+    arcs = sorted(tuple(r) for r in oriented.collect())
+    assert arcs == sorted(
+        (a, b, deg_py[b]) if (deg_py[a], a) < (deg_py[b], b)
+        else (b, a, deg_py[a])
+        for a, b in edges)
+    assert (5, 1, 6) in arcs and (2, 3, 2) in arcs
 
 
 def test_weighted_pagerank_equals_unweighted_at_unit_weights(spark,
