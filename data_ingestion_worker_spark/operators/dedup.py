@@ -39,6 +39,7 @@ from ..functions.text import fingerprint
 from ..spec import QuerySpec
 from ..tables import load_table
 from ..functions.checkpoint import cut_lineage
+from .similarity import _signed_coin
 from .text import _NORM_SQL, _TOKENS_SQL
 
 N_PERM = 8          # minhash permutations
@@ -1076,11 +1077,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Signed projections as parallel aggregate expressions (one pass over
     # the dims, no dims x planes explosion — see ann_lsh_buckets).
     proj = dims.groupBy("vec_id").agg(*[
-        F.sum(F.expr(
-            f"CASE WHEN cast(conv(substring(md5(concat('{p}:', "
-            "cast(d as string))), 1, 15), 16, 10) as bigint) % 2 = 0 "
-            "THEN v ELSE -v END"
-        )).alias(f"proj{p}")
+        F.sum(_signed_coin(f"{p}:")).alias(f"proj{p}")
         for p in range(EMB_PLANES)
     ])
     band_structs = F.array(*[

@@ -19,13 +19,33 @@ cross-engine md5 hash of the payload, so the *plumbing* — schema
 declaration, binary handling, Arrow batch iteration — is oracle-verified
 independently of any codec (rare for UDF code; pins the Arrow round-trip
 bytes in == bytes out).
+
+Each repeated piece has one definition:
+
+- the Arrow batch loop — every kernel is a per-payload function that
+  returns its payload's output rows as tuples (one row, or one per
+  sampled frame), lifted into the ``mapInPandas`` kernel by
+  :func:`_payload_kernel`, which repeats ``doc_id`` per row and leaves
+  typing to the kernel's declared schema;
+- the derived media fixtures — :func:`_sha_raster` (the sha-prefix RGB
+  raster of the BMP/PNG/GIF/TIFF kernels), :func:`_smooth_rgb` (the
+  smooth triangle-wave frames of the JPEG/MP4/MJPEG kernels),
+  :func:`_derived_wav` and :func:`_pcm_frames` (the audio kernels) and
+  :func:`_derived_avi` (the 2×2 AVI of the round-trip and motion
+  kernels);
+- on the oracle side, the payload-hash CTE :data:`_H_CTE` and the
+  lossless round-trip oracle :func:`_lossless_oracle`.  The oracles
+  spell their fixture rules out in SQL themselves, so a changed Python
+  fixture breaks parity instead of moving both engines together.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import importlib.util
-from collections.abc import Iterator
+import math
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -64,50 +84,148 @@ def _hash64_py(payload: bytes) -> int:
     return int(hashlib.md5(payload).hexdigest()[:15], 16)
 
 
-def fake_decode_image(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _payload_kernel(schema: str):
+    """Turn a per-payload function into the ``mapInPandas`` kernel for
+    ``schema``.
+
+    The function takes one payload and returns that payload's output
+    rows as a list of tuples, without ``doc_id``.  The kernel loops over
+    the Arrow batches, repeats ``doc_id`` for every row and builds each
+    frame with the schema's column names.  Typing is left to the
+    schema: Arrow casts object columns of Python ints, strings and
+    ``None`` to the declared types, nulls kept.  The kernel keeps the
+    function's name, which the ``MapInPandas`` plan node shows.
+    """
+    columns = [field.split()[0] for field in schema.split(",")]
+
+    def wrap(per_payload: Callable[[bytes], list[tuple]]):
+        @functools.wraps(per_payload)
+        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                yield pd.DataFrame.from_records(
+                    [(doc_id,) + row
+                     for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
+                     for row in per_payload(payload)],
+                    columns=columns)
+        return kernel
+    return wrap
+
+
+def _sha_raster(b: bytes, hdiv: int, hmod: int) -> tuple[int, int, bytes]:
+    """The lossless image fixture: a ``w × h`` RGB raster whose bytes are
+    the leading sha256 of the payload, with ``w = 1 + h64 % 3`` and
+    ``h = 1 + (h64 // hdiv) % hmod``."""
+    h64 = _hash64_py(b)
+    w, h = 1 + h64 % 3, 1 + (h64 // hdiv) % hmod
+    return w, h, hashlib.sha256(b).digest()[: w * h * 3]
+
+
+def _smooth_rgb(h64: int, n: int = 1):
+    """The lossy image fixture: ``n`` smooth ``w × h`` RGB triangle-wave
+    frames (8-16 px a side, uint8 arrays), smooth because random noise
+    is exactly what JPEG is *supposed* to discard.  Frame ``i`` shifts
+    the wave's base by ``40 · i``."""
+    import numpy as np
+
+    w, h = 8 + h64 % 9, 8 + (h64 // 9) % 9
+    a, b = 1 + h64 % 7, 1 + (h64 // 7) % 7
+    xx, yy = np.meshgrid(np.arange(w), np.arange(h))
+    frames = []
+    for i in range(n):
+        arr = np.zeros((h, w, 3), np.uint8)
+        for c in range(3):
+            t = (a * xx + b * yy + (h64 + 40 * i) % 256 + 85 * c) % 510
+            arr[:, :, c] = np.abs(t - 255).astype(np.uint8)
+        frames.append(arr)
+    return w, h, frames
+
+
+def _within_tol(decoded: bytes, rgb) -> int:
+    """1 when no decoded byte is further than JPEG_RT_TOL from ``rgb``."""
+    import numpy as np
+
+    d = np.frombuffer(decoded, np.uint8).astype(np.int64)
+    err = int(np.abs(d - rgb.reshape(-1).astype(np.int64)).max())
+    return int(err <= JPEG_RT_TOL)
+
+
+def _derived_wav(b: bytes) -> bytes:
+    """The audio fixture: a 16-bit PCM WAV of 1-5 frames whose rate,
+    channel count and samples (the leading sha256 bytes) derive from
+    the payload hash."""
+    from ..functions.audiocodec import encode_wav
+
+    h64 = _hash64_py(b)
+    rate = 8000 * (1 + h64 % 3)
+    channels = 1 + h64 % 2
+    n_frames = 1 + h64 % 5
+    pcm = hashlib.sha256(b).digest()[: n_frames * channels * 2]
+    return encode_wav(rate, channels, pcm)
+
+
+def _pcm_frames(wav) -> list[bytes]:
+    """A decoded WAV's PCM split into frames (``channels * 2`` bytes)."""
+    fsz = wav.channels * 2
+    return [wav.pcm[i * fsz:(i + 1) * fsz] for i in range(wav.n_frames)]
+
+
+def _derived_avi(b: bytes) -> bytes:
+    """The video fixture: an uncompressed 2×2 AVI of 1-2 RGB24 frames cut
+    from the payload's sha256, at 10-24 fps."""
+    from ..functions.videocodec import encode_avi
+
+    h64 = _hash64_py(b)
+    n_frames = 1 + h64 % 2
+    raw = hashlib.sha256(b).digest()[: n_frames * 12]
+    frames = [raw[i * 12:(i + 1) * 12] for i in range(n_frames)]
+    return encode_avi(2, 2, frames, fps=10 + h64 % 15)
+
+
+@_payload_kernel(DECODE_SCHEMA)
+def fake_decode_image(b: bytes) -> list[tuple]:
     """STUB decoder: deterministic pseudo-metadata instead of real pixels.
 
     Real implementation would do ``PIL.Image.open(io.BytesIO(b))`` per
     payload inside the same loop; batch shape, Arrow transfer and output
     schema are identical.
     """
-    for pdf in batches:
-        payloads = pdf["payload"]
-        h = payloads.map(_hash64_py)
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "byte_len": payloads.map(len).astype("int32"),
-            "fake_width": (h % 640).astype("int32"),
-            "fake_height": (h % 480).astype("int32"),
-            "payload_sha": payloads.map(
-                lambda b: hashlib.sha256(b).hexdigest()
-            ),
-        })
+    h = _hash64_py(b)
+    return [(len(b), h % 640, h % 480, hashlib.sha256(b).hexdigest())]
 
 
 REAL_DECODE_SCHEMA = ("doc_id bigint, byte_len int, width int, "
                       "height int, mode string, format string")
 
 
-def _pil_meta_fn():
-    """Build the Pillow metadata probe (split out so tests can exercise
-    the Pillow seam with a monkeypatched ``PIL`` module even in
-    containers that don't ship it)."""
-    import io
+def _image_meta(b) -> tuple:
+    """``(width, height, mode, format)`` of one payload, or all NULL."""
+    from ..functions.imagecodec import decode_builtin, sniff_format
 
-    from PIL import Image
-
-    def _meta(b: bytes):
-        try:
-            with Image.open(io.BytesIO(b)) as img:
+    try:
+        raw = bytes(b)
+        if sniff_format(raw) is not None:
+            try:
+                img = decode_builtin(raw)
                 return (img.width, img.height, img.mode, img.format)
-        except Exception:  # noqa: BLE001 — corrupt payload, not a bug
-            return (None, None, None, None)
+            except ValueError:
+                pass  # fall through: Pillow may support this profile
+        # ``HAS_PIL`` and ``PIL`` are read per payload, so tests can
+        # exercise the Pillow seam with a monkeypatched module even in
+        # containers that don't ship it.
+        if HAS_PIL:
+            import io
 
-    return _meta
+            from PIL import Image
+
+            with Image.open(io.BytesIO(raw)) as img:
+                return (img.width, img.height, img.mode, img.format)
+    except Exception:  # noqa: BLE001 — corrupt payload, not a bug
+        pass
+    return (None, None, None, None)
 
 
-def decode_image_real(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_payload_kernel(REAL_DECODE_SCHEMA)
+def decode_image_real(b: bytes) -> list[tuple]:
     """Real image decode, same batch loop as the stub.
 
     Codec selection is per payload, sniff first: magic bytes route
@@ -125,39 +243,7 @@ def decode_image_real(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
     dimensions instead of failing the Arrow batch (row-level error
     isolation, reference T10).
     """
-    from ..functions.imagecodec import decode_builtin, sniff_format
-
-    pil_meta = _pil_meta_fn() if HAS_PIL else None
-
-    def _meta(b):
-        try:
-            raw = bytes(b)
-            if sniff_format(raw) is not None:
-                try:
-                    img = decode_builtin(raw)
-                    return (img.width, img.height, img.mode, img.format)
-                except ValueError:
-                    if pil_meta is None:
-                        return (None, None, None, None)
-                    # fall through: Pillow may support this profile
-            if pil_meta is not None:
-                return pil_meta(raw)
-        except Exception:  # noqa: BLE001 — corrupt payload, not a bug
-            pass
-        return (None, None, None, None)
-
-    for pdf in batches:
-        metas = pdf["payload"].map(_meta)
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "byte_len": pdf["payload"].map(
-                lambda b: None if b is None else len(b)
-            ).astype("Int32"),
-            "width": metas.map(lambda m: m[0]).astype("Int32"),
-            "height": metas.map(lambda m: m[1]).astype("Int32"),
-            "mode": metas.map(lambda m: m[2]),
-            "format": metas.map(lambda m: m[3]),
-        })
+    return [(None if b is None else len(b),) + _image_meta(b)]
 
 
 #: The decode seam: ``decode_image`` is always the real codec path now
@@ -180,6 +266,12 @@ def mm_decode_real(spark: SparkSession, df: DataFrame) -> DataFrame:
 
 
 _H64 = hash64_sql("text")
+#: The payload-hash CTE the derived-fixture oracles start from: the
+#: payload's hash64, its sha256 hex and the text itself.
+_H_CTE = f"""WITH h AS (
+  SELECT doc_id, {_H64} AS h64, sha256(text) AS sha_hex, text FROM documents
+)"""
+
 MM_DECODE_ORACLE = f"""
 SELECT doc_id,
        CAST(octet_length(encode(text)) AS INT) AS byte_len,
@@ -222,7 +314,8 @@ RESIZE_SCHEMA = ("doc_id bigint, src_width int, src_height int, "
                  "out_width int, out_height int")
 
 
-def fake_resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_payload_kernel(RESIZE_SCHEMA)
+def fake_resize(b: bytes) -> list[tuple]:
     """STUB resize: fit the fake dimensions into a RESIZE_BOX square,
     preserving aspect ratio with integer (truncating) arithmetic.
 
@@ -230,21 +323,11 @@ def fake_resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     (``img.thumbnail((256, 256))``); the scaling arithmetic, batch shape
     and output schema are what the stub pins down.
     """
-    for pdf in batches:
-        h64 = pdf["payload"].map(_hash64_py)
-        w = (h64 % 640 + 1).astype("int64")     # avoid degenerate 0-dim
-        h = (h64 % 480 + 1).astype("int64")
-        long_side = w.combine(h, max)
-        scale_num = long_side.map(lambda s: min(s, RESIZE_BOX))
-        out_w = (w * scale_num // long_side).astype("int32")
-        out_h = (h * scale_num // long_side).astype("int32")
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "src_width": w.astype("int32"),
-            "src_height": h.astype("int32"),
-            "out_width": out_w,
-            "out_height": out_h,
-        })
+    h64 = _hash64_py(b)
+    w, h = h64 % 640 + 1, h64 % 480 + 1     # avoid degenerate 0-dim
+    long_side = max(w, h)
+    scale_num = min(long_side, RESIZE_BOX)
+    return [(w, h, w * scale_num // long_side, h * scale_num // long_side)]
 
 
 def mm_resize_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -274,7 +357,8 @@ RESIZE_REAL_SCHEMA = ("doc_id bigint, src_width int, src_height int, "
                       "out_width int, out_height int, pixel_hex string")
 
 
-def real_resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_payload_kernel(RESIZE_REAL_SCHEMA)
+def real_resize(b: bytes) -> list[tuple]:
     """REAL resize: decode an actual PNG (built from the payload hash),
     nearest-neighbor downsample the decoded pixel buffer by 2 (ceil
     dims, sampling src pixel (2i, 2j)), and emit the resized bytes.
@@ -287,30 +371,15 @@ def real_resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     from ..functions.imagecodec import decode_builtin
     from ..functions.pngcodec import encode_png
 
-    def _rt(b: bytes):
-        b = bytes(b)
-        h64 = _hash64_py(b)
-        w, h = 1 + h64 % 3, 1 + h64 % 3
-        raw = hashlib.sha256(b).digest()[: w * h * 3]
-        img = decode_builtin(encode_png(w, h, raw))
-        ow, oh = (w + 1) // 2, (h + 1) // 2
-        out = bytearray()
-        for i in range(oh):
-            for j in range(ow):
-                src = (2 * i * img.width + 2 * j) * 3
-                out += img.pixels[src:src + 3]
-        return (img.width, img.height, ow, oh, bytes(out).hex())
-
-    for pdf in batches:
-        metas = pdf["payload"].map(_rt)
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "src_width": metas.map(lambda m: m[0]).astype("int32"),
-            "src_height": metas.map(lambda m: m[1]).astype("int32"),
-            "out_width": metas.map(lambda m: m[2]).astype("int32"),
-            "out_height": metas.map(lambda m: m[3]).astype("int32"),
-            "pixel_hex": metas.map(lambda m: m[4]),
-        })
+    w, h, raw = _sha_raster(b, 1, 3)
+    img = decode_builtin(encode_png(w, h, raw))
+    ow, oh = (w + 1) // 2, (h + 1) // 2
+    out = bytearray()
+    for i in range(oh):
+        for j in range(ow):
+            src = (2 * i * img.width + 2 * j) * 3
+            out += img.pixels[src:src + 3]
+    return [(img.width, img.height, ow, oh, bytes(out).hex())]
 
 
 def mm_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -323,9 +392,7 @@ def mm_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: position — recomputed per (i, j) via a correlated unnest, concatenated
 #: in row-major order.
 MM_RESIZE_REAL_ORACLE = f"""
-WITH h AS (
-  SELECT doc_id, {_H64} AS h64, sha256(text) AS sha_hex FROM documents
-),
+{_H_CTE},
 dims AS (
   SELECT doc_id, 1 + h64 % 3 AS w, 1 + h64 % 3 AS hh,
          (1 + h64 % 3 + 1) // 2 AS ow, (1 + h64 % 3 + 1) // 2 AS oh,
@@ -350,8 +417,8 @@ GROUP BY doc_id, w, hh, ow, oh
 FRAME_SAMPLE_REAL_SCHEMA = "doc_id bigint, frame_idx int, frame_hex string"
 
 
-def real_frame_sample(
-        batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_payload_kernel(FRAME_SAMPLE_REAL_SCHEMA)
+def real_frame_sample(b: bytes) -> list[tuple]:
     """REAL frame sampling: build a multi-frame AVI from per-frame
     hashes, decode it with the builtin RIFF walker, and emit every
     SECOND decoded frame as its own row (1 media row -> N frame rows,
@@ -359,28 +426,11 @@ def real_frame_sample(
     here came out of an actual video decode)."""
     from ..functions.videocodec import decode_avi, encode_avi
 
-    def _rt(b: bytes):
-        b = bytes(b)
-        h64 = _hash64_py(b)
-        n_frames = 3 + h64 % 4
-        frames = [hashlib.sha256(b + str(i).encode()).digest()[:12]
-                  for i in range(n_frames)]
-        avi = decode_avi(encode_avi(2, 2, frames, fps=10))
-        return [(i, avi.frames[i].hex())
-                for i in range(0, avi.n_frames, 2)]
-
-    for pdf in batches:
-        ids, idxs, hexes = [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            for i, fx in _rt(payload):
-                ids.append(doc_id)
-                idxs.append(i)
-                hexes.append(fx)
-        yield pd.DataFrame({
-            "doc_id": pd.Series(ids, dtype="int64"),
-            "frame_idx": pd.Series(idxs, dtype="int32"),
-            "frame_hex": pd.Series(hexes, dtype="object"),
-        })
+    n_frames = 3 + _hash64_py(b) % 4
+    frames = [hashlib.sha256(b + str(i).encode()).digest()[:12]
+              for i in range(n_frames)]
+    avi = decode_avi(encode_avi(2, 2, frames, fps=10))
+    return [(i, avi.frames[i].hex()) for i in range(0, avi.n_frames, 2)]
 
 
 def mm_frame_sample_real(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -393,9 +443,7 @@ def mm_frame_sample_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Each sampled frame's bytes are the leading sha256 of (payload || idx)
 #: — Spark must reproduce them THROUGH the encoder + RIFF decode walk.
 MM_FRAME_REAL_ORACLE = f"""
-WITH h AS (
-  SELECT doc_id, {_H64} AS h64, text FROM documents
-),
+{_H_CTE},
 n AS (
   SELECT doc_id, 3 + h64 % 4 AS nf, text FROM h
 )
@@ -410,7 +458,8 @@ ROUNDTRIP_SCHEMA = ("doc_id bigint, width int, height int, mode string, "
                     "format string, pixel_hex string")
 
 
-def bmp_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_payload_kernel(ROUNDTRIP_SCHEMA)
+def bmp_roundtrip(b: bytes) -> list[tuple]:
     """REAL codec work per payload: derive WxH RGB pixels from the payload
     hash, ``encode_bmp`` them, ``decode_bmp`` the result with the builtin
     codec, and emit the decoded metadata + pixel bytes (hex).
@@ -421,25 +470,8 @@ def bmp_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """
     from ..functions.imagecodec import decode_bmp, encode_bmp
 
-    def _rt(b: bytes):
-        b = bytes(b)
-        h64 = _hash64_py(b)
-        w, h = 1 + h64 % 3, 1 + h64 % 2
-        raw = hashlib.sha256(b).digest()[: w * h * 3]
-        img = decode_bmp(encode_bmp(w, h, raw))
-        return (img.width, img.height, img.mode, img.format,
-                img.pixels.hex())
-
-    for pdf in batches:
-        metas = pdf["payload"].map(_rt)
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "width": metas.map(lambda m: m[0]).astype("int32"),
-            "height": metas.map(lambda m: m[1]).astype("int32"),
-            "mode": metas.map(lambda m: m[2]),
-            "format": metas.map(lambda m: m[3]),
-            "pixel_hex": metas.map(lambda m: m[4]),
-        })
+    img = decode_bmp(encode_bmp(*_sha_raster(b, 1, 2)))
+    return [(img.width, img.height, img.mode, img.format, img.pixels.hex())]
 
 
 def mm_roundtrip_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -448,25 +480,37 @@ def mm_roundtrip_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_payload(docs).mapInPandas(bmp_roundtrip, ROUNDTRIP_SCHEMA)
 
 
-#: The oracle recomputes the expected pixels algebraically: the first
-#: w*h*3 bytes of sha256(payload) are, in hex, the first w*h*6 chars of
-#: the sha256 hex string.  Spark must arrive at the same bytes THROUGH
-#: the encoder+decoder, so any codec defect breaks parity.
-MM_ROUNDTRIP_ORACLE = f"""
-WITH h AS (
-  SELECT doc_id, {_H64} AS h64, sha256(text) AS sha_hex FROM documents
-)
+def _lossless_oracle(fmt: str, mode: str, height: str) -> str:
+    """Oracle of a lossless round-trip of width ``1 + h64 % 3`` and
+    height ``1 + <height>``.
+
+    It recomputes the expected pixels algebraically: the first w*h*3
+    bytes of sha256(payload) are, in hex, the first w*h*6 chars of the
+    sha256 hex string.  Spark must arrive at the same bytes THROUGH the
+    encoder+decoder (BMP stride and flip, PNG deflate and unfiltering,
+    GIF palette and LZW, TIFF IFD walk and LZW), so any codec defect
+    breaks parity.
+    """
+    return f"""
+{_H_CTE}
 SELECT doc_id,
        CAST(1 + h64 % 3 AS INT) AS width,
-       CAST(1 + h64 % 2 AS INT) AS height,
-       'RGB' AS mode, 'BMP' AS format,
-       substr(sha_hex, 1, CAST((1 + h64 % 3) * (1 + h64 % 2) * 6 AS INT))
+       CAST(1 + {height} AS INT) AS height,
+       '{mode}' AS mode, '{fmt}' AS format,
+       substr(sha_hex, 1, CAST((1 + h64 % 3) * (1 + {height}) * 6 AS INT))
          AS pixel_hex
 FROM h
 """
 
 
-def png_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+MM_ROUNDTRIP_ORACLE = _lossless_oracle("BMP", "RGB", "h64 % 2")
+MM_PNG_ORACLE = _lossless_oracle("PNG", "RGB", "h64 % 3")
+MM_GIF_ORACLE = _lossless_oracle("GIF", "P", "(h64 // 4) % 3")
+MM_TIFF_ORACLE = _lossless_oracle("TIFF", "RGB", "(h64 // 9) % 3")
+
+
+@_payload_kernel(ROUNDTRIP_SCHEMA)
+def png_roundtrip(b: bytes) -> list[tuple]:
     """REAL compressed-codec work per payload: derive WxH RGB pixels
     from the payload hash, ``encode_png`` them (DEFLATE + chunk CRCs),
     then decode through the ``decode_builtin`` dispatch — so magic
@@ -477,48 +521,14 @@ def png_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     from ..functions.imagecodec import decode_builtin
     from ..functions.pngcodec import encode_png
 
-    def _rt(b: bytes):
-        b = bytes(b)
-        h64 = _hash64_py(b)
-        w, h = 1 + h64 % 3, 1 + h64 % 3
-        raw = hashlib.sha256(b).digest()[: w * h * 3]
-        img = decode_builtin(encode_png(w, h, raw))
-        return (img.width, img.height, img.mode, img.format,
-                img.pixels.hex())
-
-    for pdf in batches:
-        metas = pdf["payload"].map(_rt)
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "width": metas.map(lambda m: m[0]).astype("int32"),
-            "height": metas.map(lambda m: m[1]).astype("int32"),
-            "mode": metas.map(lambda m: m[2]),
-            "format": metas.map(lambda m: m[3]),
-            "pixel_hex": metas.map(lambda m: m[4]),
-        })
+    img = decode_builtin(encode_png(*_sha_raster(b, 1, 3)))
+    return [(img.width, img.height, img.mode, img.format, img.pixels.hex())]
 
 
 def mm_roundtrip_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary payload -> real PNG encode/decode round-trip -> metadata."""
     docs = load_table(spark, sf_dir, "documents")
     return with_payload(docs).mapInPandas(png_roundtrip, ROUNDTRIP_SCHEMA)
-
-
-#: Same algebraic-recompute gate as the BMP oracle: the pixels Spark
-#: must produce THROUGH deflate/inflate + unfiltering are the leading
-#: sha256 bytes, in hex.
-MM_PNG_ORACLE = f"""
-WITH h AS (
-  SELECT doc_id, {_H64} AS h64, sha256(text) AS sha_hex FROM documents
-)
-SELECT doc_id,
-       CAST(1 + h64 % 3 AS INT) AS width,
-       CAST(1 + h64 % 3 AS INT) AS height,
-       'RGB' AS mode, 'PNG' AS format,
-       substr(sha_hex, 1, CAST((1 + h64 % 3) * (1 + h64 % 3) * 6 AS INT))
-         AS pixel_hex
-FROM h
-"""
 
 
 #: Max per-channel reconstruction error the JPEG round-trip tolerates at
@@ -532,7 +542,8 @@ JPEG_SCHEMA = ("doc_id bigint, width int, height int, mode string, "
                "format string, within_tol int")
 
 
-def jpeg_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_payload_kernel(JPEG_SCHEMA)
+def jpeg_roundtrip(b: bytes) -> list[tuple]:
     """REAL lossy-codec work per payload: derive a smooth W×H RGB
     triangle-wave image from the payload hash (smooth because random
     noise is exactly what JPEG is *supposed* to discard), encode it as
@@ -549,42 +560,13 @@ def jpeg_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     ``tests/test_jpegcodec.py`` pins exact behavior on hand-built
     spec vectors.
     """
-    import numpy as np
-
     from ..functions.imagecodec import decode_builtin
     from ..functions.jpegcodec import encode_jpeg
 
-    def _pixels(h64: int, w: int, h: int) -> "np.ndarray":
-        a, b = 1 + h64 % 7, 1 + (h64 // 7) % 7
-        base = h64 % 256
-        xx, yy = np.meshgrid(np.arange(w), np.arange(h))
-        arr = np.zeros((h, w, 3), np.uint8)
-        for c in range(3):
-            t = (a * xx + b * yy + base + 85 * c) % 510
-            arr[:, :, c] = np.abs(t - 255).astype(np.uint8)
-        return arr
-
-    def _rt(b: bytes):
-        b = bytes(b)
-        h64 = _hash64_py(b)
-        w, h = 8 + h64 % 9, 8 + (h64 // 9) % 9
-        rgb = _pixels(h64, w, h)
-        img = decode_builtin(encode_jpeg(w, h, rgb.tobytes(), quality=90))
-        dec = np.frombuffer(img.pixels, np.uint8).reshape(h, w, 3)
-        err = int(np.abs(dec.astype(np.int64) - rgb.astype(np.int64)).max())
-        return (img.width, img.height, img.mode, img.format,
-                int(err <= JPEG_RT_TOL))
-
-    for pdf in batches:
-        metas = pdf["payload"].map(_rt)
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "width": metas.map(lambda m: m[0]).astype("int32"),
-            "height": metas.map(lambda m: m[1]).astype("int32"),
-            "mode": metas.map(lambda m: m[2]),
-            "format": metas.map(lambda m: m[3]),
-            "within_tol": metas.map(lambda m: m[4]).astype("int32"),
-        })
+    w, h, (rgb,) = _smooth_rgb(_hash64_py(b))
+    img = decode_builtin(encode_jpeg(w, h, rgb.tobytes(), quality=90))
+    return [(img.width, img.height, img.mode, img.format,
+             _within_tol(img.pixels, rgb))]
 
 
 def mm_roundtrip_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -598,7 +580,7 @@ def mm_roundtrip_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: lossy-codec tolerance flag (within_tol must be 1 for every row —
 #: a Huffman/zigzag/DCT/quant defect produces errors far past it).
 MM_JPEG_ORACLE = f"""
-WITH h AS (SELECT doc_id, {_H64} AS h64 FROM documents)
+{_H_CTE}
 SELECT doc_id,
        CAST(8 + h64 % 9 AS INT) AS width,
        CAST(8 + (h64 // 9) % 9 AS INT) AS height,
@@ -612,8 +594,8 @@ JPEG_PROG_SCHEMA = ("doc_id bigint, width int, height int, mode string, "
                     "format string, within_tol int, equals_baseline int")
 
 
-def jpeg_progressive_roundtrip(
-        batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_payload_kernel(JPEG_PROG_SCHEMA)
+def jpeg_progressive_roundtrip(b: bytes) -> list[tuple]:
     """Progressive (SOF2) JPEG round-trip: same derived image as
     :func:`jpeg_roundtrip`, encoded with libjpeg's default progressive
     scan script and decoded through the multi-scan coefficient
@@ -622,49 +604,18 @@ def jpeg_progressive_roundtrip(
     any divergence in spectral-selection/successive-approximation
     decode shows as ``equals_baseline = 0``.
     """
-    import numpy as np
-
     from ..functions.jpegcodec import (
         decode_jpeg,
         encode_jpeg,
         encode_jpeg_progressive,
     )
 
-    def _pixels(h64: int, w: int, h: int) -> "np.ndarray":
-        a, b = 1 + h64 % 7, 1 + (h64 // 7) % 7
-        base = h64 % 256
-        xx, yy = np.meshgrid(np.arange(w), np.arange(h))
-        arr = np.zeros((h, w, 3), np.uint8)
-        for c in range(3):
-            t = (a * xx + b * yy + base + 85 * c) % 510
-            arr[:, :, c] = np.abs(t - 255).astype(np.uint8)
-        return arr
-
-    def _rt(b: bytes):
-        b = bytes(b)
-        h64 = _hash64_py(b)
-        w, h = 8 + h64 % 9, 8 + (h64 // 9) % 9
-        rgb = _pixels(h64, w, h)
-        prog = decode_jpeg(
-            encode_jpeg_progressive(w, h, rgb.tobytes(), quality=90))
-        base = decode_jpeg(encode_jpeg(w, h, rgb.tobytes(), quality=90))
-        dec = np.frombuffer(prog.pixels, np.uint8).reshape(h, w, 3)
-        err = int(np.abs(dec.astype(np.int64) - rgb.astype(np.int64)).max())
-        return (prog.width, prog.height, prog.mode, prog.format,
-                int(err <= JPEG_RT_TOL),
-                int(prog.pixels == base.pixels))
-
-    for pdf in batches:
-        metas = pdf["payload"].map(_rt)
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "width": metas.map(lambda m: m[0]).astype("int32"),
-            "height": metas.map(lambda m: m[1]).astype("int32"),
-            "mode": metas.map(lambda m: m[2]),
-            "format": metas.map(lambda m: m[3]),
-            "within_tol": metas.map(lambda m: m[4]).astype("int32"),
-            "equals_baseline": metas.map(lambda m: m[5]).astype("int32"),
-        })
+    w, h, (rgb,) = _smooth_rgb(_hash64_py(b))
+    prog = decode_jpeg(
+        encode_jpeg_progressive(w, h, rgb.tobytes(), quality=90))
+    base = decode_jpeg(encode_jpeg(w, h, rgb.tobytes(), quality=90))
+    return [(prog.width, prog.height, prog.mode, prog.format,
+             _within_tol(prog.pixels, rgb), int(prog.pixels == base.pixels))]
 
 
 def mm_roundtrip_jpeg_progressive(spark: SparkSession,
@@ -677,7 +628,7 @@ def mm_roundtrip_jpeg_progressive(spark: SparkSession,
 
 
 MM_JPEG_PROG_ORACLE = f"""
-WITH h AS (SELECT doc_id, {_H64} AS h64 FROM documents)
+{_H_CTE}
 SELECT doc_id,
        CAST(8 + h64 % 9 AS INT) AS width,
        CAST(8 + (h64 // 9) % 9 AS INT) AS height,
@@ -692,7 +643,8 @@ MP4_SCHEMA = ("doc_id bigint, width int, height int, n_frames int, "
               "duration_ms bigint, sample_format string, within_tol int")
 
 
-def mp4_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_payload_kernel(MP4_SCHEMA)
+def mp4_roundtrip(b: bytes) -> list[tuple]:
     """REAL container + lossy-codec work per payload: derive 2-4 smooth
     RGB frames from the payload hash, mux them as Motion-JPEG in MP4
     (``encode_mp4`` — every sample an independent baseline JPEG; two
@@ -701,47 +653,15 @@ def mp4_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     per-sample JPEG decode), and gate geometry, frame count, duration
     math and the lossy reconstruction tolerance.
     """
-    import numpy as np
-
     from ..functions.mp4codec import decode_mp4, encode_mp4
 
-    def _pixels(h64: int, w: int, h: int, i: int) -> "np.ndarray":
-        a, b = 1 + h64 % 7, 1 + (h64 // 7) % 7
-        base = (h64 + 40 * i) % 256
-        xx, yy = np.meshgrid(np.arange(w), np.arange(h))
-        arr = np.zeros((h, w, 3), np.uint8)
-        for c in range(3):
-            t = (a * xx + b * yy + base + 85 * c) % 510
-            arr[:, :, c] = np.abs(t - 255).astype(np.uint8)
-        return arr
-
-    def _rt(b: bytes):
-        b = bytes(b)
-        h64 = _hash64_py(b)
-        w, h = 8 + h64 % 9, 8 + (h64 // 9) % 9
-        n = 2 + h64 % 3
-        frames = [_pixels(h64, w, h, i) for i in range(n)]
-        vid = decode_mp4(encode_mp4(w, h, [f.tobytes() for f in frames],
-                                    fps=10, quality=90))
-        err = 0
-        for dec, orig in zip(vid.frames, frames):
-            d = np.frombuffer(dec, np.uint8).astype(np.int64)
-            err = max(err, int(np.abs(d - orig.reshape(-1)
-                                      .astype(np.int64)).max()))
-        return (vid.width, vid.height, vid.n_frames, vid.duration_ms,
-                vid.sample_format, int(err <= JPEG_RT_TOL))
-
-    for pdf in batches:
-        metas = pdf["payload"].map(_rt)
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "width": metas.map(lambda m: m[0]).astype("int32"),
-            "height": metas.map(lambda m: m[1]).astype("int32"),
-            "n_frames": metas.map(lambda m: m[2]).astype("int32"),
-            "duration_ms": metas.map(lambda m: m[3]).astype("int64"),
-            "sample_format": metas.map(lambda m: m[4]),
-            "within_tol": metas.map(lambda m: m[5]).astype("int32"),
-        })
+    h64 = _hash64_py(b)
+    w, h, frames = _smooth_rgb(h64, 2 + h64 % 3)
+    vid = decode_mp4(encode_mp4(w, h, [f.tobytes() for f in frames],
+                                fps=10, quality=90))
+    ok = all(_within_tol(dec, orig) for dec, orig in zip(vid.frames, frames))
+    return [(vid.width, vid.height, vid.n_frames, vid.duration_ms,
+             vid.sample_format, int(ok))]
 
 
 def mm_roundtrip_mp4(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -755,7 +675,7 @@ def mm_roundtrip_mp4(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the lossy-codec tolerance flag (see MM_JPEG_ORACLE).  duration_ms =
 #: n_frames · (1000/fps) with fps=10 and timescale 1000.
 MM_MP4_ORACLE = f"""
-WITH h AS (SELECT doc_id, {_H64} AS h64 FROM documents)
+{_H_CTE}
 SELECT doc_id,
        CAST(8 + h64 % 9 AS INT) AS width,
        CAST(8 + (h64 // 9) % 9 AS INT) AS height,
@@ -772,8 +692,8 @@ MJPEG_FRAMES_SCHEMA = ("doc_id bigint, frame_idx int, n_frames int, "
                        "matches_container int, within_tol int")
 
 
-def mjpeg_frame_sample(
-        batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_payload_kernel(MJPEG_FRAMES_SCHEMA)
+def mjpeg_frame_sample(b: bytes) -> list[tuple]:
     """REAL video frame sampling (r6 verdict ask #4): derive 2-4 smooth
     RGB frames from the payload hash, mux them as Motion-JPEG in AVI
     (every ``00dc`` chunk an independent baseline JPEG), then run the
@@ -787,8 +707,6 @@ def mjpeg_frame_sample(
     ``decode_avi`` path (same frame, two decode routes), and the lossy
     reconstruction error stays within JPEG_RT_TOL.
     """
-    import numpy as np
-
     from ..functions.jpegcodec import decode_jpeg
     from ..functions.videocodec import (
         decode_avi,
@@ -796,60 +714,26 @@ def mjpeg_frame_sample(
         encode_avi_mjpeg,
     )
 
-    def _pixels(h64: int, w: int, h: int, i: int) -> "np.ndarray":
-        a, b = 1 + h64 % 7, 1 + (h64 // 7) % 7
-        base = (h64 + 40 * i) % 256
-        xx, yy = np.meshgrid(np.arange(w), np.arange(h))
-        arr = np.zeros((h, w, 3), np.uint8)
-        for c in range(3):
-            t = (a * xx + b * yy + base + 85 * c) % 510
-            arr[:, :, c] = np.abs(t - 255).astype(np.uint8)
-        return arr
-
-    def _rows(b: bytes):
-        b = bytes(b)
-        h64 = _hash64_py(b)
-        w, h = 8 + h64 % 9, 8 + (h64 // 9) % 9
-        n = 2 + h64 % 3
-        frames = [_pixels(h64, w, h, i) for i in range(n)]
-        avi = encode_avi_mjpeg(w, h, [f.tobytes() for f in frames],
-                               fps=10, quality=90)
-        strict = decode_avi(avi).frames          # full-file route
-        dw, dh, _fps, payloads = demux_avi_mjpeg(avi)
-        out = []
-        for i, p in enumerate(payloads):
-            try:                                  # per-frame isolation
-                img = decode_jpeg(p)
-                ok = 1
-                match = int(img.pixels == strict[i])
-                d = np.frombuffer(img.pixels, np.uint8).astype(np.int64)
-                err = int(np.abs(d - frames[i].reshape(-1)
-                                 .astype(np.int64)).max())
-                tol = int(err <= JPEG_RT_TOL)
-            except ValueError:
-                ok, match, tol = 0, 0, 0
-            out.append((i, n, dw, dh, ok, match, tol))
-        return out
-
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            for r in _rows(payload):
-                rows.append((doc_id,) + r)
-        cols = list(zip(*rows)) if rows else [[]] * 8
-        yield pd.DataFrame({
-            "doc_id": pd.Series(cols[0], dtype="int64"),
-            "frame_idx": pd.Series(cols[1], dtype="int32"),
-            "n_frames": pd.Series(cols[2], dtype="int32"),
-            "width": pd.Series(cols[3], dtype="int32"),
-            "height": pd.Series(cols[4], dtype="int32"),
-            "decoded_ok": pd.Series(cols[5], dtype="int32"),
-            "matches_container": pd.Series(cols[6], dtype="int32"),
-            "within_tol": pd.Series(cols[7], dtype="int32"),
-        })
+    h64 = _hash64_py(b)
+    w, h, frames = _smooth_rgb(h64, 2 + h64 % 3)
+    avi = encode_avi_mjpeg(w, h, [f.tobytes() for f in frames],
+                           fps=10, quality=90)
+    strict = decode_avi(avi).frames          # full-file route
+    dw, dh, _fps, payloads = demux_avi_mjpeg(avi)
+    out = []
+    for i, p in enumerate(payloads):
+        try:                                  # per-frame isolation
+            img = decode_jpeg(p)
+            flags = (1, int(img.pixels == strict[i]),
+                     _within_tol(img.pixels, frames[i]))
+        except ValueError:
+            flags = (0, 0, 0)
+        out.append((i, len(frames), dw, dh) + flags)
+    return out
 
 
-def gif_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_payload_kernel(ROUNDTRIP_SCHEMA)
+def gif_roundtrip(b: bytes) -> list[tuple]:
     """REAL LZW-codec work per payload: derive WxH RGB pixels from the
     payload hash, ``encode_gif_rgb`` them (exact palette, variable-width
     LZW, sub-block framing), then decode through the ``decode_builtin``
@@ -860,28 +744,13 @@ def gif_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     from ..functions.gifcodec import encode_gif_rgb
     from ..functions.imagecodec import decode_builtin
 
-    def _rt(b: bytes):
-        b = bytes(b)
-        h64 = _hash64_py(b)
-        w, h = 1 + h64 % 3, 1 + (h64 // 4) % 3
-        raw = hashlib.sha256(b).digest()[: w * h * 3]
-        img = decode_builtin(encode_gif_rgb(w, h, [raw]))
-        return (img.width, img.height, img.mode, img.format,
-                img.pixels.hex())
-
-    for pdf in batches:
-        metas = pdf["payload"].map(_rt)
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "width": metas.map(lambda m: m[0]).astype("int32"),
-            "height": metas.map(lambda m: m[1]).astype("int32"),
-            "mode": metas.map(lambda m: m[2]),
-            "format": metas.map(lambda m: m[3]),
-            "pixel_hex": metas.map(lambda m: m[4]),
-        })
+    w, h, raw = _sha_raster(b, 4, 3)
+    img = decode_builtin(encode_gif_rgb(w, h, [raw]))
+    return [(img.width, img.height, img.mode, img.format, img.pixels.hex())]
 
 
-def tiff_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_payload_kernel(ROUNDTRIP_SCHEMA)
+def tiff_roundtrip(b: bytes) -> list[tuple]:
     """REAL TIFF-LZW codec work per payload: derive WxH RGB pixels from
     the payload hash, ``encode_tiff`` them (single LZW strip, IFD tag
     table), decode through the ``decode_builtin`` dispatch — magic
@@ -891,25 +760,9 @@ def tiff_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     from ..functions.imagecodec import decode_builtin
     from ..functions.tiffcodec import encode_tiff
 
-    def _rt(b: bytes):
-        b = bytes(b)
-        h64 = _hash64_py(b)
-        w, h = 1 + h64 % 3, 1 + (h64 // 9) % 3
-        raw = hashlib.sha256(b).digest()[: w * h * 3]
-        img = decode_builtin(encode_tiff(w, h, raw, "RGB", compression=5))
-        return (img.width, img.height, img.mode, img.format,
-                img.pixels.hex())
-
-    for pdf in batches:
-        metas = pdf["payload"].map(_rt)
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "width": metas.map(lambda m: m[0]).astype("int32"),
-            "height": metas.map(lambda m: m[1]).astype("int32"),
-            "mode": metas.map(lambda m: m[2]),
-            "format": metas.map(lambda m: m[3]),
-            "pixel_hex": metas.map(lambda m: m[4]),
-        })
+    w, h, raw = _sha_raster(b, 9, 3)
+    img = decode_builtin(encode_tiff(w, h, raw, "RGB", compression=5))
+    return [(img.width, img.height, img.mode, img.format, img.pixels.hex())]
 
 
 def mm_roundtrip_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -919,24 +772,6 @@ def mm_roundtrip_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_payload(docs).mapInPandas(tiff_roundtrip, ROUNDTRIP_SCHEMA)
 
 
-#: Same algebraic-recompute gate as BMP/PNG/GIF: the pixels Spark must
-#: produce THROUGH the IFD walk + LZW inflate are the leading sha256
-#: bytes, in hex.
-MM_TIFF_ORACLE = f"""
-WITH h AS (
-  SELECT doc_id, {_H64} AS h64, sha256(text) AS sha_hex FROM documents
-)
-SELECT doc_id,
-       CAST(1 + h64 % 3 AS INT) AS width,
-       CAST(1 + (h64 // 9) % 3 AS INT) AS height,
-       'RGB' AS mode, 'TIFF' AS format,
-       substr(sha_hex, 1,
-              CAST((1 + h64 % 3) * (1 + (h64 // 9) % 3) * 6 AS INT))
-         AS pixel_hex
-FROM h
-"""
-
-
 def mm_roundtrip_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary payload -> real GIF (LZW) encode/decode round-trip ->
     decoded metadata + pixels."""
@@ -944,30 +779,12 @@ def mm_roundtrip_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_payload(docs).mapInPandas(gif_roundtrip, ROUNDTRIP_SCHEMA)
 
 
-#: Same algebraic-recompute gate as BMP/PNG: the pixels Spark must
-#: produce THROUGH palette build + LZW compress/decompress are the
-#: leading sha256 bytes, in hex.
-MM_GIF_ORACLE = f"""
-WITH h AS (
-  SELECT doc_id, {_H64} AS h64, sha256(text) AS sha_hex FROM documents
-)
-SELECT doc_id,
-       CAST(1 + h64 % 3 AS INT) AS width,
-       CAST(1 + (h64 // 4) % 3 AS INT) AS height,
-       'P' AS mode, 'GIF' AS format,
-       substr(sha_hex, 1,
-              CAST((1 + h64 % 3) * (1 + (h64 // 4) % 3) * 6 AS INT))
-         AS pixel_hex
-FROM h
-"""
-
-
 GIF_FRAMES_SCHEMA = ("doc_id bigint, frame_idx int, delay_cs int, "
                      "frame_hex string")
 
 
-def gif_frame_sample(
-        batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_payload_kernel(GIF_FRAMES_SCHEMA)
+def gif_frame_sample(b: bytes) -> list[tuple]:
     """ANIMATED-GIF frame sampling through the real codec: derive
     ``nf`` per-frame RGB buffers and per-frame delays from the payload
     hash, encode them as one animated GIF89a (GCE delay blocks +
@@ -976,31 +793,17 @@ def gif_frame_sample(
     parse, the frame bytes gate per-frame LZW + compositing."""
     from ..functions.gifcodec import decode_gif, encode_gif_rgb
 
-    def _rows(doc_id: int, b: bytes):
-        b = bytes(b)
-        h64 = _hash64_py(b)
-        w, h = 1 + h64 % 3, 2
-        nf = 2 + h64 % 3
-        frames = [
-            hashlib.sha256(b + str(i).encode()).digest()[: w * h * 3]
-            for i in range(nf)
-        ]
-        g = decode_gif(encode_gif_rgb(w, h, frames,
-                                      [10 * i for i in range(nf)]))
-        return [
-            (doc_id, i, g.delays_cs[i], g.frames[i].hex())
-            for i in range(len(g.frames)) if i % 2 == 0
-        ]
-
-    for pdf in batches:
-        rows = [r for d, p in zip(pdf["doc_id"], pdf["payload"])
-                for r in _rows(int(d), p)]
-        yield pd.DataFrame({
-            "doc_id": pd.Series([r[0] for r in rows], dtype="int64"),
-            "frame_idx": pd.Series([r[1] for r in rows], dtype="int32"),
-            "delay_cs": pd.Series([r[2] for r in rows], dtype="int32"),
-            "frame_hex": pd.Series([r[3] for r in rows], dtype="object"),
-        })
+    h64 = _hash64_py(b)
+    w, h = 1 + h64 % 3, 2
+    nf = 2 + h64 % 3
+    frames = [
+        hashlib.sha256(b + str(i).encode()).digest()[: w * h * 3]
+        for i in range(nf)
+    ]
+    g = decode_gif(encode_gif_rgb(w, h, frames,
+                                  [10 * i for i in range(nf)]))
+    return [(i, g.delays_cs[i], g.frames[i].hex())
+            for i in range(0, len(g.frames), 2)]
 
 
 def mm_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1014,9 +817,7 @@ def mm_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Frame bytes are the leading sha256 of (payload || idx); the delay is
 #: 10·idx — Spark must reproduce BOTH through the GIF container walk.
 MM_GIF_FRAMES_ORACLE = f"""
-WITH h AS (
-  SELECT doc_id, {_H64} AS h64, text FROM documents
-),
+{_H_CTE},
 n AS (
   SELECT doc_id, h64, 2 + h64 % 3 AS nf,
          CAST(1 + h64 % 3 AS INT) AS w, text
@@ -1044,7 +845,7 @@ def mm_video_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: any container-walk, chunk-framing or per-frame decode defect zeroes
 #: a flag and fails parity.
 MM_MJPEG_FRAMES_ORACLE = f"""
-WITH h AS (SELECT doc_id, {_H64} AS h64 FROM documents),
+{_H_CTE},
 n AS (SELECT doc_id, h64, 2 + h64 % 3 AS nf FROM h)
 SELECT doc_id, CAST(i.i AS INT) AS frame_idx,
        CAST(nf AS INT) AS n_frames,
@@ -1059,7 +860,8 @@ WAV_SCHEMA = ("doc_id bigint, sample_rate int, channels int, "
               "n_frames int, duration_us bigint, pcm_hex string")
 
 
-def wav_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_payload_kernel(WAV_SCHEMA)
+def wav_roundtrip(b: bytes) -> list[tuple]:
     """REAL audio codec work per payload: derive PCM frames from the
     payload hash, ``encode_wav`` them, ``decode_wav`` the result with the
     builtin RIFF parser, and emit the decoded header + frames (hex).
@@ -1068,29 +870,11 @@ def wav_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     algebraically, so a chunk-walk or frame-count defect in the codec
     fails DuckDB parity.
     """
-    from ..functions.audiocodec import decode_wav, encode_wav
+    from ..functions.audiocodec import decode_wav
 
-    def _rt(b: bytes):
-        b = bytes(b)
-        h64 = _hash64_py(b)
-        rate = 8000 * (1 + h64 % 3)
-        channels = 1 + h64 % 2
-        n_frames = 1 + h64 % 5
-        pcm = hashlib.sha256(b).digest()[: n_frames * channels * 2]
-        wav = decode_wav(encode_wav(rate, channels, pcm))
-        return (wav.sample_rate, wav.channels, wav.n_frames,
-                wav.duration_us, wav.pcm.hex())
-
-    for pdf in batches:
-        metas = pdf["payload"].map(_rt)
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "sample_rate": metas.map(lambda m: m[0]).astype("int32"),
-            "channels": metas.map(lambda m: m[1]).astype("int32"),
-            "n_frames": metas.map(lambda m: m[2]).astype("int32"),
-            "duration_us": metas.map(lambda m: m[3]).astype("int64"),
-            "pcm_hex": metas.map(lambda m: m[4]),
-        })
+    wav = decode_wav(_derived_wav(b))
+    return [(wav.sample_rate, wav.channels, wav.n_frames, wav.duration_us,
+             wav.pcm.hex())]
 
 
 def mm_roundtrip_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1100,9 +884,7 @@ def mm_roundtrip_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 MM_WAV_ORACLE = f"""
-WITH h AS (
-  SELECT doc_id, {_H64} AS h64, sha256(text) AS sha_hex FROM documents
-)
+{_H_CTE}
 SELECT doc_id,
        CAST(8000 * (1 + h64 % 3) AS INT) AS sample_rate,
        CAST(1 + h64 % 2 AS INT) AS channels,
@@ -1119,40 +901,19 @@ RESAMPLE_SCHEMA = ("doc_id bigint, channels int, in_frames int, "
                    "out_rate int, out_frames int, pcm_hex string")
 
 
-def real_audio_resample(
-        batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_payload_kernel(RESAMPLE_SCHEMA)
+def real_audio_resample(b: bytes) -> list[tuple]:
     """REAL audio resample: decode an actual PCM WAV and decimate by 2 —
     keep every second FRAME (a frame is ``channels * 2`` bytes, so the
     stride is channel-aware; byte-level decimation would interleave
     channels wrongly on stereo).  The image-resize analogue for the
     audio modality, parity-gated on the exact surviving PCM bytes."""
-    from ..functions.audiocodec import decode_wav, encode_wav
+    from ..functions.audiocodec import decode_wav
 
-    def _rt(b: bytes):
-        b = bytes(b)
-        h64 = _hash64_py(b)
-        rate = 8000 * (1 + h64 % 3)
-        channels = 1 + h64 % 2
-        n_frames = 1 + h64 % 5
-        pcm = hashlib.sha256(b).digest()[: n_frames * channels * 2]
-        wav = decode_wav(encode_wav(rate, channels, pcm))
-        fsz = wav.channels * 2
-        frames = [wav.pcm[i * fsz:(i + 1) * fsz]
-                  for i in range(wav.n_frames)]
-        out = b"".join(frames[::2])
-        return (wav.channels, wav.n_frames, wav.sample_rate // 2,
-                (wav.n_frames + 1) // 2, out.hex())
-
-    for pdf in batches:
-        metas = pdf["payload"].map(_rt)
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "channels": metas.map(lambda m: m[0]).astype("int32"),
-            "in_frames": metas.map(lambda m: m[1]).astype("int32"),
-            "out_rate": metas.map(lambda m: m[2]).astype("int32"),
-            "out_frames": metas.map(lambda m: m[3]).astype("int32"),
-            "pcm_hex": metas.map(lambda m: m[4]),
-        })
+    wav = decode_wav(_derived_wav(b))
+    out = b"".join(_pcm_frames(wav)[::2])
+    return [(wav.channels, wav.n_frames, wav.sample_rate // 2,
+             (wav.n_frames + 1) // 2, out.hex())]
 
 
 def mm_audio_resample_real(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1165,9 +926,7 @@ def mm_audio_resample_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Surviving PCM = the even frames' hex slices, concatenated in order —
 #: frame size is channel-dependent, so a stereo stride bug breaks parity.
 MM_AUDIO_RESAMPLE_ORACLE = f"""
-WITH h AS (
-  SELECT doc_id, {_H64} AS h64, sha256(text) AS sha_hex FROM documents
-),
+{_H_CTE},
 d AS (
   SELECT doc_id, 1 + h64 % 2 AS ch, 1 + h64 % 5 AS nf,
          8000 * (1 + h64 % 3) AS rate, sha_hex
@@ -1192,34 +951,17 @@ AVI_SCHEMA = ("doc_id bigint, width int, height int, fps int, "
               "n_frames int, frames_hex string")
 
 
-def avi_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_payload_kernel(AVI_SCHEMA)
+def avi_roundtrip(b: bytes) -> list[tuple]:
     """REAL video codec work per payload: derive 2x2 RGB frames from the
     payload hash, ``encode_avi`` them, ``decode_avi`` the result with the
     builtin RIFF walker, and emit the decoded header + concatenated
     frame bytes (hex) — parity-gated like the BMP/WAV round-trips."""
-    from ..functions.videocodec import decode_avi, encode_avi
+    from ..functions.videocodec import decode_avi
 
-    def _rt(b: bytes):
-        b = bytes(b)
-        h64 = _hash64_py(b)
-        n_frames = 1 + h64 % 2
-        fps = 10 + h64 % 15
-        raw = hashlib.sha256(b).digest()[: n_frames * 12]
-        frames = [raw[i * 12:(i + 1) * 12] for i in range(n_frames)]
-        avi = decode_avi(encode_avi(2, 2, frames, fps=fps))
-        return (avi.width, avi.height, avi.fps, avi.n_frames,
-                b"".join(avi.frames).hex())
-
-    for pdf in batches:
-        metas = pdf["payload"].map(_rt)
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "width": metas.map(lambda m: m[0]).astype("int32"),
-            "height": metas.map(lambda m: m[1]).astype("int32"),
-            "fps": metas.map(lambda m: m[2]).astype("int32"),
-            "n_frames": metas.map(lambda m: m[3]).astype("int32"),
-            "frames_hex": metas.map(lambda m: m[4]),
-        })
+    avi = decode_avi(_derived_avi(b))
+    return [(avi.width, avi.height, avi.fps, avi.n_frames,
+             b"".join(avi.frames).hex())]
 
 
 def mm_roundtrip_avi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1229,9 +971,7 @@ def mm_roundtrip_avi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 MM_AVI_ORACLE = f"""
-WITH h AS (
-  SELECT doc_id, {_H64} AS h64, sha256(text) AS sha_hex FROM documents
-)
+{_H_CTE}
 SELECT doc_id, 2 AS width, 2 AS height,
        CAST(10 + h64 % 15 AS INT) AS fps,
        CAST(1 + h64 % 2 AS INT) AS n_frames,
@@ -1244,9 +984,8 @@ N_FEATURES = 8
 FEATURE_SCHEMA = "doc_id bigint, feature array<bigint>"
 
 
-def fake_feature_extract(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+@_payload_kernel(FEATURE_SCHEMA)
+def fake_feature_extract(b: bytes) -> list[tuple]:
     """STUB feature extractor: deterministic pseudo-embedding per payload.
 
     Feature d = hash64(sha256-hex(payload) + ':' + d) mod 1000 — stands in
@@ -1254,18 +993,9 @@ def fake_feature_extract(
     output shape (one fixed-length array per media row, Arrow list
     transfer) is the contract ANN operators consume downstream.
     """
-    for pdf in batches:
-        shas = pdf["payload"].map(
-            lambda b: hashlib.sha256(b).hexdigest()
-        )
-        feats = shas.map(
-            lambda s: [
-                int(hashlib.md5(f"{s}:{d}".encode()).hexdigest()[:15], 16)
-                % 1000
-                for d in range(N_FEATURES)
-            ]
-        )
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "feature": feats})
+    s = hashlib.sha256(b).hexdigest()
+    return [([_hash64_py(f"{s}:{d}".encode()) % 1000
+              for d in range(N_FEATURES)],)]
 
 
 def mm_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1290,7 +1020,8 @@ AUDIO_FEATURES_SCHEMA = (
 )
 
 
-def audio_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_payload_kernel(AUDIO_FEATURES_SCHEMA)
+def audio_features(b: bytes) -> list[tuple]:
     """REAL audio analysis per payload: decode the WAV (same derivation
     as :func:`wav_roundtrip`), unpack int16-LE samples, and emit exact
     integer loudness features — the decode→analyze stage of an audio
@@ -1299,40 +1030,15 @@ def audio_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     exact; only the derived RMS is floating, floored at 4 decimals."""
     import struct
 
-    from ..functions.audiocodec import decode_wav, encode_wav
+    from ..functions.audiocodec import decode_wav
 
-    def _feat(b: bytes):
-        b = bytes(b)
-        h64 = _hash64_py(b)
-        rate = 8000 * (1 + h64 % 3)
-        channels = 1 + h64 % 2
-        n_frames = 1 + h64 % 5
-        pcm = hashlib.sha256(b).digest()[: n_frames * channels * 2]
-        wav = decode_wav(encode_wav(rate, channels, pcm))
-        n = wav.n_frames * wav.channels
-        vals = struct.unpack(f"<{n}h", wav.pcm)
-        return (wav.sample_rate, wav.channels, n, sum(vals),
-                sum(v * v for v in vals), max(abs(v) for v in vals))
-
-    for pdf in batches:
-        metas = pdf["payload"].map(_feat)
-        import numpy as np
-
-        sum_sq = metas.map(lambda m: m[4]).astype("int64")
-        n = metas.map(lambda m: m[2]).astype("int64")
-        rms = np.floor(np.sqrt(sum_sq.values.astype("float64")
-                               / n.values.astype("float64"))
-                       * 10000.0) / 10000.0
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "sample_rate": metas.map(lambda m: m[0]).astype("int32"),
-            "channels": metas.map(lambda m: m[1]).astype("int32"),
-            "n_samples": metas.map(lambda m: m[2]).astype("int32"),
-            "sum_amp": metas.map(lambda m: m[3]).astype("int64"),
-            "sum_sq": sum_sq,
-            "peak_abs": metas.map(lambda m: m[5]).astype("int32"),
-            "rms": rms,
-        })
+    wav = decode_wav(_derived_wav(b))
+    n = wav.n_frames * wav.channels
+    vals = struct.unpack(f"<{n}h", wav.pcm)
+    sum_sq = sum(v * v for v in vals)
+    rms = math.floor(math.sqrt(float(sum_sq) / float(n)) * 10000.0) / 10000.0
+    return [(wav.sample_rate, wav.channels, n, sum(vals), sum_sq,
+             max(abs(v) for v in vals), rms)]
 
 
 def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1348,9 +1054,7 @@ def _hexbyte(hx: str, p: str) -> str:
 
 
 MM_AUDIO_FEATURES_ORACLE = f"""
-WITH h AS (
-  SELECT doc_id, {_H64} AS h64, sha256(text) AS sha_hex FROM documents
-),
+{_H_CTE},
 hdr AS (
   SELECT doc_id,
          CAST(8000 * (1 + h64 % 3) AS INT) AS sample_rate,
@@ -1388,47 +1092,24 @@ MOTION_SCHEMA = ("doc_id bigint, width int, height int, n_frames int, "
                  "motion_energy bigint, mean_abs_diff double")
 
 
-def video_motion(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_payload_kernel(MOTION_SCHEMA)
+def video_motion(b: bytes) -> list[tuple]:
     """REAL video analysis per payload: decode the AVI (same derivation
     as :func:`avi_roundtrip`) and emit frame-difference energy —
     Σ|frame₁[j] − frame₀[j]| over raw bytes — the scene-change /
     static-content signal a video curation pipeline thresholds on.
     Single-frame clips score 0.  Energy is an exact integer; the
     per-byte mean is floored at 4 decimals."""
-    from ..functions.videocodec import decode_avi, encode_avi
+    from ..functions.videocodec import decode_avi
 
-    def _mo(b: bytes):
-        b = bytes(b)
-        h64 = _hash64_py(b)
-        n_frames = 1 + h64 % 2
-        fps = 10 + h64 % 15
-        raw = hashlib.sha256(b).digest()[: n_frames * 12]
-        frames = [raw[i * 12:(i + 1) * 12] for i in range(n_frames)]
-        avi = decode_avi(encode_avi(2, 2, frames, fps=fps))
-        energy = 0
-        if avi.n_frames >= 2:
-            a, c = avi.frames[0], avi.frames[1]
-            energy = sum(abs(x - y) for x, y in zip(a, c))
-        return (avi.width, avi.height, avi.n_frames, energy,
-                len(avi.frames[0]))
-
-    import numpy as np
-
-    for pdf in batches:
-        metas = pdf["payload"].map(_mo)
-        energy = metas.map(lambda m: m[3]).astype("int64")
-        nbytes = metas.map(lambda m: m[4]).astype("int64")
-        mean_ad = np.floor(energy.values.astype("float64")
-                           / nbytes.values.astype("float64")
-                           * 10000.0) / 10000.0
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "width": metas.map(lambda m: m[0]).astype("int32"),
-            "height": metas.map(lambda m: m[1]).astype("int32"),
-            "n_frames": metas.map(lambda m: m[2]).astype("int32"),
-            "motion_energy": energy,
-            "mean_abs_diff": mean_ad,
-        })
+    avi = decode_avi(_derived_avi(b))
+    energy = 0
+    if avi.n_frames >= 2:
+        a, c = avi.frames[0], avi.frames[1]
+        energy = sum(abs(x - y) for x, y in zip(a, c))
+    mean_ad = math.floor(float(energy) / float(len(avi.frames[0]))
+                         * 10000.0) / 10000.0
+    return [(avi.width, avi.height, avi.n_frames, energy, mean_ad)]
 
 
 def mm_video_motion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1438,9 +1119,7 @@ def mm_video_motion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 MM_VIDEO_MOTION_ORACLE = f"""
-WITH h AS (
-  SELECT doc_id, {_H64} AS h64, sha256(text) AS sha_hex FROM documents
-),
+{_H_CTE},
 hdr AS (
   SELECT doc_id, CAST(1 + h64 % 2 AS INT) AS n_frames, sha_hex FROM h
 ),
@@ -1470,7 +1149,8 @@ IMAGE_STATS_SCHEMA = ("doc_id bigint, width int, height int, "
                       "mean_luma double")
 
 
-def image_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_payload_kernel(IMAGE_STATS_SCHEMA)
+def image_stats(b: bytes) -> list[tuple]:
     """REAL image analysis per payload: decode the BMP (same derivation
     as :func:`bmp_roundtrip`) and emit exact per-channel pixel sums plus
     a floored ITU-R 601 luminance mean — the brightness/black-frame gate
@@ -1479,38 +1159,15 @@ def image_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     shifts them and breaks oracle parity."""
     from ..functions.imagecodec import decode_bmp, encode_bmp
 
-    def _st(b: bytes):
-        b = bytes(b)
-        h64 = _hash64_py(b)
-        w, h = 1 + h64 % 3, 1 + h64 % 2
-        raw = hashlib.sha256(b).digest()[: w * h * 3]
-        img = decode_bmp(encode_bmp(w, h, raw))
-        px = img.pixels
-        sr = sum(px[0::3])
-        sg = sum(px[1::3])
-        sb = sum(px[2::3])
-        return (img.width, img.height, sr, sg, sb, w * h)
-
-    import numpy as np
-
-    for pdf in batches:
-        metas = pdf["payload"].map(_st)
-        sr = metas.map(lambda m: m[2]).astype("int64")
-        sg = metas.map(lambda m: m[3]).astype("int64")
-        sb = metas.map(lambda m: m[4]).astype("int64")
-        n = metas.map(lambda m: m[5]).astype("int64").values.astype("float64")
-        luma = np.floor(
-            (0.299 * sr.values.astype("float64")
-             + 0.587 * sg.values.astype("float64")
-             + 0.114 * sb.values.astype("float64")) / n * 10000.0
-        ) / 10000.0
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "width": metas.map(lambda m: m[0]).astype("int32"),
-            "height": metas.map(lambda m: m[1]).astype("int32"),
-            "sum_r": sr, "sum_g": sg, "sum_b": sb,
-            "mean_luma": luma,
-        })
+    w, h, raw = _sha_raster(b, 1, 2)
+    img = decode_bmp(encode_bmp(w, h, raw))
+    px = img.pixels
+    sr, sg, sb = sum(px[0::3]), sum(px[1::3]), sum(px[2::3])
+    luma = math.floor(
+        (0.299 * float(sr) + 0.587 * float(sg) + 0.114 * float(sb))
+        / float(w * h) * 10000.0
+    ) / 10000.0
+    return [(img.width, img.height, sr, sg, sb, luma)]
 
 
 def mm_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1522,7 +1179,8 @@ def mm_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 AHASH_SCHEMA = "doc_id bigint, width int, height int, ahash bigint"
 
 
-def image_ahash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_payload_kernel(AHASH_SCHEMA)
+def image_ahash(b: bytes) -> list[tuple]:
     """REAL perceptual average-hash per payload: decode the BMP, take
     integer ITU-R 601 luma per pixel (×1000 so it stays exact), and set
     bit p when pixel p is brighter than the image mean — the aHash used
@@ -1531,28 +1189,13 @@ def image_ahash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     happens."""
     from ..functions.imagecodec import decode_bmp, encode_bmp
 
-    def _ah(b: bytes):
-        b = bytes(b)
-        h64 = _hash64_py(b)
-        w, h = 1 + h64 % 3, 1 + h64 % 2
-        raw = hashlib.sha256(b).digest()[: w * h * 3]
-        img = decode_bmp(encode_bmp(w, h, raw))
-        px = img.pixels
-        n = w * h
-        lum = [299 * px[3 * p] + 587 * px[3 * p + 1] + 114 * px[3 * p + 2]
-               for p in range(n)]
-        s = sum(lum)
-        ah = sum(1 << p for p in range(n) if lum[p] * n > s)
-        return (w, h, ah)
-
-    for pdf in batches:
-        metas = pdf["payload"].map(_ah)
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "width": metas.map(lambda m: m[0]).astype("int32"),
-            "height": metas.map(lambda m: m[1]).astype("int32"),
-            "ahash": metas.map(lambda m: m[2]).astype("int64"),
-        })
+    w, h, raw = _sha_raster(b, 1, 2)
+    px = decode_bmp(encode_bmp(w, h, raw)).pixels
+    n = w * h
+    lum = [299 * px[3 * p] + 587 * px[3 * p + 1] + 114 * px[3 * p + 2]
+           for p in range(n)]
+    s = sum(lum)
+    return [(w, h, sum(1 << p for p in range(n) if lum[p] * n > s))]
 
 
 def mm_image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1586,9 +1229,7 @@ def mm_image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 MM_AHASH_ORACLE = f"""
-WITH h AS (
-  SELECT doc_id, {_H64} AS h64, sha256(text) AS sha_hex FROM documents
-),
+{_H_CTE},
 hdr AS (
   SELECT doc_id,
          CAST(1 + h64 % 3 AS INT) AS width,
@@ -1631,9 +1272,7 @@ FROM ah JOIN buckets b ON ah.width = b.width AND ah.height = b.height
 
 
 MM_IMAGE_STATS_ORACLE = f"""
-WITH h AS (
-  SELECT doc_id, {_H64} AS h64, sha256(text) AS sha_hex FROM documents
-),
+{_H_CTE},
 hdr AS (
   SELECT doc_id,
          CAST(1 + h64 % 3 AS INT) AS width,
@@ -1673,9 +1312,8 @@ TRIM_SCHEMA = ("doc_id bigint, n_frames int, silent_frames int, "
                "trim_start int, trim_end_excl int, trimmed_hex string")
 
 
-def audio_trim_silence(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+@_payload_kernel(TRIM_SCHEMA)
+def audio_trim_silence(b: bytes) -> list[tuple]:
     """REAL audio curation per payload: decode the WAV (same derivation
     as :func:`wav_roundtrip`), gate each frame on max-channel amplitude,
     and TRIM leading/trailing silence — the standard pre-training audio
@@ -1685,40 +1323,20 @@ def audio_trim_silence(
     breaks value parity, not just counts."""
     import struct
 
-    from ..functions.audiocodec import decode_wav, encode_wav
+    from ..functions.audiocodec import decode_wav
 
-    def _trim(b: bytes):
-        b = bytes(b)
-        h64 = _hash64_py(b)
-        rate = 8000 * (1 + h64 % 3)
-        channels = 1 + h64 % 2
-        n_frames = 1 + h64 % 5
-        pcm = hashlib.sha256(b).digest()[: n_frames * channels * 2]
-        wav = decode_wav(encode_wav(rate, channels, pcm))
-        fsz = wav.channels * 2
-        frames = [wav.pcm[i * fsz:(i + 1) * fsz]
-                  for i in range(wav.n_frames)]
-        loud = [
-            max(abs(v) for v in struct.unpack(f"<{wav.channels}h", fr))
-            >= SILENCE_THRESHOLD
-            for fr in frames
-        ]
-        loud_idx = [i for i, keep in enumerate(loud) if keep]
-        start = loud_idx[0] if loud_idx else wav.n_frames
-        end = loud_idx[-1] + 1 if loud_idx else 0
-        return (wav.n_frames, loud.count(False), start, end,
-                b"".join(frames[start:end]).hex())
-
-    for pdf in batches:
-        metas = pdf["payload"].map(_trim)
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "n_frames": metas.map(lambda m: m[0]).astype("int32"),
-            "silent_frames": metas.map(lambda m: m[1]).astype("int32"),
-            "trim_start": metas.map(lambda m: m[2]).astype("int32"),
-            "trim_end_excl": metas.map(lambda m: m[3]).astype("int32"),
-            "trimmed_hex": metas.map(lambda m: m[4]),
-        })
+    wav = decode_wav(_derived_wav(b))
+    frames = _pcm_frames(wav)
+    loud = [
+        max(abs(v) for v in struct.unpack(f"<{wav.channels}h", fr))
+        >= SILENCE_THRESHOLD
+        for fr in frames
+    ]
+    loud_idx = [i for i, keep in enumerate(loud) if keep]
+    start = loud_idx[0] if loud_idx else wav.n_frames
+    end = loud_idx[-1] + 1 if loud_idx else 0
+    return [(wav.n_frames, loud.count(False), start, end,
+             b"".join(frames[start:end]).hex())]
 
 
 def mm_audio_trim_silence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1731,9 +1349,7 @@ def mm_audio_trim_silence(spark: SparkSession, sf_dir: str) -> DataFrame:
 _S16 = ("(('0x' || substr(sx, 3, 2) || substr(sx, 1, 2))::INT)")
 
 MM_AUDIO_TRIM_ORACLE = f"""
-WITH h AS (
-  SELECT doc_id, {_H64} AS h64, sha256(text) AS sha_hex FROM documents
-),
+{_H_CTE},
 d AS (
   SELECT doc_id, 1 + h64 % 2 AS ch, 1 + h64 % 5 AS nf, sha_hex FROM h
 ),
@@ -1776,24 +1392,10 @@ GROUP BY ag.doc_id, ag.nf, ag.silent, ag.ts, ag.te
 WAV_BYTES_SCHEMA = "doc_id bigint, wav binary"
 
 
-def wav_encode_only(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_payload_kernel(WAV_BYTES_SCHEMA)
+def wav_encode_only(b: bytes) -> list[tuple]:
     """Encode-only half of the WAV path (see :func:`png_encode_only`)."""
-    from ..functions.audiocodec import encode_wav
-
-    def _enc(b: bytes) -> bytes:
-        b = bytes(b)
-        h64 = _hash64_py(b)
-        rate = 8000 * (1 + h64 % 3)
-        channels = 1 + h64 % 2
-        n_frames = 1 + h64 % 5
-        pcm = hashlib.sha256(b).digest()[: n_frames * channels * 2]
-        return encode_wav(rate, channels, pcm)
-
-    for pdf in batches:
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "wav": pdf["payload"].map(_enc),
-        })
+    return [(_derived_wav(b),)]
 
 
 def _le_int(col: str, pos: int, nbytes: int) -> F.Column:
@@ -1841,9 +1443,7 @@ def mm_wav_header_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 MM_WAV_HEADER_ORACLE = f"""
-WITH h AS (
-  SELECT doc_id, {_H64} AS h64 FROM documents
-)
+{_H_CTE}
 SELECT doc_id,
        TRUE AS riff_ok, TRUE AS wave_ok,
        CAST(1 AS INT) AS audio_format,
@@ -1860,24 +1460,14 @@ FROM h
 PNG_BYTES_SCHEMA = "doc_id bigint, png binary"
 
 
-def png_encode_only(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_payload_kernel(PNG_BYTES_SCHEMA)
+def png_encode_only(b: bytes) -> list[tuple]:
     """Encode-only half of the PNG path: payload -> real PNG bytes.
     (The decode half is deliberately NOT here — downstream parsing
     happens relationally, on the binary column.)"""
     from ..functions.pngcodec import encode_png
 
-    def _enc(b: bytes) -> bytes:
-        b = bytes(b)
-        h64 = _hash64_py(b)
-        w = h = 1 + h64 % 3
-        raw = hashlib.sha256(b).digest()[: w * h * 3]
-        return encode_png(w, h, raw)
-
-    for pdf in batches:
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "png": pdf["payload"].map(_enc),
-        })
+    return [(encode_png(*_sha_raster(b, 1, 3)),)]
 
 
 def _be_int(pos: int, nbytes: int) -> F.Column:
@@ -1925,9 +1515,7 @@ def mm_png_header_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 MM_PNG_HEADER_ORACLE = f"""
-WITH h AS (
-  SELECT doc_id, {_H64} AS h64 FROM documents
-)
+{_H_CTE}
 SELECT doc_id,
        TRUE AS magic_ok,
        CAST(13 AS BIGINT) AS ihdr_len,

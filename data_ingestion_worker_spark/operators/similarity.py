@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import math as _math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash64, hash64_sql
@@ -39,6 +39,37 @@ _QVEC = ("transform(embedding, x -> cast(round(cast(x as double) * "
          f"{QUANT}) as bigint))")
 
 
+def _int_dot(a: str, b: str) -> Column:
+    """Exact integer dot product of two quantized-vector columns."""
+    return F.expr(f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
+                  "cast(0 as bigint), (acc, v) -> acc + v)")
+
+
+def _norm2(a: str) -> Column:
+    """Exact integer squared norm of a quantized-vector column."""
+    return F.expr(f"aggregate(transform({a}, x -> x * x), "
+                  "cast(0 as bigint), (acc, v) -> acc + v)")
+
+
+def _int_cosine(a: str, b: str) -> Column:
+    """Cosine of two quantized-vector columns rounded to 6 decimals: the
+    dot product and norms are exact integers, so the one double division
+    has identical operands on both engines."""
+    na, nb = _norm2(a).cast("double"), _norm2(b).cast("double")
+    return F.round(
+        _int_dot(a, b).cast("double") / (F.sqrt(na) * F.sqrt(nb)), 6
+    )
+
+
+def _signed_coin(prefix: str) -> Column:
+    """``v`` or ``-v`` at dimension ``d`` by the parity of
+    ``hash64(prefix || d)``: the cross-engine md5 coin of the signed
+    random projections (LSH planes, JL planes, the embedding-dedup
+    bands)."""
+    coin = hash64(F.concat(F.lit(prefix), F.col("d").cast("string")))
+    return F.when(coin % 2 == 0, F.col("v")).otherwise(-F.col("v"))
+
+
 def _brute_topk(spark: SparkSession, sf_dir: str,
                 vec_expr: str = _QVEC) -> DataFrame:
     """Brute-force cosine top-k for the first N_QUERIES vectors, over an
@@ -55,18 +86,7 @@ def _brute_topk(spark: SparkSession, sf_dir: str,
     q = e.filter(F.col("vec_id") < N_QUERIES) \
         .withColumnRenamed("vec_id", "query_id").withColumnRenamed("qv", "qq")
     pairs = e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-    dot = F.expr(
-        "aggregate(zip_with(qq, qv, (x, y) -> x * y), "
-        "cast(0 as bigint), (acc, v) -> acc + v)"
-    )
-    n1 = F.expr("aggregate(transform(qq, x -> x * x), "
-                "cast(0 as bigint), (acc, v) -> acc + v)")
-    n2 = F.expr("aggregate(transform(qv, x -> x * x), "
-                "cast(0 as bigint), (acc, v) -> acc + v)")
-    cos = F.round(
-        dot.cast("double")
-        / (F.sqrt(n1.cast("double")) * F.sqrt(n2.cast("double"))), 6
-    )
+    cos = _int_cosine("qq", "qv")
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("vec_id")
     )
@@ -253,11 +273,7 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over one pass of the dims — no dims x planes row explosion (8x less
     # shuffle input; the hash arithmetic stays in codegen either way).
     proj = dims.groupBy("vec_id").agg(*[
-        F.sum(F.expr(
-            f"CASE WHEN cast(conv(substring(md5(concat('{p}:', "
-            "cast(d as string))), 1, 15), 16, 10) as bigint) % 2 = 0 "
-            "THEN v ELSE -v END"
-        )).alias(f"proj{p}")
+        F.sum(_signed_coin(f"{p}:")).alias(f"proj{p}")
         for p in range(N_PLANES)
     ])
     bucket = sum(
@@ -565,18 +581,7 @@ def _ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
               (F.col("label") == F.col("cell"))
               & (F.col("vec_id") != F.col("query_id")))
     )
-    dot = F.expr(
-        "aggregate(zip_with(qq, qv, (x, y) -> x * y), "
-        "cast(0 as bigint), (acc, v) -> acc + v)"
-    )
-    n1 = F.expr("aggregate(transform(qq, x -> x * x), "
-                "cast(0 as bigint), (acc, v) -> acc + v)")
-    n2 = F.expr("aggregate(transform(qv, x -> x * x), "
-                "cast(0 as bigint), (acc, v) -> acc + v)")
-    cos = F.round(
-        dot.cast("double")
-        / (F.sqrt(n1.cast("double")) * F.sqrt(n2.cast("double"))), 6
-    )
+    cos = _int_cosine("qq", "qv")
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("vec_id")
     )
@@ -1092,16 +1097,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Within-cluster pairs only: the equi-join on cluster is the
     # SemDeDup blocking step (shuffle by cluster, pairwise inside).
     pairs = a.join(b, "cluster").filter(F.col("v1") < F.col("v2"))
-    dot = F.expr("aggregate(zip_with(qa, qb, (x, y) -> x * y), "
-                 "cast(0 as bigint), (acc, v) -> acc + v)")
-    na = F.expr("aggregate(transform(qa, x -> x * x), "
-                "cast(0 as bigint), (acc, v) -> acc + v)")
-    nb = F.expr("aggregate(transform(qb, x -> x * x), "
-                "cast(0 as bigint), (acc, v) -> acc + v)")
-    cos = F.round(
-        dot.cast("double")
-        / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double"))), 6
-    )
+    cos = _int_cosine("qa", "qb")
     dropped = (
         pairs.select("v2", cos.alias("cosine"))
         .filter(F.col("cosine") >= SEM_TAU)
@@ -1423,12 +1419,7 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") < N_QUERIES) \
         .withColumnRenamed("vec_id", "query_id").withColumnRenamed("qv", "qq")
     pairs = e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-    dot = F.expr("aggregate(zip_with(qq, qv, (x, y) -> x * y), "
-                 "cast(0 as bigint), (acc, v) -> acc + v)")
-    na = F.expr("aggregate(transform(qq, x -> x * x), "
-                "cast(0 as bigint), (acc, v) -> acc + v)")
-    nb = F.expr("aggregate(transform(qv, x -> x * x), "
-                "cast(0 as bigint), (acc, v) -> acc + v)")
+    dot, na, nb = _int_dot("qq", "qv"), _norm2("qq"), _norm2("qv")
     w = Window.partitionBy("query_id").orderBy(F.col("dist2"), F.col("vec_id"))
     exact = (
         pairs.select("query_id", "vec_id", (na + nb - 2 * dot).alias("dist2"))
@@ -1483,8 +1474,7 @@ def emb_coreset_maxmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )]
     center = seed
     rem = base
-    dot = F.expr("aggregate(zip_with(qv, cv, (x, y) -> x * y), "
-                 "cast(0 as bigint), (acc, v) -> acc + v)")
+    dot = _int_dot("qv", "cv")
     for i in range(1, CORESET_K):
         c = center.select(F.col("vec_id").alias("cid"),
                           F.col("qv").alias("cv"),
@@ -1823,16 +1813,7 @@ def hybrid_search_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     qvec = e.filter(F.col("vec_id") == HYBRID_QUERY_VEC) \
         .select(F.col("qa").alias("qb"))
-    dot = F.expr("aggregate(zip_with(qa, qb, (x, y) -> x * y), "
-                 "cast(0 as bigint), (acc, v) -> acc + v)")
-    na = F.expr("aggregate(transform(qa, x -> x * x), "
-                "cast(0 as bigint), (acc, v) -> acc + v)")
-    nb = F.expr("aggregate(transform(qb, x -> x * x), "
-                "cast(0 as bigint), (acc, v) -> acc + v)")
-    cos = F.round(
-        dot.cast("double")
-        / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double"))), 6
-    )
+    cos = _int_cosine("qa", "qb")
     return (
         cand.join(e, cand.doc_id == e.vec_id)
         .crossJoin(F.broadcast(qvec))
@@ -2733,18 +2714,7 @@ def emb_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = e.filter(F.col("vec_id") >= KNN_N_QUERIES)
     pairs = c.crossJoin(F.broadcast(q))
-    dot = F.expr(
-        "aggregate(zip_with(qq, qv, (x, y) -> x * y), "
-        "cast(0 as bigint), (acc, v) -> acc + v)"
-    )
-    n1 = F.expr("aggregate(transform(qq, x -> x * x), "
-                "cast(0 as bigint), (acc, v) -> acc + v)")
-    n2 = F.expr("aggregate(transform(qv, x -> x * x), "
-                "cast(0 as bigint), (acc, v) -> acc + v)")
-    cos = F.round(
-        dot.cast("double")
-        / (F.sqrt(n1.cast("double")) * F.sqrt(n2.cast("double"))), 6
-    )
+    cos = _int_cosine("qq", "qv")
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("vec_id")
     )
@@ -3142,8 +3112,7 @@ def emb_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.expr(_QVEC).alias("qv"))
     qvec = e.filter(F.col("vec_id") == 0) \
         .select(F.col("qv").alias("kv"))
-    dot_rel = F.expr("aggregate(zip_with(qv, kv, (x, y) -> x * y), "
-                     "cast(0 as bigint), (acc, v) -> acc + v)")
+    dot_rel = _int_dot("qv", "kv")
     pool = (
         e.filter(F.col("vec_id") > 0)
         .crossJoin(F.broadcast(qvec))
@@ -3151,8 +3120,7 @@ def emb_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("rel").desc(), "vec_id").limit(MMR_POOL)
         .transform(cut_lineage, eager=True)
     )
-    dot_sim = F.expr("aggregate(zip_with(qv, cv, (x, y) -> x * y), "
-                     "cast(0 as bigint), (acc, v) -> acc + v)")
+    dot_sim = _int_dot("qv", "cv")
     best = F.max(F.struct("score", (-F.col("vec_id")).alias("nid"),
                           "rel", "ms")).alias("m")
     pick_cols = [(-F.col("m.nid")).cast("bigint").alias("vec_id"),
@@ -3259,17 +3227,6 @@ K_JL = 16
 JL_PAIR_STEP = 10
 
 
-def _jl_sign_case(p: int) -> str:
-    """Spark-side ±1 sign for JL plane ``p`` at dimension ``d`` — the
-    same cross-engine md5 coin as ``ann_lsh_buckets``, namespaced with
-    a ``jl:`` prefix so the JL planes are independent of the LSH ones."""
-    return (
-        f"CASE WHEN cast(conv(substring(md5(concat('jl:{p}:', "
-        "cast(d as string))), 1, 15), 16, 10) as bigint) % 2 = 0 "
-        "THEN v ELSE -v END"
-    )
-
-
 def emb_rp_distance_preserve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson-Lindenstrauss distance preservation audit: project the
     64-d quantized embeddings onto ``K_JL`` deterministic ±1 hyperplanes
@@ -3304,8 +3261,9 @@ def emb_rp_distance_preserve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("a_id", "b_id")
         .agg(F.sum(diff * diff).alias("orig_d2"))
     )
+    # The ``jl:`` prefix keeps the JL planes independent of the LSH ones.
     proj = dims.groupBy("vec_id").agg(*[
-        F.sum(F.expr(_jl_sign_case(p))).alias(f"proj{p}")
+        F.sum(_signed_coin(f"jl:{p}:")).alias(f"proj{p}")
         for p in range(K_JL)
     ])
     pa = proj.where(F.col("vec_id") % JL_PAIR_STEP == 0).select(

@@ -37,6 +37,40 @@ def test_seam_is_always_the_real_codec_path():
     assert decode_image is decode_image_real
 
 
+def test_payload_kernel_repeats_doc_id_per_row_in_schema_order():
+    """The kernel decorator: a payload's rows each carry its doc_id, a
+    payload may yield 0 or many rows (a NULL payload still reaches the
+    per-payload function), an empty batch yields an empty frame, and
+    columns come out in the schema's order."""
+    import pandas as pd
+
+    from data_ingestion_worker_spark.operators.multimodal import (
+        _payload_kernel,
+    )
+
+    @_payload_kernel("doc_id bigint, tag string, n int")
+    def fan_out(b):
+        """One row per payload byte; a NULL payload gives one NULL row."""
+        if b is None:
+            return [("null", None)]
+        return [(b.decode(), i) for i in range(len(b))]
+
+    assert fan_out.__name__ == "fan_out"
+    assert fan_out.__doc__.startswith("One row per payload byte")
+    batches = [
+        pd.DataFrame({"doc_id": [7, 8, 9], "payload": [b"abc", b"", None]}),
+        pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
+                      "payload": pd.Series([], dtype="object")}),
+    ]
+    full, empty = fan_out(iter(batches))
+    assert list(full.columns) == ["doc_id", "tag", "n"]
+    rows = [tuple(None if pd.isna(v) else v for v in r)
+            for r in full.itertuples(index=False, name=None)]
+    assert rows == [(7, "abc", 0), (7, "abc", 1), (7, "abc", 2),
+                    (9, "null", None)]
+    assert list(empty.columns) == ["doc_id", "tag", "n"] and empty.empty
+
+
 def test_bmp_pixel_roundtrip():
     img = decode_bmp(encode_bmp(2, 3, RGB_2X3))
     assert (img.width, img.height, img.mode, img.format) == (2, 3, "RGB",
