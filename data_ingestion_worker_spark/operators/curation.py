@@ -60,13 +60,10 @@ from .text import (
     _VAL_CUT,
     _WS_COUNT_SQL,
     _floor4,
+    _floor6,
     _marker_sql,
     _split_bucket,
 )
-
-
-def _floor6(c: F.Column) -> F.Column:
-    return F.floor(c * 1000000.0) / 1000000.0
 
 
 # ---------------------------------------------------------------------------

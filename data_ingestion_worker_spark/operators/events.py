@@ -10,11 +10,27 @@ fully oracle-verifiable, in stream mode it gains watermarks.
 Determinism: value sums go through DECIMAL(14,2); timestamps are compared
 at microsecond grain (tables.load_table truncates the nanos source
 exactly as DuckDB does).
+
+The per-event-type statistics that this module, ``profiling.py``,
+``stats.py`` and ``graph.py`` build on are defined here once, each next
+to its DuckDB twin:
+
+- ``_type_series``: the hourly or daily count series per event type;
+- ``_type_moments``: its per-type window moments n, Σc, Σc²;
+- ``_day_index``: the day index of a daily series row;
+- ``_hour_index`` / ``_lag_pairs``: the epoch-hour key and the lag
+  fan-out self-join of an hourly series;
+- ``_pearson_sums`` / ``_PEARSON_R``: the integer power sums of (x, y)
+  pairs with both variances positive, and the correlation over them;
+- ``_transition_counts``: the per-user Markov transition pair counts;
+- ``_milli_type_stats`` / ``_type_pairs`` and the ``_side*`` columns:
+  the milli-quantized per-type value sums and the unordered type-pair
+  enumeration over them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.quantiles import distributed_exact_quantiles
@@ -35,6 +51,265 @@ def _epoch_s(c: F.Column) -> F.Column:
     count produces for positive epochs.
     """
     return c.cast("timestamp").cast("long")
+
+
+def _type_series(spark: SparkSession, sf_dir: str, unit: str) -> DataFrame:
+    """Event count ``c`` per event type and ``unit`` bucket (``"hour"``
+    or ``"day"``); the bucket start is the column named ``unit``.  One
+    partial-aggregated shuffle of events; every statistic over the
+    series runs on this calendar-bounded frame."""
+    return load_table(spark, sf_dir, "events").groupBy(
+        "event_type",
+        F.window("ts", f"1 {unit}").getField("start").alias(unit),
+    ).agg(F.count(F.lit(1)).alias("c"))
+
+
+def _type_series_sql(unit: str) -> str:
+    """SQL twin of :func:`_type_series`, as a CTE body."""
+    return f"""
+  SELECT event_type, time_bucket(INTERVAL '1 {unit}', ts) AS {unit},
+         CAST(count(*) AS BIGINT) AS c
+  FROM events GROUP BY 1, 2
+"""
+
+
+def _type_moments(series: DataFrame, **by: Column) -> DataFrame:
+    """``series`` plus the window moments n, sx = Σc and sxx = Σc² of
+    its counts per event type and the extra keys ``by``, each also kept
+    as a column named by its keyword.  Exact BIGINT sums over the
+    bounded series."""
+    w = Window.partitionBy("event_type", *by.values())
+    c = F.col("c")
+    return series.select(
+        "*", *[key.alias(name) for name, key in by.items()],
+        F.count(F.lit(1)).over(w).alias("n"),
+        F.sum("c").over(w).alias("sx"),
+        F.sum(c * c).over(w).alias("sxx"),
+    )
+
+
+def _type_moments_sql(src: str, *by: str) -> str:
+    """SQL twin of :func:`_type_moments` over the CTE ``src``, as a CTE
+    body; ``by`` are extra partition keys only."""
+    return f"""
+  SELECT *,
+         CAST(count(*) OVER w AS BIGINT) AS n,
+         CAST(sum(c) OVER w AS BIGINT) AS sx,
+         CAST(sum(c * c) OVER w AS BIGINT) AS sxx
+  FROM {src}
+  WINDOW w AS (PARTITION BY {", ".join(("event_type", *by))})
+"""
+
+
+def _day_index() -> Column:
+    """``x``: days from the first day of the row's event type to its
+    ``day`` — the exact integer time axis of a daily series."""
+    first = F.min("day").over(Window.partitionBy("event_type"))
+    return F.datediff(F.col("day"), first).cast("bigint").alias("x")
+
+
+_DAY_INDEX_SQL = ("CAST(date_diff('day', min(day) OVER "
+                  "(PARTITION BY event_type), day) AS BIGINT) AS x")
+
+
+def _hour_index(hourly: DataFrame) -> DataFrame:
+    """An hourly series keyed by its epoch hour ``eh`` instead of its
+    start timestamp, so lag arithmetic is integer addition."""
+    return hourly.select(
+        "event_type",
+        F.expr("cast(cast(hour as timestamp) as long) div 3600")
+        .alias("eh"),
+        "c",
+    )
+
+
+#: SQL twin of :func:`_hour_index` over the hourly series, as a CTE body.
+_HOUR_INDEX_SQL = f"""
+  SELECT event_type, epoch(hour)::BIGINT // 3600 AS eh, c
+  FROM ({_type_series_sql("hour")})
+"""
+
+
+def _lag_pairs(series: DataFrame, max_lag: int, x: str, y: str
+               ) -> DataFrame:
+    """(event_type, lag, x, y) for every two rows of an ``eh``-keyed
+    series ``lag`` = 1..max_lag hours apart: the earlier count is named
+    ``x``, the later ``y``.  Calendar semantics — a silent gap hour
+    breaks the pair instead of sliding the series together.  The fan-out
+    is |hours| × max_lag map-side rows joined back on the hour key."""
+    fan = series.select(
+        "event_type", "eh", F.col("c").alias(x),
+        F.explode(F.array(*[F.lit(k) for k in
+                            range(1, max_lag + 1)])).alias("lag"),
+    )
+    b = series.select("event_type", F.col("eh").alias("ehb"),
+                      F.col("c").alias(y))
+    return fan.join(
+        b,
+        (fan["event_type"] == b["event_type"])
+        & (F.col("ehb") == F.col("eh") + F.col("lag")),
+    ).select(fan["event_type"], "lag", x, y)
+
+
+def _lag_pairs_sql(src: str, max_lag: int) -> str:
+    """SQL twin of :func:`_lag_pairs` over the CTE ``src``, as a CTE
+    body with the counts named x and y."""
+    return f"""
+  SELECT f.event_type, l.lag, f.c AS x, h.c AS y
+  FROM {src} f
+  CROSS JOIN (SELECT unnest(range(1, {max_lag + 1})) AS lag) l
+  JOIN {src} h ON h.event_type = f.event_type AND h.eh = f.eh + l.lag
+"""
+
+
+#: Pearson r from the power sums of :func:`_pearson_sums` — ONE SQL
+#: fragment both engines evaluate verbatim.
+_PEARSON_R = (
+    "(CAST(n * sxy - sx * sy AS DOUBLE))"
+    " / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)"
+    " * CAST(n * syy - sy * sy AS DOUBLE))"
+)
+
+
+def _pearson_sums(pairs: DataFrame, *keys: str) -> DataFrame:
+    """Per ``keys``: n, sx, sy, sxx, syy and sxy of the integer pairs
+    (x, y), kept where both variances are positive.  Exact BIGINT sums
+    in one partial aggregate."""
+    x, y = F.col("x"), F.col("y")
+    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
+    return pairs.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("x").alias("sx"), F.sum("y").alias("sy"),
+        F.sum(x * x).alias("sxx"),
+        F.sum(y * y).alias("syy"),
+        F.sum(x * y).alias("sxy"),
+    ).filter((n * F.col("sxx") - sx * sx > 0)
+             & (n * F.col("syy") - sy * sy > 0))
+
+
+def _pearson_sums_sql(src: str, *keys: str) -> str:
+    """SQL twin of :func:`_pearson_sums` over ``src``, as a CTE body;
+    ``keys`` are the group keys as select items."""
+    head = "".join(f"{k}, " for k in keys)
+    return f"""
+  SELECT * FROM (
+    SELECT {head}CAST(count(*) AS BIGINT) AS n,
+           CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+           CAST(sum(x * x) AS BIGINT) AS sxx,
+           CAST(sum(y * y) AS BIGINT) AS syy,
+           CAST(sum(x * y) AS BIGINT) AS sxy
+    FROM {src} GROUP BY ALL
+  ) WHERE n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
+"""
+
+
+def _transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Count ``n`` of every (from_type, to_type) step between adjacent
+    events of one user's (ts, event_id)-ordered stream: one lead()
+    window per user, then a partial-agg shuffle of |types|² rows."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return (
+        load_table(spark, sf_dir, "events").select(
+            F.col("event_type").alias("from_type"),
+            F.lead("event_type").over(w).alias("to_type"),
+        )
+        .filter(F.col("to_type").isNotNull())
+        .groupBy("from_type", "to_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+#: SQL twin of :func:`_transition_counts`, as a CTE body.
+_TRANSITION_COUNTS_SQL = """
+  SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
+  FROM (
+    SELECT event_type AS from_type,
+           lead(event_type) OVER (PARTITION BY user_id
+                                  ORDER BY ts, event_id) AS to_type
+    FROM events
+  )
+  WHERE to_type IS NOT NULL
+  GROUP BY 1, 2
+"""
+
+
+def _milli_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per event type: n, s = Σq and ss = Σq² of the milli-quantized
+    value q = floor(1000·value).  q snaps values to a grid both engines
+    agree on; the sums are then exact integers."""
+    q = F.floor(F.col("value") * F.lit(1000.0))
+    return load_table(spark, sf_dir, "events").groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(q).alias("s"),
+        # Square in DECIMAL(38), not LONG: Spark silently wraps int64
+        # overflow while the DuckDB oracle raises, so milli-quantized
+        # values above ~3e9 would diverge instead of failing loudly.
+        F.sum(q.cast("decimal(38,0)") * q.cast("decimal(38,0)")).alias("ss"),
+    )
+
+
+#: SQL twin of :func:`_milli_type_stats`, as a CTE body.
+_MILLI_TYPE_STATS_SQL = """
+  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+         sum(CAST(floor(value * 1000.0) AS BIGINT)) AS s,
+         sum(CAST(floor(value * 1000.0) AS BIGINT)
+             * CAST(floor(value * 1000.0) AS BIGINT)) AS ss
+  FROM events GROUP BY 1
+"""
+
+
+def _type_pairs(st: DataFrame, *cols: Column) -> DataFrame:
+    """Every unordered pair of event types in the per-type table ``st``
+    as type_a, type_b, n_a, n_b, then ``cols`` (over the sides ``a`` and
+    ``b``).  A broadcast self cross join of the |types|-row table: the
+    fact table is scanned once and never joined."""
+    a, b = st.alias("a"), st.alias("b")
+    return (
+        a.crossJoin(F.broadcast(b))
+        .filter(F.col("a.event_type") < F.col("b.event_type"))
+        .select(
+            F.col("a.event_type").alias("type_a"),
+            F.col("b.event_type").alias("type_b"),
+            F.col("a.n").alias("n_a"),
+            F.col("b.n").alias("n_b"),
+            *cols,
+        )
+    )
+
+
+#: SQL twin of :func:`_type_pairs` over the CTE ``st``: the head of the
+#: select list and the FROM clause.
+_TYPE_PAIR_KEYS_SQL = ("a.event_type AS type_a, b.event_type AS type_b,"
+                       " a.n AS n_a, b.n AS n_b")
+_TYPE_PAIRS_FROM_SQL = ("FROM st a CROSS JOIN st b"
+                        " WHERE a.event_type < b.event_type")
+
+
+def _side(side: str, col: str) -> Column:
+    """Column ``col`` of the pair side ``side`` (``"a"`` or ``"b"``) as
+    a double."""
+    return F.col(f"{side}.{col}").cast("double")
+
+
+def _side_mean(side: str) -> Column:
+    return _side(side, "s") / _side(side, "n")
+
+
+def _side_ssd(side: str) -> Column:
+    """n·Σq² − (Σq)² of one pair side, as a double (n times the sum of
+    squared deviations)."""
+    # Cast BEFORE multiplying: s·s on raw BIGINTs overflows around
+    # sf1 (s ≈ 3·10⁹ ⇒ s² ≈ 10¹⁹ > 2⁶³); DECIMAL(38) does not.
+    s_dec = F.col(f"{side}.s").cast("decimal(38,0)")
+    return (F.col(f"{side}.n") * F.col(f"{side}.ss")
+            - s_dec * s_dec).cast("double")
+
+
+def _side_sem2(side: str) -> Column:
+    """Squared standard error of one pair side's mean (sample variance
+    over n)."""
+    n = _side(side, "n")
+    return _side_ssd(side) / (n * (n - F.lit(1.0))) / n
 
 
 def ev_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -453,17 +728,7 @@ def ev_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     probability is one IEEE division of two exact counts, truncated to
     6 decimals, so both engines emit identical doubles.
     """
-    e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
-        e.select(
-            F.col("event_type").alias("from_type"),
-            F.lead("event_type").over(w).alias("to_type"),
-        )
-        .filter(F.col("to_type").isNotNull())
-        .groupBy("from_type", "to_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    pairs = _transition_counts(spark, sf_dir)
     tot = Window.partitionBy("from_type")
     prob = F.col("n").cast("double") / F.sum("n").over(tot).cast("double")
     return pairs.select(
@@ -493,17 +758,7 @@ def ev_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; everything after runs on that bounded matrix, with the
     total-pairs scalar attached as a one-row broadcast.
     """
-    e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
-        e.select(
-            F.col("event_type").alias("from_type"),
-            F.lead("event_type").over(w).alias("to_type"),
-        )
-        .filter(F.col("to_type").isNotNull())
-        .groupBy("from_type", "to_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    pairs = _transition_counts(spark, sf_dir)
     tot = Window.partitionBy("from_type")
     with_row = pairs.select(
         "from_type", "n",
@@ -535,18 +790,8 @@ def ev_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MARKOV_ENTROPY_ORACLE = """
-WITH pairs AS (
-  SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-  FROM (
-    SELECT event_type AS from_type,
-           lead(event_type) OVER (PARTITION BY user_id
-                                  ORDER BY ts, event_id) AS to_type
-    FROM events
-  )
-  WHERE to_type IS NOT NULL
-  GROUP BY 1, 2
-),
+MARKOV_ENTROPY_ORACLE = f"""
+WITH pairs AS ({_TRANSITION_COUNTS_SQL}),
 with_row AS (
   SELECT from_type, n,
          CAST(sum(n) OVER (PARTITION BY from_type) AS BIGINT) AS n_i
@@ -575,18 +820,8 @@ FROM per_state, rate
 """
 
 
-MARKOV_ORACLE = """
-WITH pairs AS (
-  SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-  FROM (
-    SELECT event_type AS from_type,
-           lead(event_type) OVER (PARTITION BY user_id
-                                  ORDER BY ts, event_id) AS to_type
-    FROM events
-  )
-  WHERE to_type IS NOT NULL
-  GROUP BY 1, 2
-)
+MARKOV_ORACLE = f"""
+WITH pairs AS ({_TRANSITION_COUNTS_SQL})
 SELECT from_type, to_type, n,
        floor(CAST(n AS DOUBLE)
              / CAST(sum(n) OVER (PARTITION BY from_type) AS DOUBLE)
@@ -618,17 +853,7 @@ def ev_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     every iteration joins bounded |types|-sized frames — the fact table
     is never touched again.
     """
-    e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    raw = (
-        e.select(
-            F.col("event_type").alias("from_type"),
-            F.lead("event_type").over(w).alias("to_type"),
-        )
-        .filter(F.col("to_type").isNotNull())
-        .groupBy("from_type", "to_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    raw = _transition_counts(spark, sf_dir)
     states = raw.select(F.col("from_type").alias("t")).distinct() \
         .transform(cut_lineage)
     c = raw.join(
@@ -669,17 +894,7 @@ pi{i} AS MATERIALIZED (
 )""")
         prev = f"pi{i}"
     return f"""
-WITH raw AS MATERIALIZED (
-  SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-  FROM (
-    SELECT event_type AS from_type,
-           lead(event_type) OVER (PARTITION BY user_id
-                                  ORDER BY ts, event_id) AS to_type
-    FROM events
-  )
-  WHERE to_type IS NOT NULL
-  GROUP BY 1, 2
-),
+WITH raw AS MATERIALIZED ({_TRANSITION_COUNTS_SQL}),
 states AS MATERIALIZED (SELECT DISTINCT from_type AS t FROM raw),
 c AS MATERIALIZED (
   SELECT from_type, to_type, n FROM raw
@@ -843,17 +1058,8 @@ def ev_forecast_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows and the per-type regression run over that bounded frame —
     the fact table is scanned once.
     """
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.window("ts", "1 day").getField("start").alias("day"),
-    ).agg(F.count(F.lit(1)).alias("c"))
-    w = Window.partitionBy("event_type")
-    idx = daily.select(
-        "event_type", "c",
-        F.datediff(F.col("day"), F.min("day").over(w)).cast("bigint")
-        .alias("x"),
-    )
+    idx = _type_series(spark, sf_dir, "day").select(
+        "event_type", "c", _day_index())
     agg = idx.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x").alias("sx"),
@@ -877,18 +1083,9 @@ def ev_forecast_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-FORECAST_LINEAR_ORACLE = """
-WITH daily AS (
-  SELECT event_type, time_bucket(INTERVAL '1 day', ts) AS day,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-),
-idx AS (
-  SELECT event_type, c,
-         CAST(date_diff('day', min(day) OVER (PARTITION BY event_type),
-                        day) AS BIGINT) AS x
-  FROM daily
-),
+FORECAST_LINEAR_ORACLE = f"""
+WITH daily AS ({_type_series_sql("day")}),
+idx AS (SELECT event_type, c, {_DAY_INDEX_SQL} FROM daily),
 agg AS (
   SELECT event_type, CAST(count(*) AS BIGINT) AS n,
          sum(x) AS sx, sum(c) AS sy,
@@ -3273,11 +3470,7 @@ def ev_binseg_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle into (type, day); prefix sums and the argmax
     window run over the calendar-bounded daily frame.
     """
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.window("ts", "1 day").getField("start").alias("day"),
-    ).agg(F.count(F.lit(1)).alias("c"))
+    daily = _type_series(spark, sf_dir, "day")
     w = Window.partitionBy("event_type")
     wo = Window.partitionBy("event_type").orderBy("day")
     pref = daily.select(
@@ -3307,12 +3500,8 @@ def ev_binseg_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-BINSEG_ORACLE = """
-WITH daily AS (
-  SELECT event_type, time_bucket(INTERVAL '1 day', ts) AS day,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-),
+BINSEG_ORACLE = f"""
+WITH daily AS ({_type_series_sql("day")}),
 pref AS (
   SELECT event_type, day, c,
          CAST(sum(c) OVER (PARTITION BY event_type ORDER BY day)
@@ -3381,16 +3570,9 @@ def ev_fft_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     54-row broadcast literal table (days × 9 periods), and the
     argmax window runs over the 9-row-per-type period domain.
     """
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.window("ts", "1 day").getField("start").alias("day"),
-    ).agg(F.count(F.lit(1)).alias("c"))
     w = Window.partitionBy("event_type")
-    idx = daily.select(
-        "event_type", "c",
-        F.datediff(F.col("day"), F.min("day").over(w)).cast("bigint")
-        .alias("x"),
+    idx = _type_series(spark, sf_dir, "day").select(
+        "event_type", "c", _day_index(),
         F.count(F.lit(1)).over(w).cast("bigint").alias("n"),
         F.sum("c").over(w).cast("bigint").alias("sct"),
     ).withColumn("r", F.col("n") * F.col("c") - F.col("sct"))
@@ -3425,15 +3607,10 @@ def _fft_oracle() -> str:
     vals = ", ".join(f"({p}, {k}, {c}, {s})"
                      for p, k, c, s in _angle_literals())
     return f"""
-WITH daily AS (
-  SELECT event_type, time_bucket(INTERVAL '1 day', ts) AS day,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-),
+WITH daily AS ({_type_series_sql("day")}),
 idx AS (
   SELECT event_type, c,
-         CAST(date_diff('day', min(day) OVER (PARTITION BY event_type),
-                        day) AS BIGINT) AS x,
+         {_DAY_INDEX_SQL},
          CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n,
          CAST(sum(c) OVER (PARTITION BY event_type) AS BIGINT) AS sct
   FROM daily
@@ -3494,16 +3671,9 @@ def stats_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``profile_drift_daily`` window class), with the |types|-row model
     broadcast back onto calibration days.
     """
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.window("ts", "1 day").getField("start").alias("day"),
-    ).agg(F.count(F.lit(1)).alias("c"))
     w = Window.partitionBy("event_type")
-    idx = daily.select(
-        "event_type", "c",
-        F.datediff(F.col("day"), F.min("day").over(w)).cast("bigint")
-        .alias("x"),
+    idx = _type_series(spark, sf_dir, "day").select(
+        "event_type", "c", _day_index(),
     ).select(
         "event_type", "c", "x",
         F.max("x").over(w).alias("mx"),
@@ -3567,17 +3737,8 @@ def stats_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CONFORMAL_ORACLE = f"""
-WITH daily AS (
-  SELECT event_type, time_bucket(INTERVAL '1 day', ts) AS day,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-),
-idx AS (
-  SELECT event_type, c,
-         CAST(date_diff('day', min(day) OVER (PARTITION BY event_type),
-                        day) AS BIGINT) AS x
-  FROM daily
-),
+WITH daily AS ({_type_series_sql("day")}),
+idx AS (SELECT event_type, c, {_DAY_INDEX_SQL} FROM daily),
 idx2 AS (
   SELECT *, max(x) OVER (PARTITION BY event_type) AS mx,
          (max(x) OVER (PARTITION BY event_type) * {CONF_TRAIN_NUM})

@@ -64,6 +64,7 @@ from ..spec import QuerySpec
 from ..tables import load_table
 from ..functions.checkpoint import cut_lineage
 from .dedup import _TRIANGLE
+from .events import _PEARSON_R, _pearson_sums, _pearson_sums_sql
 
 #: Rank mass scale: 1.0 of probability mass == 10¹² scaled units.
 PR_SCALE = 1_000_000_000_000
@@ -1082,15 +1083,6 @@ LIMIT {CN_TOP_K}
 """
 
 
-#: Assortativity z-expression over exact integer power sums — ONE SQL
-#: fragment shared verbatim by both engines.
-_ASSORT_R = (
-    "(CAST(n * sxy - sx * sy AS DOUBLE))"
-    " / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)"
-    " * CAST(n * syy - sy * sy AS DOUBLE))"
-)
-
-
 def graph_degree_assortativity(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     """Degree assortativity of the customer–supplier graph: the Pearson
@@ -1116,19 +1108,9 @@ def graph_degree_assortativity(spark: SparkSession,
     ds = deg.select(F.col("node").alias("src"), F.col("deg").alias("x"))
     dd = deg.select(F.col("node").alias("dst"), F.col("deg").alias("y"))
     j = edges.join(ds, "src").join(dd, "dst")
-    agg = j.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-    )
-    return agg.filter(
-        (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx") > 0)
-        & (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy") > 0)
-    ).select(
+    return _pearson_sums(j).select(
         F.col("n").alias("n_edges"),
-        F.round(F.expr(_ASSORT_R), 6).alias("assortativity"),
+        F.round(F.expr(_PEARSON_R), 6).alias("assortativity"),
     )
 
 
@@ -1138,20 +1120,15 @@ deg AS (
   SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
   FROM edges GROUP BY 1
 ),
-agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(a.deg) AS BIGINT) AS sx,
-         CAST(sum(b.deg) AS BIGINT) AS sy,
-         CAST(sum(a.deg * a.deg) AS BIGINT) AS sxx,
-         CAST(sum(b.deg * b.deg) AS BIGINT) AS syy,
-         CAST(sum(a.deg * b.deg) AS BIGINT) AS sxy
+deg_pairs AS (
+  SELECT a.deg AS x, b.deg AS y
   FROM edges e
   JOIN deg a ON a.node = e.src
   JOIN deg b ON b.node = e.dst
-)
-SELECT n AS n_edges, round({_ASSORT_R}, 6) AS assortativity
+),
+agg AS ({_pearson_sums_sql("deg_pairs")})
+SELECT n AS n_edges, round({_PEARSON_R}, 6) AS assortativity
 FROM agg
-WHERE n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
 """
 
 

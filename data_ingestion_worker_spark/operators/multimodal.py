@@ -576,14 +576,17 @@ def mm_roundtrip_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_payload(docs).mapInPandas(jpeg_roundtrip, JPEG_SCHEMA)
 
 
+#: Width and height of the smooth frames :func:`_smooth_rgb` derives
+#: from the payload hash ``h64``, as oracle select items.
+_SMOOTH_DIMS_SQL = """CAST(8 + h64 % 9 AS INT) AS width,
+       CAST(8 + (h64 // 9) % 9 AS INT) AS height"""
+
 #: Dimension gate is algebraic like BMP/PNG; the pixel gate is the
 #: lossy-codec tolerance flag (within_tol must be 1 for every row —
 #: a Huffman/zigzag/DCT/quant defect produces errors far past it).
 MM_JPEG_ORACLE = f"""
 {_H_CTE}
-SELECT doc_id,
-       CAST(8 + h64 % 9 AS INT) AS width,
-       CAST(8 + (h64 // 9) % 9 AS INT) AS height,
+SELECT doc_id, {_SMOOTH_DIMS_SQL},
        'RGB' AS mode, 'JPEG' AS format,
        1 AS within_tol
 FROM h
@@ -627,16 +630,8 @@ def mm_roundtrip_jpeg_progressive(spark: SparkSession,
                                           JPEG_PROG_SCHEMA)
 
 
-MM_JPEG_PROG_ORACLE = f"""
-{_H_CTE}
-SELECT doc_id,
-       CAST(8 + h64 % 9 AS INT) AS width,
-       CAST(8 + (h64 // 9) % 9 AS INT) AS height,
-       'RGB' AS mode, 'JPEG' AS format,
-       1 AS within_tol,
-       1 AS equals_baseline
-FROM h
-"""
+MM_JPEG_PROG_ORACLE = (
+    f"SELECT *, 1 AS equals_baseline FROM ({MM_JPEG_ORACLE})")
 
 
 MP4_SCHEMA = ("doc_id bigint, width int, height int, n_frames int, "
@@ -676,9 +671,7 @@ def mm_roundtrip_mp4(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: n_frames · (1000/fps) with fps=10 and timescale 1000.
 MM_MP4_ORACLE = f"""
 {_H_CTE}
-SELECT doc_id,
-       CAST(8 + h64 % 9 AS INT) AS width,
-       CAST(8 + (h64 // 9) % 9 AS INT) AS height,
+SELECT doc_id, {_SMOOTH_DIMS_SQL},
        CAST(2 + h64 % 3 AS INT) AS n_frames,
        CAST((2 + h64 % 3) * 100 AS BIGINT) AS duration_ms,
        'jpeg' AS sample_format,
@@ -848,9 +841,7 @@ MM_MJPEG_FRAMES_ORACLE = f"""
 {_H_CTE},
 n AS (SELECT doc_id, h64, 2 + h64 % 3 AS nf FROM h)
 SELECT doc_id, CAST(i.i AS INT) AS frame_idx,
-       CAST(nf AS INT) AS n_frames,
-       CAST(8 + h64 % 9 AS INT) AS width,
-       CAST(8 + (h64 // 9) % 9 AS INT) AS height,
+       CAST(nf AS INT) AS n_frames, {_SMOOTH_DIMS_SQL},
        1 AS decoded_ok, 1 AS matches_container, 1 AS within_tol
 FROM n CROSS JOIN UNNEST(range(n.nf)) AS i(i)
 """

@@ -16,7 +16,7 @@ these operators are the set-based, corpus-level generalization.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash64, hash64_sql
@@ -24,6 +24,19 @@ from ..functions.text import ws_token_count
 from ..spec import QuerySpec
 from ..tables import load_table
 from ..functions.checkpoint import cut_lineage
+from .events import (
+    _HOUR_INDEX_SQL,
+    _PEARSON_R,
+    _hour_index,
+    _lag_pairs,
+    _lag_pairs_sql,
+    _pearson_sums,
+    _pearson_sums_sql,
+    _type_moments,
+    _type_moments_sql,
+    _type_series,
+    _type_series_sql,
+)
 
 #: Numeric lineitem measures profiled by ``profile_columns``.
 PROFILE_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
@@ -128,18 +141,7 @@ def ev_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     over that already-tiny hourly frame, so events is scanned exactly
     once (a stats-side self-join would scan and aggregate it twice).
     """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        "event_type",
-        F.window("ts", "1 hour").getField("start").alias("hour"),
-    ).agg(F.count(F.lit(1)).alias("c"))
-    w = Window.partitionBy("event_type")
-    st = hourly.select(
-        "event_type", "hour", "c",
-        F.count(F.lit(1)).over(w).alias("n"),
-        F.sum("c").over(w).alias("sx"),
-        F.sum(F.col("c") * F.col("c")).over(w).alias("sxx"),
-    )
+    st = _type_moments(_type_series(spark, sf_dir, "hour"))
     num = F.col("n") * F.col("c") - F.col("sx")
     rad = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     return (
@@ -152,27 +154,71 @@ def ev_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANOMALY_ORACLE = """
-WITH hourly AS (
-  SELECT event_type, time_bucket(INTERVAL '1 hour', ts) AS hour,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-),
-st AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         sum(c) AS sx, sum(c * c) AS sxx
-  FROM hourly GROUP BY 1
-)
-SELECT hourly.event_type AS event_type, hour, c AS hour_count,
+ANOMALY_ORACLE = f"""
+WITH hourly AS ({_type_series_sql("hour")}),
+st AS ({_type_moments_sql("hourly")})
+SELECT event_type, hour, c AS hour_count,
        round(CAST(n * c - sx AS DOUBLE)
              / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)), 6) AS zscore
-FROM hourly JOIN st ON hourly.event_type = st.event_type
+FROM st
 WHERE (n * c - sx) * (n * c - sx) > 4 * (n * sxx - sx * sx) AND n > 1
 """
 
 
 #: CUSUM alarm threshold in per-type count standard deviations.
 CUSUM_H_SIGMA = 3
+
+
+def _cusum(spark: SparkSession, sf_dir: str, s: Column) -> DataFrame:
+    """One-sided CUSUM over the hourly counts: ``s`` is the statistic,
+    a column over ``p``, the per-type running sum (ordered by hour) of
+    the n-scaled deviations ``n·c − Σc``.  The alarm and the reported
+    sigma units divide ``s`` by the scaled standard deviation."""
+    wo = Window.partitionBy("event_type").orderBy("hour")
+    d = F.col("n") * F.col("c") - F.col("sx")
+    pre = _type_moments(_type_series(spark, sf_dir, "hour")).select(
+        "event_type", "hour", "c", "n", "sx", "sxx",
+        F.sum(d).over(wo).alias("p"),
+    )
+    run = pre.select("event_type", "hour", "c", "n", "sxx", "sx",
+                     s.alias("s"))
+    rad = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
+    sigma = F.sqrt(rad.cast("double"))
+    return run.filter(rad > 0).select(
+        "event_type", "hour", F.col("c").alias("hour_count"),
+        F.col("s").cast("bigint").alias("cusum_scaled"),
+        F.round(F.col("s").cast("double") / sigma, 6).alias("cusum_sigma"),
+        (F.col("s").cast("double")
+         > F.lit(float(CUSUM_H_SIGMA)) * sigma).alias("alarm"),
+    )
+
+
+def _cusum_oracle(s: str) -> str:
+    """SQL twin of :func:`_cusum` for the statistic ``s`` over ``p``
+    and the ordered window ``wo``."""
+    return f"""
+WITH hourly AS ({_type_series_sql("hour")}),
+st AS ({_type_moments_sql("hourly")}),
+pre AS (
+  SELECT event_type, hour, c, n, sx, sxx,
+         CAST(sum(n * c - sx) OVER wo AS BIGINT) AS p
+  FROM st
+  WINDOW wo AS (PARTITION BY event_type ORDER BY hour)
+),
+run AS (
+  SELECT event_type, hour, c, n, sx, sxx, {s} AS s
+  FROM pre
+  WINDOW wo AS (PARTITION BY event_type ORDER BY hour)
+)
+SELECT event_type, hour, c AS hour_count,
+       CAST(s AS BIGINT) AS cusum_scaled,
+       round(CAST(s AS DOUBLE)
+             / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)), 6) AS cusum_sigma,
+       CAST(s AS DOUBLE) > {float(CUSUM_H_SIGMA)}
+         * sqrt(CAST(n * sxx - sx * sx AS DOUBLE)) AS alarm
+FROM run
+WHERE n * sxx - sx * sx > 0
+"""
 
 
 def ev_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -194,78 +240,15 @@ def ev_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanned exactly once — same single-scan contract as
     :func:`ev_anomaly_zscore`.
     """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        "event_type",
-        F.window("ts", "1 hour").getField("start").alias("hour"),
-    ).agg(F.count(F.lit(1)).alias("c"))
-    w = Window.partitionBy("event_type")
-    wo = Window.partitionBy("event_type").orderBy("hour")
-    st = hourly.select(
-        "event_type", "hour", "c",
-        F.count(F.lit(1)).over(w).alias("n"),
-        F.sum("c").over(w).alias("sx"),
-        F.sum(F.col("c") * F.col("c")).over(w).alias("sxx"),
-    )
-    d = F.col("n") * F.col("c") - F.col("sx")
-    pre = st.select(
-        "event_type", "hour", "c", "n", "sx", "sxx",
-        F.sum(d).over(wo).alias("p"),
-    )
     # S_t = P_t - min(0, min_{j<=t} P_j): the 0 term is the empty prefix
     # (S_0 = 0), without which an immediately-positive drift would be
     # absorbed into the baseline instead of raising the statistic.
-    run = pre.select(
-        "event_type", "hour", "c", "n", "sxx", "sx",
-        (F.col("p")
-         - F.least(F.lit(0).cast("bigint"), F.min("p").over(wo))).alias("s"),
-    )
-    rad = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    sigma = F.sqrt(rad.cast("double"))
-    return run.filter(rad > 0).select(
-        "event_type", "hour", F.col("c").alias("hour_count"),
-        F.col("s").cast("bigint").alias("cusum_scaled"),
-        F.round(F.col("s").cast("double") / sigma, 6).alias("cusum_sigma"),
-        (F.col("s").cast("double")
-         > F.lit(float(CUSUM_H_SIGMA)) * sigma).alias("alarm"),
-    )
+    run_min = F.min("p").over(Window.partitionBy("event_type").orderBy("hour"))
+    return _cusum(spark, sf_dir,
+                  F.col("p") - F.least(F.lit(0).cast("bigint"), run_min))
 
 
-CUSUM_ORACLE = f"""
-WITH hourly AS (
-  SELECT event_type, time_bucket(INTERVAL '1 hour', ts) AS hour,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-),
-st AS (
-  SELECT event_type, hour, c,
-         CAST(count(*) OVER w AS BIGINT) AS n,
-         CAST(sum(c) OVER w AS BIGINT) AS sx,
-         CAST(sum(c * c) OVER w AS BIGINT) AS sxx
-  FROM hourly
-  WINDOW w AS (PARTITION BY event_type)
-),
-pre AS (
-  SELECT event_type, hour, c, n, sx, sxx,
-         CAST(sum(n * c - sx) OVER wo AS BIGINT) AS p
-  FROM st
-  WINDOW wo AS (PARTITION BY event_type ORDER BY hour)
-),
-run AS (
-  SELECT event_type, hour, c, n, sx, sxx,
-         p - least(CAST(0 AS BIGINT), min(p) OVER wo) AS s
-  FROM pre
-  WINDOW wo AS (PARTITION BY event_type ORDER BY hour)
-)
-SELECT event_type, hour, c AS hour_count,
-       CAST(s AS BIGINT) AS cusum_scaled,
-       round(CAST(s AS DOUBLE)
-             / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)), 6) AS cusum_sigma,
-       CAST(s AS DOUBLE) > {float(CUSUM_H_SIGMA)}
-         * sqrt(CAST(n * sxx - sx * sx AS DOUBLE)) AS alarm
-FROM run
-WHERE n * sxx - sx * sx > 0
-"""
+CUSUM_ORACLE = _cusum_oracle("p - least(CAST(0 AS BIGINT), min(p) OVER wo)")
 
 
 #: Wald–Wolfowitz z-statistic from integer run/sign counts.  ONE shared
@@ -296,17 +279,7 @@ def ev_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     fragment from the three integer counts on both engines.  Single
     scan of events, everything after the hourly groupBy is bounded.
     """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        "event_type",
-        F.window("ts", "1 hour").getField("start").alias("hour"),
-    ).agg(F.count(F.lit(1)).alias("c"))
-    w = Window.partitionBy("event_type")
-    st = hourly.select(
-        "event_type", "hour", "c",
-        F.count(F.lit(1)).over(w).alias("n"),
-        F.sum("c").over(w).alias("sx"),
-    )
+    st = _type_moments(_type_series(spark, sf_dir, "hour"))
     signed = st.filter(F.col("n") * F.col("c") != F.col("sx")).select(
         "event_type", "hour",
         (F.col("n") * F.col("c") > F.col("sx")).alias("pos"),
@@ -335,18 +308,8 @@ def ev_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 RUNS_TEST_ORACLE = f"""
-WITH hourly AS (
-  SELECT event_type, time_bucket(INTERVAL '1 hour', ts) AS hour,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-),
-st AS (
-  SELECT event_type, hour, c,
-         CAST(count(*) OVER w AS BIGINT) AS n,
-         CAST(sum(c) OVER w AS BIGINT) AS sx
-  FROM hourly
-  WINDOW w AS (PARTITION BY event_type)
-),
+WITH hourly AS ({_type_series_sql("hour")}),
+st AS ({_type_moments_sql("hourly")}),
 signed AS (
   SELECT event_type, hour, n * c > sx AS pos
   FROM st WHERE n * c <> sx
@@ -382,75 +345,13 @@ def ev_cusum_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``S⁻_t = max(0, max_{j≤t} P_j) − P_t`` — the running MAX replacing
     the running min.  Same integer-exact machinery, same single scan.
     """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        "event_type",
-        F.window("ts", "1 hour").getField("start").alias("hour"),
-    ).agg(F.count(F.lit(1)).alias("c"))
-    w = Window.partitionBy("event_type")
-    wo = Window.partitionBy("event_type").orderBy("hour")
-    st = hourly.select(
-        "event_type", "hour", "c",
-        F.count(F.lit(1)).over(w).alias("n"),
-        F.sum("c").over(w).alias("sx"),
-        F.sum(F.col("c") * F.col("c")).over(w).alias("sxx"),
-    )
-    d = F.col("n") * F.col("c") - F.col("sx")
-    pre = st.select(
-        "event_type", "hour", "c", "n", "sx", "sxx",
-        F.sum(d).over(wo).alias("p"),
-    )
-    run = pre.select(
-        "event_type", "hour", "c", "n", "sxx", "sx",
-        (F.greatest(F.lit(0).cast("bigint"), F.max("p").over(wo))
-         - F.col("p")).alias("s"),
-    )
-    rad = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    sigma = F.sqrt(rad.cast("double"))
-    return run.filter(rad > 0).select(
-        "event_type", "hour", F.col("c").alias("hour_count"),
-        F.col("s").cast("bigint").alias("cusum_scaled"),
-        F.round(F.col("s").cast("double") / sigma, 6).alias("cusum_sigma"),
-        (F.col("s").cast("double")
-         > F.lit(float(CUSUM_H_SIGMA)) * sigma).alias("alarm"),
-    )
+    run_max = F.max("p").over(Window.partitionBy("event_type").orderBy("hour"))
+    return _cusum(spark, sf_dir,
+                  F.greatest(F.lit(0).cast("bigint"), run_max) - F.col("p"))
 
 
-CUSUM_DROP_ORACLE = f"""
-WITH hourly AS (
-  SELECT event_type, time_bucket(INTERVAL '1 hour', ts) AS hour,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-),
-st AS (
-  SELECT event_type, hour, c,
-         CAST(count(*) OVER w AS BIGINT) AS n,
-         CAST(sum(c) OVER w AS BIGINT) AS sx,
-         CAST(sum(c * c) OVER w AS BIGINT) AS sxx
-  FROM hourly
-  WINDOW w AS (PARTITION BY event_type)
-),
-pre AS (
-  SELECT event_type, hour, c, n, sx, sxx,
-         CAST(sum(n * c - sx) OVER wo AS BIGINT) AS p
-  FROM st
-  WINDOW wo AS (PARTITION BY event_type ORDER BY hour)
-),
-run AS (
-  SELECT event_type, hour, c, n, sx, sxx,
-         greatest(CAST(0 AS BIGINT), max(p) OVER wo) - p AS s
-  FROM pre
-  WINDOW wo AS (PARTITION BY event_type ORDER BY hour)
-)
-SELECT event_type, hour, c AS hour_count,
-       CAST(s AS BIGINT) AS cusum_scaled,
-       round(CAST(s AS DOUBLE)
-             / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)), 6) AS cusum_sigma,
-       CAST(s AS DOUBLE) > {float(CUSUM_H_SIGMA)}
-         * sqrt(CAST(n * sxx - sx * sx AS DOUBLE)) AS alarm
-FROM run
-WHERE n * sxx - sx * sx > 0
-"""
+CUSUM_DROP_ORACLE = _cusum_oracle(
+    "greatest(CAST(0 AS BIGINT), max(p) OVER wo) - p")
 
 
 def ev_anomaly_seasonal_zscore(spark: SparkSession,
@@ -467,19 +368,8 @@ def ev_anomaly_seasonal_zscore(spark: SparkSession,
     inequality), one extra grouping key.  Single scan; everything
     after the hourly groupBy is bounded by |types| x 24 x |days|.
     """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        "event_type",
-        F.window("ts", "1 hour").getField("start").alias("hour"),
-    ).agg(F.count(F.lit(1)).alias("c"))
-    w = Window.partitionBy("event_type", F.hour("hour"))
-    st = hourly.select(
-        "event_type", "hour", "c",
-        F.hour("hour").alias("hod"),
-        F.count(F.lit(1)).over(w).alias("n"),
-        F.sum("c").over(w).alias("sx"),
-        F.sum(F.col("c") * F.col("c")).over(w).alias("sxx"),
-    )
+    st = _type_moments(_type_series(spark, sf_dir, "hour"),
+                       hod=F.hour("hour"))
     num = F.col("n") * F.col("c") - F.col("sx")
     rad = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     return (
@@ -493,36 +383,16 @@ def ev_anomaly_seasonal_zscore(spark: SparkSession,
     )
 
 
-SEASONAL_ANOMALY_ORACLE = """
-WITH hourly AS (
-  SELECT event_type, time_bucket(INTERVAL '1 hour', ts) AS hour,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-),
-st AS (
-  SELECT event_type, hour, c,
-         CAST(hour(hour) AS INT) AS hod,
-         CAST(count(*) OVER w AS BIGINT) AS n,
-         CAST(sum(c) OVER w AS BIGINT) AS sx,
-         CAST(sum(c * c) OVER w AS BIGINT) AS sxx
-  FROM hourly
-  WINDOW w AS (PARTITION BY event_type, hour(hour))
-)
-SELECT event_type, hour, hod, c AS hour_count,
+SEASONAL_ANOMALY_ORACLE = f"""
+WITH hourly AS ({_type_series_sql("hour")}),
+st AS ({_type_moments_sql("hourly", "hour(hour)")})
+SELECT event_type, hour, CAST(hour(hour) AS INT) AS hod, c AS hour_count,
        round(CAST(n * c - sx AS DOUBLE)
              / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)), 6) AS zscore
 FROM st
 WHERE (n * c - sx) * (n * c - sx) > 4 * (n * sxx - sx * sx)
   AND n > 1 AND n * sxx - sx * sx > 0
 """
-
-
-#: Pearson-from-integer-power-sums fragment shared by both engines.
-_PEARSON_R = (
-    "(CAST(n * sxy - sx * sy AS DOUBLE))"
-    " / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)"
-    " * CAST(n * syy - sy * sy AS DOUBLE))"
-)
 
 
 def ev_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -538,28 +408,13 @@ def ev_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the correlation evaluates one shared SQL fragment.  Single
     scan; everything after the hourly groupBy is bounded.
     """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        "event_type",
-        F.window("ts", "1 hour").getField("start").alias("hour"),
-    ).agg(F.count(F.lit(1)).alias("c"))
     wo = Window.partitionBy("event_type").orderBy("hour")
-    pairs = hourly.select(
+    pairs = _type_series(spark, sf_dir, "hour").select(
         "event_type",
         F.lag("c").over(wo).alias("x"),
         F.col("c").alias("y"),
     ).filter(F.col("x").isNotNull())
-    agg = pairs.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-    )
-    return agg.filter(
-        (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx") > 0)
-        & (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy") > 0)
-    ).select(
+    return _pearson_sums(pairs, "event_type").select(
         "event_type", F.col("n").alias("n_pairs"),
         F.round(F.expr(_PEARSON_R), 6).alias("autocorr"),
     )
@@ -586,39 +441,10 @@ def ev_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     |hours| × ACF_MAX_LAG map-side rows joined back on the bucketed
     hour key — corpus size enters only through the first groupBy.
     """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        "event_type",
-        F.window("ts", "1 hour").getField("start").alias("hour"),
-    ).agg(F.count(F.lit(1)).alias("c")).select(
-        "event_type",
-        F.expr("cast(cast(hour as timestamp) as long) div 3600")
-        .alias("eh"),
-        "c",
-    ).transform(cut_lineage)   # both sides of the lag join
-    fan = hourly.select(
-        "event_type", "eh", F.col("c").alias("x"),
-        F.explode(F.array(*[F.lit(k) for k in
-                            range(1, ACF_MAX_LAG + 1)])).alias("lag"),
-    )
-    b = hourly.select("event_type", F.col("eh").alias("ehb"),
-                      F.col("c").alias("y"))
-    pairs = fan.join(
-        b,
-        (fan["event_type"] == b["event_type"])
-        & (F.col("ehb") == F.col("eh") + F.col("lag")),
-    ).select(fan["event_type"], "lag", "x", "y")
-    agg = pairs.groupBy("event_type", "lag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-    )
-    return agg.filter(
-        (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx") > 0)
-        & (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy") > 0)
-    ).select(
+    hourly = _hour_index(_type_series(spark, sf_dir, "hour")) \
+        .transform(cut_lineage)   # both sides of the lag join
+    pairs = _lag_pairs(hourly, ACF_MAX_LAG, "x", "y")
+    return _pearson_sums(pairs, "event_type", "lag").select(
         "event_type", F.col("lag").cast("int").alias("lag"),
         F.col("n").alias("n_pairs"),
         F.round(F.expr(_PEARSON_R), 6).alias("acf"),
@@ -626,60 +452,26 @@ def ev_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ACF_LAGS_ORACLE = f"""
-WITH hourly AS (
-  SELECT event_type,
-         epoch(time_bucket(INTERVAL '1 hour', ts))::BIGINT // 3600 AS eh,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-),
-fan AS (
-  SELECT event_type, eh, c AS x, l.lag
-  FROM hourly CROSS JOIN (SELECT unnest(range(1, {ACF_MAX_LAG + 1}))
-                          AS lag) l
-),
-pairs AS (
-  SELECT f.event_type, f.lag, f.x, h.c AS y
-  FROM fan f JOIN hourly h
-    ON h.event_type = f.event_type AND h.eh = f.eh + f.lag
-),
-agg AS (
-  SELECT event_type, CAST(lag AS INT) AS lag,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(x * x) AS BIGINT) AS sxx,
-         CAST(sum(y * y) AS BIGINT) AS syy,
-         CAST(sum(x * y) AS BIGINT) AS sxy
-  FROM pairs GROUP BY 1, 2
-)
+WITH hourly AS ({_HOUR_INDEX_SQL}),
+pairs AS ({_lag_pairs_sql("hourly", ACF_MAX_LAG)}),
+agg AS ({_pearson_sums_sql("pairs", "event_type",
+                            "CAST(lag AS INT) AS lag")})
 SELECT event_type, lag, n AS n_pairs, round({_PEARSON_R}, 6) AS acf
 FROM agg
-WHERE n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
 """
 
 
 AUTOCORR_ORACLE = f"""
-WITH hourly AS (
-  SELECT event_type, time_bucket(INTERVAL '1 hour', ts) AS hour,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-),
+WITH hourly AS ({_type_series_sql("hour")}),
 pairs AS (
   SELECT event_type,
          lag(c) OVER (PARTITION BY event_type ORDER BY hour) AS x,
          c AS y
   FROM hourly
 ),
-agg AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(x * x) AS BIGINT) AS sxx,
-         CAST(sum(y * y) AS BIGINT) AS syy,
-         CAST(sum(x * y) AS BIGINT) AS sxy
-  FROM pairs WHERE x IS NOT NULL GROUP BY 1
-)
+agg AS ({_pearson_sums_sql("pairs WHERE x IS NOT NULL", "event_type")})
 SELECT event_type, n AS n_pairs, round({_PEARSON_R}, 6) AS autocorr
 FROM agg
-WHERE n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
 """
 
 

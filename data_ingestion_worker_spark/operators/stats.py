@@ -25,7 +25,24 @@ from ..functions.checkpoint import cut_lineage
 from ..functions.quantiles import distributed_exact_quantiles
 from ..spec import QuerySpec
 from ..tables import load_table
-from .events import _epoch_s
+from .events import (
+    _HOUR_INDEX_SQL,
+    _MILLI_TYPE_STATS_SQL,
+    _TYPE_PAIR_KEYS_SQL,
+    _TYPE_PAIRS_FROM_SQL,
+    _epoch_s,
+    _hour_index,
+    _lag_pairs,
+    _lag_pairs_sql,
+    _milli_type_stats,
+    _side,
+    _side_mean,
+    _side_sem2,
+    _side_ssd,
+    _type_pairs,
+    _type_series,
+)
+from .text import _floor6
 
 
 def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -583,69 +600,21 @@ def stats_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     All post-aggregate math is IEEE doubles over identical expression
     trees, truncated (not rounded) to 6 decimals.
     """
-    ev = load_table(spark, sf_dir, "events")
-    q = F.floor(F.col("value") * F.lit(1000.0))
-    st = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(q).alias("s"),
-        # Square in DECIMAL(38), not LONG: Spark silently wraps int64
-        # overflow while the DuckDB oracle raises, so milli-quantized
-        # values above ~3e9 would diverge instead of failing loudly.
-        F.sum(q.cast("decimal(38,0)") * q.cast("decimal(38,0)")).alias("ss"),
-    )
-    a = st.alias("a")
-    b = st.alias("b")
-
-    def _d(side: str, col: str) -> F.Column:
-        return F.col(f"{side}.{col}").cast("double")
-
-    def _var(side: str) -> F.Column:
-        # Cast BEFORE multiplying: s·s on raw BIGINTs overflows around
-        # sf1 (s ≈ 3·10⁹ ⇒ s² ≈ 10¹⁹ > 2⁶³); DECIMAL(38) does not.
-        s_dec = F.col(f"{side}.s").cast("decimal(38,0)")
-        num = (
-            F.col(f"{side}.n") * F.col(f"{side}.ss") - s_dec * s_dec
-        ).cast("double")
-        return num / (_d(side, "n") * (_d(side, "n") - F.lit(1.0)))
-
-    se_a = _var("a") / _d("a", "n")
-    se_b = _var("b") / _d("b", "n")
-    t = (_d("a", "s") / _d("a", "n") - _d("b", "s") / _d("b", "n")) / F.sqrt(
-        se_a + se_b
-    )
+    se_a, se_b = _side_sem2("a"), _side_sem2("b")
+    t = (_side_mean("a") - _side_mean("b")) / F.sqrt(se_a + se_b)
     dof = ((se_a + se_b) * (se_a + se_b)) / (
-        (se_a * se_a) / (_d("a", "n") - F.lit(1.0))
-        + (se_b * se_b) / (_d("b", "n") - F.lit(1.0))
+        (se_a * se_a) / (_side("a", "n") - F.lit(1.0))
+        + (se_b * se_b) / (_side("b", "n") - F.lit(1.0))
     )
-
-    def _floor6(c: F.Column) -> F.Column:
-        return F.floor(c * 1000000.0) / 1000000.0
-
-    return (
-        a.crossJoin(F.broadcast(b))
-        .filter(F.col("a.event_type") < F.col("b.event_type"))
-        .select(
-            F.col("a.event_type").alias("type_a"),
-            F.col("b.event_type").alias("type_b"),
-            F.col("a.n").alias("n_a"),
-            F.col("b.n").alias("n_b"),
-            _floor6(t).alias("t_stat"),
-            _floor6(dof).alias("welch_df"),
-        )
-    )
+    return _type_pairs(_milli_type_stats(spark, sf_dir),
+                       _floor6(t).alias("t_stat"),
+                       _floor6(dof).alias("welch_df"))
 
 
-WELCH_ORACLE = """
-WITH st AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         sum(CAST(floor(value * 1000.0) AS BIGINT)) AS s,
-         sum(CAST(floor(value * 1000.0) AS BIGINT)
-             * CAST(floor(value * 1000.0) AS BIGINT)) AS ss
-  FROM events GROUP BY 1
-),
+WELCH_ORACLE = f"""
+WITH st AS ({_MILLI_TYPE_STATS_SQL}),
 pairs AS (
-  SELECT a.event_type AS type_a, b.event_type AS type_b,
-         a.n AS n_a, b.n AS n_b,
+  SELECT {_TYPE_PAIR_KEYS_SQL},
          CAST(a.n * a.ss - a.s * a.s AS DOUBLE)
            / (CAST(a.n AS DOUBLE) * (CAST(a.n AS DOUBLE) - 1.0))
            / CAST(a.n AS DOUBLE) AS se_a,
@@ -654,8 +623,7 @@ pairs AS (
            / CAST(b.n AS DOUBLE) AS se_b,
          CAST(a.s AS DOUBLE) / CAST(a.n AS DOUBLE)
            - CAST(b.s AS DOUBLE) / CAST(b.n AS DOUBLE) AS dm
-  FROM st a CROSS JOIN st b
-  WHERE a.event_type < b.event_type
+  {_TYPE_PAIRS_FROM_SQL}
 )
 SELECT type_a, type_b, n_a, n_b,
        floor(dm / sqrt(se_a + se_b) * 1000000.0) / 1000000.0 AS t_stat,
@@ -725,7 +693,6 @@ def stats_cochran_armitage(spark: SparkSession,
     nd = F.col("nn").cast("double")
     xd = F.col("xx").cast("double")
     z = a * F.sqrt(nd) / F.sqrt(xd * (nd - xd) * v)
-    _floor6 = lambda c: F.floor(c * 1000000.0) / 1000000.0  # noqa: E731
     return agg.filter(xd * (nd - xd) * v > 0).select(
         "k_bins",
         F.col("nn").cast("long").alias("n_orders"),
@@ -793,70 +760,34 @@ def stats_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_a+n_b−2.  Readout doubles are identical expression trees,
     floored at 6.
     """
-    ev = load_table(spark, sf_dir, "events")
-    q = F.floor(F.col("value") * F.lit(1000.0))
-    st = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(q).alias("s"),
-        F.sum(q.cast("decimal(38,0)") * q.cast("decimal(38,0)"))
-        .alias("ss"),
-    )
-    a, b = st.alias("a"), st.alias("b")
-
-    def _d(side: str, col: str) -> F.Column:
-        return F.col(f"{side}.{col}").cast("double")
-
-    def _ssq(side: str) -> F.Column:
-        """(n−1)·s² numerator: Σ(x−x̄)² = (n·Σx² − S²)/n, exact-int."""
-        s_dec = F.col(f"{side}.s").cast("decimal(38,0)")
-        return (F.col(f"{side}.n") * F.col(f"{side}.ss")
-                - s_dec * s_dec).cast("double") / _d(side, "n")
-
-    dm = _d("a", "s") / _d("a", "n") - _d("b", "s") / _d("b", "n")
-    pooled = F.sqrt((_ssq("a") + _ssq("b"))
-                    / (_d("a", "n") + _d("b", "n") - F.lit(2.0)))
-    d = dm / pooled
-    jj = (F.lit(1.0)
-          - F.lit(3.0) / (F.lit(4.0) * (_d("a", "n") + _d("b", "n"))
-                          - F.lit(9.0)))
-    _floor6 = lambda c: F.floor(c * 1000000.0) / 1000000.0  # noqa: E731
+    # (n−1)·s² per side: Σ(x−x̄)² = (n·Σx² − S²)/n, exact-int.
+    ssq_a = _side_ssd("a") / _side("a", "n")
+    ssq_b = _side_ssd("b") / _side("b", "n")
+    n_ab = _side("a", "n") + _side("b", "n")
+    d = (_side_mean("a") - _side_mean("b")) \
+        / F.sqrt((ssq_a + ssq_b) / (n_ab - F.lit(2.0)))
+    jj = F.lit(1.0) - F.lit(3.0) / (F.lit(4.0) * n_ab - F.lit(9.0))
     label = (F.when(F.abs(d) < 0.2, "negligible")
              .when(F.abs(d) < 0.5, "small")
              .when(F.abs(d) < 0.8, "medium")
              .otherwise("large"))
-    return (
-        a.crossJoin(F.broadcast(b))
-        .filter(F.col("a.event_type") < F.col("b.event_type"))
-        .select(
-            F.col("a.event_type").alias("type_a"),
-            F.col("b.event_type").alias("type_b"),
-            F.col("a.n").alias("n_a"), F.col("b.n").alias("n_b"),
-            _floor6(d).alias("cohens_d"),
-            _floor6(d * jj).alias("hedges_g"),
-            label.alias("magnitude"),
-        )
-    )
+    return _type_pairs(_milli_type_stats(spark, sf_dir),
+                       _floor6(d).alias("cohens_d"),
+                       _floor6(d * jj).alias("hedges_g"),
+                       label.alias("magnitude"))
 
 
-COHENS_D_ORACLE = """
-WITH st AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         sum(CAST(floor(value * 1000.0) AS BIGINT)) AS s,
-         sum(CAST(floor(value * 1000.0) AS BIGINT)
-             * CAST(floor(value * 1000.0) AS BIGINT)) AS ss
-  FROM events GROUP BY 1
-),
+COHENS_D_ORACLE = f"""
+WITH st AS ({_MILLI_TYPE_STATS_SQL}),
 pairs AS (
-  SELECT a.event_type AS type_a, b.event_type AS type_b,
-         a.n AS n_a, b.n AS n_b,
+  SELECT {_TYPE_PAIR_KEYS_SQL},
          CAST(a.s AS DOUBLE) / CAST(a.n AS DOUBLE)
            - CAST(b.s AS DOUBLE) / CAST(b.n AS DOUBLE) AS dm,
          CAST(a.n * a.ss - a.s * a.s AS DOUBLE)
            / CAST(a.n AS DOUBLE) AS ssq_a,
          CAST(b.n * b.ss - b.s * b.s AS DOUBLE)
            / CAST(b.n AS DOUBLE) AS ssq_b
-  FROM st a CROSS JOIN st b
-  WHERE a.event_type < b.event_type
+  {_TYPE_PAIRS_FROM_SQL}
 ),
 eff AS (
   SELECT type_a, type_b, n_a, n_b,
@@ -902,67 +833,25 @@ def stats_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     so every comparison happens on bit-identical doubles in both
     engines.
     """
-    ev = load_table(spark, sf_dir, "events")
-    q = F.floor(F.col("value") * F.lit(1000.0))
-    st = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(q).alias("s"),
-        # Square in DECIMAL(38), not LONG: Spark silently wraps int64
-        # overflow while the DuckDB oracle raises, so milli-quantized
-        # values above ~3e9 would diverge instead of failing loudly.
-        F.sum(q.cast("decimal(38,0)") * q.cast("decimal(38,0)")).alias("ss"),
-    )
-    a = st.alias("a")
-    b = st.alias("b")
-
-    def _d(side: str, col: str) -> F.Column:
-        return F.col(f"{side}.{col}").cast("double")
-
-    def _se2(side: str) -> F.Column:
-        s_dec = F.col(f"{side}.s").cast("decimal(38,0)")
-        num = (
-            F.col(f"{side}.n") * F.col(f"{side}.ss") - s_dec * s_dec
-        ).cast("double")
-        return num / (_d(side, "n") * (_d(side, "n") - F.lit(1.0))) \
-            / _d(side, "n")
-
-    se = F.sqrt(_se2("a") + _se2("b"))
-    dm = _d("a", "s") / _d("a", "n") - _d("b", "s") / _d("b", "n")
-    delta = F.abs(_d("a", "s") / _d("a", "n")) * F.lit(TOST_MARGIN_FRAC)
+    se = F.sqrt(_side_sem2("a") + _side_sem2("b"))
+    dm = _side_mean("a") - _side_mean("b")
+    delta = F.abs(_side_mean("a")) * F.lit(TOST_MARGIN_FRAC)
     t_lower = (dm + delta) / se
     t_upper = (dm - delta) / se
-
-    def _floor6(c: F.Column) -> F.Column:
-        return F.floor(c * 1000000.0) / 1000000.0
-
-    return (
-        a.crossJoin(F.broadcast(b))
-        .filter(F.col("a.event_type") < F.col("b.event_type"))
-        .select(
-            F.col("a.event_type").alias("type_a"),
-            F.col("b.event_type").alias("type_b"),
-            F.col("a.n").alias("n_a"),
-            F.col("b.n").alias("n_b"),
-            _floor6(delta).alias("margin"),
-            _floor6(t_lower).alias("t_lower"),
-            _floor6(t_upper).alias("t_upper"),
-            ((t_lower > TOST_Z_CRIT) & (t_upper < -TOST_Z_CRIT))
-            .cast("int").alias("equivalent"),
-        )
+    return _type_pairs(
+        _milli_type_stats(spark, sf_dir),
+        _floor6(delta).alias("margin"),
+        _floor6(t_lower).alias("t_lower"),
+        _floor6(t_upper).alias("t_upper"),
+        ((t_lower > TOST_Z_CRIT) & (t_upper < -TOST_Z_CRIT))
+        .cast("int").alias("equivalent"),
     )
 
 
 TOST_ORACLE = f"""
-WITH st AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         sum(CAST(floor(value * 1000.0) AS BIGINT)) AS s,
-         sum(CAST(floor(value * 1000.0) AS BIGINT)
-             * CAST(floor(value * 1000.0) AS BIGINT)) AS ss
-  FROM events GROUP BY 1
-),
+WITH st AS ({_MILLI_TYPE_STATS_SQL}),
 pairs AS (
-  SELECT a.event_type AS type_a, b.event_type AS type_b,
-         a.n AS n_a, b.n AS n_b,
+  SELECT {_TYPE_PAIR_KEYS_SQL},
          sqrt(CAST(a.n * a.ss - a.s * a.s AS DOUBLE)
               / (CAST(a.n AS DOUBLE) * (CAST(a.n AS DOUBLE) - 1.0))
               / CAST(a.n AS DOUBLE)
@@ -973,8 +862,7 @@ pairs AS (
            - CAST(b.s AS DOUBLE) / CAST(b.n AS DOUBLE) AS dm,
          abs(CAST(a.s AS DOUBLE) / CAST(a.n AS DOUBLE))
            * CAST({TOST_MARGIN_FRAC} AS DOUBLE) AS delta
-  FROM st a CROSS JOIN st b
-  WHERE a.event_type < b.event_type
+  {_TYPE_PAIRS_FROM_SQL}
 )
 SELECT type_a, type_b, n_a, n_b,
        floor(delta * 1000000.0) / 1000000.0 AS margin,
@@ -1607,9 +1495,6 @@ def stats_cuped_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean_dy = (F.col("sy1").cast("double") / F.col("n1").cast("double")
                - F.col("sy0").cast("double") / F.col("n0").cast("double"))
 
-    def _floor6(c: F.Column) -> F.Column:
-        return F.floor(c * 1000000.0) / 1000000.0
-
     return s.select(
         F.col("n1").alias("n_treat"),
         F.col("n0").alias("n_ctrl"),
@@ -2179,41 +2064,22 @@ def stats_two_proportion_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/src/repositories/staging_contact_repository.py);
     this is scale-extension surface.
     """
-    ev = load_table(spark, sf_dir, "events")
-    st = ev.groupBy("event_type").agg(
+    st = load_table(spark, sf_dir, "events").groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum((F.col("value") > F.lit(PROP_THRESHOLD)).cast("long"))
         .alias("k"),
     )
-    a, b = st.alias("a"), st.alias("b")
-
-    def _d(expr: str) -> F.Column:
-        return F.expr(expr).cast("double")
-
-    pa = _d("a.k") / _d("a.n")
-    pb = _d("b.k") / _d("b.n")
-    pp = (_d("a.k") + _d("b.k")) / (_d("a.n") + _d("b.n"))
+    pa = _side("a", "k") / _side("a", "n")
+    pb = _side("b", "k") / _side("b", "n")
+    pp = (_side("a", "k") + _side("b", "k")) \
+        / (_side("a", "n") + _side("b", "n"))
     z = (pa - pb) / F.sqrt(
-        pp * (F.lit(1.0) - pp) * (F.lit(1.0) / _d("a.n")
-                                  + F.lit(1.0) / _d("b.n"))
+        pp * (F.lit(1.0) - pp) * (F.lit(1.0) / _side("a", "n")
+                                  + F.lit(1.0) / _side("b", "n"))
     )
-
-    def _floor6(c: F.Column) -> F.Column:
-        return F.floor(c * 1000000.0) / 1000000.0
-
-    return (
-        a.crossJoin(F.broadcast(b))
-        .filter(F.col("a.event_type") < F.col("b.event_type"))
-        .select(
-            F.col("a.event_type").alias("type_a"),
-            F.col("b.event_type").alias("type_b"),
-            F.col("a.n").alias("n_a"),
-            F.col("b.n").alias("n_b"),
-            _floor6(pa).alias("p_a"),
-            _floor6(pb).alias("p_b"),
-            _floor6(z).alias("z_pooled"),
-        )
-    )
+    return _type_pairs(st, _floor6(pa).alias("p_a"),
+                       _floor6(pb).alias("p_b"),
+                       _floor6(z).alias("z_pooled"))
 
 
 TWO_PROP_ORACLE = f"""
@@ -2224,14 +2090,12 @@ WITH st AS (
   FROM events GROUP BY 1
 ),
 pairs AS (
-  SELECT a.event_type AS type_a, b.event_type AS type_b,
-         a.n AS n_a, b.n AS n_b,
+  SELECT {_TYPE_PAIR_KEYS_SQL},
          CAST(a.k AS DOUBLE) / CAST(a.n AS DOUBLE) AS pa,
          CAST(b.k AS DOUBLE) / CAST(b.n AS DOUBLE) AS pb,
          (CAST(a.k AS DOUBLE) + CAST(b.k AS DOUBLE))
            / (CAST(a.n AS DOUBLE) + CAST(b.n AS DOUBLE)) AS pp
-  FROM st a CROSS JOIN st b
-  WHERE a.event_type < b.event_type
+  {_TYPE_PAIRS_FROM_SQL}
 )
 SELECT type_a, type_b, n_a, n_b,
        floor(pa * 1000000.0) / 1000000.0 AS p_a,
@@ -2300,9 +2164,6 @@ def stats_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     did = (_mean(1, 1) - _mean(1, 0)) - (_mean(0, 1) - _mean(0, 0))
     se = F.sqrt(_semsq(1, 1) + _semsq(1, 0) + _semsq(0, 1) + _semsq(0, 0))
-
-    def _floor6(c: F.Column) -> F.Column:
-        return F.floor(c * 1000000.0) / 1000000.0
 
     return one.select(
         F.col("n00").alias("n_ctrl_pre"), F.col("n01").alias("n_ctrl_post"),
@@ -3577,16 +3438,7 @@ def stats_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one partial-aggregated shuffle into hourly buckets; the
     spine, lag fan-out (|hours|×6) and power sums are calendar-bounded.
     """
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        "event_type",
-        F.window("ts", "1 hour").getField("start").alias("hour"),
-    ).agg(F.count(F.lit(1)).alias("c")).select(
-        "event_type",
-        F.expr("cast(cast(hour as timestamp) as long) div 3600")
-        .alias("eh"),
-        "c",
-    )
+    hourly = _hour_index(_type_series(spark, sf_dir, "hour"))
     span = hourly.groupBy("event_type").agg(
         F.min("eh").alias("h0"), F.max("eh").alias("h1"))
     spine = span.select(
@@ -3600,18 +3452,7 @@ def stats_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").cast("decimal(38,0)").alias("s"),
         F.sum(F.col("c") * F.col("c")).cast("decimal(38,0)").alias("q"),
     )
-    fan = x.select(
-        "event_type", "eh", F.col("c").alias("xv"),
-        F.explode(F.array(*[F.lit(k) for k in
-                            range(1, LB_MAX_LAG + 1)])).alias("lag"),
-    )
-    b = x.select("event_type", F.col("eh").alias("ehb"),
-                 F.col("c").alias("yv"))
-    pairs = fan.join(
-        b,
-        (fan["event_type"] == b["event_type"])
-        & (F.col("ehb") == F.col("eh") + F.col("lag")),
-    ).select(fan["event_type"], "lag", "xv", "yv")
+    pairs = _lag_pairs(x, LB_MAX_LAG, "xv", "yv")
     per = pairs.groupBy("event_type", "lag").agg(
         F.count(F.lit(1)).alias("m"),
         F.sum(F.col("xv") * F.col("yv")).cast("decimal(38,0)").alias("a"),
@@ -3651,12 +3492,7 @@ def stats_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 LJUNG_BOX_ORACLE = f"""
-WITH hourly AS (
-  SELECT event_type,
-         epoch(time_bucket(INTERVAL '1 hour', ts))::BIGINT // 3600 AS eh,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-),
+WITH hourly AS ({_HOUR_INDEX_SQL}),
 span AS (
   SELECT event_type, min(eh) AS h0, max(eh) AS h1 FROM hourly GROUP BY 1
 ),
@@ -3674,19 +3510,14 @@ base AS (
          CAST(sum(c * c) AS DECIMAL(38,0)) AS q
   FROM x GROUP BY 1
 ),
-fan AS (
-  SELECT event_type, eh, c AS xv, l.lag
-  FROM x CROSS JOIN (SELECT unnest(range(1, {LB_MAX_LAG + 1})) AS lag) l
-),
+pairs AS ({_lag_pairs_sql("x", LB_MAX_LAG)}),
 per AS (
-  SELECT f.event_type, f.lag,
+  SELECT event_type, lag,
          CAST(count(*) AS BIGINT) AS m,
-         CAST(sum(f.xv * h.c) AS DECIMAL(38,0)) AS a,
-         CAST(sum(f.xv) AS DECIMAL(38,0)) AS bx,
-         CAST(sum(h.c) AS DECIMAL(38,0)) AS by
-  FROM fan f JOIN x h ON h.event_type = f.event_type
-                      AND h.eh = f.eh + f.lag
-  GROUP BY 1, 2
+         CAST(sum(x * y) AS DECIMAL(38,0)) AS a,
+         CAST(sum(x) AS DECIMAL(38,0)) AS bx,
+         CAST(sum(y) AS DECIMAL(38,0)) AS by
+  FROM pairs GROUP BY 1, 2
 ),
 terms AS (
   SELECT p.event_type, b.n,

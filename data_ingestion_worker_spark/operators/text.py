@@ -98,6 +98,12 @@ def _floor4(c: F.Column) -> F.Column:
     return F.floor(c * 10000.0) / 10000.0
 
 
+def _floor6(c: F.Column) -> F.Column:
+    """Truncate a double toward −∞ at 6 decimals — :func:`_floor4`'s
+    engine-stable stand-in for round() at micro precision."""
+    return F.floor(c * 1000000.0) / 1000000.0
+
+
 def _quality_raw() -> F.Column:
     """The unfloored quality weighted sum — THE single Spark-side
     codification (doc_quality_score / doc_quality_quantile_norm /

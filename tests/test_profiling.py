@@ -317,3 +317,31 @@ def test_dp_noisy_counts_mechanism_matches_python(spark, sf_dir):
         assert r.epsilon_milli == DP_EPSILON_MILLI
         # Laplace(1) at these u draws stays within ±14 counts
         assert abs(r.noisy_count_milli - true[et] * 1000) <= 14000
+
+
+def test_type_series_matches_python_counter(spark, sf_dir):
+    """The shared per-type count series and its window moments: every
+    (event_type, hour or day) bucket holds the number of events whose
+    ts truncates to it, and n, Σc, Σc² are per-type sums over the
+    buckets."""
+    from collections import Counter
+
+    from data_ingestion_worker_spark.operators.events import (
+        _type_moments,
+        _type_series,
+    )
+
+    events = load_table(spark, sf_dir, "events") \
+        .select("event_type", "ts").collect()
+    trunc = {"hour": dict(minute=0, second=0, microsecond=0),
+             "day": dict(hour=0, minute=0, second=0, microsecond=0)}
+    for unit, zero in trunc.items():
+        want = Counter((r.event_type, r.ts.replace(**zero)) for r in events)
+        series = _type_series(spark, sf_dir, unit)
+        assert {(r.event_type, r[unit]): r.c
+                for r in series.collect()} == dict(want), unit
+        for r in _type_moments(series).collect():
+            cs = [c for (t, _), c in want.items() if t == r.event_type]
+            assert (r.n, r.sx, r.sxx) \
+                == (len(cs), sum(cs), sum(c * c for c in cs)), r
+
