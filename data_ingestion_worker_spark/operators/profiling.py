@@ -12,6 +12,13 @@ Pipeline-hygiene primitives a 100 TB ingest needs around the core engine:
 The reference has no profiling surface at all — its only data-quality
 loop is the per-row validator (``src/validators/row_validator.py:47-107``);
 these operators are the set-based, corpus-level generalization.
+
+The hourly event-type detectors (z-scores, CUSUM, runs test,
+autocorrelation, ACF) build on the per-type pieces of ``events.py``:
+the count series ``_type_series``, its window moments
+``_type_moments``, the lag fan-out ``_lag_pairs`` and the Pearson sums
+``_pearson_sums``.  The spike and drop CUSUMs share one builder,
+``_cusum``, and differ only in the statistic passed to it.
 """
 
 from __future__ import annotations

@@ -14,6 +14,12 @@ Two classes of statistics and how each stays reproducible:
   identities, with a single double division/sqrt at the end: associative,
   order-independent, identical in both engines.  The power sums are also
   the *distributed-friendly* form — each is a map-side-combinable SUM.
+
+The event-type pair tests (Welch, Cohen's d, TOST, two-proportion z)
+enumerate pairs with ``events._type_pairs``, the first three over the
+milli-quantized sums ``events._milli_type_stats``; ``stats_ljung_box``
+builds on ``events._type_series`` and ``events._lag_pairs``.  Outputs
+are floor-truncated with ``text._floor6``.
 """
 
 from __future__ import annotations
