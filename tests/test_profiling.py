@@ -344,4 +344,3 @@ def test_type_series_matches_python_counter(spark, sf_dir):
             cs = [c for (t, _), c in want.items() if t == r.event_type]
             assert (r.n, r.sx, r.sxx) \
                 == (len(cs), sum(cs), sum(c * c for c in cs)), r
-
