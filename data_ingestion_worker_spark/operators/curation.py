@@ -56,13 +56,14 @@ from .text import (
     _BUCKET_SQL,
     _NORM_SQL,
     _TOKENS_SQL,
-    _TRAIN_CUT,
-    _VAL_CUT,
     _WS_COUNT_SQL,
+    _bucket_sql,
     _floor4,
     _floor6,
     _marker_sql,
     _split_bucket,
+    _split_label,
+    _split_label_sql,
 )
 
 
@@ -77,12 +78,7 @@ from .text import (
 
 def _split_of(doc_id: F.Column) -> F.Column:
     """train/val/test label as a pure expression over any doc_id column."""
-    bucket = _split_bucket(doc_id)
-    return (
-        F.when(bucket < _TRAIN_CUT, F.lit("train"))
-        .when(bucket < _VAL_CUT, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
+    return _split_label(_split_bucket(doc_id))
 
 
 def split_train_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -103,9 +99,7 @@ def split_train_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
 SPLIT_ORACLE = f"""
 SELECT doc_id, source,
        {_BUCKET_SQL} AS bucket,
-       CASE WHEN {_BUCKET_SQL} < {_TRAIN_CUT} THEN 'train'
-            WHEN {_BUCKET_SQL} < {_VAL_CUT} THEN 'val'
-            ELSE 'test' END AS split
+       {_split_label_sql(_BUCKET_SQL)} AS split
 FROM documents
 """
 
@@ -808,10 +802,7 @@ pairs AS (
         / 10000.0 >= 0.2
 ),
 sp AS (
-  SELECT doc_id,
-         CASE WHEN {_BUCKET_SQL} < {_TRAIN_CUT} THEN 'train'
-              WHEN {_BUCKET_SQL} < {_VAL_CUT} THEN 'val'
-              ELSE 'test' END AS split
+  SELECT doc_id, {_split_label_sql(_BUCKET_SQL)} AS split
   FROM documents
 )
 SELECT least(a.split, b.split) AS split_a,
@@ -852,31 +843,19 @@ def split_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import dedup_connected_components
 
     cc = dedup_connected_components(spark, sf_dir)
-    bucket = F.pmod(
-        hash64(F.concat(F.lit(_SPLIT_SALT_CLUSTER),
-                        F.col("cluster_id").cast("string"))),
-        F.lit(100),
-    )
+    bucket = _split_bucket(F.col("cluster_id"), _SPLIT_SALT_CLUSTER)
     return cc.select(
-        "doc_id", "cluster_id",
-        F.when(bucket < _TRAIN_CUT, F.lit("train"))
-        .when(bucket < _VAL_CUT, F.lit("val"))
-        .otherwise(F.lit("test")).alias("split"),
+        "doc_id", "cluster_id", _split_label(bucket).alias("split"),
     )
 
 
 def _split_by_cluster_oracle() -> str:
-    from ..functions.hashing import hash64_sql
     from .dedup import _CC_ORACLE_WITH
 
-    expr = f"'{_SPLIT_SALT_CLUSTER}' || CAST(cluster_id AS VARCHAR)"
-    b = f"CAST({hash64_sql(expr)} % 100 AS INT)"
+    b = _bucket_sql("cluster_id", _SPLIT_SALT_CLUSTER)
     return f"""
 {_CC_ORACLE_WITH}
-SELECT doc_id, cluster_id,
-       CASE WHEN {b} < {_TRAIN_CUT} THEN 'train'
-            WHEN {b} < {_VAL_CUT} THEN 'val'
-            ELSE 'test' END AS split
+SELECT doc_id, cluster_id, {_split_label_sql(b)} AS split
 FROM labels
 """
 

@@ -39,7 +39,8 @@ from ..functions.text import fingerprint
 from ..spec import QuerySpec
 from ..tables import load_table
 from ..functions.checkpoint import cut_lineage
-from .similarity import _signed_coin
+from .similarity import (_QVEC, _int_cosine, _proj_sql, _projections,
+                         _qdims, _qv_sql)
 from .text import _NORM_SQL, _TOKENS_SQL
 
 N_PERM = 8          # minhash permutations
@@ -1055,9 +1056,6 @@ FROM votes GROUP BY doc_id
 EMB_PLANES = 8      # hyperplanes for the banded embedding LSH
 EMB_BAND_ROWS = 2   # planes per band -> 4 bands
 EMB_COS_MIN = 0.35  # near-dup cosine threshold (synthetic corpus max ~0.51)
-_EMB_QUANT = 10000
-_EMB_QVEC = ("transform(embedding, x -> cast(round(cast(x as double) * "
-             f"{_EMB_QUANT}) as bigint))")
 
 
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1073,13 +1071,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     more planes/bands tighten it without changing the plan shape.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    dims = e.select("vec_id", F.posexplode(F.expr(_EMB_QVEC)).alias("d", "v"))
-    # Signed projections as parallel aggregate expressions (one pass over
-    # the dims, no dims x planes explosion — see ann_lsh_buckets).
-    proj = dims.groupBy("vec_id").agg(*[
-        F.sum(_signed_coin(f"{p}:")).alias(f"proj{p}")
-        for p in range(EMB_PLANES)
-    ])
+    proj = _projections(_qdims(e, "vec_id"), EMB_PLANES)
     band_structs = F.array(*[
         F.struct(
             F.lit(b * EMB_BAND_ROWS).alias("band"),
@@ -1103,7 +1095,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.vec_id").alias("v1"), F.col("b.vec_id").alias("v2"))
         .distinct()
     )
-    vecs = e.select("vec_id", F.expr(_EMB_QVEC).alias("qv"))
+    vecs = e.select("vec_id", F.expr(_QVEC).alias("qv"))
     e1 = vecs.select(F.col("vec_id").alias("v1"), F.col("qv").alias("qa"))
     e2 = vecs.select(F.col("vec_id").alias("v2"), F.col("qv").alias("qb"))
     # No broadcast hint: the verification side is the FULL embeddings
@@ -1111,36 +1103,15 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AQE broadcasts it when (and only when) it actually fits; otherwise
     # this is a shuffle hash join keyed on vec_id.
     pairs = cand.join(e1, "v1").join(e2, "v2")
-    dot = F.expr("aggregate(zip_with(qa, qb, (x, y) -> x * y), "
-                 "cast(0 as bigint), (acc, v) -> acc + v)")
-    na = F.expr("aggregate(transform(qa, x -> x * x), "
-                "cast(0 as bigint), (acc, v) -> acc + v)")
-    nb = F.expr("aggregate(transform(qb, x -> x * x), "
-                "cast(0 as bigint), (acc, v) -> acc + v)")
-    cos = F.round(
-        dot.cast("double")
-        / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double"))), 6
-    )
     return (
-        pairs.select("v1", "v2", cos.alias("cosine"))
+        pairs.select("v1", "v2", _int_cosine("qa", "qb").alias("cosine"))
         .filter(F.col("cosine") >= EMB_COS_MIN)
     )
 
 
 DEDUP_EMB_ORACLE = f"""
-WITH qv AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
-         CAST(round(CAST(unnest(embedding) AS DOUBLE) * {_EMB_QUANT})
-              AS BIGINT) AS v
-  FROM embeddings
-),
-proj AS (
-  SELECT vec_id, p,
-         sum((CASE WHEN {hash64_sql("CAST(p AS VARCHAR) || ':' || CAST(d AS VARCHAR)")} % 2 = 0
-              THEN 1 ELSE -1 END) * v) AS proj
-  FROM qv, unnest(range(0, {EMB_PLANES})) AS pl(p)
-  GROUP BY 1, 2
-),
+WITH qv AS ({_qv_sql(d0=True)}),
+proj AS ({_proj_sql(EMB_PLANES)}),
 bands AS (
   SELECT vec_id, p - (p % {EMB_BAND_ROWS}) AS band,
          CAST(sum(CASE WHEN proj > 0

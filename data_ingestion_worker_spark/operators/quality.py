@@ -254,9 +254,8 @@ def pipeline_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; split is a pure per-row hash; the final aggregate is
     |splits|x|sources| rows.
     """
-    from ..functions.hashing import hash64
     from ..functions.text import fingerprint
-    from .text import _SPLIT_SALT, _TRAIN_CUT, _VAL_CUT
+    from .text import _split_bucket, _split_label
 
     d = load_table(spark, sf_dir, "documents")
     decided = pipeline_pretrain_filter(spark, sf_dir) \
@@ -266,14 +265,7 @@ def pipeline_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.partitionBy(fingerprint(F.col("text"))))
     canon = kept.withColumn("first_id", first) \
         .filter(F.col("doc_id") == F.col("first_id"))
-    bucket = F.pmod(
-        hash64(F.concat(F.lit(_SPLIT_SALT), F.col("doc_id").cast("string"))),
-        F.lit(100))
-    split = (
-        F.when(bucket < _TRAIN_CUT, F.lit("train"))
-        .when(bucket < _VAL_CUT, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
+    split = _split_label(_split_bucket(F.col("doc_id")))
     return (
         canon.select(split.alias("split"), "source", "n_tokens")
         .groupBy("split", "source")
@@ -285,8 +277,7 @@ def pipeline_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _curation_e2e_oracle() -> str:
-    from .text import _BUCKET_SQL as bucket
-    from .text import _TRAIN_CUT, _VAL_CUT
+    from .text import _BUCKET_SQL, _split_label_sql
 
     return f"""
 WITH {_PIPELINE_CORE_SQL.strip()},
@@ -304,10 +295,7 @@ canon AS (
   ) WHERE doc_id = first_id
 ),
 labeled AS (
-  SELECT CASE WHEN {bucket} < {_TRAIN_CUT} THEN 'train'
-              WHEN {bucket} < {_VAL_CUT} THEN 'val'
-              ELSE 'test' END AS split,
-         source, n_tokens
+  SELECT {_split_label_sql(_BUCKET_SQL)} AS split, source, n_tokens
   FROM canon
 )
 SELECT split, source, CAST(count(*) AS BIGINT) AS n_docs,
@@ -330,9 +318,8 @@ def pipeline_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression in the same scan; the LM gate adds the bigram-model
     joins (bigram-partitioned, never a funnel) plus the scalar cut.
     """
-    from ..functions.hashing import hash64
     from ..functions.text import fingerprint
-    from .text import _SPLIT_SALT, _TRAIN_CUT, _VAL_CUT
+    from .text import _split_bucket, _split_label
     from .text import doc_lm_xent_proxy, doc_policy_flags
 
     d = load_table(spark, sf_dir, "documents")
@@ -374,14 +361,7 @@ def pipeline_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.partitionBy(fingerprint(F.col("text"))))
     canon = kept.withColumn("first_id", first) \
         .filter(F.col("doc_id") == F.col("first_id"))
-    bucket = F.pmod(
-        hash64(F.concat(F.lit(_SPLIT_SALT), F.col("doc_id").cast("string"))),
-        F.lit(100))
-    split = (
-        F.when(bucket < _TRAIN_CUT, F.lit("train"))
-        .when(bucket < _VAL_CUT, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
+    split = _split_label(_split_bucket(F.col("doc_id")))
     return (
         canon.select(split.alias("split"), "source", "n_tokens")
         .groupBy("split", "source")
@@ -393,8 +373,7 @@ def pipeline_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _curation_v2_oracle() -> str:
-    from .text import _BUCKET_SQL as bucket
-    from .text import _TRAIN_CUT, _VAL_CUT
+    from .text import _BUCKET_SQL, _split_label_sql
     from .text import LM_XENT_ORACLE, POLICY_FLAGS_ORACLE
 
     return f"""
@@ -422,10 +401,7 @@ canon AS (
   ) WHERE doc_id = first_id
 ),
 labeled AS (
-  SELECT CASE WHEN {bucket} < {_TRAIN_CUT} THEN 'train'
-              WHEN {bucket} < {_VAL_CUT} THEN 'val'
-              ELSE 'test' END AS split,
-         source, n_tokens
+  SELECT {_split_label_sql(_BUCKET_SQL)} AS split, source, n_tokens
   FROM canon
 )
 SELECT split, source, CAST(count(*) AS BIGINT) AS n_docs,
@@ -483,10 +459,10 @@ def pipeline_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus, drop the ``F.broadcast`` hint and let AQE pick a
     shuffle semi-join on ``shingle`` (keys move, documents never do).
     """
-    from ..functions.hashing import hash64
     from ..functions.text import fingerprint
-    from .curation import _SPLIT_SALT_CLUSTER, _TRAIN_CUT, _VAL_CUT
+    from .curation import _SPLIT_SALT_CLUSTER
     from .dedup import dedup_connected_components
+    from .text import _split_bucket, _split_label
     from .text import doc_lm_xent_proxy, doc_policy_flags
 
     from .dedup import EVAL_MOD
@@ -569,15 +545,8 @@ def pipeline_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     canon = kept.withColumn("first_id", first) \
         .filter(F.col("doc_id") == F.col("first_id")) \
         .select("doc_id", "source", "n_tokens")
-    bucket = F.pmod(
-        hash64(F.concat(F.lit(_SPLIT_SALT_CLUSTER),
-                        F.col("cluster_id").cast("string"))),
-        F.lit(100))
-    split = (
-        F.when(bucket < _TRAIN_CUT, F.lit("train"))
-        .when(bucket < _VAL_CUT, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
+    split = _split_label(
+        _split_bucket(F.col("cluster_id"), _SPLIT_SALT_CLUSTER))
     return (
         canon.join(cc, "doc_id")
         .select(split.alias("split"), "source", "n_tokens")
@@ -590,9 +559,9 @@ def pipeline_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _curation_v3_oracle() -> str:
-    from ..functions.hashing import hash64_sql
-    from .curation import _SPLIT_SALT_CLUSTER, _TRAIN_CUT, _VAL_CUT
+    from .curation import _SPLIT_SALT_CLUSTER
     from .dedup import _CC_ORACLE_WITH, _SHINGLES_SQL, EVAL_MOD
+    from .text import _bucket_sql, _split_label_sql
     from .text import LM_XENT_ORACLE, POLICY_FLAGS_ORACLE
 
     # The CC chain and the pipeline core both embed the shingles CTE;
@@ -605,8 +574,7 @@ def _curation_v3_oracle() -> str:
     prefix = _SHINGLES_SQL.strip() + ","
     assert core.startswith(prefix)
     core_rest = core[len(prefix):].strip()
-    expr = f"'{_SPLIT_SALT_CLUSTER}' || CAST(cluster_id AS VARCHAR)"
-    cbucket = f"CAST({hash64_sql(expr)} % 100 AS INT)"
+    split = _split_label_sql(_bucket_sql("cluster_id", _SPLIT_SALT_CLUSTER))
     return f"""
 WITH {cc_body},
 {core_rest},
@@ -642,10 +610,7 @@ canon AS (
   ) WHERE doc_id = first_id
 ),
 cl AS (
-  SELECT c.doc_id, c.source, c.n_tokens,
-         CASE WHEN {cbucket} < {_TRAIN_CUT} THEN 'train'
-              WHEN {cbucket} < {_VAL_CUT} THEN 'val'
-              ELSE 'test' END AS split
+  SELECT c.doc_id, c.source, c.n_tokens, {split} AS split
   FROM canon c JOIN labels l ON c.doc_id = l.doc_id
 )
 SELECT split, source, CAST(count(*) AS BIGINT) AS n_docs,

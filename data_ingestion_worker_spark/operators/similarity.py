@@ -14,6 +14,24 @@ are first quantized to integers (round(x * 10000)) — dot products and
 norms are then exact integers on both engines, and the final cosine is a
 single double division with identical operands.  The quantization is part
 of the operator spec, not an approximation of it.
+
+The top-k search stack is said once per engine, each Spark piece next
+to its DuckDB twin, and every query composes them:
+
+- the quantized vector: ``_QVEC`` and its exploded ``(d, v)`` frame
+  :func:`_qdims`, twin :func:`_qv_sql`;
+- the exact cosine top-k: :func:`_cosine_topk` under
+  :func:`_brute_topk`, twin :func:`_exact_topk_sql`; and the recall of
+  an approximate top-k against it, :func:`_recall_vs_exact`, twin
+  :func:`_recall_sql`;
+- the signed random projections of LSH, JL and the embedding-dedup
+  bands: :func:`_projections`, twin :func:`_proj_sql`;
+- the PQ lookup table and ADC top-k: :func:`_pq_query_lut` and
+  :func:`_adc_topk`, twins ``_PQ_LUT_CTES`` and :func:`_adc_topk_sql`.
+
+The oracles spell each rule in their own SQL rather than deriving it
+from the Spark side, so a change to one engine breaks parity instead of
+moving both.
 """
 
 from __future__ import annotations
@@ -61,6 +79,23 @@ def _int_cosine(a: str, b: str) -> Column:
     )
 
 
+def _qdims(e: DataFrame, *keep: str, vec: str = _QVEC) -> DataFrame:
+    """``(*keep, d, v)``: one row per component of the quantized vector
+    ``vec`` (the ``_QVEC`` expression, or a column already holding it),
+    with ``d`` the 0-based dimension."""
+    return e.select(*keep, F.posexplode(F.expr(vec)).alias("d", "v"))
+
+
+def _qv_sql(cols: str = "vec_id", d0: bool = False) -> str:
+    """DuckDB twin of :func:`_qdims` over ``embeddings``: ``(cols, d, v)``
+    with ``d`` 1-based, or 0-based like ``posexplode`` when ``d0``.  The
+    caller names the CTE and may append a WHERE clause."""
+    base = " - 1" if d0 else ""
+    return (f"SELECT {cols}, generate_subscripts(embedding, 1){base} AS d, "
+            f"CAST(round(CAST(unnest(embedding) AS DOUBLE) * {QUANT}) "
+            "AS BIGINT) AS v FROM embeddings")
+
+
 def _signed_coin(prefix: str) -> Column:
     """``v`` or ``-v`` at dimension ``d`` by the parity of
     ``hash64(prefix || d)``: the cross-engine md5 coin of the signed
@@ -68,6 +103,45 @@ def _signed_coin(prefix: str) -> Column:
     bands)."""
     coin = hash64(F.concat(F.lit(prefix), F.col("d").cast("string")))
     return F.when(coin % 2 == 0, F.col("v")).otherwise(-F.col("v"))
+
+
+def _projections(dims: DataFrame, n_planes: int,
+                 prefix: str = "") -> DataFrame:
+    """``(vec_id, proj0 .. proj{n_planes-1})``: the signed random
+    projections of each vector's exploded dims, plane p's coin keyed
+    ``{prefix}{p}:``.  The planes are parallel aggregate expressions
+    over one pass of the dims — no dims x planes row explosion (8x less
+    shuffle input; the hash arithmetic stays in codegen either way)."""
+    return dims.groupBy("vec_id").agg(*[
+        F.sum(_signed_coin(f"{prefix}{p}:")).alias(f"proj{p}")
+        for p in range(n_planes)
+    ])
+
+
+def _proj_sql(n_planes: int, prefix: str = "") -> str:
+    """DuckDB twin of :func:`_projections` over the 0-based ``qv`` CTE:
+    one ``(vec_id, p, proj)`` row per vector and plane."""
+    key = f"'{prefix}' || CAST(p AS VARCHAR) || ':' || CAST(d AS VARCHAR)"
+    return f"""SELECT vec_id, p,
+         sum((CASE WHEN {hash64_sql(key)} % 2 = 0 THEN 1 ELSE -1 END) * v)
+           AS proj
+  FROM qv, unnest(range(0, {n_planes})) AS pl(p)
+  GROUP BY 1, 2"""
+
+
+def _cosine_topk(pairs: DataFrame) -> DataFrame:
+    """Each query's TOP_K candidates by :func:`_int_cosine` of its
+    vector ``qq`` and the candidate's ``qv``, ties on vec_id:
+    ``(query_id, vec_id, cosine, rank)``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("vec_id")
+    )
+    return (
+        pairs.select("query_id", "vec_id",
+                     _int_cosine("qq", "qv").alias("cosine"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= TOP_K)
+    )
 
 
 def _brute_topk(spark: SparkSession, sf_dir: str,
@@ -85,16 +159,41 @@ def _brute_topk(spark: SparkSession, sf_dir: str,
     )
     q = e.filter(F.col("vec_id") < N_QUERIES) \
         .withColumnRenamed("vec_id", "query_id").withColumnRenamed("qv", "qq")
-    pairs = e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-    cos = _int_cosine("qq", "qv")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
+    return _cosine_topk(
+        e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")))
+
+
+def _exact_topk_sql(name: str, qv: str = "qv",
+                    pairs: str = f"a.vec_id < {N_QUERIES}",
+                    k: int = TOP_K) -> str:
+    """DuckDB twin of :func:`_brute_topk`: the CTEs ``{name}_norms``,
+    ``{name}_dots`` and ``{name}``, each query's exact cosine top-``k``
+    ``(query_id, vec_id, cosine, rank)`` over the quantized-vector CTE
+    ``qv``.  ``pairs`` picks the (query ``a``, candidate ``b``) pairs:
+    the first N_QUERIES vectors against all others by default, the kNN
+    probe's held-out queries against the labeled corpus otherwise."""
+    return f"""
+{name}_norms AS (SELECT vec_id, sum(v * v) AS n FROM {qv} GROUP BY 1),
+{name}_dots AS (
+  SELECT a.vec_id AS query_id, b.vec_id AS vec_id, sum(a.v * b.v) AS dot
+  FROM {qv} a JOIN {qv} b ON a.d = b.d AND a.vec_id <> b.vec_id
+  WHERE {pairs}
+  GROUP BY 1, 2
+),
+{name} AS (
+  SELECT query_id, vec_id, cosine, rank FROM (
+    SELECT *, CAST(row_number() OVER (PARTITION BY query_id
+              ORDER BY cosine DESC, vec_id) AS INT) AS rank
+    FROM (
+      SELECT t.query_id, t.vec_id,
+             round(CAST(t.dot AS DOUBLE) / (sqrt(CAST(nq.n AS DOUBLE))
+                   * sqrt(CAST(nv.n AS DOUBLE))), 6) AS cosine
+      FROM {name}_dots t
+      JOIN {name}_norms nq ON nq.vec_id = t.query_id
+      JOIN {name}_norms nv ON nv.vec_id = t.vec_id
     )
-    return (
-        pairs.select("query_id", "vec_id", cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-    )
+  ) WHERE rank <= {k}
+)"""
 
 
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -139,6 +238,29 @@ def _recall_vs_exact(exact: DataFrame,
     return out
 
 
+def _recall_sql(exact: str, approx_runs: list[tuple[int, str]],
+                label_col: str) -> str:
+    """DuckDB twin of :func:`_recall_vs_exact`: the final SELECT over
+    the exact top-k CTE ``exact`` and one (setting, top-k CTE name)
+    pair per approximate run."""
+    settings = ", ".join(str(s) for s, _ in approx_runs)
+    runs = "\n  UNION ALL\n".join(
+        f"  SELECT {s} AS {label_col}, query_id, vec_id FROM {cte}"
+        for s, cte in approx_runs)
+    return f"""
+SELECT e.query_id, s.{label_col},
+       CAST(count(t.vec_id) AS BIGINT) AS n_hits,
+       CAST(count(t.vec_id) AS DOUBLE) / {TOP_K} AS recall
+FROM {exact} e
+CROSS JOIN (SELECT CAST(unnest([{settings}]) AS INT) AS {label_col}) s
+LEFT JOIN (
+{runs}
+) t ON t.query_id = e.query_id AND t.vec_id = e.vec_id
+   AND t.{label_col} = s.{label_col}
+GROUP BY 1, 2
+"""
+
+
 def emb_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of prefix-truncated embeddings vs the full-dimension
     ground truth — the quality gate for Matryoshka-style dimension
@@ -160,100 +282,17 @@ def emb_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mrl_topk_cte(dim: int) -> str:
-    return f"""
-mdots{dim} AS (
-  SELECT a.vec_id AS query_id, b.vec_id AS vec_id, sum(a.v * b.v) AS dot
-  FROM qv a JOIN qv b ON a.d = b.d AND a.vec_id <> b.vec_id
-  WHERE a.vec_id < {N_QUERIES} AND a.d <= {dim}
-  GROUP BY 1, 2
-),
-mnorm{dim} AS (
-  SELECT vec_id, sum(v * v) AS n FROM qv WHERE d <= {dim} GROUP BY 1
-),
-mtopk{dim} AS (
-  SELECT query_id, vec_id FROM (
-    SELECT mdots{dim}.query_id AS query_id, mdots{dim}.vec_id AS vec_id,
-           row_number() OVER (PARTITION BY mdots{dim}.query_id
-             ORDER BY round(CAST(dot AS DOUBLE)
-               / (sqrt(CAST(nq.n AS DOUBLE)) * sqrt(CAST(nv.n AS DOUBLE))), 6)
-               DESC, mdots{dim}.vec_id) AS rank
-    FROM mdots{dim}
-    JOIN mnorm{dim} nq ON nq.vec_id = mdots{dim}.query_id
-    JOIN mnorm{dim} nv ON nv.vec_id = mdots{dim}.vec_id
-  ) WHERE rank <= {TOP_K}
-)"""
-
-
-EMB_MATRYOSHKA_ORACLE = (f"""
-WITH qv AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) AS d,
-         CAST(round(CAST(unnest(embedding) AS DOUBLE) * {QUANT}) AS BIGINT) AS v
-  FROM embeddings
-),
-norms AS (SELECT vec_id, sum(v * v) AS n FROM qv GROUP BY 1),
-exact_dots AS (
-  SELECT a.vec_id AS query_id, b.vec_id AS vec_id, sum(a.v * b.v) AS dot
-  FROM qv a JOIN qv b ON a.d = b.d AND a.vec_id <> b.vec_id
-  WHERE a.vec_id < {N_QUERIES}
-  GROUP BY 1, 2
-),
-exact_topk AS (
-  SELECT query_id, vec_id FROM (
-    SELECT exact_dots.query_id AS query_id, exact_dots.vec_id AS vec_id,
-           row_number() OVER (PARTITION BY exact_dots.query_id
-             ORDER BY round(CAST(dot AS DOUBLE)
-               / (sqrt(CAST(nq.n AS DOUBLE)) * sqrt(CAST(nv.n AS DOUBLE))), 6)
-               DESC, exact_dots.vec_id) AS rank
-    FROM exact_dots
-    JOIN norms nq ON nq.vec_id = exact_dots.query_id
-    JOIN norms nv ON nv.vec_id = exact_dots.vec_id
-  ) WHERE rank <= {TOP_K}
-),"""
-    + ",".join(_mrl_topk_cte(d) for d in MRL_DIMS) + f"""
-SELECT e.query_id, dims.mrl_dim,
-       CAST(count(t.vec_id) AS BIGINT) AS n_hits,
-       CAST(count(t.vec_id) AS DOUBLE) / {TOP_K} AS recall
-FROM exact_topk e
-CROSS JOIN (SELECT CAST(unnest([{", ".join(str(d) for d in MRL_DIMS)}])
-                   AS INT) AS mrl_dim) dims
-LEFT JOIN (
-""" + "\n  UNION ALL\n".join(
-        f"  SELECT {d} AS mrl_dim, query_id, vec_id FROM mtopk{d}"
-        for d in MRL_DIMS) + """
-) t ON t.query_id = e.query_id AND t.vec_id = e.vec_id
-   AND t.mrl_dim = dims.mrl_dim
-GROUP BY 1, 2
-""")
+EMB_MATRYOSHKA_ORACLE = (
+    f"WITH qv AS ({_qv_sql()}),{_exact_topk_sql('exact_topk')},"
+    + ",".join(f"\nqv{d} AS (SELECT * FROM qv WHERE d <= {d}),"
+               + _exact_topk_sql(f"mtopk{d}", f"qv{d}") for d in MRL_DIMS)
+    + _recall_sql("exact_topk", [(d, f"mtopk{d}") for d in MRL_DIMS],
+                  "mrl_dim"))
 
 
 ANN_TOPK_ORACLE = f"""
-WITH qv AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) AS d,
-         CAST(round(CAST(unnest(embedding) AS DOUBLE) * {QUANT}) AS BIGINT) AS v
-  FROM embeddings
-),
-norms AS (SELECT vec_id, sum(v * v) AS n FROM qv GROUP BY vec_id),
-dots AS (
-  SELECT a.vec_id AS query_id, b.vec_id AS vec_id, sum(a.v * b.v) AS dot
-  FROM qv a JOIN qv b ON a.d = b.d AND a.vec_id <> b.vec_id
-  WHERE a.vec_id < {N_QUERIES}
-  GROUP BY 1, 2
-),
-scored AS (
-  SELECT dots.query_id AS query_id, dots.vec_id AS vec_id,
-         round(CAST(dot AS DOUBLE) /
-               (sqrt(CAST(nq.n AS DOUBLE)) * sqrt(CAST(nv.n AS DOUBLE))), 6)
-         AS cosine
-  FROM dots
-  JOIN norms nq ON nq.vec_id = dots.query_id
-  JOIN norms nv ON nv.vec_id = dots.vec_id
-)
-SELECT query_id, vec_id, cosine, rank FROM (
-  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, vec_id) AS INT) AS rank
-  FROM scored
-) WHERE rank <= {TOP_K}
+WITH qv AS ({_qv_sql()}),{_exact_topk_sql("topk")}
+SELECT query_id, vec_id, cosine, rank FROM topk
 """
 
 
@@ -265,17 +304,7 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 8 sign bits.  Integer arithmetic end-to-end.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    dims = e.select(
-        "vec_id",
-        F.posexplode(F.expr(_QVEC)).alias("d", "v"),
-    )
-    # The N_PLANES signed projections are parallel aggregate expressions
-    # over one pass of the dims — no dims x planes row explosion (8x less
-    # shuffle input; the hash arithmetic stays in codegen either way).
-    proj = dims.groupBy("vec_id").agg(*[
-        F.sum(_signed_coin(f"{p}:")).alias(f"proj{p}")
-        for p in range(N_PLANES)
-    ])
+    proj = _projections(_qdims(e, "vec_id"), N_PLANES)
     bucket = sum(
         (F.when(F.col(f"proj{p}") > 0,
                 F.lit(1 << p).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
@@ -286,18 +315,8 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_LSH_ORACLE = f"""
-WITH qv AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
-         CAST(round(CAST(unnest(embedding) AS DOUBLE) * {QUANT}) AS BIGINT) AS v
-  FROM embeddings
-),
-proj AS (
-  SELECT vec_id, p,
-         sum((CASE WHEN {hash64_sql("CAST(p AS VARCHAR) || ':' || CAST(d AS VARCHAR)")} % 2 = 0
-              THEN 1 ELSE -1 END) * v) AS proj
-  FROM qv, unnest(range(0, {N_PLANES})) AS pl(p)
-  GROUP BY 1, 2
-)
+WITH qv AS ({_qv_sql(d0=True)}),
+proj AS ({_proj_sql(N_PLANES)})
 SELECT vec_id,
        CAST(sum(CASE WHEN proj > 0 THEN 1::BIGINT << p ELSE 0 END) AS BIGINT)
        AS bucket
@@ -315,25 +334,8 @@ def ann_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_BUCKET_STATS_ORACLE = f"""
-WITH qv AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
-         CAST(round(CAST(unnest(embedding) AS DOUBLE) * {QUANT}) AS BIGINT) AS v
-  FROM embeddings
-),
-proj AS (
-  SELECT vec_id, p,
-         sum((CASE WHEN {hash64_sql("CAST(p AS VARCHAR) || ':' || CAST(d AS VARCHAR)")} % 2 = 0
-              THEN 1 ELSE -1 END) * v) AS proj
-  FROM qv, unnest(range(0, {N_PLANES})) AS pl(p)
-  GROUP BY 1, 2
-),
-buckets AS (
-  SELECT vec_id,
-         CAST(sum(CASE WHEN proj > 0 THEN 1::BIGINT << p ELSE 0 END) AS BIGINT)
-         AS bucket
-  FROM proj GROUP BY vec_id
-)
-SELECT bucket, CAST(count(*) AS BIGINT) AS n_vectors FROM buckets GROUP BY 1
+SELECT bucket, CAST(count(*) AS BIGINT) AS n_vectors
+FROM ({ANN_LSH_ORACLE}) GROUP BY 1
 """
 
 
@@ -341,8 +343,7 @@ def emb_label_centroid_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label quantized centroid magnitude — the IVF building block
     (coarse quantizer = per-label mean vector).  Integer sums keep it
     engine-exact; the final scale division is one double op."""
-    e = load_table(spark, sf_dir, "embeddings")
-    dims = e.select("label", F.posexplode(F.expr(_QVEC)).alias("d", "v"))
+    dims = _qdims(load_table(spark, sf_dir, "embeddings"), "label")
     return (
         dims.groupBy("label", "d")
         .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
@@ -355,11 +356,7 @@ def emb_label_centroid_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 EMB_CENTROID_ORACLE = f"""
-WITH qv AS (
-  SELECT label, generate_subscripts(embedding, 1) AS d,
-         CAST(round(CAST(unnest(embedding) AS DOUBLE) * {QUANT}) AS BIGINT) AS v
-  FROM embeddings
-),
+WITH qv AS ({_qv_sql("label")}),
 per_dim AS (
   SELECT label, d, sum(v) AS s, count(*) AS n FROM qv GROUP BY 1, 2
 )
@@ -409,7 +406,7 @@ def emb_silhouette_simplified(spark: SparkSession, sf_dir: str) \
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.expr(_QVEC).alias("qv")
     ).transform(cut_lineage, eager=True)
-    dims = e.select("vec_id", "label", F.posexplode("qv").alias("d", "v"))
+    dims = _qdims(e, "vec_id", "label", vec="qv")
     cent = dims.groupBy(F.col("label").alias("c"), "d").agg(
         F.sum("v").alias("s"), F.count(F.lit(1)).alias("nc"))
     cstat = cent.groupBy("c").agg(
@@ -452,12 +449,7 @@ def emb_silhouette_simplified(spark: SparkSession, sf_dir: str) \
 
 
 SILHOUETTE_ORACLE = f"""
-WITH dims AS (
-  SELECT vec_id, label, generate_subscripts(embedding, 1) AS d,
-         CAST(round(CAST(unnest(embedding) AS DOUBLE) * {QUANT}) AS BIGINT)
-           AS v
-  FROM embeddings
-),
+WITH dims AS ({_qv_sql("vec_id, label")}),
 cent AS (
   SELECT label AS c, d, CAST(sum(v) AS BIGINT) AS s,
          CAST(count(*) AS BIGINT) AS nc
@@ -505,10 +497,10 @@ FROM sm GROUP BY 1
 """
 
 
-def _ivf_cells(spark: SparkSession, sf_dir: str, nprobe: int):
-    """Coarse-quantizer cell selection shared by the plain IVF search
-    and the composed IVF-PQ index: returns ``(e, cells)`` where ``e``
-    is the checkpointed quantized corpus and ``cells`` the
+def _ivf_index(spark: SparkSession, sf_dir: str):
+    """The IVF index shared by the plain IVF search, its recall harness
+    and the composed IVF-PQ index: returns ``(e, cells)`` where ``e`` is
+    the checkpointed quantized corpus and ``cells(nprobe)`` the
     (query_id, cell) pairs of each query's ``nprobe`` best cells.
 
     The centroid of label L is mean(vectors of L); since cosine is
@@ -524,14 +516,14 @@ def _ivf_cells(spark: SparkSession, sf_dir: str, nprobe: int):
     build.  Centroids, query norms, cell assignment and the candidate
     scan are four consumers of it; without the materialization each one
     re-reads and re-quantizes the embeddings table (six full scans at
-    corpus scale, since Catalyst does not dedupe common subplans).
+    corpus scale, since Catalyst does not dedupe common subplans).  Each
+    query's cells are ranked once; every nprobe setting filters that
+    one ranking.
     """
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.expr(_QVEC).alias("qv0")
     ).transform(cut_lineage, eager=True)
-    dims = e.select(
-        "vec_id", "label", F.posexplode("qv0").alias("d", "v")
-    )
+    dims = _qdims(e, "vec_id", "label", vec="qv0")
     cent = dims.groupBy(F.col("label").alias("c_label"), "d").agg(
         F.sum("v").alias("s")
     )
@@ -558,74 +550,74 @@ def _ivf_cells(spark: SparkSession, sf_dir: str, nprobe: int):
     wa = Window.partitionBy("query_id").orderBy(
         F.col("cell_cos").desc(), F.col("c_label")
     )
-    cells = (
-        assign.withColumn("cr", F.row_number().over(wa))
-        .filter(F.col("cr") <= nprobe)
-        .select("query_id", F.col("c_label").alias("cell"))
-    )
+    ranked = assign.withColumn("cr", F.row_number().over(wa))
+
+    def cells(nprobe: int) -> DataFrame:
+        return ranked.filter(F.col("cr") <= nprobe).select(
+            "query_id", F.col("c_label").alias("cell"))
+
     return e, cells
 
 
-def _ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
-    """IVF-style ANN: cell selection via :func:`_ivf_cells`, then the
-    exact integer-cosine top-k inside the probed cells."""
-    e, cells = _ivf_cells(spark, sf_dir, nprobe)
+def _ivf_topk(e: DataFrame, cells: DataFrame) -> DataFrame:
+    """IVF-style ANN over the index of :func:`_ivf_index`: the exact
+    integer-cosine top-k inside each query's probed ``cells``."""
     q = (
         e.filter(F.col("vec_id") < N_QUERIES)
         .select(F.col("vec_id").alias("query_id"), F.col("qv0").alias("qq"))
         .join(F.broadcast(cells), "query_id")
     )
-    pairs = (
+    return _cosine_topk(
         e.select("vec_id", "label", F.col("qv0").alias("qv"))
         .join(F.broadcast(q),
               (F.col("label") == F.col("cell"))
               & (F.col("vec_id") != F.col("query_id")))
     )
-    cos = _int_cosine("qq", "qv")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
-        pairs.select("query_id", "vec_id", cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-    )
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN at nprobe=1 (fastest, lowest recall)."""
-    return _ivf_topk(spark, sf_dir, nprobe=1)
+    e, cells = _ivf_index(spark, sf_dir)
+    return _ivf_topk(e, cells(1))
 
 
 def ann_ivf_probe2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN at nprobe=2 — the recall/latency dial one notch up."""
-    return _ivf_topk(spark, sf_dir, nprobe=2)
+    e, cells = _ivf_index(spark, sf_dir)
+    return _ivf_topk(e, cells(2))
 
 
 def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of the IVF index vs the brute-force ground truth, per
     query and per nprobe in {1, 2} — the measurement harness that turns
     'approximate' into a number.  recall = |ivf_topk ∩ exact_topk| / k.
+    Both settings search the one index build.
     """
     exact = ann_cosine_topk(spark, sf_dir).select("query_id", "vec_id")
+    e, cells = _ivf_index(spark, sf_dir)
     return _recall_vs_exact(
         exact,
-        [(nprobe, _ivf_topk(spark, sf_dir, nprobe)) for nprobe in (1, 2)],
+        [(nprobe, _ivf_topk(e, cells(nprobe))) for nprobe in (1, 2)],
         "nprobe",
     )
 
 
-#: Shared IVF CTE chain, parameterized by nprobe; ends with a CTE named
-#: ``ivf{nprobe}`` holding that setting's top-k (query_id, vec_id, cosine,
-#: rank).  Kept composable so the recall oracle can stack two settings.
-def _ivf_ctes(nprobe: int) -> str:
+def _ivf_cells_sql(nprobe: int) -> str:
+    """DuckDB ``cells{nprobe}`` CTE: each query's nprobe best cells."""
     return f"""
 cells{nprobe} AS (
   SELECT query_id, c_label AS cell FROM (
     SELECT *, row_number() OVER (PARTITION BY query_id
               ORDER BY cell_cos DESC, c_label) AS cr FROM assign
   ) WHERE cr <= {nprobe}
-),
+)"""
+
+
+#: Shared IVF CTE chain, parameterized by nprobe; ends with a CTE named
+#: ``ivf{nprobe}`` holding that setting's top-k (query_id, vec_id, cosine,
+#: rank).  Kept composable so the recall oracle can stack two settings.
+def _ivf_ctes(nprobe: int) -> str:
+    return _ivf_cells_sql(nprobe) + f""",
 scored{nprobe} AS (
   SELECT c.query_id, b.vec_id,
          round(CAST(sum(a.v * b.v) AS DOUBLE)
@@ -648,11 +640,7 @@ ivf{nprobe} AS (
 
 
 _IVF_BASE = f"""
-WITH qv AS (
-  SELECT vec_id, label, generate_subscripts(embedding, 1) AS d,
-         CAST(round(CAST(unnest(embedding) AS DOUBLE) * {QUANT}) AS BIGINT) AS v
-  FROM embeddings
-),
+WITH qv AS ({_qv_sql("vec_id, label")}),
 cent AS (SELECT label AS c_label, d, sum(v) AS s FROM qv GROUP BY 1, 2),
 cent_norm AS (SELECT c_label, sum(s * s) AS ns FROM cent GROUP BY 1),
 qnorm AS (SELECT vec_id, sum(v * v) AS nq FROM qv
@@ -680,44 +668,10 @@ def _ivf_oracle(nprobe: int) -> str:
 ANN_IVF_ORACLE = _ivf_oracle(1)
 ANN_IVF_PROBE2_ORACLE = _ivf_oracle(2)
 
-#: Exact top-k as a CTE (same pipeline as ANN_TOPK_ORACLE, on the shared
-#: qv/norms CTEs) for the recall measurement.
-_EXACT_TOPK_CTE = f"""
-exact_dots AS (
-  SELECT a.vec_id AS query_id, b.vec_id AS vec_id, sum(a.v * b.v) AS dot
-  FROM qv a JOIN qv b ON a.d = b.d AND a.vec_id <> b.vec_id
-  WHERE a.vec_id < {N_QUERIES}
-  GROUP BY 1, 2
-),
-exact_topk AS (
-  SELECT query_id, vec_id FROM (
-    SELECT exact_dots.query_id AS query_id, exact_dots.vec_id AS vec_id,
-           row_number() OVER (PARTITION BY exact_dots.query_id
-             ORDER BY round(CAST(dot AS DOUBLE)
-               / (sqrt(CAST(nq.n AS DOUBLE)) * sqrt(CAST(nv.n AS DOUBLE))), 6)
-               DESC, exact_dots.vec_id) AS rank
-    FROM exact_dots
-    JOIN norms nq ON nq.vec_id = exact_dots.query_id
-    JOIN norms nv ON nv.vec_id = exact_dots.vec_id
-  ) WHERE rank <= {TOP_K}
-)"""
-
 ANN_IVF_RECALL_ORACLE = (
     _IVF_BASE + "," + _ivf_ctes(1) + "," + _ivf_ctes(2) + ","
-    + _EXACT_TOPK_CTE + f"""
-SELECT e.query_id, np.nprobe,
-       CAST(count(i.vec_id) AS BIGINT) AS n_hits,
-       CAST(count(i.vec_id) AS DOUBLE) / {TOP_K} AS recall
-FROM exact_topk e
-CROSS JOIN (SELECT CAST(unnest([1, 2]) AS INT) AS nprobe) np
-LEFT JOIN (
-  SELECT 1 AS nprobe, query_id, vec_id FROM ivf1
-  UNION ALL
-  SELECT 2 AS nprobe, query_id, vec_id FROM ivf2
-) i ON i.query_id = e.query_id AND i.vec_id = e.vec_id
-   AND i.nprobe = np.nprobe
-GROUP BY 1, 2
-""")
+    + _exact_topk_sql("exact_topk")
+    + _recall_sql("exact_topk", [(1, "ivf1"), (2, "ivf2")], "nprobe"))
 
 
 KM_K = 8        # k-means cluster count
@@ -754,7 +708,7 @@ def _kmeans_pipeline(spark: SparkSession, sf_dir: str):
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.expr(_QVEC).alias("qv0")
     ).transform(cut_lineage, eager=True)
-    dims = e.select("vec_id", F.posexplode("qv0").alias("d", "v"))
+    dims = _qdims(e, "vec_id", vec="qv0")
     vnorm = dims.groupBy("vec_id").agg(
         F.sum(F.col("v") * F.col("v")).alias("nv")
     )
@@ -854,11 +808,7 @@ def _kmeans_assign_ctes() -> str:
     cluster per vec) — the prefix of both the k-means oracle and the
     semantic-dedup oracle."""
     parts = [f"""
-WITH qv AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) AS d,
-         CAST(round(CAST(unnest(embedding) AS DOUBLE) * {QUANT}) AS BIGINT) AS v
-  FROM embeddings
-),
+WITH qv AS ({_qv_sql()}),
 vnorm AS (SELECT vec_id, sum(v * v) AS nv FROM qv GROUP BY 1),
 seeds AS (
   SELECT vec_id, CAST(r - 1 AS INT) AS cluster FROM (
@@ -1185,9 +1135,7 @@ def _pq_state(spark: SparkSession, sf_dir: str):
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.expr(_QVEC).alias("qv0")
     )
-    dims = e.select(
-        "vec_id", F.posexplode("qv0").alias("d", "v")
-    ).select(
+    dims = _qdims(e, "vec_id", vec="qv0").select(
         "vec_id", (F.col("d") / PQ_SUB).cast("int").alias("m"), "d", "v"
     ).transform(cut_lineage, eager=True)
     vnorm = dims.groupBy("vec_id", "m").agg(
@@ -1313,13 +1261,20 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     dims, vnorm, cent, msize, assign = _pq_state(spark, sf_dir)
     lut = _pq_query_lut(dims, vnorm, cent, msize)
-    adc = (
+    return _adc_topk(
         assign.select("vec_id", "m", "code")
         .join(F.broadcast(lut), ["m", "code"])
         .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("lut_milli").alias("adc_milli"))
     )
+
+
+def _adc_topk(scan: DataFrame) -> DataFrame:
+    """Each query's TOP_K candidates by ADC distance, the sum of the
+    candidate's ``lut_milli`` entries over the ``scan`` rows
+    (query_id, vec_id, lut_milli), ties on vec_id:
+    ``(query_id, vec_id, rank, adc_milli)``."""
+    adc = scan.groupBy("query_id", "vec_id").agg(
+        F.sum("lut_milli").alias("adc_milli"))
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc_milli").asc(), F.col("vec_id")
     )
@@ -1381,26 +1336,17 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs; the LUT broadcasts; one partial-agg shuffle, then the
     per-query top-k window.
     """
-    e, cells = _ivf_cells(spark, sf_dir, IVFPQ_NPROBE)
+    e, cells = _ivf_index(spark, sf_dir)
     dims, vnorm, cent, msize, assign = _pq_state(spark, sf_dir)
     lut = _pq_query_lut(dims, vnorm, cent, msize)
     labels = e.select("vec_id", "label")
-    adc = (
+    return _adc_topk(
         assign.select("vec_id", "m", "code")
         .join(labels, "vec_id")
-        .join(F.broadcast(cells), F.col("label") == F.col("cell"))
+        .join(F.broadcast(cells(IVFPQ_NPROBE)),
+              F.col("label") == F.col("cell"))
         .filter(F.col("vec_id") != F.col("query_id"))
         .join(F.broadcast(lut), ["query_id", "m", "code"])
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("lut_milli").alias("adc_milli"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_milli").asc(), F.col("vec_id")
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id", "rank", "adc_milli")
     )
 
 
@@ -1459,9 +1405,7 @@ def emb_coreset_maxmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.expr(_QVEC).alias("qv")
     )
-    nv = F.expr("aggregate(transform(qv, x -> x * x), "
-                "cast(0 as bigint), (acc, v) -> acc + v)")
-    base = e.select("vec_id", "qv", nv.alias("nv")) \
+    base = e.select("vec_id", "qv", _norm2("qv").alias("nv")) \
         .transform(cut_lineage, eager=True)
     seed_h = hash64(F.concat(F.lit("coreset:"),
                              F.col("vec_id").cast("string")))
@@ -1505,13 +1449,8 @@ def emb_coreset_maxmin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _coreset_oracle() -> str:
-    qv = (f"CAST(round(CAST(unnest(embedding) AS DOUBLE) * {QUANT}) "
-          "AS BIGINT)")
     parts = [f"""
-WITH dims AS MATERIALIZED (
-  SELECT vec_id, generate_subscripts(embedding, 1) AS d, {qv} AS v
-  FROM embeddings
-),
+WITH dims AS MATERIALIZED ({_qv_sql()}),
 nrm AS MATERIALIZED (SELECT vec_id, sum(v * v) AS nv FROM dims GROUP BY 1),
 seed AS (
   SELECT vec_id FROM (
@@ -1559,11 +1498,7 @@ def _pq_ctes() -> str:
     """The WITH-body training the PQ codebooks (mirrors ``_pq_state``)."""
     score = _PQ_SCORE
     return f"""
-WITH raw AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) AS d,
-         CAST(round(CAST(unnest(embedding) AS DOUBLE) * {QUANT}) AS BIGINT) AS v
-  FROM embeddings
-),
+WITH raw AS ({_qv_sql()}),
 dims AS (
   SELECT vec_id, CAST((d - 1) // {PQ_SUB} AS INT) AS m, d, v FROM raw
 ),
@@ -1633,7 +1568,10 @@ FROM assign1 a JOIN vnorm n ON a.vec_id = n.vec_id AND a.m = n.m
 """
 
 
-ANN_PQ_ADC_ORACLE = _pq_ctes() + f""",
+#: DuckDB twin of :func:`_pq_query_lut` over the :func:`_pq_ctes`
+#: codebook: the per-query lookup table ``lut`` (query_id, m, code,
+#: lut_milli).
+_PQ_LUT_CTES = f"""
 qd AS (
   SELECT vec_id AS query_id, m, d, v FROM dims WHERE vec_id < {N_QUERIES}
 ),
@@ -1654,20 +1592,32 @@ lut AS (
   JOIN cnorm1 USING (m, code)
   JOIN msize1 USING (m, code)
   JOIN qn USING (query_id, m)
-),
-adc AS (
-  SELECT l.query_id, a.vec_id, CAST(sum(l.lut_milli) AS BIGINT) AS adc_milli
-  FROM assign1 a JOIN lut l ON a.m = l.m AND a.code = l.code
-  WHERE a.vec_id <> l.query_id
-  GROUP BY 1, 2
-)
+)"""
+
+#: The flat PQ scan: every coded vector but the query, with its LUT entry.
+_PQ_SCAN_SQL = """SELECT l.query_id, a.vec_id, l.lut_milli
+      FROM assign1 a JOIN lut l ON a.m = l.m AND a.code = l.code
+      WHERE a.vec_id <> l.query_id"""
+
+
+def _adc_topk_sql(scan: str) -> str:
+    """DuckDB twin of :func:`_adc_topk` over the ``scan`` query's
+    (query_id, vec_id, lut_milli) rows."""
+    return f"""
 SELECT query_id, vec_id, CAST(r AS INT) AS rank, adc_milli FROM (
   SELECT query_id, vec_id, adc_milli,
          row_number() OVER (PARTITION BY query_id
                             ORDER BY adc_milli, vec_id) AS r
-  FROM adc
-) WHERE r <= {TOP_K}
-"""
+  FROM (
+    SELECT query_id, vec_id, CAST(sum(lut_milli) AS BIGINT) AS adc_milli
+    FROM ({scan})
+    GROUP BY 1, 2
+  )
+) WHERE r <= {TOP_K}"""
+
+
+ANN_PQ_ADC_ORACLE = (_pq_ctes() + "," + _PQ_LUT_CTES
+                     + _adc_topk_sql(_PQ_SCAN_SQL) + "\n")
 
 
 def _ivfpq_oracle() -> str:
@@ -1677,91 +1627,22 @@ def _ivfpq_oracle() -> str:
     ivf_body = _IVF_BASE.strip()
     assert ivf_body.startswith("WITH ")
     ivf_body = ivf_body[len("WITH "):]
-    return _pq_ctes() + ",\n" + ivf_body + f""",
-cells_p AS (
-  SELECT query_id, c_label AS cell FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-              ORDER BY cell_cos DESC, c_label) AS cr FROM assign
-  ) WHERE cr <= {IVFPQ_NPROBE}
-),
-qd AS (
-  SELECT vec_id AS query_id, m, d, v FROM dims WHERE vec_id < {N_QUERIES}
-),
-qdots AS (
-  SELECT q.query_id, q.m, c.code, sum(q.v * c.s) AS dot
-  FROM qd q JOIN cent1 c ON q.m = c.m AND q.d = c.d
-  GROUP BY 1, 2, 3
-),
-qn AS (
-  SELECT vec_id AS query_id, m, nv AS nq
-  FROM vnorm WHERE vec_id < {N_QUERIES}
-),
-lut AS (
-  SELECT query_id, m, code,
-         CAST(round((CAST(nq AS DOUBLE) + {_PQ_SCORE}) * 1000.0) AS BIGINT)
-           AS lut_milli
-  FROM qdots
-  JOIN cnorm1 USING (m, code)
-  JOIN msize1 USING (m, code)
-  JOIN qn USING (query_id, m)
-),
-adc_p AS (
-  SELECT c.query_id, a.vec_id, CAST(sum(l.lut_milli) AS BIGINT) AS adc_milli
-  FROM assign1 a
-  JOIN embeddings e ON a.vec_id = e.vec_id
-  JOIN cells_p c ON c.cell = e.label
-  JOIN lut l ON a.m = l.m AND a.code = l.code
-            AND l.query_id = c.query_id
-  WHERE a.vec_id <> c.query_id
-  GROUP BY 1, 2
-)
-SELECT query_id, vec_id, CAST(r AS INT) AS rank, adc_milli FROM (
-  SELECT query_id, vec_id, adc_milli,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY adc_milli, vec_id) AS r
-  FROM adc_p
-) WHERE r <= {TOP_K}
-"""
+    return (_pq_ctes() + ",\n" + ivf_body + ","
+            + _ivf_cells_sql(IVFPQ_NPROBE) + "," + _PQ_LUT_CTES
+            + _adc_topk_sql(f"""SELECT c.query_id, a.vec_id, l.lut_milli
+      FROM assign1 a
+      JOIN embeddings e ON a.vec_id = e.vec_id
+      JOIN cells{IVFPQ_NPROBE} c ON c.cell = e.label
+      JOIN lut l ON a.m = l.m AND a.code = l.code
+                AND l.query_id = c.query_id
+      WHERE a.vec_id <> c.query_id""") + "\n")
 
 
 ANN_IVFPQ_ORACLE = _ivfpq_oracle()
 
 
-ANN_PQ_RECALL_ORACLE = _pq_ctes() + f""",
-qd AS (
-  SELECT vec_id AS query_id, m, d, v FROM dims WHERE vec_id < {N_QUERIES}
-),
-qdots AS (
-  SELECT q.query_id, q.m, c.code, sum(q.v * c.s) AS dot
-  FROM qd q JOIN cent1 c ON q.m = c.m AND q.d = c.d
-  GROUP BY 1, 2, 3
-),
-qn AS (
-  SELECT vec_id AS query_id, m, nv AS nq
-  FROM vnorm WHERE vec_id < {N_QUERIES}
-),
-lut AS (
-  SELECT query_id, m, code,
-         CAST(round((CAST(nq AS DOUBLE) + {_PQ_SCORE}) * 1000.0) AS BIGINT)
-           AS lut_milli
-  FROM qdots
-  JOIN cnorm1 USING (m, code)
-  JOIN msize1 USING (m, code)
-  JOIN qn USING (query_id, m)
-),
-adc AS (
-  SELECT l.query_id, a.vec_id, CAST(sum(l.lut_milli) AS BIGINT) AS adc_milli
-  FROM assign1 a JOIN lut l ON a.m = l.m AND a.code = l.code
-  WHERE a.vec_id <> l.query_id
-  GROUP BY 1, 2
-),
-adck AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY adc_milli, vec_id) AS r
-    FROM adc
-  ) WHERE r <= {TOP_K}
+ANN_PQ_RECALL_ORACLE = _pq_ctes() + "," + _PQ_LUT_CTES + f""",
+adck AS ({_adc_topk_sql(_PQ_SCAN_SQL)}
 ),
 tot AS (SELECT vec_id, sum(nv) AS nv FROM vnorm GROUP BY 1),
 dotsq AS (
@@ -1778,14 +1659,7 @@ exact AS (
     JOIN tot tq ON tq.vec_id = d.query_id
     JOIN tot ta ON ta.vec_id = d.vec_id
   ) WHERE r <= {TOP_K}
-)
-SELECT e.query_id, CAST({TOP_K} AS INT) AS k,
-       CAST(count(t.vec_id) AS BIGINT) AS n_hits,
-       CAST(count(t.vec_id) AS DOUBLE) / {TOP_K} AS recall
-FROM exact e
-LEFT JOIN adck t ON t.query_id = e.query_id AND t.vec_id = e.vec_id
-GROUP BY 1
-"""
+)""" + _recall_sql("exact", [(TOP_K, "adck")], "k")
 
 HYBRID_QUERY_VEC = 0  # the query embedding: vec_id 0 (ANN-query idiom)
 
@@ -1827,11 +1701,7 @@ def _hybrid_oracle() -> str:
     from .text import BM25_ORACLE
     return f"""
 WITH cand AS ({BM25_ORACLE}),
-hq AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) AS d,
-         CAST(round(CAST(unnest(embedding) AS DOUBLE) * {QUANT}) AS BIGINT) AS v
-  FROM embeddings
-),
+hq AS ({_qv_sql()}),
 hn AS (SELECT vec_id, sum(v * v) AS nv FROM hq GROUP BY 1),
 qry AS (SELECT d, v FROM hq WHERE vec_id = {HYBRID_QUERY_VEC}),
 qn AS (SELECT sum(v * v) AS nq FROM qry)
@@ -1928,20 +1798,7 @@ def rank_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k did the heavy lifting); relevance labels join k doc_ids
     against the documents scan (semi-join pruned).
     """
-    from .text import BM25_QUERY, tokens
-
-    ranked = hybrid_search_rrf(spark, sf_dir)
-    wr = Window.orderBy(F.col("rrf").desc(), F.col("doc_id"))
-    ranked = ranked.withColumn(
-        "rrf_rank", F.row_number().over(wr).cast("int"))
-    d = load_table(spark, sf_dir, "documents")
-    rel_expr = sum(
-        F.when(F.array_contains(tokens(F.col("text")), t), 1)
-        .otherwise(0)
-        for t in BM25_QUERY
-    ).cast("int")
-    cand = ranked.join(
-        d.select("doc_id", rel_expr.alias("rel")), "doc_id")
+    cand = _ranked_with_rel(spark, sf_dir)
     gain = F.expr("CAST(shiftleft(CAST(1 AS BIGINT), rel) - 1 "
                   "AS BIGINT)")
     wi = Window.orderBy(F.col("rel").desc(), F.col("doc_id"))
@@ -1979,11 +1836,6 @@ def rank_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ndcg_oracle() -> str:
-    from .text import _TOKENS_SQL, BM25_QUERY
-
-    rel_sql = " + ".join(
-        f"(CASE WHEN list_contains({_TOKENS_SQL}, '{t}') "
-        f"THEN 1 ELSE 0 END)" for t in BM25_QUERY)
     disc_csv = ", ".join(str(x) for x in _NDCG_DISC_MICRO)
 
     def dcg_sql(col: str) -> str:
@@ -1997,30 +1849,19 @@ def _ndcg_oracle() -> str:
         f"(1000000 * d_{name}) // idcg AS ndcg_ppm FROM agg"
         for name in ["bm25", "cosine", "rrf"]
     )
-    return f"""
-WITH r AS ({_hybrid_rrf_oracle()}),
-rr AS (
-  SELECT doc_id, bm25_rank, cos_rank,
-         CAST(row_number() OVER (ORDER BY rrf DESC, doc_id) AS INT)
-           AS rrf_rank
-  FROM r
-),
-rel AS (
-  SELECT doc_id, CAST({rel_sql} AS INT) AS rel FROM documents
-),
-cand AS (
-  SELECT rr.*, rel.rel,
-         CAST((1 << rel.rel) - 1 AS BIGINT) AS gain,
-         CAST(row_number() OVER (ORDER BY rel.rel DESC, rr.doc_id)
-              AS INT) AS ideal_rank
-  FROM rr JOIN rel USING (doc_id)
+    return f"""{_ranked_rel_oracle_ctes()},
+gained AS (
+  SELECT cand.*, CAST((1 << rel) - 1 AS BIGINT) AS gain,
+         CAST(row_number() OVER (ORDER BY rel DESC, doc_id) AS INT)
+           AS ideal_rank
+  FROM cand
 ),
 agg AS (
   SELECT {dcg_sql("bm25_rank")} AS d_bm25,
          {dcg_sql("cos_rank")} AS d_cosine,
          {dcg_sql("rrf_rank")} AS d_rrf,
          {dcg_sql("ideal_rank")} AS idcg
-  FROM cand
+  FROM gained
 )
 {legs}
 """
@@ -2033,17 +1874,20 @@ agg AS (
 REL_MIN = 2
 
 
-def _ranked_with_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate pool with all three retrieval ranks + the graded
-    relevance label — the shared scaffold of the ranking-eval suite
-    (:func:`rank_ndcg_eval` builds the same frame inline; kept separate
-    so the graded row's plan stays byte-identical)."""
-    from .text import BM25_QUERY, tokens
-
+def _rrf_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The candidate pool with its bm25, cosine and RRF ranks."""
     ranked = hybrid_search_rrf(spark, sf_dir)
     wr = Window.orderBy(F.col("rrf").desc(), F.col("doc_id"))
-    ranked = ranked.withColumn(
+    return ranked.withColumn(
         "rrf_rank", F.row_number().over(wr).cast("int"))
+
+
+def _ranked_with_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Candidate pool with all three retrieval ranks + the graded
+    relevance label — the shared scaffold of the ranking-eval suite."""
+    from .text import BM25_QUERY, tokens
+
+    ranked = _rrf_ranked(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
     rel_expr = sum(
         F.when(F.array_contains(tokens(F.col("text")), t), 1)
@@ -2055,8 +1899,8 @@ def _ranked_with_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ranked_rel_oracle_ctes() -> str:
-    """The rr/rel/cand CTE prefix shared by the MRR and MAP oracles
-    (mirrors the scaffold inside :func:`_ndcg_oracle`)."""
+    """The rr/rel/cand CTE prefix of the ranking-eval oracles (twin of
+    :func:`_rrf_ranked` and :func:`_ranked_with_rel`)."""
     from .text import _TOKENS_SQL, BM25_QUERY
 
     rel_sql = " + ".join(
@@ -2331,10 +2175,7 @@ def rank_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same bounded-pool argument as the whole rank-eval suite; the
     corpus-sized work happened in the candidate generators.
     """
-    ranked = hybrid_search_rrf(spark, sf_dir)
-    wr = Window.orderBy(F.col("rrf").desc(), F.col("doc_id"))
-    pool = ranked.withColumn(
-        "rrf_rank", F.row_number().over(wr).cast("int")).select(
+    pool = _rrf_ranked(spark, sf_dir).select(
         "doc_id", "bm25_rank", "cos_rank", "rrf_rank")
     a = pool.select(F.col("doc_id").alias("id_a"),
                     F.col("bm25_rank").alias("b_a"),
@@ -2462,14 +2303,7 @@ def _kendall_oracle() -> str:
         for name, col in [("bm25_cosine", "c_bc"), ("bm25_rrf", "c_br"),
                           ("cosine_rrf", "c_cr")]
     )
-    return f"""
-WITH r AS ({_hybrid_rrf_oracle()}),
-rr AS (
-  SELECT doc_id, bm25_rank, cos_rank,
-         CAST(row_number() OVER (ORDER BY rrf DESC, doc_id) AS INT)
-           AS rrf_rank
-  FROM r
-),
+    return f"""{_ranked_rel_oracle_ctes()},
 pairs AS (
   SELECT CAST(a.bm25_rank < b.bm25_rank AS INT) AS pb,
          CAST(a.cos_rank < b.cos_rank AS INT) AS pc,
@@ -2501,9 +2335,7 @@ def emb_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "label", F.expr(_QVEC).alias("qv")
     )
-    n2 = F.expr("aggregate(transform(qv, x -> x * x), "
-                "cast(0 as bigint), (acc, v) -> acc + v)")
-    per = e.select("label", n2.alias("n2"))
+    per = e.select("label", _norm2("qv").alias("n2"))
     agg = per.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_vecs"),
         F.min("n2").alias("min_norm2"),
@@ -2517,11 +2349,7 @@ def emb_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 EMB_NORM_ORACLE = f"""
-WITH q AS (
-  SELECT vec_id, label,
-         CAST(round(CAST(unnest(embedding) AS DOUBLE) * {QUANT}) AS BIGINT) AS v
-  FROM embeddings
-),
+WITH q AS ({_qv_sql("vec_id, label")}),
 norms AS (SELECT vec_id, label, sum(v * v) AS n2 FROM q GROUP BY 1, 2)
 SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
        CAST(min(n2) AS BIGINT) AS min_norm2,
@@ -2789,12 +2617,7 @@ def emb_outlier_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 EMB_OUTLIER_ORACLE = f"""
-WITH qv AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) AS d,
-         CAST(round(CAST(unnest(embedding) AS DOUBLE) * {QUANT}) AS BIGINT)
-           AS v
-  FROM embeddings
-),
+WITH qv AS ({_qv_sql()}),
 d2 AS (
   SELECT a.vec_id AS query_id, b.vec_id AS vec_id,
          sum((a.v - b.v) * (a.v - b.v)) AS d2
@@ -2832,10 +2655,7 @@ def emb_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side combined, |labels|·|dims| groups) and a |labels|-row
     rollup.  No broadcast, no window, nothing driver-side.
     """
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label",
-        F.posexplode(F.expr(_QVEC)).alias("d", "v"),
-    )
+    e = _qdims(load_table(spark, sf_dir, "embeddings"), "vec_id", "label")
     per_dim = e.groupBy("label", "d").agg(
         F.sum(F.when(F.col("vec_id") % 2 == 0, F.col("v"))
               .otherwise(0)).alias("sa"),
@@ -2864,12 +2684,7 @@ def emb_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CENTROID_DRIFT_ORACLE = f"""
-WITH qv AS (
-  SELECT vec_id, label, generate_subscripts(embedding, 1) AS d,
-         CAST(round(CAST(unnest(embedding) AS DOUBLE) * {QUANT}) AS BIGINT)
-           AS v
-  FROM embeddings
-),
+WITH qv AS ({_qv_sql("vec_id, label")}),
 per_dim AS (
   SELECT label, d,
          sum(CASE WHEN vec_id % 2 = 0 THEN v ELSE 0 END) AS sa,
@@ -2898,32 +2713,10 @@ FROM rolled r JOIN counts c ON r.label = c.label
 
 
 KNN_LABEL_VOTE_ORACLE = f"""
-WITH qv AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) AS d,
-         CAST(round(CAST(unnest(embedding) AS DOUBLE) * {QUANT}) AS BIGINT)
-           AS v
-  FROM embeddings
-),
-labels AS (SELECT vec_id, label FROM embeddings),
-norms AS (SELECT vec_id, sum(v * v) AS n FROM qv GROUP BY 1),
-dots AS (
-  SELECT a.vec_id AS query_id, b.vec_id AS vec_id, sum(a.v * b.v) AS dot
-  FROM qv a JOIN qv b ON a.d = b.d
-  WHERE a.vec_id < {KNN_N_QUERIES} AND b.vec_id >= {KNN_N_QUERIES}
-  GROUP BY 1, 2
-),
-topk AS (
-  SELECT query_id, vec_id FROM (
-    SELECT dots.query_id AS query_id, dots.vec_id AS vec_id,
-           row_number() OVER (PARTITION BY dots.query_id
-             ORDER BY round(CAST(dot AS DOUBLE)
-               / (sqrt(CAST(nq.n AS DOUBLE)) * sqrt(CAST(nv.n AS DOUBLE))),
-               6) DESC, dots.vec_id) AS rank
-    FROM dots
-    JOIN norms nq ON nq.vec_id = dots.query_id
-    JOIN norms nv ON nv.vec_id = dots.vec_id
-  ) WHERE rank <= {KNN_K}
-),
+WITH qv AS ({_qv_sql()}),
+labels AS (SELECT vec_id, label FROM embeddings),{_exact_topk_sql(
+    "topk", pairs=f"a.vec_id < {KNN_N_QUERIES} AND b.vec_id >= {KNN_N_QUERIES}",
+    k=KNN_K)},
 votes AS (
   SELECT t.query_id, l.label, count(*) AS votes
   FROM topk t JOIN labels l ON l.vec_id = t.vec_id
@@ -3050,39 +2843,10 @@ SELECT query_id, vec_id, hamming, rank FROM htopk
 """
 
 
-ANN_HAMMING_RECALL_ORACLE = f"""
-WITH qv AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) AS d,
-         CAST(round(CAST(unnest(embedding) AS DOUBLE) * {QUANT}) AS BIGINT) AS v
-  FROM embeddings
-),
-norms AS (SELECT vec_id, sum(v * v) AS n FROM qv GROUP BY vec_id),
-dots AS (
-  SELECT a.vec_id AS query_id, b.vec_id AS vec_id, sum(a.v * b.v) AS dot
-  FROM qv a JOIN qv b ON a.d = b.d AND a.vec_id <> b.vec_id
-  WHERE a.vec_id < {N_QUERIES}
-  GROUP BY 1, 2
-),
-exact_topk AS (
-  SELECT query_id, vec_id FROM (
-    SELECT dots.query_id AS query_id, dots.vec_id AS vec_id,
-           row_number() OVER (PARTITION BY dots.query_id
-             ORDER BY round(CAST(dot AS DOUBLE)
-               / (sqrt(CAST(nq.n AS DOUBLE)) * sqrt(CAST(nv.n AS DOUBLE))), 6)
-               DESC, dots.vec_id) AS rank
-    FROM dots
-    JOIN norms nq ON nq.vec_id = dots.query_id
-    JOIN norms nv ON nv.vec_id = dots.vec_id
-  ) WHERE rank <= {TOP_K}
-),
-{_HAMMING_CODES_CTE}
-SELECT e.query_id, CAST({_SIGN_BITS} AS INT) AS n_bits,
-       CAST(count(t.vec_id) AS BIGINT) AS n_hits,
-       CAST(count(t.vec_id) AS DOUBLE) / {TOP_K} AS recall
-FROM exact_topk e
-LEFT JOIN htopk t ON t.query_id = e.query_id AND t.vec_id = e.vec_id
-GROUP BY 1
-"""
+ANN_HAMMING_RECALL_ORACLE = (
+    f"WITH qv AS ({_qv_sql()}),{_exact_topk_sql('exact_topk')},"
+    + _HAMMING_CODES_CTE
+    + _recall_sql("exact_topk", [(_SIGN_BITS, "htopk")], "n_bits"))
 
 
 MMR_POOL = 24   # relevance-ranked candidate window fed to the reranker
@@ -3161,13 +2925,8 @@ def emb_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mmr_oracle() -> str:
-    qv = (f"CAST(round(CAST(unnest(embedding) AS DOUBLE) * {QUANT}) "
-          "AS BIGINT)")
     head = f"""
-WITH dims AS MATERIALIZED (
-  SELECT vec_id, generate_subscripts(embedding, 1) AS d, {qv} AS v
-  FROM embeddings
-),
+WITH dims AS MATERIALIZED ({_qv_sql()}),
 pool AS MATERIALIZED (
   SELECT vec_id, rel FROM (
     SELECT a.vec_id, sum(a.v * q.v) AS rel,
@@ -3244,10 +3003,7 @@ def emb_rp_distance_preserve(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic is integer (quantized components, integer projections,
     integer div) — exact in both engines.
     """
-    e = load_table(spark, sf_dir, "embeddings")
-    dims = e.select(
-        "vec_id", F.posexplode(F.expr(_QVEC)).alias("d", "v")
-    ).where(
+    dims = _qdims(load_table(spark, sf_dir, "embeddings"), "vec_id").where(
         (F.col("vec_id") % JL_PAIR_STEP == 0)
         | (F.col("vec_id") % JL_PAIR_STEP == 1)
     )
@@ -3262,10 +3018,7 @@ def emb_rp_distance_preserve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(diff * diff).alias("orig_d2"))
     )
     # The ``jl:`` prefix keeps the JL planes independent of the LSH ones.
-    proj = dims.groupBy("vec_id").agg(*[
-        F.sum(_signed_coin(f"jl:{p}:")).alias(f"proj{p}")
-        for p in range(K_JL)
-    ])
+    proj = _projections(dims, K_JL, "jl:")
     pa = proj.where(F.col("vec_id") % JL_PAIR_STEP == 0).select(
         F.col("vec_id").alias("a_id"),
         *[F.col(f"proj{p}").alias(f"pa{p}") for p in range(K_JL)])
@@ -3293,16 +3046,9 @@ def emb_rp_distance_preserve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _jl_oracle() -> str:
-    key = "'jl:' || CAST(p AS VARCHAR) || ':' || CAST(d AS VARCHAR)"
-    sign = (f"(CASE WHEN {hash64_sql(key)} % 2 = 0 "
-            "THEN 1 ELSE -1 END)")
     return f"""
-WITH qv AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
-         CAST(round(CAST(unnest(embedding) AS DOUBLE) * {QUANT}) AS BIGINT) AS v
-  FROM embeddings
-  WHERE vec_id % {JL_PAIR_STEP} IN (0, 1)
-),
+WITH qv AS ({_qv_sql(d0=True)}
+            WHERE vec_id % {JL_PAIR_STEP} IN (0, 1)),
 orig AS (
   SELECT a.vec_id AS a_id, b.vec_id AS b_id,
          sum((a.v - b.v) * (a.v - b.v)) AS orig_d2
@@ -3310,11 +3056,7 @@ orig AS (
   WHERE a.vec_id % {JL_PAIR_STEP} = 0
   GROUP BY 1, 2
 ),
-proj AS (
-  SELECT vec_id, p, sum({sign} * v) AS proj
-  FROM qv, unnest(range(0, {K_JL})) AS pl(p)
-  GROUP BY 1, 2
-),
+proj AS ({_proj_sql(K_JL, "jl:")}),
 pd AS (
   SELECT a.vec_id AS a_id,
          sum((a.proj - b.proj) * (a.proj - b.proj)) AS proj_d2

@@ -53,16 +53,37 @@ _SPLIT_SALT = "split:v1:"
 _TRAIN_CUT, _VAL_CUT = 96, 98  # train <96, val <98, test <100
 
 
-def _split_bucket(doc_id: F.Column) -> F.Column:
-    """bucket = hash64(salt || doc_id) mod 100 — the single split rule."""
+def _split_bucket(key: F.Column, salt: str = _SPLIT_SALT) -> F.Column:
+    """bucket = hash64(salt || key) mod 100 — the single split rule
+    (keyed by doc_id, or by a near-dup cluster id under its own salt)."""
     return F.pmod(
-        hash64(F.concat(F.lit(_SPLIT_SALT), doc_id.cast("string"))),
+        hash64(F.concat(F.lit(salt), key.cast("string"))),
         F.lit(100),
     )
 
 
-_SPLIT_EXPR = f"'{_SPLIT_SALT}' || CAST(doc_id AS VARCHAR)"
-_BUCKET_SQL = f"CAST({hash64_sql(_SPLIT_EXPR)} % 100 AS INT)"
+def _split_label(bucket: F.Column) -> F.Column:
+    """train/val/test label of a split bucket."""
+    return (
+        F.when(bucket < _TRAIN_CUT, F.lit("train"))
+        .when(bucket < _VAL_CUT, F.lit("val"))
+        .otherwise(F.lit("test"))
+    )
+
+
+def _bucket_sql(key: str, salt: str = _SPLIT_SALT) -> str:
+    """DuckDB twin of :func:`_split_bucket` over the SQL column ``key``."""
+    salted = f"'{salt}' || CAST({key} AS VARCHAR)"
+    return f"CAST({hash64_sql(salted)} % 100 AS INT)"
+
+
+def _split_label_sql(bucket: str) -> str:
+    """DuckDB twin of :func:`_split_label`."""
+    return (f"CASE WHEN {bucket} < {_TRAIN_CUT} THEN 'train' "
+            f"WHEN {bucket} < {_VAL_CUT} THEN 'val' ELSE 'test' END")
+
+
+_BUCKET_SQL = _bucket_sql("doc_id")
 
 
 def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

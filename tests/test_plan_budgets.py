@@ -33,7 +33,7 @@ BUDGETS = {
     "graph_triangle_count": 8,
     "graph_common_neighbors_topk": 8,
     "ann_ivf_topk": 9,
-    "ann_ivf_recall": 27,   # +3 r10: spread_scan exchanges (guide 2.5)
+    "ann_ivf_recall": 26,   # measured 26 (both nprobe runs, one index)
     "ann_pq_adc_topk": 18,
     "ann_pq_recall": 24,
     "emb_pq_codes": 9,

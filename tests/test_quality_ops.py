@@ -557,12 +557,13 @@ def test_ivfpq_is_pq_scoring_inside_probed_cells(spark, sf_dir):
     same (query, candidate) pair bit-for-bit."""
     from data_ingestion_worker_spark.operators.similarity import (
         IVFPQ_NPROBE,
-        _ivf_cells,
+        _ivf_index,
         ann_ivfpq_topk,
         ann_pq_adc_topk,
     )
 
-    _e, cells_df = _ivf_cells(spark, sf_dir, IVFPQ_NPROBE)
+    _e, probe = _ivf_index(spark, sf_dir)
+    cells_df = probe(IVFPQ_NPROBE)
     cells = {}
     for r in cells_df.collect():
         cells.setdefault(r["query_id"], set()).add(r["cell"])
@@ -634,3 +635,51 @@ def test_ivfpq_recall_is_priced_against_flat_pq(spark, sf_dir):
     r_flat = recall(ann_pq_adc_topk(spark, sf_dir))
     r_ivfpq = recall(ann_ivfpq_topk(spark, sf_dir))
     assert 0.0 < r_ivfpq <= r_flat + 1e-12, (r_ivfpq, r_flat)
+
+
+def test_quantized_dims_match_python_rounding(spark, sf_dir):
+    """The shared quantized vector, exploded: Spark's ``_qdims`` and its
+    DuckDB twin ``_qv_sql`` (1-based ``d``, and 0-based with ``d0``)
+    must both give ``round(x * QUANT)`` of every embedding component at
+    its position."""
+    import duckdb
+
+    from data_ingestion_worker_spark.operators.similarity import (
+        QUANT,
+        _qdims,
+        _qv_sql,
+    )
+    from data_ingestion_worker_spark.tables import load_table
+
+    e = load_table(spark, sf_dir, "embeddings")
+    want = {(r["vec_id"], i): round(float(x) * QUANT)
+            for r in e.select("vec_id", "embedding").collect()
+            for i, x in enumerate(r["embedding"])}
+    assert len(want) > 1000
+    got = {(r["vec_id"], r["d"]): r["v"]
+           for r in _qdims(e, "vec_id").collect()}
+    assert got == want
+    con = duckdb.connect()
+    con.execute("CREATE VIEW embeddings AS SELECT * FROM "
+                f"'{sf_dir}/embeddings.parquet'")
+    for d0, base in ((False, 1), (True, 0)):
+        rows = con.execute(_qv_sql(d0=d0)).fetchall()
+        assert {(i, d - base): v for i, d, v in rows} == want, d0
+
+
+def test_ivf_recall_checkpoints_the_corpus_once(spark, sf_dir, monkeypatch):
+    """Both nprobe settings of ``ann_ivf_recall`` search one IVF index:
+    the quantized corpus is checkpointed once per call, not once per
+    setting."""
+    from data_ingestion_worker_spark.operators import similarity
+
+    cuts = []
+
+    def counting_cut(df, eager=False):
+        cuts.append(eager)
+        return df.localCheckpoint(eager=eager)
+
+    monkeypatch.setattr(similarity, "cut_lineage", counting_cut)
+    rows = similarity.ann_ivf_recall(spark, sf_dir).collect()
+    assert {r["nprobe"] for r in rows} == {1, 2}
+    assert cuts == [True]
