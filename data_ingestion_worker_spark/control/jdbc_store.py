@@ -17,7 +17,7 @@ Design:
   when the control tables outgrow driver memory.
 - **Transactional publish.** ``overwrite`` and ``delete`` run as single
   commits (autocommit off), giving readers the same all-or-nothing
-  visibility the parquet store's pointer flip provides.
+  visibility the parquet store's commit claim provides.
 - **Quoted lowercase identifiers** everywhere, so JDBC metadata reports
   the exact column names in :data:`SCHEMAS` (Derby would otherwise
   uppercase them) and Spark's quoted INSERT statements line up.

@@ -8,7 +8,7 @@ flows actually need:
 
 - **snapshot isolation per table**: readers see the version current when
   they started; a writer publishes a new immutable version directory and
-  flips a pointer file atomically (os.replace).
+  then atomically claims the next commit record naming it.
 - **set-based MERGE**: ``upsert(keys)`` = anti-join out the matched rows,
   union the updates, publish — one write per table per batch, never the
   reference's per-row commit+refresh (staging_repository.py:105-107,
@@ -21,9 +21,12 @@ flows actually need:
   and only claim ``base+1``; losing the claim means another writer
   committed in between, so the merge is re-derived from the new current
   and retried — a concurrent writer can never silently overwrite another
-  writer's rows (no lost updates).  The latest commit record, not the
-  pointer file, is authoritative for "current": a crash between claim
-  and pointer flip heals on the next read.
+  writer's rows (no lost updates).
+- **the commit log is the only metadata**: the latest commit record
+  names the current version, and the records in sequence order are the
+  history that time travel, restore and vacuum read.  A crash between
+  the parquet write and the claim leaves an uncommitted version
+  directory that no reader sees and vacuum removes first.
 
 On a real deployment this class is swapped for Delta `MERGE INTO` /
 Iceberg row-level ops; every caller goes through read/overwrite/upsert so
@@ -32,7 +35,10 @@ the swap is one file.
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -191,38 +197,31 @@ class ControlStore:
 
     # -- version plumbing ---------------------------------------------------
 
-    def _pointer(self, table: str) -> str:
-        return os.path.join(self.root, table, "_CURRENT")
-
-    def _log_path(self, table: str) -> str:
-        return os.path.join(self.root, table, "_LOG")
-
     def _commits_dir(self, table: str) -> str:
         return os.path.join(self.root, table, "_commits")
 
-    def _latest_commit(self, table: str) -> tuple[int, str | None]:
-        """Highest claimed commit ``(seq, version)``; ``(0, None)`` for a
-        table with no commit records yet (empty or pre-OCC layout)."""
-        import json
-
+    def _commits(self, table: str) -> list[tuple[int, str]]:
+        """``(seq, file name)`` of every claimed commit record, in
+        sequence order."""
         try:
             names = os.listdir(self._commits_dir(table))
         except FileNotFoundError:
-            return (0, None)
-        seq, name = 0, None
-        for n in names:
-            if not n.endswith(".json"):
-                continue
-            try:
-                s = int(n[: -len(".json")])
-            except ValueError:
-                continue
-            if s > seq:
-                seq, name = s, n
-        if name is None:
-            return (0, None)
+            return []
+        seqs = (n[: -len(".json")] for n in names if n.endswith(".json"))
+        return sorted((int(s), f"{s}.json") for s in seqs if s.isdigit())
+
+    def _record(self, table: str, name: str) -> dict:
         with open(os.path.join(self._commits_dir(table), name)) as f:
-            return (seq, json.load(f)["version"])
+            return json.load(f)
+
+    def _latest_commit(self, table: str) -> tuple[int, str | None]:
+        """Highest claimed commit ``(seq, version)``; ``(0, None)`` for a
+        table with no commit records yet."""
+        commits = self._commits(table)
+        if not commits:
+            return (0, None)
+        seq, name = commits[-1]
+        return (seq, self._record(table, name)["version"])
 
     def _claim_commit(self, table: str, seq: int, version: str,
                       operation: str) -> bool:
@@ -232,16 +231,18 @@ class ControlStore:
         slot name: link either succeeds (record appears complete, no torn
         reads) or raises ``FileExistsError`` (another writer owns the
         slot).  This is the single serialization point between writers.
+        The record is fsynced before the link: it is the only source of
+        "current", so a torn record after a power loss would make every
+        read of the table fail.
         """
-        import json
-        import time
-
         cdir = self._commits_dir(table)
         os.makedirs(cdir, exist_ok=True)
         tmp = os.path.join(cdir, f".{uuid.uuid4().hex}.tmp")
         with open(tmp, "w") as f:
             f.write(json.dumps({"version": version, "operation": operation,
                                 "ts": time.time()}))
+            f.flush()
+            os.fsync(f.fileno())
         try:
             os.link(tmp, os.path.join(cdir, f"{seq:08d}.json"))
             return True
@@ -250,54 +251,31 @@ class ControlStore:
         finally:
             os.unlink(tmp)
 
+    def _claim_next(self, table: str, version: str, operation: str) -> None:
+        """Claim the slot after the then-latest commit for a blind write
+        (one that does not depend on the current contents): a lost claim
+        just re-claims the next slot, at most ``_OCC_RETRIES`` times, so a
+        persistent filesystem error surfacing as ``FileExistsError``
+        fails loudly instead of spinning forever."""
+        for _ in range(_OCC_RETRIES):
+            if self._claim_commit(table, self._latest_commit(table)[0] + 1,
+                                  version, operation):
+                return
+        raise RuntimeError(
+            f"{operation}({table}@{version}): could not claim a commit slot "
+            f"after {_OCC_RETRIES} retries — writer contention too high"
+        )
+
     def _current_version(self, table: str) -> str | None:
-        _, committed = self._latest_commit(table)
-        if committed is not None:
-            return committed
-        try:
-            with open(self._pointer(table)) as f:
-                return f.read().strip() or None
-        except FileNotFoundError:
-            return None
-
-    def _flip_pointer(self, table: str, version: str) -> None:
-        tmp = self._pointer(table) + ".tmp"
-        os.makedirs(os.path.dirname(tmp), exist_ok=True)
-        with open(tmp, "w") as f:
-            f.write(version)
-        os.replace(tmp, self._pointer(table))
-
-    def _append_log(self, table: str, version: str, operation: str) -> None:
-        import json
-        import time
-
-        entry = {"version": version, "operation": operation,
-                 "ts": time.time()}
-        with open(self._log_path(table), "a") as f:
-            f.write(json.dumps(entry) + "\n")
+        return self._latest_commit(table)[1]
 
     def history(self, table: str) -> list[dict]:
-        """Version log, oldest first (Delta ``DESCRIBE HISTORY`` shape):
+        """Commit log, oldest first (Delta ``DESCRIBE HISTORY`` shape):
         one entry per publish/restore with version id, operation and
-        wall-clock timestamp."""
-        import json
-
-        entries: list[dict] = []
-        try:
-            with open(self._log_path(table)) as f:
-                for ln in f:
-                    if not ln.strip():
-                        continue
-                    try:
-                        entries.append(json.loads(ln))
-                    except ValueError:
-                        # A crash mid-append leaves one torn trailing
-                        # line; skipping it keeps history()/vacuum()
-                        # usable instead of permanently poisoned.
-                        continue
-        except FileNotFoundError:
-            pass
-        return entries
+        wall-clock timestamp.  After :meth:`vacuum` it lists only the
+        commits of the versions that were kept, plus the latest commit
+        (Delta's log cleanup)."""
+        return [self._record(table, n) for _, n in self._commits(table)]
 
     def read(self, table: str, version: str | None = None) -> DataFrame:
         """Current snapshot, or — time travel — any retained ``version``
@@ -313,15 +291,15 @@ class ControlStore:
             )
         return self.spark.read.schema(SCHEMAS[table]).parquet(path)
 
-    def overwrite(self, table: str, df: DataFrame,
-                  operation: str = "overwrite") -> None:
-        """Publish a new immutable version of the table (atomic pointer flip).
+    def overwrite(self, table: str, df: DataFrame) -> None:
+        """Publish a new immutable version of the table (atomic commit
+        claim).
 
         A blind write: it does not depend on the current contents, so a
         commit-slot collision just re-claims the next slot — never a
         conflict.
         """
-        self._publish(table, df, operation)
+        self._publish(table, df, "overwrite")
 
     def _publish(self, table: str, df: DataFrame, operation: str,
                  expected_seq: int | None = None) -> bool:
@@ -330,8 +308,8 @@ class ControlStore:
         With ``expected_seq`` (read-modify-write callers): claim exactly
         that slot; on collision the just-written orphan version is removed
         and False returned so the caller re-derives from the new current.
-        Without it (blind writes): retry the claim at the then-latest slot
-        until it lands.
+        Without it (blind writes): claim the next free slot
+        (:meth:`_claim_next`).
         """
         cols = [f.name for f in SCHEMAS[table].fields]
         version = f"v-{uuid.uuid4().hex[:12]}"
@@ -342,18 +320,13 @@ class ControlStore:
             writer = writer.partitionBy(*parts)
         writer.parquet(path)
         self._build_manifest(table, path)
-        while True:
-            seq = (self._latest_commit(table)[0] + 1
-                   if expected_seq is None else expected_seq)
-            if self._claim_commit(table, seq, version, operation):
-                self._flip_pointer(table, version)
-                self._append_log(table, version, operation)
-                return True
-            if expected_seq is not None:
-                import shutil
-
-                shutil.rmtree(path, ignore_errors=True)
-                return False
+        if expected_seq is None:
+            self._claim_next(table, version, operation)
+            return True
+        if self._claim_commit(table, expected_seq, version, operation):
+            return True
+        shutil.rmtree(path, ignore_errors=True)
+        return False
 
     def _build_manifest(self, table: str, path: str) -> None:
         """File-level min/max manifest on the leading primary-key column
@@ -365,7 +338,6 @@ class ControlStore:
         it with its version.  Best-effort — any file without usable
         stats is recorded as unprunable (always read)."""
         import glob as _glob
-        import json
 
         try:
             import pyarrow.parquet as pq
@@ -420,8 +392,6 @@ class ControlStore:
         already provides).  Falls back to a plain filtered read when no
         manifest exists; the residual filter always applies, so results
         never depend on the manifest being right — only the I/O does."""
-        import json
-
         if version is None:
             version = self._current_version(table)
         if version is None:
@@ -448,71 +418,46 @@ class ControlStore:
         )
 
     def restore(self, table: str, version: str) -> None:
-        """Flip the table back to a retained prior version (Delta
-        ``RESTORE TABLE``).  The restore itself is logged, so history
-        stays append-only and a later vacuum keeps the restored
-        version alive as current."""
+        """Make a retained prior version current again (Delta ``RESTORE
+        TABLE``) by committing it anew: history stays append-only and a
+        later vacuum keeps the restored version alive as current.  A
+        blind write, but it serializes through the commit log so a
+        concurrent merge can detect it."""
         path = os.path.join(self.root, table, version)
         if not os.path.isdir(path):
             raise FileNotFoundError(
                 f"{table}@{version}: version unknown or vacuumed"
             )
-        # A restore is a blind pointer move, but it still serializes
-        # through the commit log so a concurrent merge can detect it.
-        # Bounded like every other read-modify-write path: a persistent
-        # filesystem error surfacing as FileExistsError must fail loudly,
-        # not spin forever.
-        for _ in range(_OCC_RETRIES):
-            if self._claim_commit(table, self._latest_commit(table)[0] + 1,
-                                  version, "restore"):
-                break
-        else:
-            raise RuntimeError(
-                f"restore({table}@{version}): could not claim a commit slot "
-                f"after {_OCC_RETRIES} retries — writer contention too high"
-            )
-        self._flip_pointer(table, version)
-        self._append_log(table, version, "restore")
+        self._claim_next(table, version, "restore")
 
     def vacuum(self, table: str | None = None, keep_last: int = 3) -> int:
         """Delete unreferenced version directories, keeping the current
-        version plus the ``keep_last`` most recently *published* others
-        (log order — not directory mtimes, which rewrites can touch).
+        version plus the ``keep_last`` most recently *committed* others
+        (by each version's latest commit sequence — not directory mtimes,
+        which rewrites can touch).  A version directory with no commit
+        record (a crash between the parquet write and the claim) ranks
+        older than every committed one.
 
         The snapshot-isolation contract means a reader started before a
         publish may still be scanning an old version; ``keep_last`` is the
-        retention window (Delta's VACUUM retention, scaled down).  Vacuumed
-        versions stay in the history log but can no longer be time-traveled
-        to.  Returns the number of versions removed.
+        retention window (Delta's VACUUM retention, scaled down).  The
+        commit records of vacuumed versions are pruned too (Delta's log
+        cleanup), so afterwards :meth:`history` lists only the commits of
+        the kept versions plus the latest commit.  Returns the number of
+        versions removed.
         """
-        import shutil
-
         removed = 0
         for t in ([table] if table else list(SCHEMAS)):
             tdir = os.path.join(self.root, t)
             if not os.path.isdir(tdir):
                 continue
             current = self._current_version(t)
-            logged = [e["version"] for e in self.history(t)]
-            order = {v: i for i, v in enumerate(logged)}  # last wins
-
-            def _recency(v: str) -> tuple:
-                # Logged versions order by publish position; unlogged
-                # directories (pre-log stores, lost log lines) fall back
-                # to mtime and always rank OLDER than any logged one —
-                # never deleting a just-published version first.
-                if v in order:
-                    return (1, order[v])
-                try:
-                    mt = os.path.getmtime(os.path.join(tdir, v))
-                except OSError:
-                    mt = 0.0
-                return (0, mt)
-
+            # position of each version's latest commit (last wins)
+            order = {e["version"]: i for i, e in enumerate(self.history(t))}
             versions = sorted(
                 (v for v in os.listdir(tdir)
                  if v.startswith("v-") and v != current),
-                key=_recency,
+                key=lambda v: order.get(v, -1),
                 reverse=True,
             )
             for v in versions[keep_last:]:
@@ -527,27 +472,14 @@ class ControlStore:
         Delta-log-checkpoint analogue.  Without this, _commits/ grows one
         file per historical publish forever and every read pays an
         O(total-commits) listdir in ``_latest_commit``."""
-        import json
-
-        cdir = self._commits_dir(table)
-        try:
-            names = [n for n in os.listdir(cdir) if n.endswith(".json")]
-        except FileNotFoundError:
-            return
-        if not names:
-            return
-        latest = max(names, key=lambda n: int(n[: -len(".json")]))
-        for n in names:
-            if n == latest:
-                continue
+        for _, n in self._commits(table)[:-1]:
             try:
-                with open(os.path.join(cdir, n)) as f:
-                    version = json.load(f)["version"]
+                version = self._record(table, n)["version"]
             except (ValueError, OSError):
                 continue
             if not os.path.isdir(os.path.join(self.root, table, version)):
                 try:
-                    os.unlink(os.path.join(cdir, n))
+                    os.unlink(os.path.join(self._commits_dir(table), n))
                 except OSError:
                     pass
 
@@ -559,8 +491,7 @@ class ControlStore:
         version until the commit claim of ``base+1`` lands."""
         for _ in range(_OCC_RETRIES):
             base_seq, _ = self._latest_commit(table)
-            merged, op = derive(self.read(table))
-            if self._publish(table, merged, op or operation,
+            if self._publish(table, derive(self.read(table)), operation,
                              expected_seq=base_seq + 1):
                 return
         raise RuntimeError(
@@ -585,11 +516,12 @@ class ControlStore:
                 fresh = updates.select(cols).join(
                     target.select(keys), keys, "left_anti"
                 )
-                return target.unionByName(fresh), "merge-insert-only"
+                return target.unionByName(fresh)
             kept = target.join(updates.select(keys), keys, "left_anti")
-            return kept.unionByName(updates.select(cols)), "merge"
+            return kept.unionByName(updates.select(cols))
 
-        self._read_modify_write(table, derive, "merge")
+        self._read_modify_write(
+            table, derive, "merge-insert-only" if insert_only else "merge")
 
     def diff(self, table: str, from_version: str,
              to_version: str | None = None,
@@ -683,7 +615,7 @@ class ControlStore:
             else:
                 kept = target.filter(F.lit(False))
             kept = kept.join(snapshot.select(keys), keys, "left_anti")
-            return kept.unionByName(snapshot.select(cols)), "sync"
+            return kept.unionByName(snapshot.select(cols))
 
         self._read_modify_write(table, derive, "sync")
 
@@ -694,9 +626,8 @@ class ControlStore:
         keys = KEYS[table]
         self._read_modify_write(
             table,
-            lambda target: (
-                target.join(keys_df.select(keys), keys, "left_anti"), None
-            ),
+            lambda target: target.join(keys_df.select(keys), keys,
+                                       "left_anti"),
             "delete",
         )
 

@@ -234,9 +234,9 @@ def test_staging_reads_prune_by_job_partition(env):
 
 def test_store_time_travel_history_restore_vacuum(spark, tmp_path):
     """The lakehouse surface of the versioned store: every publish is
-    logged, old versions stay readable until vacuumed, restore flips
-    the pointer without rewriting data, and vacuum retention follows
-    publish order."""
+    a commit record, old versions stay readable until vacuumed, restore
+    commits an old version anew without rewriting data, and vacuum
+    retention follows commit order."""
     import pytest as _pytest
 
     from data_ingestion_worker_spark.control.store import ControlStore
@@ -249,6 +249,11 @@ def test_store_time_travel_history_restore_vacuum(spark, tmp_path):
             store.read("jobs").schema,
         )
         store.overwrite("jobs", df)
+    # the commit records are the table's only metadata
+    import os as _os
+    tdir = _os.path.join(store.root, "jobs")
+    assert {d for d in _os.listdir(tdir) if not d.startswith("v-")} \
+        == {"_commits"}
     hist = store.history("jobs")
     assert [e["operation"] for e in hist] == ["overwrite"] * 3
     assert len({e["version"] for e in hist}) == 3
@@ -265,20 +270,20 @@ def test_store_time_travel_history_restore_vacuum(spark, tmp_path):
     with _pytest.raises(FileNotFoundError):
         store.read("jobs", version=hist[1]["version"])
     # commit records of vacuumed versions are pruned too (minus the
-    # always-kept latest record); current still resolves correctly
-    import os as _os
-    live = {d for d in _os.listdir(_os.path.join(store.root, "jobs"))
-            if d.startswith("v-")}
+    # always-kept latest record), so history lists the kept versions'
+    # commits; current still resolves correctly
+    assert [e["version"] for e in store.history("jobs")] == [v0, v2, v0]
+    live = {d for d in _os.listdir(tdir) if d.startswith("v-")}
     n_commits = len([n for n in _os.listdir(store._commits_dir("jobs"))
                      if n.endswith(".json")])
     assert n_commits <= len(live) + 1
     assert store._current_version("jobs") == v0
 
 
-def test_store_log_resilience_and_prelog_vacuum_order(spark, tmp_path):
-    """A torn trailing log line is skipped, and version directories
-    missing from the log (pre-log stores) vacuum strictly before any
-    logged version regardless of listdir order."""
+def test_store_uncommitted_version_vacuum_order(spark, tmp_path):
+    """A version directory with no commit record (a crash between the
+    parquet write and the claim) is invisible to readers, and vacuums
+    strictly before any committed version regardless of listdir order."""
     import os
 
     from data_ingestion_worker_spark.control.store import ControlStore
@@ -289,19 +294,18 @@ def test_store_log_resilience_and_prelog_vacuum_order(spark, tmp_path):
         store.overwrite("jobs", spark.createDataFrame(
             [(i, None, "u", None, None, "PENDING", None, None,
               None, None, None, None)], schema))
-    # torn trailing line from a crashed append
-    with open(store._log_path("jobs"), "a") as f:
-        f.write('{"version": "v-torn')
-    assert len(store.history("jobs")) == 2
-    # fabricate an unlogged (pre-log) version directory, newest mtime
+    # fabricate an uncommitted version directory, newest mtime
     tdir = os.path.join(store.root, "jobs")
-    unlogged = os.path.join(tdir, "v-prelogdir00")
-    os.makedirs(unlogged)
+    uncommitted = os.path.join(tdir, "v-uncommitted")
+    os.makedirs(uncommitted)
+    assert [r.job_id for r in store.read("jobs").collect()] == [1]
     hist = store.history("jobs")
+    assert len(hist) == 2
     removed = store.vacuum("jobs", keep_last=1)
     assert removed == 1
-    assert not os.path.isdir(unlogged), "unlogged dir must vacuum first"
-    # both logged versions survive (current + keep_last=1)
+    assert not os.path.isdir(uncommitted), \
+        "uncommitted dir must vacuum first"
+    # both committed versions survive (current + keep_last=1)
     for e in hist:
         assert os.path.isdir(os.path.join(tdir, e["version"]))
 
@@ -419,31 +423,56 @@ def test_store_occ_conflicting_upsert_retries_no_lost_update(
     assert on_disk == committed
 
 
-def test_store_commit_record_authoritative_over_stale_pointer(
-        spark, tmp_path):
-    """A crash between commit-claim and pointer flip must heal on the
-    next read: the latest commit record, not _CURRENT, defines the
-    current version."""
+def test_store_blind_overwrite_claim_is_bounded(
+        spark, tmp_path, monkeypatch):
+    """A blind write whose every commit claim loses gives up with
+    RuntimeError after _OCC_RETRIES attempts instead of spinning."""
+    from data_ingestion_worker_spark.control import store as store_mod
+
+    store = store_mod.ControlStore(spark, str(tmp_path / "ctl"))
+    calls = []
+
+    def losing_claim(self, table, seq, version, operation):
+        calls.append(seq)
+        if len(calls) > 50:
+            raise AssertionError("claim loop is unbounded")
+        return False
+
+    monkeypatch.setattr(store_mod.ControlStore, "_claim_commit",
+                        losing_claim)
+    with pytest.raises(RuntimeError, match="could not claim"):
+        store.overwrite("jobs", store.read("jobs"))
+    assert len(calls) == store_mod._OCC_RETRIES
+
+
+def test_store_commit_record_fsynced_before_claim(
+        spark, tmp_path, monkeypatch):
+    """The commit record is the only source of "current": its temp file
+    is fsynced before the hard-link that claims the slot, so a power
+    loss cannot leave a torn record behind."""
+    import os
+
     from data_ingestion_worker_spark.control.store import ControlStore
 
     store = ControlStore(spark, str(tmp_path / "ctl"))
-    schema = store.read("jobs").schema
+    events = []
+    real_fsync, real_link = os.fsync, os.link
 
-    def df(user):
-        return spark.createDataFrame(
-            [(1, None, user, None, None, "PENDING", None, None,
-              None, None, None, None)], schema)
+    def spy_fsync(fd):
+        events.append(("fsync", os.fstat(fd).st_ino))
+        return real_fsync(fd)
 
-    store.overwrite("jobs", df("old"))
-    old_version = store._current_version("jobs")
-    store.overwrite("jobs", df("new"))
-    # simulate the crash window: pointer rolled back, commit record kept
-    with open(store._pointer("jobs"), "w") as f:
-        f.write(old_version)
-    assert store.read("jobs").collect()[0].job_user_id == "new"
-    # and a fresh store instance over the same root agrees
-    fresh = ControlStore(spark, str(tmp_path / "ctl"))
-    assert fresh.read("jobs").collect()[0].job_user_id == "new"
+    def spy_link(src, dst, *args, **kwargs):
+        events.append(("link", os.stat(src).st_ino))
+        return real_link(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "fsync", spy_fsync)
+    monkeypatch.setattr(os, "link", spy_link)
+    store.overwrite("jobs", store.read("jobs"))
+    links = [i for i, (kind, _) in enumerate(events) if kind == "link"]
+    assert len(links) == 1
+    record = events[links[0]][1]
+    assert ("fsync", record) in events[:links[0]]
 
 
 def test_incremental_aggregate_maintenance_matches_recompute(

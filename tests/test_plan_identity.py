@@ -4,6 +4,9 @@ a set over the parent runs."""
 
 from __future__ import annotations
 
+import json
+
+from tools import plan_identity
 from tools.plan_identity import compare, strip_plan
 
 #: Part of a recorded ``ev_acf_lags`` executed plan (after collect()).
@@ -38,6 +41,11 @@ def test_strip_plan_on_recorded_plan():
         == "MapPartitionsRDD[] at collect"
     # Literals and partition counts are not ids and stay.
     assert strip_plan("explode([1,2,3]), 4)") == "explode([1,2,3]), 4)"
+    # Lambda variables lose the number of Spark's process-wide counter;
+    # column names with a numeric suffix keep theirs.
+    assert strip_plan("lambdafunction((lambda x_14#4L > 3), lambda x_14#4L,"
+                      " false), sum_3#9L") \
+        == "lambdafunction((lambda x#L > 3), lambda x#L, false), sum_3#L"
 
 
 def _run(plan: str, jobs: int = 1) -> dict:
@@ -54,3 +62,43 @@ def test_compare_judges_fields_as_sets():
         "q: collect_jobs of change run 1 was produced by no parent run",
     ]
     assert compare(parent, [{}]) == ["q: not captured in every run"]
+
+
+def test_capture_prints_full_metadata_and_equal_plans_across_lambda_ids(
+        spark, tmp_path, monkeypatch):
+    """Two captures of one query in one process number its lambda
+    variable differently (x_1, x_2, ...) and still record one plan, and
+    the scan's ``DataFilters`` are not cut at Spark's default 100
+    characters."""
+    import types
+
+    from pyspark.sql import functions as F
+
+    from data_ingestion_worker_spark import registry, session
+
+    data = str(tmp_path / "t")
+    spark.range(10).select(
+        "id", F.array("id", F.col("id") + 1).alias("arr")
+    ).write.parquet(data)
+
+    def fn(spark, sf_dir):
+        return spark.read.parquet(data).filter(
+            F.exists("arr", lambda x: x > 3) & (F.col("id") > 1)
+            & (F.col("id") < 1000000) & F.col("id").isNotNull())
+
+    monkeypatch.setattr(session, "get_spark", lambda name: spark)
+    monkeypatch.setattr(registry, "all_specs",
+                        lambda: {"q": types.SimpleNamespace(fn=fn)})
+    runs = []
+    try:
+        for i in range(2):
+            out = tmp_path / f"run{i}.json"
+            assert plan_identity.capture(str(out), "unused", ["q"]) == 0
+            runs.append(json.loads(out.read_text()))
+    finally:
+        spark.conf.unset(plan_identity._FULL_METADATA[0])
+    plan = runs[0]["q"]["plan"]
+    filters = plan.split("DataFilters: ")[1].split("], Format")[0]
+    assert filters.endswith("isnotnull(id#L)"), filters
+    assert "lambda x#L" in plan
+    assert runs[1]["q"]["plan"] == plan

@@ -12,7 +12,8 @@ records, per query:
 
 - ``plan``: the executed plan after ``collect()`` (the final adaptive
   plan), with the ids that differ between runs of the same code
-  stripped (:func:`strip_plan`);
+  stripped (:func:`strip_plan`) and with scan metadata such as
+  ``DataFilters`` printed in full;
 - ``fn_jobs`` / ``collect_jobs``: the Spark jobs fired inside ``fn()``
   (lineage cuts, loops) and at ``collect()``, counted through job groups;
 - ``rows_sha``: a sha256 of the canonical rows (the column-sorted,
@@ -44,12 +45,21 @@ _STRIP = [
     (re.compile(r"(QueryStage) \d+"), r"\1"),          # AQE stage numbers
     (re.compile(r"\*\(\d+\)"), "*"),                   # whole-stage codegen
     (re.compile(r"RDD\[\d+\]"), "RDD[]"),              # RDD ids
+    (re.compile(r"(lambda \w+?)_\d+\b"), r"\1"),       # lambda variables
 ]
+
+#: Spark cuts scan metadata (``DataFilters``, ``PushedFilters``) at
+#: ``spark.sql.maxMetadataStringLength`` characters, 100 by default; the
+#: cut moves when the ids before it change length, so the capture session
+#: prints it in full.
+_FULL_METADATA = ("spark.sql.maxMetadataStringLength", str(1 << 20))
 
 
 def strip_plan(plan: str) -> str:
     """``plan`` without expression ids, exchange ``plan_id``s, query
-    stage numbers, whole-stage-codegen ids and RDD ids."""
+    stage numbers, whole-stage-codegen ids, RDD ids and the numbers
+    Spark appends to lambda variable names (``x_14``), which come from a
+    process-wide counter."""
     for pat, rep in _STRIP:
         plan = pat.sub(rep, plan)
     return plan
@@ -93,6 +103,7 @@ def capture(out: str, sf_dir: str, names: list[str]) -> int:
         print(f"unknown queries: {unknown}", file=sys.stderr)
         return 2
     spark = get_spark("plan-identity")
+    spark.conf.set(*_FULL_METADATA)
     record = {n: capture_one(spark, specs[n], n, sf_dir) for n in names}
     Path(out).write_text(json.dumps(record, indent=1, sort_keys=True))
     return 0
